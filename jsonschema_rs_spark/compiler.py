@@ -643,55 +643,14 @@ def _needs_python(schema: Any, options: EngineOptions) -> bool:
     return False
 
 
-def _claimed_props(schema: Any, conditionals: bool = True
-                   ) -> tuple[set, list, bool]:
-    """Static resolution of which member names are 'evaluated' by this
-    schema's in-place applicators — the compile-time replacement for the
-    reference's runtime annotation tracking (``unevaluated_properties.rs:
-    41-752``).  With ``conditionals=True`` (legacy/upper-bound) branch
-    applicators claim their members regardless of branch outcome;
-    ``conditionals=False`` counts only the node itself + allOf, leaving
-    if/then/else, anyOf, oneOf and dependentSchemas to a runtime-gated
-    path.  ``contains`` claims nothing.
-    Returns (names, patterns, all_claimed)."""
-    names: set = set()
-    pats: list = []
-    all_claimed = False
-
-    def walk(s):
-        nonlocal all_claimed
-        if not isinstance(s, dict):
-            return
-        names.update(s.get("properties", {}).keys())
-        pats.extend(s.get("patternProperties", {}).keys())
-        if isinstance(s.get("additionalProperties"), (dict, bool)):
-            all_claimed = True
-        if isinstance(s.get("unevaluatedProperties"), (dict, bool)) and s is not schema:
-            all_claimed = True
-        if conditionals:
-            for key in ("if", "then", "else", "not"):
-                walk(s.get(key))
-        for key in (("allOf", "anyOf", "oneOf") if conditionals
-                    else ("allOf",)):
-            for sub in s.get(key, []) or []:
-                walk(sub)
-        if conditionals:
-            for sub in (s.get("dependentSchemas") or {}).values():
-                walk(sub)
-
-    walk(schema)
-    return names, pats, all_claimed
-
-
 def _claimed_positions(schema: Any, conditionals: bool = True
                        ) -> tuple[int, bool]:
     """Static positions 'evaluated' for unevaluatedItems: max prefixItems
     length across in-place applicators; object-form items claims all.
 
     ``conditionals=False`` counts only the UNCONDITIONAL sources (the node
-    itself + allOf, which always applies) — the conditional branches
-    (if/then/else, anyOf, oneOf) are then resolved at runtime by the
-    lowerer's gated path (mirroring ``_claimed_props_cond``)."""
+    itself + allOf, which always applies).  The lowerers resolve claims
+    with ``claim_sources``; this summary is kept for the test oracle."""
     n_prefix = 0
     all_claimed = False
 
@@ -795,6 +754,92 @@ def _items_claim_subset(s: Any) -> Any:
         subset["additionalItems"] = ai
         subset.setdefault("items", it)
     return subset or None
+
+
+@dataclass(frozen=True)
+class ClaimSource:
+    """One schema object applied in place at an ``unevaluated*`` node, and
+    the members or positions it claims.
+
+    Its claims count only when every branch term holds.  A term is
+    ``("valid", schema, suffix)``, ``("invalid", schema, suffix)`` (an
+    ``if`` that failed) or ``("present", key, None)``.  The node itself and
+    its ``allOf`` chain have no terms; for them ``subset`` holds the claim
+    keywords that can fail (round 5: annotations only from successful
+    subschemas, reference ``output.rs:139-164``), None when none can.  A
+    valid branch implies its own subset, so branch sources carry none."""
+    suffix: tuple[str, ...]
+    terms: tuple
+    subset: Any
+    names: tuple[str, ...] = ()
+    patterns: tuple[str, ...] = ()
+    n_prefix: int = 0
+    claims_all: bool = False
+
+
+def claim_sources(schema: Any, kind: str) -> list[ClaimSource]:
+    """Every schema object whose annotations an ``unevaluatedProperties``
+    (``kind="props"``) or ``unevaluatedItems`` (``kind="items"``) at
+    ``schema`` sees — the compile-time form of the reference's runtime
+    annotation tracking (``unevaluated_properties.rs:41-752``).
+
+    Sources are the node, ``allOf`` (same terms), ``if`` (gated on its
+    validity), ``then``/``else`` (gated on the ``if`` outcome and their own
+    validity), ``anyOf``/``oneOf`` branches and, for properties,
+    ``dependentSchemas`` (gated on key presence and validity).  ``not``
+    claims nothing, and ``contains`` is left to the caller.  A nested
+    ``unevaluated*`` claims everything.  Objects that claim nothing are
+    walked but not returned."""
+    props = kind == "props"
+    ue = "unevaluatedProperties" if props else "unevaluatedItems"
+    out: list[ClaimSource] = []
+
+    def walk(s, terms, suffix):
+        if not isinstance(s, dict):
+            return
+        claims_all = bool(suffix) and isinstance(s.get(ue), (dict, bool))
+        names: tuple = ()
+        pats: tuple = ()
+        n = 0
+        if props:
+            names = tuple(s.get("properties") or {})
+            pats = tuple(s.get("patternProperties") or {})
+            claims_all |= isinstance(s.get("additionalProperties"),
+                                     (dict, bool))
+        else:
+            n = max([len(s[k]) for k in ("items", "prefixItems")
+                     if isinstance(s.get(k), list)], default=0)
+            claims_all |= any(isinstance(s.get(k), (dict, bool))
+                              for k in ("items", "additionalItems"))
+        if names or pats or n or claims_all:
+            subset = None
+            if not terms:
+                subset = (_prop_claim_subset if props
+                          else _items_claim_subset)(s)
+            out.append(ClaimSource(suffix, terms, subset, names, pats, n,
+                                   claims_all))
+        for idx, sub in enumerate(s.get("allOf") or []):
+            walk(sub, terms, suffix + ("allOf", str(idx)))
+        if isinstance(s.get("if"), (dict, bool)):
+            sif = suffix + ("if",)
+            walk(s["if"], terms + (("valid", s["if"], sif),), sif)
+            for kw, outcome in (("then", "valid"), ("else", "invalid")):
+                if isinstance(s.get(kw), (dict, bool)):
+                    bsuf = suffix + (kw,)
+                    walk(s[kw], terms + ((outcome, s["if"], sif),
+                                         ("valid", s[kw], bsuf)), bsuf)
+        for kw in ("anyOf", "oneOf"):
+            for idx, sub in enumerate(s.get(kw) or []):
+                bsuf = suffix + (kw, str(idx))
+                walk(sub, terms + (("valid", sub, bsuf),), bsuf)
+        if props:
+            for k, sub in (s.get("dependentSchemas") or {}).items():
+                bsuf = suffix + ("dependentSchemas", k)
+                walk(sub, terms + (("present", k, None),
+                                   ("valid", sub, bsuf)), bsuf)
+
+    walk(schema, (), ())
+    return out
 
 
 # --------------------------------------------------------------------------
@@ -1296,21 +1341,22 @@ class Lowerer:
                             sp_extra=("additionalProperties",))
 
         # unevaluatedProperties — CONDITIONAL claim resolution on a typed
-        # struct: field names are known at compile time, and claims made
-        # inside branch applicators (if/then/else, anyOf, oneOf,
-        # dependentSchemas) are gated on the branch's own runtime validity —
-        # the columnar equivalent of the reference's runtime annotation
-        # tracking (``unevaluated_properties.rs:41-752``): annotations count
-        # only from schemas that were successfully applied.
+        # struct: field names are known at compile time, and each
+        # ``claim_sources`` record's claims gate on its runtime terms (or
+        # its claim-keyword subset), so annotations count only from schemas
+        # that were successfully applied.  Subset-only gates are SOFT.
         if isinstance(schema.get("unevaluatedProperties"), (dict, bool)):
             sub = schema["unevaluatedProperties"]
-            claims = self._claimed_props_cond(schema, ctx)
+            gate = self._claim_gate(ctx, ctx.stageable)
+            claims = [(gate(src), src, [driver_regex_matcher(p)
+                                        for p in src.patterns])
+                      for src in claim_sources(schema, "props")]
             for fname in fields:
                 conds = []
                 any_hard = False
                 unconditional = False
-                for cond, names, matchers, claims_all, soft in claims:
-                    hit = claims_all or fname in names or any(
+                for cond, src, matchers in claims:
+                    hit = src.claims_all or fname in src.names or any(
                         m(fname) for m in matchers)
                     if not hit:
                         continue
@@ -1318,7 +1364,7 @@ class Lowerer:
                         unconditional = True
                         break
                     conds.append(cond)
-                    any_hard = any_hard or not soft
+                    any_hard = any_hard or bool(src.terms)
                 if unconditional:
                     continue
                 mark_out, mark_val = len(out), len(valids)
@@ -1364,275 +1410,50 @@ class Lowerer:
                                   | F.coalesce(_p(x, *i), F.lit(True)))
 
     # ------------------------------------------------------------------
-    def _claimed_props_cond(self, schema, ctx: _Ctx):
-        """Claim sources for unevaluatedProperties on a typed struct.
+    def _claim_gate(self, ctx: _Ctx, stageable: bool):
+        """Fold for ``claim_sources`` records at this node: returns
+        ``gate(src)`` — a validity fn over the NODE instance, or None when
+        the source's claims are unconditional.  Each branch schema lowers
+        once per fold, however many sources share it as a term."""
+        memo: dict = {}
 
-        Returns a list of ``(cond, names, matchers, claims_all)`` where
-        ``cond`` is a validity fn over the NODE instance (None =
-        unconditional): claims made inside if/then/else, anyOf, oneOf, and
-        dependentSchemas count only when that branch actually APPLIED —
-        mirroring the spec's "annotations from successfully applied schemas"
-        rule that the reference tracks at runtime.  ``not`` claims nothing
-        (its success means the subschema failed)."""
-
-        def and_(a, b):
-            if a is None:
-                return b
-            if b is None:
-                return a
-            return lambda x, *i: (F.coalesce(a(x, *i), F.lit(False))
-                                  & F.coalesce(b(x, *i), F.lit(False)))
-
-        def bvalid(s, suffix):
+        def valid(s, suffix):
             return self.lower(s, _Ctx(
                 dtype=ctx.dtype, path=ctx.path + suffix, scope=ctx.scope,
                 dpath=ctx.dpath, elementable=False, array=ctx.array,
                 array_key=ctx.array_key, spointer=_sp(ctx) + suffix,
-                stageable=ctx.stageable, options=ctx.options)).valid
+                stageable=stageable, options=ctx.options)).valid
 
-        out: list = []
+        def term(kind, arg, suffix):
+            if kind == "present":
+                if isinstance(ctx.dtype, MapType):
+                    return lambda x, *i: F.map_contains_key(x, F.lit(arg))
+                return lambda x, *i: x.getField(arg).isNotNull()
+            if suffix not in memo:
+                memo[suffix] = valid(arg, suffix)
+            v = memo[suffix]
+            if kind == "invalid":
+                return lambda x, *i: ~F.coalesce(v(x, *i), F.lit(False))
+            return v
 
-        def walk(s, cond, suffix, pregated):
-            """``pregated`` — cond already embeds this schema object's OWN
-            validity (branch sources), so no extra claim gate is needed.
-            The node itself and allOf children are NOT pregated: their
-            claims gate on their claim-keyword validity (round 5 —
-            annotations only from successful subschemas, output.rs:
-            139-164); such gates are SOFT (the consumer may fall back to
-            an unconditional claim where gating is inexpressible)."""
-            if not isinstance(s, dict):
-                return
-            names = set(s.get("properties", {}) or {})
-            pats = list(s.get("patternProperties", {}) or {})
-            claims_all = isinstance(
-                s.get("additionalProperties"), (dict, bool)
-            ) or (s is not schema and isinstance(
-                s.get("unevaluatedProperties"), (dict, bool)))
-            if names or pats or claims_all:
-                matchers = [driver_regex_matcher(p) for p in pats]
-                g, soft = cond, False
-                if not pregated:
-                    subset = _prop_claim_subset(s)
-                    if subset is not None:
-                        g = and_(cond, bvalid(subset, suffix))
-                        soft = True
-                out.append((g, names, matchers, claims_all, soft))
-            for idx, sub in enumerate(s.get("allOf", []) or []):
-                walk(sub, cond, suffix + ("allOf", str(idx)), False)
-            if isinstance(s.get("if"), (dict, bool)):
-                cif = bvalid(s["if"], suffix + ("if",))
-                walk(s["if"], and_(cond, cif), suffix + ("if",), True)
-                # 2020-12: annotations only from subschemas that
-                # SUCCESSFULLY validate — then/else claims gate on the
-                # branch's own validity too (round 4)
-                if isinstance(s.get("then"), (dict, bool)):
-                    gthen = and_(and_(cond, cif),
-                                 bvalid(s["then"], suffix + ("then",)))
-                    walk(s["then"], gthen, suffix + ("then",), True)
-                if isinstance(s.get("else"), (dict, bool)):
-                    def nif(x, *i, _c=cif):
-                        return ~F.coalesce(_c(x, *i), F.lit(False))
-                    gelse = and_(cond, and_(
-                        nif, bvalid(s["else"], suffix + ("else",))))
-                    walk(s["else"], gelse, suffix + ("else",), True)
-            for kw in ("anyOf", "oneOf"):
-                for idx, sub in enumerate(s.get(kw, []) or []):
-                    bsuf = suffix + (kw, str(idx))
-                    walk(sub, and_(cond, bvalid(sub, bsuf)), bsuf, True)
-            for k, sub in (s.get("dependentSchemas") or {}).items():
-                def present(x, *i, _k=k):
-                    return x.getField(_k).isNotNull()
-                bsuf = suffix + ("dependentSchemas", k)
-                walk(sub, and_(cond, and_(present, bvalid(sub, bsuf))),
-                     bsuf, True)
+        def gate(src: ClaimSource):
+            if src.terms:
+                fns = [term(*t) for t in src.terms]
+            elif src.subset is not None:
+                fns = [valid(src.subset, src.suffix)]
+            else:
+                return None
+            if len(fns) == 1:
+                return fns[0]
 
-        walk(schema, None, (), False)
-        return out
+            def conj(x, *i, _fns=tuple(fns)):
+                o = F.coalesce(_fns[0](x, *i), F.lit(False))
+                for f in _fns[1:]:
+                    o = o & F.coalesce(f(x, *i), F.lit(False))
+                return o
+            return conj
 
-    def _walk_branch_claims(self, schema, ctx: _Ctx, add,
-                            dependent_schemas: bool = False) -> None:
-        """Shared conditional-branch walker for runtime-gated claim
-        resolution (unevaluatedItems / map unevaluatedProperties — the
-        struct path has its own richer variant in ``_claimed_props_cond``):
-        calls ``add(branch_schema, cond_fn)`` for if/then/else, anyOf and
-        oneOf branches (and dependentSchemas when enabled, additionally
-        gated on key presence).
-
-        2020-12 grants annotations only from subschemas that SUCCESSFULLY
-        validate, so then/else claims gate on the branch's own validity as
-        well as the if-outcome (round 4; previously if-outcome only), and
-        conditionals NESTED inside an applied branch recurse with the
-        composed gate instead of counting unconditionally.  ``add``
-        receives each branch's UNCONDITIONAL claims only (callers count
-        with ``conditionals=False``); nesting is handled here."""
-
-        def and_(a, b):
-            if a is None:
-                return b
-            if b is None:
-                return a
-            return lambda x, *i: (F.coalesce(a(x, *i), F.lit(False))
-                                  & F.coalesce(b(x, *i), F.lit(False)))
-
-        def bvalid(s, suffix):
-            return self.lower(s, _Ctx(
-                dtype=ctx.dtype, path=ctx.path + suffix, scope=ctx.scope,
-                dpath=ctx.dpath, elementable=False, array=ctx.array,
-                array_key=ctx.array_key, spointer=_sp(ctx) + suffix,
-                stageable=False, options=ctx.options)).valid
-
-        def walk(s, cond, suffix, branch_root):
-            if not isinstance(s, dict):
-                return
-            if branch_root and s is not schema:
-                add(s, cond)
-            if isinstance(s.get("if"), (dict, bool)):
-                cif = bvalid(s["if"], suffix + ("if",))
-                gif = and_(cond, cif)
-                walk(s["if"], gif, suffix + ("if",), True)
-                if isinstance(s.get("then"), (dict, bool)):
-                    gthen = and_(gif, bvalid(s["then"], suffix + ("then",)))
-                    walk(s["then"], gthen, suffix + ("then",), True)
-                if isinstance(s.get("else"), (dict, bool)):
-                    def nif(x, *i, _c=cif):
-                        return ~F.coalesce(_c(x, *i), F.lit(False))
-                    gelse = and_(cond, and_(
-                        nif, bvalid(s["else"], suffix + ("else",))))
-                    walk(s["else"], gelse, suffix + ("else",), True)
-            for kw in ("anyOf", "oneOf"):
-                for idx, sub in enumerate(s.get(kw, []) or []):
-                    bsuf = suffix + (kw, str(idx))
-                    walk(sub, and_(cond, bvalid(sub, bsuf)), bsuf, True)
-            if dependent_schemas:
-                for k, sub in (s.get("dependentSchemas") or {}).items():
-                    def present(x, *i, _k=k):
-                        return F.map_contains_key(x, F.lit(_k))
-                    bsuf = suffix + ("dependentSchemas", k)
-                    walk(sub, and_(cond, and_(present, bvalid(sub, bsuf))),
-                         bsuf, True)
-            for idx, sub in enumerate(s.get("allOf", []) or []):
-                # allOf children's direct claims are already inside the
-                # parent's unconditional count — recurse for NESTED
-                # conditionals only
-                walk(sub, cond, suffix + ("allOf", str(idx)), False)
-
-        walk(schema, None, (), False)
-
-    def _claimed_items_cond(self, schema, ctx: _Ctx):
-        """Conditional claim sources for unevaluatedItems on this ARRAY
-        node: ``[(cond fn over the array instance, n_prefix, claims_all)]``
-        — claims count only when the branch actually APPLIED (mirror of
-        ``_claimed_props_cond`` / the reference's runtime annotation
-        tracking, ``unevaluated_items.rs``)."""
-        out: list = []
-
-        def add(s, cond):
-            # the branch's UNCONDITIONAL claims only — nested conditionals
-            # recurse in _walk_branch_claims with composed gates
-            nb, ab = _claimed_positions(s, conditionals=False)
-            if nb or ab:
-                out.append((cond, nb, ab))
-
-        self._walk_branch_claims(schema, ctx, add)
-        return out
-
-    def _claimed_map_props_cond(self, schema, ctx: _Ctx):
-        """Conditional claim sources for unevaluatedProperties on a MAP
-        node: ``[(cond fn over the map instance, names, java patterns,
-        claims_all)]`` — the map-typed mirror of ``_claimed_props_cond``
-        (key matching stays Column-side with isin/rlike because map keys
-        are dynamic)."""
-        out: list = []
-
-        def add(s, cond):
-            nm, ps, allc = _claimed_props(s, conditionals=False)
-            jps = []
-            for p in ps:
-                jp = ecma_to_java(p)
-                if jp is None:
-                    raise SpecError(
-                        f"patternProperties key pattern {p!r} at {ctx.cid()} "
-                        "is not expressible in the Java regex dialect"
-                    )
-                jps.append(jp)
-            if nm or jps or allc:
-                out.append((cond, tuple(nm), tuple(jps), allc))
-
-        self._walk_branch_claims(schema, ctx, add, dependent_schemas=True)
-        return out
-
-    def _own_bvalid(self, s, ctx: _Ctx, suffix):
-        return self.lower(s, _Ctx(
-            dtype=ctx.dtype, path=ctx.path + suffix, scope=ctx.scope,
-            dpath=ctx.dpath, elementable=False, array=ctx.array,
-            array_key=ctx.array_key, spointer=_sp(ctx) + suffix,
-            stageable=False, options=ctx.options)).valid
-
-    def _own_prop_claim_sources(self, schema, ctx: _Ctx):
-        """Node-own + allOf unevaluatedProperties claim sources WITH
-        validity gates (round 5 — annotations only from successful
-        subschemas, ``output.rs:139-164``): ``[(gate_or_None, names,
-        java_pats, claims_all)]``.  gate None = the source's claim
-        keywords cannot fail, so its claims stay on the static path."""
-        out: list = []
-
-        def walk(s, suffix):
-            if not isinstance(s, dict):
-                return
-            names = set(s.get("properties", {}) or {})
-            pats = list(s.get("patternProperties", {}) or {})
-            allc = isinstance(s.get("additionalProperties"),
-                              (dict, bool)) or (
-                s is not schema and isinstance(
-                    s.get("unevaluatedProperties"), (dict, bool)))
-            if names or pats or allc:
-                jps = []
-                for p in pats:
-                    jp = ecma_to_java(p)
-                    if jp is None:
-                        raise SpecError(
-                            f"patternProperties key pattern {p!r} at "
-                            f"{ctx.cid()} is not expressible in the Java "
-                            "regex dialect")
-                    jps.append(jp)
-                subset = _prop_claim_subset(s)
-                gate = (None if subset is None
-                        else self._own_bvalid(subset, ctx, suffix))
-                out.append((gate, tuple(names), tuple(jps), allc))
-            for idx, sub in enumerate(s.get("allOf", []) or []):
-                walk(sub, suffix + ("allOf", str(idx)))
-
-        walk(schema, ())
-        return out
-
-    def _own_items_claim_sources(self, schema, ctx: _Ctx):
-        """Node-own + allOf unevaluatedItems claim sources WITH validity
-        gates (round 5): ``[(gate_or_None, n_prefix, claims_all)]``."""
-        out: list = []
-
-        def walk(s, suffix):
-            if not isinstance(s, dict):
-                return
-            nb, ab = 0, False
-            it = s.get("items")
-            if isinstance(it, (dict, bool)):
-                ab = True
-            if isinstance(it, list):
-                nb = max(nb, len(it))
-            if isinstance(s.get("prefixItems"), list):
-                nb = max(nb, len(s["prefixItems"]))
-            if isinstance(s.get("additionalItems"), (dict, bool)):
-                ab = True
-            if nb or ab:
-                subset = _items_claim_subset(s)
-                gate = (None if subset is None
-                        else self._own_bvalid(subset, ctx, suffix))
-                out.append((gate, nb, ab))
-            for idx, sub in enumerate(s.get("allOf", []) or []):
-                walk(sub, suffix + ("allOf", str(idx)))
-
-        walk(schema, ())
-        return out
+        return gate
 
     # ------------------------------------------------------------------
     def _lower_map(self, schema, ctx: _Ctx, out, valids, emit) -> None:
@@ -1777,27 +1598,30 @@ class Lowerer:
             pats = tuple(p for p, _ in pat_pairs)
         elif isinstance(schema.get("unevaluatedProperties"), (dict, bool)):
             ap_kw = "unevaluatedProperties"
-            a_names, a_pats, all_all = _claimed_props(schema)
-            c_names, c_pats, all_st = _claimed_props(schema,
-                                                     conditionals=False)
-            # round 5: node-own/allOf claims gate on their claim-keyword
-            # validity too (annotations only from successful subschemas);
-            # sources whose claim keywords cannot fail stay static
-            own = self._own_prop_claim_sources(schema, ctx)
-            if any(al for g, _, _, al in own if g is None):
+            # sources whose claims cannot fail match statically; the rest
+            # gate at runtime on their branch terms or, round 5, on their
+            # claim-keyword validity
+            srcs = claim_sources(schema, "props")
+            static = [s for s in srcs if not s.terms and s.subset is None]
+            if any(s.claims_all for s in static):
                 ap_kw = None  # unconditionally all claimed
-                named, pats = (), ()
             else:
-                named = tuple(n for g, ns, _, _ in own if g is None
-                              for n in ns)
-                pats = tuple(p for g, _, ps, _ in own if g is None
-                             for p in ps)
-                map_conds = [(g, ns, ps, al) for g, ns, ps, al in own
-                             if g is not None]
-                if (set(a_names), sorted(a_pats), all_all) != (
-                        set(c_names), sorted(c_pats), all_st):
-                    # conditional branch sources: gate at runtime (round 3)
-                    map_conds += self._claimed_map_props_cond(schema, ctx)
+                def java(p):
+                    jp = ecma_to_java(p)
+                    if jp is None:
+                        raise SpecError(
+                            f"patternProperties key pattern {p!r} at "
+                            f"{ctx.cid()} is not expressible in the Java "
+                            "regex dialect")
+                    return jp
+
+                gate = self._claim_gate(ctx, stageable=False)
+                named = tuple(n for s in static for n in s.names)
+                pats = tuple(java(p) for s in static for p in s.patterns)
+                map_conds = [
+                    (gate(s), s.names, tuple(java(p) for p in s.patterns),
+                     s.claims_all)
+                    for s in srcs if s.terms or s.subset is not None]
         if ap_kw is not None:
             ap = schema[ap_kw]
 
@@ -1939,34 +1763,33 @@ class Lowerer:
                              path_suffix=("items",), index_gate=None)
 
         # unevaluatedItems (reference tracks evaluated positions via runtime
-        # annotations, ``unevaluated_items.rs``).  Unconditional claim
-        # sources (the node itself + allOf) resolve statically; claims from
-        # CONDITIONAL branches (if/then/else, anyOf, oneOf) gate on runtime
-        # branch validity — an element position counts as evaluated only
-        # when the branch that claims it actually applied, mirroring
-        # ``_claimed_props_cond``.  The conditional path is one node-level
-        # HOF check (rare corner; per-position attribution is kept on the
-        # common static path).
+        # annotations, ``unevaluated_items.rs``).  ``claim_sources`` records
+        # with no terms and no claim-keyword subset resolve statically;
+        # the rest gate on runtime validity — an element position counts
+        # as evaluated only when the source that claims it applied.  The
+        # gated path is one node-level HOF check (rare corner;
+        # per-position attribution is kept on the common static path).
         if isinstance(schema.get("unevaluatedItems"), (dict, bool)):
-            n_all, all_all = _claimed_positions(schema)
-            n_st, all_st = _claimed_positions(schema, conditionals=False)
+            srcs = claim_sources(schema, "items")
+            own = [s for s in srcs if not s.terms]
+            static = [s for s in own if s.subset is None]
+            soft = [s for s in own if s.subset is not None]
+
+            def extent(ss):
+                return (max([s.n_prefix for s in ss], default=0),
+                        any(s.claims_all for s in ss))
+
+            # branch sources matter only where they claim past the node
+            # and allOf sources
+            has_branch_conds = extent(srcs) != extent(own)
+            n_static, static_all = extent(static)
+            n_soft, soft_all = extent(soft)
             # 2020-12: `contains` claims the items it MATCHES — an
             # element-level runtime claim, handled on the gated path
             has_contains = isinstance(schema.get("contains"), (dict, bool))
-            # round 5: node-own/allOf claims gate on their claim-keyword
-            # validity (annotations only from successful subschemas);
-            # can't-fail sources stay on the static per-position path
-            own = self._own_items_claim_sources(schema, ctx)
-            static_all = any(ab for g, _, ab in own if g is None)
-            n_static = max([nb for g, nb, _ in own if g is None],
-                           default=0)
-            gated_own = [(g, nb, ab) for g, nb, ab in own
-                         if g is not None]
-            has_branch_conds = (n_all, all_all) != (n_st, all_st)
             if static_all:
                 pass  # unconditionally all claimed: nothing unevaluated
-            elif not gated_own and not has_branch_conds \
-                    and not has_contains:
+            elif not soft and not has_branch_conds and not has_contains:
                 # no conditional sources: static per-position attribution
                 self._emit_items(
                     schema["unevaluatedItems"], ctx, elem_dt, out, valids,
@@ -1978,22 +1801,18 @@ class Lowerer:
                 # claims-all), positions past every potentially-claimed
                 # prefix keep the rich static per-position attribution;
                 # only the prefix window goes through the gated check
-                gated_all = any(ab for _, _, ab in gated_own)
                 upper = None
-                if gated_own and not gated_all and not has_branch_conds \
+                if soft and not soft_all and not has_branch_conds \
                         and not has_contains:
-                    upper = max([n_static] + [nb for _, nb, _ in
-                                              gated_own])
+                    upper = max(n_static, n_soft)
                     self._emit_items(
                         schema["unevaluatedItems"], ctx, elem_dt, out,
                         valids, path_suffix=("unevaluatedItems",),
                         index_gate=("ge", upper))
-                    conds = gated_own
-                else:
-                    conds = gated_own + (
-                        self._claimed_items_cond(schema, ctx)
-                        if has_branch_conds else [])
-                n_st = n_static
+                gate = self._claim_gate(ctx, stageable=False)
+                conds = [(gate(s), s.n_prefix, s.claims_all)
+                         for s in srcs if s.subset is not None
+                         or (s.terms and has_branch_conds)]
                 cont_ok = None
                 if has_contains:
                     cont_ok = self._lower_element_valid(
@@ -2002,7 +1821,7 @@ class Lowerer:
                     schema["unevaluatedItems"], elem_dt, ctx,
                     ("unevaluatedItems",))
 
-                def _bounds(x, _conds=conds, _n=n_st):
+                def _bounds(x, _conds=conds, _n=n_static):
                     n_col = F.lit(_n)
                     all_col = F.lit(False)
                     for cond, nb, ab in _conds:

@@ -122,10 +122,6 @@ def python_fallback(pattern: str):
         return None
 
 
-def needs_python_fallback(pattern: str) -> bool:
-    return ecma_to_java(pattern) is None
-
-
 def driver_regex_matcher(pattern: str) -> Callable[[str], bool]:
     """Driver-side matcher for STATIC names (struct patternProperties).
 

@@ -67,34 +67,6 @@ def stopword_hits(text: Column, lang: str) -> Column:
     return F.size(F.filter(words, lambda w: w.isin(*sw)))
 
 
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    return stopword_hits(text, lang) / F.greatest(token_count(text), F.lit(1))
-
-
-def mean_word_len(text: Column) -> Column:
-    words = F.split(normalize(text), " ")
-    return F.aggregate(
-        words, F.lit(0).cast("double"), lambda acc, w: acc + F.length(w)
-    ) / F.greatest(F.size(words), F.lit(1))
-
-
-def quality_score(text: Column) -> Column:
-    """Composite [0,1] quality heuristic: penalize extreme length, high
-    punctuation, missing stopwords, degenerate word lengths.  Weights are
-    fixed constants so the score is reproducible in SQL."""
-    n = token_count(text)
-    len_ok = (n >= 5) & (n <= 100_000)
-    p = punct_ratio(text)
-    s = stopword_ratio(text, "en")
-    mw = mean_word_len(text)
-    return (
-        len_ok.cast("double") * 0.4
-        + (p < 0.3).cast("double") * 0.2
-        + (s > 0.01).cast("double") * 0.2
-        + ((mw >= 2.0) & (mw <= 12.0)).cast("double") * 0.2
-    )
-
-
 def lang_guess(text: Column) -> Column:
     """argmax over per-language stopword hits; 'und' (undetermined) on tie-0.
 

@@ -25,9 +25,10 @@ from schema objects that were APPLIED and whose claim keywords VALIDATED
 single-element transform.  The few remaining unsupported constructs
 raise :class:`JsonIngestUnsupported` at compile time (never at action
 time): ECMA patterns that java.util.regex rejects (no Python fallback
-inside HOF lambdas) and pandas-UDF formats under an array/map lambda
-(no per-element Python).  Callers (the suite harness) fall back to the
-typed path for those.
+inside HOF lambdas), pandas-UDF formats under an array/map lambda
+(no per-element Python) and ``EngineOptions.custom_keywords`` (their
+factories build typed-column predicates).  Callers (the suite harness)
+fall back to the typed path for those.
 """
 
 from __future__ import annotations
@@ -38,7 +39,8 @@ from typing import Any, Callable, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from jsonschema_rs_spark.compiler import _as_double, _sniff_draft
+from jsonschema_rs_spark.compiler import (_as_double, _sniff_draft,
+                                          claim_sources)
 from jsonschema_rs_spark.functions.ecma import ecma_to_java
 from jsonschema_rs_spark.functions.formats import FORMATS, FORMATS_PY
 from jsonschema_rs_spark.metaschema import validate_against_metaschema
@@ -183,15 +185,6 @@ def _or_all(preds: list[Column]) -> Column:
     return out
 
 
-def _gand(a, b) -> Column:
-    """Conjunction where None = unconditionally true (claim-source gates)."""
-    if a is None:
-        return b
-    if b is None:
-        return a
-    return F.coalesce(a, F.lit(False)) & F.coalesce(b, F.lit(False))
-
-
 def _java_pattern(pat: str, where: str) -> str:
     java = ecma_to_java(pat)
     if java is None:
@@ -328,6 +321,12 @@ class _JsonLowerer:
             return cells, pred
         if not isinstance(schema, dict):
             raise SpecError(f"schema must be dict/bool, got {schema!r}")
+        custom = sorted(set(schema) & set(self.options.custom_keywords))
+        if custom:
+            raise JsonIngestUnsupported(
+                f"custom keyword(s) {custom} at {'/'.join(path) or '#'}: "
+                "custom keyword factories build typed-column predicates "
+                "and have no variant lowering")
 
         t = jv.tag
         preds: list[Column] = []
@@ -646,10 +645,13 @@ class _JsonLowerer:
             emit(path + ("dependentSchemas", k), gate(~present | v))
         ue = schema.get("unevaluatedProperties")
         if isinstance(ue, (dict, bool)) and self._since(2019):
-            srcs = self._prop_claim_sources(schema, jv, path)
+            srcs = [(g, src.names, tuple(
+                        _java_pattern(pt, "/".join(path + src.suffix))
+                        for pt in src.patterns), src.claims_all)
+                    for g, src in self._claim_gates(schema, "props", jv,
+                                                    path)]
             bound = F.struct(*([
-                (F.coalesce(g, F.lit(False)) if g is not None
-                 else F.lit(True)).alias(f"g{j}")
+                (g if g is not None else F.lit(True)).alias(f"g{j}")
                 for j, (g, _, _, _) in enumerate(srcs)
             ] or [F.lit(False).alias("g_")]))
 
@@ -681,102 +683,36 @@ class _JsonLowerer:
     # In the variant lowering everything is already a per-row Column, so
     # the 2020-12 rule — annotations count only from schema objects that
     # were APPLIED and whose claim keywords VALIDATED — composes directly:
-    # each source carries a gate Column (branch-applied AND claim-keyword
-    # validity), bound ONCE per row via a single-element transform so the
-    # per-key/per-position lambdas read booleans (the typed engine's
-    # word_shingles trick).
+    # each ``claim_sources`` record folds to a gate Column, bound ONCE per
+    # row via a single-element transform so the per-key/per-position
+    # lambdas read booleans (the typed engine's word_shingles trick).
 
-    def _claim_walk(self, schema, jv, path, add):
-        """Walk in-place applicators, calling ``add(s, gate, p)`` for every
-        schema object applied to this instance location (gate None = root,
-        unconditionally applied)."""
+    def _claim_gates(self, schema, kind, jv, path):
+        """[(gate Column | None, ClaimSource)] for the ``unevaluated*``
+        at this node; gate None = the claims are unconditional."""
+        memo: dict = {}
 
-        def walk(s, gate, p):
-            if not isinstance(s, dict):
-                return
-            add(s, gate, p)
-            for idx, sub in enumerate(s.get("allOf", []) or []):
-                walk(sub, gate, p + ("allOf", str(idx)))
-            if isinstance(s.get("if"), (dict, bool)):
-                cif = self._sub_valid(s["if"], jv, p + ("if",))
-                walk(s["if"], _gand(gate, cif), p + ("if",))
-                if isinstance(s.get("then"), (dict, bool)):
-                    gt = _gand(_gand(gate, cif),
-                               self._sub_valid(s["then"], jv,
-                                               p + ("then",)))
-                    walk(s["then"], gt, p + ("then",))
-                if isinstance(s.get("else"), (dict, bool)):
-                    ge = _gand(_gand(gate, ~F.coalesce(cif, F.lit(False))),
-                               self._sub_valid(s["else"], jv,
-                                               p + ("else",)))
-                    walk(s["else"], ge, p + ("else",))
-            for kw in ("anyOf", "oneOf"):
-                for idx, sub in enumerate(s.get(kw, []) or []):
-                    bp = p + (kw, str(idx))
-                    walk(sub, _gand(gate, self._sub_valid(sub, jv, bp)),
-                         bp)
-            for k, sub in (s.get("dependentSchemas") or {}).items():
-                present = F.map_contains_key(jv.m, F.lit(k))
-                bp = p + ("dependentSchemas", k)
-                walk(sub, _gand(_gand(gate, present),
-                                self._sub_valid(sub, jv, bp)), bp)
+        def term(k, arg, suffix):
+            if k == "present":
+                return F.map_contains_key(jv.m, F.lit(arg))
+            if suffix not in memo:
+                memo[suffix] = self._sub_valid(arg, jv, path + suffix)
+            v = memo[suffix]
+            return ~F.coalesce(v, F.lit(False)) if k == "invalid" else v
 
-        walk(schema, None, path)
-
-    def _prop_claim_sources(self, schema, jv, path):
-        """[(gate Column|None, names, java_pats, claims_all)] for
-        unevaluatedProperties on this object node."""
-        from jsonschema_rs_spark.compiler import _prop_claim_subset
-
-        out: list = []
-
-        def add(s, gate, p):
-            names = tuple(s.get("properties") or {})
-            pats = tuple(_java_pattern(pt, "/".join(p))
-                         for pt in (s.get("patternProperties") or {}))
-            allc = isinstance(s.get("additionalProperties"),
-                              (dict, bool)) or (
-                s is not schema and isinstance(
-                    s.get("unevaluatedProperties"), (dict, bool)))
-            if not (names or pats or allc):
-                return
-            subset = _prop_claim_subset(s)
-            if subset is not None:
-                gate = _gand(gate, self._sub_valid(subset, jv, p))
-            out.append((gate, names, pats, allc))
-
-        self._claim_walk(schema, jv, path, add)
-        return out
-
-    def _items_claim_sources(self, schema, jv, path):
-        """[(gate Column|None, n_prefix, claims_all)] for unevaluatedItems
-        on this array node."""
-        from jsonschema_rs_spark.compiler import _items_claim_subset
-
-        out: list = []
-
-        def add(s, gate, p):
-            nb, ab = 0, False
-            it = s.get("items")
-            if isinstance(it, (dict, bool)):
-                ab = True
-            if isinstance(it, list):
-                nb = max(nb, len(it))
-            if isinstance(s.get("prefixItems"), list):
-                nb = max(nb, len(s["prefixItems"]))
-            if isinstance(s.get("additionalItems"), (dict, bool)):
-                ab = True
-            if s is not schema and isinstance(s.get("unevaluatedItems"),
-                                              (dict, bool)):
-                ab = True
-            if not (nb or ab):
-                return
-            subset = _items_claim_subset(s)
-            if subset is not None:
-                gate = _gand(gate, self._sub_valid(subset, jv, p))
-            out.append((gate, nb, ab))
-
-        self._claim_walk(schema, jv, path, add)
+        out = []
+        for src in claim_sources(schema, kind):
+            if src.terms:
+                parts = [term(*t) for t in src.terms]
+            elif src.subset is not None:
+                parts = [self._sub_valid(src.subset, jv, path + src.suffix)]
+            else:
+                parts = []
+            gate = None
+            for p in parts:
+                p = F.coalesce(p, F.lit(False))
+                gate = p if gate is None else gate & p
+            out.append((gate, src))
         return out
 
     # -- array keywords ----------------------------------------------------
@@ -844,17 +780,15 @@ class _JsonLowerer:
                  gate(F.size(F.array_distinct(canon)) == F.size(a)))
         ue = schema.get("unevaluatedItems")
         if isinstance(ue, (dict, bool)) and self._since(2019):
-            srcs = self._items_claim_sources(schema, jv, path)
             cont = schema.get("contains") if self._since(6) else None
             n_col, a_col = F.lit(0), F.lit(False)
-            for g, nb, ab in srcs:
-                gg = F.lit(True) if g is None else F.coalesce(g,
-                                                              F.lit(False))
-                if ab:
+            for g, src in self._claim_gates(schema, "items", jv, path):
+                gg = F.lit(True) if g is None else g
+                if src.claims_all:
                     a_col = a_col | gg
-                elif nb:
-                    n_col = F.greatest(
-                        n_col, F.when(gg, F.lit(nb)).otherwise(F.lit(0)))
+                elif src.n_prefix:
+                    n_col = F.greatest(n_col, F.when(
+                        gg, F.lit(src.n_prefix)).otherwise(F.lit(0)))
             bound = F.struct(n_col.alias("n"), a_col.alias("a"))
 
             def _cell(b, el, i):

@@ -189,6 +189,10 @@ def referential_violations(
     the predicate (Column -> Column) instead of a frame — both join sides
     then derive from the SAME aggregated subtree, so the physical plan
     reuses one exchange and the input is scanned once instead of twice."""
+    if catalog_pred is None and (catalog is None or catalog_key is None):
+        raise ValueError(
+            "referential_violations needs catalog and catalog_key, or "
+            "catalog_pred")
     counts = (
         fact.select(F.col(ref_col).alias("media_ref"))
         .filter(F.col("media_ref").isNotNull())

@@ -192,24 +192,6 @@ def ngram_jaccard_pairs(
 # MinHash + LSH
 # --------------------------------------------------------------------------
 
-def minhash_signature(shingles: Column, n_hashes: int = 16) -> Column:
-    """Portable minhash: the i-th hash of shingle s is ``md5(i || ':' || s)``
-    and the signature component is the lexicographic MIN of those strings.
-    String-min is engine-portable (DuckDB reproduces it exactly), and
-    collision behavior matches integer minhash for dedup purposes."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    shingles,
-                    lambda s, _i=i: F.md5(F.concat(F.lit(f"{_i}:"), s)),
-                )
-            )
-            for i in range(n_hashes)
-        ]
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -448,18 +430,10 @@ def connected_components_min(pairs: DataFrame, id_a: str = "id_a",
         .localCheckpoint(eager=True)
     )
 
-    # convergence detector (round 6): min-label propagation only ever
-    # DECREASES a rep, so the label multiset changed iff sum(rep) strictly
-    # decreased — one cheap agg over the just-checkpointed frame instead
-    # of a full join against the previous labels per iteration.  decimal
-    # sum: exact at any id magnitude (a bigint sum could wrap).
-    def _label_sum(frame) -> object:
-        return frame.agg(
-            F.sum(F.col("rep").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-
-    prev_sum = _label_sum(labels)
-    changed = -1
+    # convergence detector: count the labels this iteration changed with
+    # one join against the previous labels.  Exact for every id type —
+    # strings, integers and fractional numerics alike (a numeric sum of
+    # reps can stay equal while a label changes once ids are rounded).
     for _ in range(max_iter):
         msgs = (
             edges.join(labels, edges["dst"] == labels["id"])
@@ -471,11 +445,10 @@ def connected_components_min(pairs: DataFrame, id_a: str = "id_a",
             .agg(F.min("rep").alias("rep"))
             .localCheckpoint(eager=True)
         )
-        new_sum = _label_sum(new)
-        changed = int(new_sum != prev_sum)
+        changed = new.alias("n").join(labels.alias("o"), "id").filter(
+            F.col("n.rep") != F.col("o.rep")).count() > 0
         labels = new
-        prev_sum = new_sum
-        if changed == 0:
+        if not changed:
             return labels
     # silent non-convergence would return a real component SPLIT into
     # several clusters (wrong keepers, under-deletion) — fail loudly

@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, StringType, StructField, StructType
 
-from jsonschema_rs_spark.compiler import CompiledSpec
+from jsonschema_rs_spark.compiler import CompiledSpec, _esc_pointer
 
 VIOLATION_STRUCT = StructType(
     [
@@ -417,19 +417,15 @@ def _group_array(df: DataFrame, key, group, root) -> Column:
     return group[0].array(root)
 
 
-def _esc_ptr(s: str) -> str:
-    return s.replace("~", "~0").replace("/", "~1")
-
-
 def _instance_path_col(c, i: Column | None) -> Column:
     """instanceLocation JSON Pointer (reference ``paths.rs:60-106``):
     ``/spans/<i>/text`` for element constraints, ``/spans`` (or ``""`` at
     the root) for doc constraints — static strings except the span index."""
     if c.scope == "element":
-        pre = "".join("/" + _esc_ptr(s) for s in (c.array_key or ()))
-        suf = "".join("/" + _esc_ptr(s) for s in c.instance_fields)
+        pre = "".join("/" + _esc_pointer(s) for s in (c.array_key or ()))
+        suf = "".join("/" + _esc_pointer(s) for s in c.instance_fields)
         return F.concat(F.lit(pre + "/"), i.cast("string"), F.lit(suf))
-    return F.lit("".join("/" + _esc_ptr(s) for s in c.instance_fields))
+    return F.lit("".join("/" + _esc_pointer(s) for s in c.instance_fields))
 
 
 def _viol_struct_located(c, span_index: Column, observed: Column,
@@ -509,7 +505,7 @@ def violations(df: DataFrame, compiled: CompiledSpec,
             return mk
 
         for c in doc_pos:
-            base = "".join("/" + _esc_ptr(s) for s in c.instance_fields)
+            base = "".join("/" + _esc_pointer(s) for s in c.instance_fields)
             out.append(F.transform(
                 F.coalesce(c.viol_positions(root_col),
                            F.expr("array()").cast(_EMPTY_POS)),
@@ -623,47 +619,6 @@ def violations(df: DataFrame, compiled: CompiledSpec,
         F.col("v.observed").alias("observed"),
         *loc_cols,
     )
-
-
-def violation_count_column(compiled: CompiledSpec, root: Column) -> Column:
-    """Per-doc violation COUNT with boolean math only — no violation structs,
-    no observed strings (the cheap path for rollups/monitoring)."""
-    cnt = F.lit(0)
-    for c in compiled.constraints:
-        if c.scope != "doc":
-            continue
-        if c.viol_positions is not None:
-            # per-position rows (round 4): the count is the number of
-            # failing positions, matching the violations plan's row count
-            cnt = cnt + F.coalesce(
-                F.size(c.viol_positions(root)), F.lit(0))
-            continue
-        cnt = cnt + (~F.coalesce(c.pred(root), F.lit(True))).cast("int")
-    by_array: dict[tuple, list] = {}
-    for c in compiled.constraints:
-        if c.scope == "element":
-            by_array.setdefault(c.array_key, []).append(c)
-
-    def _elem_cnt_fn(group):
-        def elem_cnt(x: Column, i: Column) -> Column:
-            e = F.lit(0)
-            for c in group:
-                e = e + (~F.coalesce(c.pred(x, i), F.lit(True))).cast("int")
-            return e
-
-        return elem_cnt
-
-    for key, group in by_array.items():
-        arr = group[0].array(root)
-        cnt = cnt + F.coalesce(
-            F.aggregate(
-                F.transform(arr, _elem_cnt_fn(tuple(group))),
-                F.lit(0),
-                lambda acc, x: acc + x,
-            ),
-            F.lit(0),
-        )
-    return cnt
 
 
 # keyword -> reference ValidationErrorKind name (error.rs:63-143); the typed
@@ -920,7 +875,7 @@ def annotation_units(df: DataFrame, compiled: CompiledSpec,
 
         out = []
         for c in doc_pos:
-            base = "".join("/" + _esc_ptr(s) for s in c.instance_fields)
+            base = "".join("/" + _esc_pointer(s) for s in c.instance_fields)
             arr = F.coalesce(c.unit_positions(root_col),
                              F.expr("array()").cast(_EMPTY_U))
             mapped = F.transform(arr, _mk(c, base))

@@ -14,18 +14,23 @@ that matter identically on a 1000-executor cluster:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 
+_BYTE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30,
+               "t": 1 << 40}
+
+
 def _parse_bytes(s: str) -> int:
-    """'128m' / '1g' / '134217728' -> bytes (SparkConf size grammar)."""
-    s = str(s).strip().lower()
-    for suf, mul in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-                     ("t", 1 << 40), ("b", 1)):
-        if s.endswith(suf):
-            return int(float(s[: -len(suf)]) * mul)
-    return int(s)
+    """'128m' / '128mb' / '1g' / '134217728' -> bytes (SparkConf size
+    grammar: optional k/m/g/t unit, optional trailing b).  Anything else
+    raises ValueError."""
+    m = re.fullmatch(r"(\d+(?:\.\d+)?)([kmgt]?)b?", str(s).strip().lower())
+    if m is None:
+        raise ValueError(f"not a byte size: {s!r}")
+    return int(float(m.group(1)) * _BYTE_UNITS[m.group(2)])
 
 
 def est_scan_splits(df) -> int:

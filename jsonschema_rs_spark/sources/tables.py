@@ -24,16 +24,3 @@ def load_table(spark: SparkSession, table: str,
             if fmt == "iceberg":
                 raise
     return spark.read.parquet(table)
-
-
-def snapshot_lineage(spark: SparkSession, table: str) -> str:
-    """Current snapshot id for the checkpoint manifest's lineage field
-    (Iceberg); for parquet, the path itself is the lineage."""
-    try:
-        row = spark.sql(
-            f"SELECT snapshot_id FROM {table}.snapshots "
-            "ORDER BY committed_at DESC LIMIT 1"
-        ).collect()
-        return str(row[0][0]) if row else table
-    except Exception:
-        return table

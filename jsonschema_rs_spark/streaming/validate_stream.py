@@ -91,33 +91,6 @@ def windowed_chi2_drift(
     )
 
 
-def windowed_verdict_counts(
-    stream: DataFrame,
-    compiled: CompiledSpec,
-    ts_col: str,
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """Watermarked windowed pass/fail counts — the streaming rollup.
-
-    Late rows beyond the watermark are dropped deterministically; state is
-    bounded by (watermark / window) keys."""
-    vf = validation_frame(
-        stream.withWatermark(ts_col, watermark),
-        compiled,
-        id_cols=("doc_id", ts_col),
-        mode="verdicts",
-    )
-    return (
-        vf.groupBy(F.window(F.col(ts_col), window))
-        .agg(
-            F.count(F.lit(1)).alias("docs"),
-            F.sum(F.col("valid").cast("long")).alias("valid_docs"),
-        )
-        .withColumn("pass_rate", F.col("valid_docs") / F.col("docs"))
-    )
-
-
 def stream_referential_violations(
     stream: DataFrame,
     catalog: DataFrame,

@@ -754,6 +754,29 @@ def test_uneval_claims_gated_on_subschema_validity(spark):
                    for c, i in gota["a3"]), gota["a3"]
 
 
+def test_nested_unevaluated_items_claims_every_item_on_both_paths(spark):
+    """A nested ``unevaluatedItems`` evaluates every item, so the outer
+    ``unevaluatedItems: false`` sees nothing left: both the typed and the
+    variant path must accept ``[1, 2]``."""
+    from pyspark.sql import functions as F
+
+    from jsonschema_rs_spark.json_ingest import json_valid_column
+    from jsonschema_rs_spark.plans.validate import valid_column
+
+    schema = {"allOf": [{"unevaluatedItems": True}],
+              "unevaluatedItems": False}
+    opts = EngineOptions(draft=2020)
+    df = spark.createDataFrame([("a", [1, 2], "[1, 2]")],
+                               "doc_id string, arr array<bigint>, js string")
+    c = compile_spec({"properties": {"arr": schema}},
+                     df.select("doc_id", "arr").schema, opts)
+    row = df.select(
+        valid_column(c, F.struct("doc_id", "arr")).alias("typed"),
+        json_valid_column(F.col("js"), schema, opts).alias("json"),
+    ).collect()[0]
+    assert (row["typed"], row["json"]) == (True, True), row
+
+
 def test_huge_integer_literals_never_crash(spark):
     """Fuzz-found (round 5): integers beyond int64 have no long literal
     and beyond float range no double — multipleOf/enum/const/bounds with

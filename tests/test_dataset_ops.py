@@ -34,6 +34,12 @@ def test_referential_integrity_exact_dangling_set(spark):
     fs.unpersist()
 
 
+def test_referential_violations_requires_a_catalog(spark):
+    fact = spark.createDataFrame([("media://1",)], "media_ref string")
+    with pytest.raises(ValueError, match="catalog_key, or catalog_pred"):
+        DS.referential_violations(fact, "media_ref")
+
+
 def test_hll_cardinality_within_5pct(spark):
     fs = flat_spans(spark, SF)
     exact = fs.select(F.countDistinct("media_ref")).collect()[0][0]

@@ -259,13 +259,19 @@ def test_dedup_keepers_removes_chain_members(spark):
     untouched docs survive (round 4)."""
     from jsonschema_rs_spark.operators.dedup import dedup_keepers
 
-    docs = spark.createDataFrame([(i,) for i in range(10)], "doc_id long")
-    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)],
-                                  "id_a long, id_b long")
-    kept = sorted(r["doc_id"] for r in
-                  dedup_keepers(docs, "doc_id", pairs).collect())
-    # component {1,2,3} keeps 1; {7,8} keeps 7
-    assert kept == [0, 1, 4, 5, 6, 7, 9], kept
+    # component {1,2,3} (two hops from 3 to 1) keeps 1; {7,8} keeps 7.
+    # String ids run the same case: their labels have no numeric sum, so
+    # convergence is checked with a join (a decimal cast of 'doc-…' fails)
+    for typ, mk in (("long", lambda i: i),
+                    ("string", lambda i: f"doc-{i:06d}")):
+        docs = spark.createDataFrame([(mk(i),) for i in range(10)],
+                                     f"doc_id {typ}")
+        pairs = spark.createDataFrame(
+            [(mk(3), mk(2)), (mk(2), mk(1)), (mk(7), mk(8))],
+            f"id_a {typ}, id_b {typ}")
+        kept = sorted(r["doc_id"] for r in
+                      dedup_keepers(docs, "doc_id", pairs).collect())
+        assert kept == [mk(i) for i in (0, 1, 4, 5, 6, 7, 9)], (typ, kept)
 
 
 def test_minhash_broadcast_dictionary_identical_pairs(spark):

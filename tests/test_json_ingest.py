@@ -115,6 +115,13 @@ def test_json_unsupported_raises_at_compile(spark):
     # typed engine would stage a Python fallback; the variant path cannot
     with pytest.raises(JsonIngestUnsupported, match="pattern"):
         json_valid_column(F.lit("{}"), {"pattern": r"(?P<x>a)(?P=x)"})
+    # a registered custom keyword builds typed-column predicates; the
+    # variant path must refuse it rather than silently skip the check
+    opts = EngineOptions(custom_keywords={
+        "x-even": lambda v, dt: (lambda x: x % 2 == 0,
+                                 lambda x: x.cast("string"))})
+    with pytest.raises(JsonIngestUnsupported, match="x-even"):
+        json_valid_column(F.lit("3"), {"x-even": True}, opts)
 
 
 def test_json_unevaluated_runtime_annotations(spark):

@@ -4,6 +4,7 @@ These assert the properties the 100-TB design depends on, so a refactor
 can't silently reintroduce a shuffle or break scan pruning.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from jsonschema_rs_spark.compiler import compile_spec
@@ -242,3 +243,21 @@ def test_iceberg_read_path_plan_construction(spark):
                 or "Failed to find" in msg), msg
     else:  # pragma: no cover - only with iceberg jars on the classpath
         _pytest.skip("iceberg runtime present; load path succeeded")
+
+
+def test_est_scan_splits_reads_two_letter_size_units(spark):
+    """Spark's size grammar accepts ``128mb``; the split estimate that
+    ``derive_spans`` runs must parse it rather than fail every build."""
+    from jsonschema_rs_spark.session import _parse_bytes, est_scan_splits
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "128mb")
+    try:
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        assert est_scan_splits(docs) >= 1
+    finally:
+        spark.conf.set(key, old)
+    assert _parse_bytes("1gb") == _parse_bytes("1g") == 1 << 30
+    with pytest.raises(ValueError):
+        _parse_bytes("12 parsecs")
