@@ -643,18 +643,18 @@ def _needs_python(schema: Any, options: EngineOptions) -> bool:
     return False
 
 
-def _claimed_positions(schema: Any, conditionals: bool = True
+def _claimed_positions(schema: Any, nested: bool = False
                        ) -> tuple[int, bool]:
-    """Static positions 'evaluated' for unevaluatedItems: max prefixItems
-    length across in-place applicators; object-form items claims all.
-
-    ``conditionals=False`` counts only the UNCONDITIONAL sources (the node
-    itself + allOf, which always applies).  The lowerers resolve claims
-    with ``claim_sources``; this summary is kept for the test oracle."""
+    """Static positions 'evaluated' for unevaluatedItems by the node and
+    its ``allOf`` chain: max prefixItems length; object-form items claims
+    all, and so does a nested ``unevaluatedItems`` (``nested=True``: the
+    schema itself is applied in place below the node, so its own counts).
+    The lowerers resolve claims with ``claim_sources``; this summary is
+    kept for the test oracle."""
     n_prefix = 0
     all_claimed = False
 
-    def walk(s):
+    def walk(s, nested):
         nonlocal n_prefix, all_claimed
         if not isinstance(s, dict):
             return
@@ -665,19 +665,14 @@ def _claimed_positions(schema: Any, conditionals: bool = True
             n_prefix = max(n_prefix, len(it))
         if isinstance(s.get("prefixItems"), list):
             n_prefix = max(n_prefix, len(s["prefixItems"]))
-            if isinstance(s.get("items"), (dict, bool)):
-                all_claimed = True
         if isinstance(s.get("additionalItems"), (dict, bool)):
             all_claimed = True
-        if conditionals:
-            for key in ("if", "then", "else"):
-                walk(s.get(key))
-        for key in (("allOf", "anyOf", "oneOf") if conditionals
-                    else ("allOf",)):
-            for sub in s.get(key, []) or []:
-                walk(sub)
+        if nested and isinstance(s.get("unevaluatedItems"), (dict, bool)):
+            all_claimed = True
+        for sub in s.get("allOf", []) or []:
+            walk(sub, True)
 
-    walk(schema)
+    walk(schema, nested)
     return n_prefix, all_claimed
 
 
@@ -1779,9 +1774,9 @@ class Lowerer:
                 return (max([s.n_prefix for s in ss], default=0),
                         any(s.claims_all for s in ss))
 
-            # branch sources matter only where they claim past the node
-            # and allOf sources
-            has_branch_conds = extent(srcs) != extent(own)
+            # every branch source gates at runtime: it may claim a
+            # position whose node or allOf source failed its subset gate
+            has_branch_conds = any(s.terms for s in srcs)
             n_static, static_all = extent(static)
             n_soft, soft_all = extent(soft)
             # 2020-12: `contains` claims the items it MATCHES — an

@@ -18,6 +18,16 @@ and only at doc scope).  Variant parse + path extraction are JVM
 expressions, so the plan stays embarrassingly parallel in input splits
 exactly like the typed ``violations`` plan.
 
+Build cost: the driver-side plan build, not execution, dominates this
+path.  It is proportional to the number of Column nodes built over py4j;
+each PySpark function call costs about five round trips beyond the call
+itself (call-site capture).  So every derived Column of a node — its tag
+CaseWhen, type tests, extractions, members and observed rendering — is
+memoised on the node (:class:`JV`) and built once.  NULL is guarded once
+per cell, in ``emit``: a cell is never NULL, so validity is the bare
+conjunction of the cells and is built only where it is read
+(combinators, claim gates, HOF lambdas, verdicts).
+
 ``unevaluatedProperties``/``unevaluatedItems`` lower natively (round 5):
 in expression land the 2020-12 annotation algebra — claims count only
 from schema objects that were APPLIED and whose claim keywords VALIDATED
@@ -33,8 +43,10 @@ fall back to the typed path for those.
 
 from __future__ import annotations
 
+import operator
 from decimal import Decimal
-from typing import Any, Callable, Optional
+from functools import cached_property, reduce
+from typing import Any, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -61,22 +73,31 @@ def _null_str() -> Column:
 
 class JV:
     """One JSON instance node: a VARIANT Column where SQL NULL = absent
-    (vs ``is_variant_null`` = JSON null)."""
+    (vs ``is_variant_null`` = JSON null).
 
-    __slots__ = ("e",)
+    Every derived Column is built once per node and reused: each PySpark
+    function call costs several py4j round trips, so rebuilding the tag
+    CaseWhen on every access dominated the plan build.  A lambda variable
+    always gets a fresh ``JV``, so nothing memoised crosses a lambda
+    scope."""
 
     def __init__(self, e: Column):
         self.e = e
+        self._is: dict[tuple[str, ...], Column] = {}
+        self._members: dict[str, JV] = {}
 
-    @property
+    @cached_property
+    def _sch(self) -> Column:
+        return F.schema_of_variant(self.e)
+
+    @cached_property
     def tag(self) -> Column:
         """JSON type tag: null/string/boolean/integer/number/object/array;
         SQL NULL when the node is absent.  ``integer`` means the token was
         an integer literal (BIGINT or DECIMAL(p,0) — variant preserves the
         exact parse, which is what draft-4 strict-integer needs)."""
-        e = self.e
-        sch = F.schema_of_variant(e)
-        return (F.when(e.isNull(), _null_str())
+        e, sch = self.e, self._sch
+        return (F.when(self.absent, _null_str())
                 .when(F.is_variant_null(e), F.lit("null"))
                 .when(sch.startswith("OBJECT"), F.lit("object"))
                 .when(sch.startswith("ARRAY"), F.lit("array"))
@@ -87,49 +108,61 @@ class JV:
                       F.lit("integer"))
                 .otherwise(F.lit("number")))
 
+    def is_(self, *names: str) -> Column:
+        """``tag IN names`` (NULL when absent)."""
+        c = self._is.get(names)
+        if c is None:
+            t = self.tag
+            c = self._is[names] = (t == names[0] if len(names) == 1
+                                   else t.isin(*names))
+        return c
+
     # tag-gated extractions: the gate is what keeps Spark's lenient
     # variant casts (5 -> "5") from leaking cross-type values
-    @property
+    @cached_property
     def s(self) -> Column:
-        return F.when(self.tag == "string",
+        return F.when(self.is_("string"),
                       F.try_variant_get(self.e, "$", "string"))
 
-    @property
+    @cached_property
     def nd(self) -> Column:
-        return F.when(self.tag.isin("integer", "number"),
+        return F.when(self.is_("integer", "number"),
                       F.try_variant_get(self.e, "$", "double"))
 
-    @property
+    @cached_property
     def ndec(self) -> Column:
         """Exact integer value (38 digits) — only for integer-tagged."""
-        return F.when(self.tag == "integer",
+        return F.when(self.is_("integer"),
                       F.try_variant_get(self.e, "$", "decimal(38,0)"))
 
-    @property
+    @cached_property
     def b(self) -> Column:
-        return F.when(self.tag == "boolean",
+        return F.when(self.is_("boolean"),
                       F.try_variant_get(self.e, "$", "boolean"))
 
-    @property
+    @cached_property
     def arr(self) -> Column:
         return F.try_variant_get(self.e, "$", "array<variant>")
 
-    @property
+    @cached_property
     def m(self) -> Column:
         return F.try_variant_get(self.e, "$", "map<string,variant>")
 
     def member(self, key: str) -> "JV":
-        return JV(F.try_element_at(self.m, F.lit(key)))
+        jv = self._members.get(key)
+        if jv is None:
+            jv = self._members[key] = JV(F.try_element_at(self.m, F.lit(key)))
+        return jv
 
-    @property
+    @cached_property
     def absent(self) -> Column:
         return self.e.isNull()
 
-    @property
+    @cached_property
     def obs(self) -> Column:
         """Deterministic observed rendering: raw string for strings, the
         variant's JSON text otherwise."""
-        return F.when(self.tag == "string", self.s).otherwise(
+        return F.when(self.is_("string"), self.s).otherwise(
             self.e.try_cast("string"))
 
 
@@ -137,52 +170,54 @@ class SJV:
     """A plain STRING treated as a JSON instance (propertyNames applies
     subschemas to each member NAME)."""
 
-    __slots__ = ("_s",)
-
     def __init__(self, s: Column):
-        self._s = s
+        self.s = self.obs = s
 
-    @property
+    def is_(self, *names: str) -> Column:
+        return F.lit("string" in names)
+
+    @cached_property
     def tag(self) -> Column:
         return F.lit("string")
 
-    @property
-    def s(self) -> Column:
-        return self._s
-
-    @property
+    @cached_property
     def nd(self) -> Column:
         return F.lit(None).cast("double")
 
-    ndec = nd
-    b = property(lambda self: F.lit(None).cast("boolean"))
-    arr = property(lambda self: F.lit(None).cast("array<variant>"))
-    m = property(lambda self: F.lit(None).cast("map<string,variant>"))
+    @cached_property
+    def ndec(self) -> Column:
+        return self.nd
 
-    def member(self, key: str):
+    @cached_property
+    def b(self) -> Column:
+        return F.lit(None).cast("boolean")
+
+    @cached_property
+    def arr(self) -> Column:
+        return F.lit(None).cast("array<variant>")
+
+    @cached_property
+    def m(self) -> Column:
+        return F.lit(None).cast("map<string,variant>")
+
+    @cached_property
+    def _missing(self) -> JV:
         return JV(F.lit(None).cast("variant"))
 
-    @property
-    def absent(self) -> Column:
-        return self._s.isNull()
+    def member(self, key: str) -> JV:
+        return self._missing
 
-    @property
-    def obs(self) -> Column:
-        return self._s
+    @cached_property
+    def absent(self) -> Column:
+        return self.s.isNull()
 
 
 def _and_all(preds: list[Column]) -> Column:
-    out = F.lit(True)
-    for p in preds:
-        out = out & p
-    return out
+    return reduce(operator.and_, preds) if preds else F.lit(True)
 
 
 def _or_all(preds: list[Column]) -> Column:
-    out = F.lit(False)
-    for p in preds:
-        out = out | p
-    return out
+    return reduce(operator.or_, preds) if preds else F.lit(False)
 
 
 def _java_pattern(pat: str, where: str) -> str:
@@ -197,33 +232,31 @@ def _java_pattern(pat: str, where: str) -> str:
 # JSON-semantic deep equality against a PYTHON literal ---------------------
 
 def _jeq(jv, lit: Any) -> Column:
-    t = jv.tag
     if lit is None:
-        return t == "null"
+        return jv.is_("null")
     if isinstance(lit, bool):
-        return (t == "boolean") & (jv.b == F.lit(lit))
+        return jv.is_("boolean") & (jv.b == F.lit(lit))
     if isinstance(lit, int) and 2 ** 53 < abs(lit) < 10 ** 37:
         # exact big-integer equality via decimal (1e15-scale doubles lie);
         # beyond 37 digits no decimal literal exists — double equality is
         # the documented residual there
-        return (t == "integer") & (jv.ndec == F.lit(Decimal(lit)))
+        return jv.is_("integer") & (jv.ndec == F.lit(Decimal(lit)))
     if isinstance(lit, (int, float)):
         # 1 == 1.0 per JSON Schema numeric equality
-        return t.isin("integer", "number") & (jv.nd == F.lit(_as_double(lit)))
+        return (jv.is_("integer", "number")
+                & (jv.nd == F.lit(_as_double(lit))))
     if isinstance(lit, str):
-        return (t == "string") & (jv.s == F.lit(lit))
+        return jv.is_("string") & (jv.s == F.lit(lit))
     if isinstance(lit, list):
         a = jv.arr
-        p = (t == "array") & (F.size(a) == len(lit))
+        p = jv.is_("array") & (F.size(a) == len(lit))
         for i, sub in enumerate(lit):
             p = p & _jeq(JV(F.try_element_at(a, F.lit(i + 1))), sub)
         return p
     if isinstance(lit, dict):
-        m = jv.m
-        p = (t == "object") & (F.size(m) == len(lit))
+        p = jv.is_("object") & (F.size(jv.m) == len(lit))
         for k, sub in lit.items():
-            p = p & F.coalesce(
-                _jeq(JV(F.try_element_at(m, F.lit(k))), sub), F.lit(False))
+            p = p & F.coalesce(_jeq(jv.member(k), sub), F.lit(False))
         return p
     raise SpecError(f"unsupported literal in enum/const: {lit!r}")
 
@@ -235,7 +268,6 @@ _CANON_DEPTH = 4
 
 
 def _canon(jv, depth: int = _CANON_DEPTH) -> Column:
-    t = jv.tag
     # numeric canon (round 6, ADVICE): integer-tagged values render via
     # the exact decimal(38,0) so big integers beyond 2^53 stay distinct;
     # number-tagged INTEGRAL doubles render through the same decimal form
@@ -247,12 +279,12 @@ def _canon(jv, depth: int = _CANON_DEPTH) -> Column:
         F.when((flt % F.lit(1.0)) == 0,
                flt.try_cast("decimal(38,0)").cast("string")),
         flt.cast("string"))
-    scalar = (F.when(t == "null", F.lit("z:"))
-              .when(t == "boolean", F.concat(F.lit("b:"),
-                                             jv.b.cast("string")))
-              .when(t == "integer", F.concat(F.lit("n:"), int_s))
-              .when(t == "number", F.concat(F.lit("n:"), flt_s))
-              .when(t == "string",
+    scalar = (F.when(jv.is_("null"), F.lit("z:"))
+              .when(jv.is_("boolean"), F.concat(F.lit("b:"),
+                                                jv.b.cast("string")))
+              .when(jv.is_("integer"), F.concat(F.lit("n:"), int_s))
+              .when(jv.is_("number"), F.concat(F.lit("n:"), flt_s))
+              .when(jv.is_("string"),
                     F.concat(F.lit("s:"), F.length(jv.s).cast("string"),
                              F.lit(":"), jv.s)))
     if depth <= 0:
@@ -272,8 +304,8 @@ def _canon(jv, depth: int = _CANON_DEPTH) -> Column:
     obj_c = F.concat(F.lit("o:{"),
                      F.concat_ws("|", F.array_sort(obj_entries)),
                      F.lit("}"))
-    return (F.when(t == "array", arr_c)
-            .when(t == "object", obj_c)
+    return (F.when(jv.is_("array"), arr_c)
+            .when(jv.is_("object"), obj_c)
             .otherwise(scalar))
 
 
@@ -286,11 +318,13 @@ _TYPE_NAMES = ("null", "boolean", "object", "array", "number",
 
 
 class _JsonLowerer:
-    """Walks a RESOLVED spec over a variant node and emits (cells, valid):
-    ``cells`` = [(constraint_id, pred, observed)] for the violations
-    stream (conjunctive scopes only — combinator branches collapse into
-    one cell, reference basic-output granularity for failed branches);
-    ``valid`` = the node's full validity Column (used by combinators).
+    """Walks a RESOLVED spec over a variant node and emits ``cells`` =
+    [(constraint_id, pred, observed)] for the violations stream
+    (conjunctive scopes only — combinator branches collapse into one
+    cell, reference basic-output granularity for failed branches).  A
+    cell is never NULL and passes when its node is absent, so a node's
+    full validity (:meth:`valid`, read by combinators, claim gates, HOF
+    lambdas and verdicts) is just the conjunction of its cells.
 
     The structural walk mirrors the typed engine's ``_Lowered`` contract
     (compiler.py) but the instance domain is JSON-via-variant, so absent /
@@ -309,16 +343,21 @@ class _JsonLowerer:
         d = self.draft
         return d is None or d >= introduced
 
+    def valid(self, schema: Any, jv, path: tuple[str, ...],
+              in_lambda: bool = True) -> Column:
+        """Full validity of ``schema`` at ``jv``; ``in_lambda`` defaults
+        to the HOF-lambda rules (no pandas-UDF formats)."""
+        return _and_all([p for _, p, _ in
+                         self.lower(schema, jv, path, in_lambda)])
+
     def lower(self, schema: Any, jv, path: tuple[str, ...],
-              in_lambda: bool = False) -> tuple[list, Column]:
+              in_lambda: bool = False) -> list:
         cells: list[tuple[str, Column, Column]] = []
         if schema is True or schema == {}:
-            return cells, F.lit(True)
+            return cells
         if schema is False:
-            cid = "/".join(path) or "false"
-            pred = jv.absent
-            cells.append((cid, pred, jv.obs))
-            return cells, pred
+            cells.append(("/".join(path) or "false", jv.absent, jv.obs))
+            return cells
         if not isinstance(schema, dict):
             raise SpecError(f"schema must be dict/bool, got {schema!r}")
         custom = sorted(set(schema) & set(self.options.custom_keywords))
@@ -328,22 +367,16 @@ class _JsonLowerer:
                 "custom keyword factories build typed-column predicates "
                 "and have no variant lowering")
 
-        t = jv.tag
-        preds: list[Column] = []
-
         def emit(kw_path: tuple[str, ...], pred: Column,
                  obs: Optional[Column] = None):
             # absent node passes every keyword (presence is the parent's
-            # concern via required/dependencies)
-            gated = jv.absent | F.coalesce(pred, F.lit(False))
-            cells.append(("/".join(kw_path), gated,
+            # concern via required/dependencies); the one NULL guard
+            cells.append(("/".join(kw_path),
+                          jv.absent | F.coalesce(pred, F.lit(False)),
                           jv.obs if obs is None else obs))
-            preds.append(gated)
 
-        def valid_of(sub, sub_jv, seg: tuple[str, ...],
-                     lam: bool) -> Column:
-            _, v = self.lower(sub, sub_jv, path + seg, in_lambda=lam)
-            return v
+        def valid_of(sub, seg: tuple[str, ...]) -> Column:
+            return self.valid(sub, jv, path + seg, in_lambda)
 
         # ---- type --------------------------------------------------------
         if "type" in schema:
@@ -354,7 +387,7 @@ class _JsonLowerer:
                 if n not in _TYPE_NAMES:
                     raise SpecError(f"unknown type {n!r} at {'/'.join(path)}")
             emit(path + ("type",), _or_all(
-                [self._type_pred(n, jv, t) for n in names]))
+                [self._type_pred(n, jv) for n in names]))
 
         # ---- enum / const ------------------------------------------------
         if "enum" in schema:
@@ -363,57 +396,41 @@ class _JsonLowerer:
         if "const" in schema and self._since(6):
             emit(path + ("const",), _jeq(jv, schema["const"]))
 
-        # ---- numeric -----------------------------------------------------
-        self._numeric(schema, jv, t, path, emit)
-
-        # ---- string ------------------------------------------------------
-        self._string(schema, jv, t, path, emit, in_lambda)
-
-        # ---- object ------------------------------------------------------
-        self._object(schema, jv, t, path, emit, cells, preds, in_lambda)
-
-        # ---- array -------------------------------------------------------
-        self._array(schema, jv, t, path, emit, in_lambda)
+        self._numeric(schema, jv, path, emit)
+        self._string(schema, jv, path, emit, in_lambda)
+        self._object(schema, jv, path, emit, cells, in_lambda)
+        self._array(schema, jv, path, emit, cells, in_lambda)
 
         # ---- combinators -------------------------------------------------
         if "allOf" in schema:
             for i, sub in enumerate(schema["allOf"]):
-                sub_cells, v = self.lower(sub, jv, path + ("allOf", str(i)),
-                                          in_lambda=in_lambda)
-                cells.extend(sub_cells)
-                preds.append(v)
+                cells.extend(self.lower(sub, jv, path + ("allOf", str(i)),
+                                        in_lambda))
         if "anyOf" in schema:
-            vs = [valid_of(sub, jv, ("anyOf", str(i)), in_lambda)
-                  for i, sub in enumerate(schema["anyOf"])]
-            emit(path + ("anyOf",), _or_all(vs))
+            emit(path + ("anyOf",), _or_all(
+                [valid_of(sub, ("anyOf", str(i)))
+                 for i, sub in enumerate(schema["anyOf"])]))
         if "oneOf" in schema:
-            vs = [valid_of(sub, jv, ("oneOf", str(i)), in_lambda)
-                  for i, sub in enumerate(schema["oneOf"])]
-            cnt = F.lit(0)
-            for v in vs:
-                cnt = cnt + F.when(v, 1).otherwise(0)
+            cnt = reduce(operator.add, [
+                valid_of(sub, ("oneOf", str(i))).cast("int")
+                for i, sub in enumerate(schema["oneOf"])])
             emit(path + ("oneOf",), cnt == 1)
         if "not" in schema:
-            v = valid_of(schema["not"], jv, ("not",), in_lambda)
-            emit(path + ("not",), ~v | jv.absent)
+            emit(path + ("not",), ~valid_of(schema["not"], ("not",)))
         if "if" in schema and self._since(7):
-            cond = valid_of(schema["if"], jv, ("if",), in_lambda)
-            tv = (valid_of(schema["then"], jv, ("then",), in_lambda)
+            cond = valid_of(schema["if"], ("if",))
+            tv = (valid_of(schema["then"], ("then",))
                   if "then" in schema else F.lit(True))
-            ev = (valid_of(schema["else"], jv, ("else",), in_lambda)
+            ev = (valid_of(schema["else"], ("else",))
                   if "else" in schema else F.lit(True))
-            emit(path + ("if",),
-                 F.when(cond, tv).otherwise(ev))
-
-        valid = jv.absent | _and_all([F.coalesce(p, F.lit(False))
-                                      for p in preds])
-        return cells, valid
+            emit(path + ("if",), F.when(cond, tv).otherwise(ev))
+        return cells
 
     # -- type pred ---------------------------------------------------------
 
-    def _type_pred(self, name: str, jv, t: Column) -> Column:
+    def _type_pred(self, name: str, jv) -> Column:
         if name == "integer":
-            strict = t == "integer"
+            strict = jv.is_("integer")
             if self.draft == 4:
                 # draft-4: 1.0 is NOT an integer (legacy/type_draft_4.rs:
                 # 113-114 is_u64/is_i64).  Variant parses an integer
@@ -424,14 +441,13 @@ class _JsonLowerer:
                 # value range [2^63, 2^64) (the fractional-form literal in
                 # that window is a documented mis-classification; the
                 # reference's own guarantee stops at u64).
-                sch = F.schema_of_variant(jv.e)
                 u64_ext = ((jv.ndec >= F.lit(Decimal(2 ** 63)))
                            & (jv.ndec < F.lit(Decimal(2 ** 64))))
-                return (sch == F.lit("BIGINT")) | (strict & u64_ext)
-            return strict | ((t == "number") & (jv.nd == F.floor(jv.nd)))
+                return (jv._sch == F.lit("BIGINT")) | (strict & u64_ext)
+            return strict | (jv.is_("number") & (jv.nd == F.floor(jv.nd)))
         if name == "number":
-            return t.isin("integer", "number")
-        return t == F.lit(name)
+            return jv.is_("integer", "number")
+        return jv.is_(name)
 
     # -- numeric keywords --------------------------------------------------
 
@@ -443,14 +459,12 @@ class _JsonLowerer:
                 and 2 ** 53 < abs(bound) < 10 ** 37:
             dec = getattr(jv.ndec, op)(F.lit(Decimal(bound)))
             dbl = getattr(jv.nd, op)(F.lit(_as_double(bound)))
-            return F.when(jv.tag == "integer", dec).otherwise(dbl)
+            return F.when(jv.is_("integer"), dec).otherwise(dbl)
         return getattr(jv.nd, op)(F.lit(_as_double(bound)))
 
-    def _numeric(self, schema, jv, t, path, emit):
-        num = t.isin("integer", "number")
-
+    def _numeric(self, schema, jv, path, emit):
         def gate(p):
-            return ~num | p
+            return ~jv.is_("integer", "number") | p
 
         if "minimum" in schema:
             v = schema["minimum"]
@@ -484,7 +498,7 @@ class _JsonLowerer:
                 # variant keeps the literal's exact decimal — extract it
                 # directly (no double round-trip needed for ≤6-scale
                 # literals; mirrors compiler._lower_multiple_of)
-                xd = F.when(t.isin("integer", "number"),
+                xd = F.when(jv.is_("integer", "number"),
                             F.try_variant_get(jv.e, "$", "decimal(38,6)"))
                 exact = xd.isNotNull() & (xd.cast("double") == jv.nd)
                 flt = F.when(exact, xd % F.lit(kd) == 0).otherwise(approx)
@@ -495,7 +509,7 @@ class _JsonLowerer:
                 # decimal modulo keeps integer-tagged values exact past
                 # 2^53; a >37-digit divisor cannot be a decimal literal
                 # (fuzz-found), so it falls to the double path
-                p = F.when(jv.tag == "integer",
+                p = F.when(jv.is_("integer"),
                            jv.ndec % F.lit(Decimal(q)) == 0).otherwise(flt)
             else:
                 p = flt
@@ -503,11 +517,9 @@ class _JsonLowerer:
 
     # -- string keywords ---------------------------------------------------
 
-    def _string(self, schema, jv, t, path, emit, in_lambda):
-        is_s = t == "string"
-
+    def _string(self, schema, jv, path, emit, in_lambda):
         def gate(p):
-            return ~is_s | p
+            return ~jv.is_("string") | p
 
         if "minLength" in schema:
             emit(path + ("minLength",),
@@ -554,22 +566,18 @@ class _JsonLowerer:
 
     # -- object keywords ---------------------------------------------------
 
-    def _object(self, schema, jv, t, path, emit, cells, preds, in_lambda):
-        is_o = t == "object"
+    def _object(self, schema, jv, path, emit, cells, in_lambda):
         m = jv.m
 
         def gate(p):
-            return ~is_o | F.coalesce(p, F.lit(False))
+            return ~jv.is_("object") | p
 
         props = schema.get("properties") or {}
         for k, sub in props.items():
-            sub_cells, v = self.lower(sub, jv.member(k),
-                                      path + (k,), in_lambda=in_lambda)
-            # member checks live inside the object gate
-            for cid, p, obs in sub_cells:
-                gp = ~is_o | F.coalesce(p, F.lit(False))
-                cells.append((cid, gp, obs))
-                preds.append(gp)
+            # no object re-gate: ``m`` is NULL for a non-object, so every
+            # member is absent and its cells pass
+            cells.extend(self.lower(sub, jv.member(k), path + (k,),
+                                    in_lambda))
         if "required" in schema:
             for k in schema["required"]:
                 emit(path + ("required", k),
@@ -584,8 +592,8 @@ class _JsonLowerer:
         if "propertyNames" in schema and self._since(6):
             sub = schema["propertyNames"]
             p = F.forall(F.map_keys(m),
-                         lambda k: self._sub_valid(sub, SJV(k),
-                                                   path + ("propertyNames",)))
+                         lambda k: self.valid(sub, SJV(k),
+                                              path + ("propertyNames",)))
             emit(path + ("propertyNames",), gate(p))
         pats = {p: s for p, s in
                 (schema.get("patternProperties") or {}).items()}
@@ -600,7 +608,7 @@ class _JsonLowerer:
             java = pat_java[pat]
             matched = F.map_filter(m, lambda k, v: k.rlike(java))
             p = F.forall(F.map_values(matched),
-                         lambda v: self._sub_valid(
+                         lambda v: self.valid(
                              sub, JV(v), path + ("patternProperties", pat)))
             emit(path + ("patternProperties", pat), gate(p))
         ap = schema.get("additionalProperties")
@@ -608,19 +616,15 @@ class _JsonLowerer:
             named = list(props)
 
             def is_extra(k):
-                cond = F.lit(True)
-                if named:
-                    cond = cond & ~k.isin(*named)
-                for j in pat_java.values():
-                    cond = cond & ~k.rlike(j)
-                return cond
+                return _and_all(([~k.isin(*named)] if named else [])
+                                + [~k.rlike(j) for j in pat_java.values()])
 
             extras = F.map_filter(m, lambda k, v: is_extra(k))
             if ap is False:
                 p = F.size(extras) == 0
             else:
                 p = F.forall(F.map_values(extras),
-                             lambda v: self._sub_valid(
+                             lambda v: self.valid(
                                  ap, JV(v),
                                  path + ("additionalProperties",)))
             emit(path + ("additionalProperties",), gate(p))
@@ -641,7 +645,7 @@ class _JsonLowerer:
             emit(path + ("dependentRequired", k), gate(p))
         for k, sub in dep_sch.items():
             present = F.map_contains_key(m, F.lit(k))
-            v = self._sub_valid(sub, jv, path + ("dependentSchemas", k))
+            v = self.valid(sub, jv, path + ("dependentSchemas", k))
             emit(path + ("dependentSchemas", k), gate(~present | v))
         ue = schema.get("unevaluatedProperties")
         if isinstance(ue, (dict, bool)) and self._since(2019):
@@ -656,27 +660,22 @@ class _JsonLowerer:
             ] or [F.lit(False).alias("g_")]))
 
             def _claimed(b, k):
-                c = F.lit(False)
+                terms = []
                 for j, (_, names, pats, allc) in enumerate(srcs):
-                    cj = F.lit(allc)
-                    if names:
-                        cj = cj | k.isin(*names)
-                    for pj in pats:
-                        cj = cj | k.rlike(pj)
-                    c = c | (b.getField(f"g{j}") & cj)
-                return c
+                    g = b.getField(f"g{j}")
+                    if not allc:
+                        g = g & _or_all(([k.isin(*names)] if names else [])
+                                        + [k.rlike(pj) for pj in pats])
+                    terms.append(g)
+                return _or_all(terms)
 
             entries = F.map_entries(m)
             p = F.element_at(F.transform(F.array(bound), lambda b: F.forall(
                 entries,
                 lambda e: _claimed(b, e.getField("key"))
-                | self._sub_valid(ue, JV(e.getField("value")),
-                                  path + ("unevaluatedProperties",)))), 1)
+                | self.valid(ue, JV(e.getField("value")),
+                             path + ("unevaluatedProperties",)))), 1)
             emit(path + ("unevaluatedProperties",), gate(p))
-
-    def _sub_valid(self, sub, sub_jv, path) -> Column:
-        _, v = self.lower(sub, sub_jv, path, in_lambda=True)
-        return v
 
     # -- unevaluated* claim sources (runtime annotation algebra) -----------
     #
@@ -694,35 +693,32 @@ class _JsonLowerer:
 
         def term(k, arg, suffix):
             if k == "present":
-                return F.map_contains_key(jv.m, F.lit(arg))
+                # NULL off an object; validity terms are never NULL
+                return F.coalesce(F.map_contains_key(jv.m, F.lit(arg)),
+                                  F.lit(False))
             if suffix not in memo:
-                memo[suffix] = self._sub_valid(arg, jv, path + suffix)
+                memo[suffix] = self.valid(arg, jv, path + suffix)
             v = memo[suffix]
-            return ~F.coalesce(v, F.lit(False)) if k == "invalid" else v
+            return ~v if k == "invalid" else v
 
         out = []
         for src in claim_sources(schema, kind):
             if src.terms:
                 parts = [term(*t) for t in src.terms]
             elif src.subset is not None:
-                parts = [self._sub_valid(src.subset, jv, path + src.suffix)]
+                parts = [self.valid(src.subset, jv, path + src.suffix)]
             else:
                 parts = []
-            gate = None
-            for p in parts:
-                p = F.coalesce(p, F.lit(False))
-                gate = p if gate is None else gate & p
-            out.append((gate, src))
+            out.append((_and_all(parts) if parts else None, src))
         return out
 
     # -- array keywords ----------------------------------------------------
 
-    def _array(self, schema, jv, t, path, emit, in_lambda):
-        is_a = t == "array"
+    def _array(self, schema, jv, path, emit, cells, in_lambda):
         a = jv.arr
 
         def gate(p):
-            return ~is_a | F.coalesce(p, F.lit(False))
+            return ~jv.is_("array") | p
 
         # tuple vs element forms per draft (mirrors compiler._lower_array)
         items = schema.get("items")
@@ -740,12 +736,11 @@ class _JsonLowerer:
         else:
             rest = items
         for j, sub in enumerate(prefix):
-            el = JV(F.try_element_at(a, F.lit(j + 1)))
-            sub_cells, _v = self.lower(sub, el, path + ("items", str(j)),
-                                       in_lambda=in_lambda)
-            for cid, p, obs in sub_cells:
-                emit(tuple(cid.split("/")),
-                     ~is_a | F.coalesce(p, F.lit(False)), obs)
+            # no array re-gate: the array cast is NULL for a non-array,
+            # so every element is absent and its cells pass
+            cells.extend(self.lower(
+                sub, JV(F.try_element_at(a, F.lit(j + 1))),
+                path + ("items", str(j)), in_lambda))
         n_pre = len(prefix)
         if rest is False:
             emit(path + (rest_kw,), gate(F.size(a) <= n_pre))
@@ -753,17 +748,14 @@ class _JsonLowerer:
             p = F.forall(
                 F.transform(
                     a, lambda el, i: F.when(i < n_pre, F.lit(True))
-                    .otherwise(self._sub_valid(rest, JV(el),
-                                               path + (rest_kw,)))),
+                    .otherwise(self.valid(rest, JV(el),
+                                          path + (rest_kw,)))),
                 lambda x: x)
             emit(path + (rest_kw,), gate(p))
-        elif rest is True or (isinstance(rest, dict) and rest == {}):
-            pass
         if "contains" in schema and self._since(6):
             sub = schema["contains"]
             cnt = F.size(F.filter(
-                a, lambda el: self._sub_valid(sub, JV(el),
-                                              path + ("contains",))))
+                a, lambda el: self.valid(sub, JV(el), path + ("contains",))))
             mn = schema.get("minContains", 1) if self._since(2019) else 1
             mx = schema.get("maxContains") if self._since(2019) else None
             p = cnt >= mn
@@ -792,15 +784,13 @@ class _JsonLowerer:
             bound = F.struct(n_col.alias("n"), a_col.alias("a"))
 
             def _cell(b, el, i):
+                el = JV(el)
                 claimed = b.getField("a") | (i < b.getField("n"))
                 if isinstance(cont, (dict, bool)):
-                    claimed = claimed | F.coalesce(
-                        self._sub_valid(cont, JV(el), path + ("contains",)),
-                        F.lit(False))
-                return claimed | F.coalesce(
-                    self._sub_valid(ue, JV(el),
-                                    path + ("unevaluatedItems",)),
-                    F.lit(False))
+                    claimed = claimed | self.valid(cont, el,
+                                                   path + ("contains",))
+                return claimed | self.valid(ue, el,
+                                            path + ("unevaluatedItems",))
 
             p = F.element_at(F.transform(F.array(bound), lambda b: F.forall(
                 F.transform(a, lambda el, i: _cell(b, el, i)),
@@ -844,8 +834,9 @@ def json_valid_column(js: Column, schema: Any, options=None,
     one per reference."""
     resolved, draft, options = _compile_json(schema, options)
     v = parsed if parsed is not None else F.try_parse_json(js)
-    _, valid = _JsonLowerer(draft, options).lower(resolved, JV(v), ())
-    return v.isNotNull() & F.coalesce(valid, F.lit(False))
+    valid = _JsonLowerer(draft, options).valid(resolved, JV(v), (),
+                                                in_lambda=False)
+    return v.isNotNull() & valid
 
 
 def validate_json_strings(df: DataFrame, json_col: str, schema: Any,
@@ -859,6 +850,8 @@ def validate_json_strings(df: DataFrame, json_col: str, schema: Any,
     for unparseable documents (reference: a document that does not parse
     cannot be validated at all).
     """
+    if mode not in ("violations", "verdicts"):
+        raise ValueError(f"unknown mode {mode!r}")
     resolved, draft, options = _compile_json(schema, options)
     # stage the parsed VARIANT once per row (round 6): every constraint
     # cell dereferences the document, and composing them over the raw
@@ -870,8 +863,6 @@ def validate_json_strings(df: DataFrame, json_col: str, schema: Any,
     df = df.select(*keep, F.try_parse_json(F.col(json_col)).alias("__jv"))
     v = F.col("__jv")
     lw = _JsonLowerer(draft, options)
-    jv = JV(v)
-    cells, valid = lw.lower(resolved, jv, ())
     # SQL-NULL documents are NOT parse_ok (round 6, ADVICE): verdicts mode
     # already reported them invalid, but violations mode treated NULL as
     # parsed-and-vacuously-passing and emitted zero rows — the two modes
@@ -879,14 +870,12 @@ def validate_json_strings(df: DataFrame, json_col: str, schema: Any,
     # ``json/parse`` violation row (observed NULL: there is no text).
     parse_ok = v.isNotNull()
     if mode == "verdicts":
-        ok = (F.col(json_col).isNotNull() & v.isNotNull()
-              & F.coalesce(valid, F.lit(False)))
+        ok = (F.col(json_col).isNotNull() & parse_ok
+              & lw.valid(resolved, JV(v), (), in_lambda=False))
         return df.select(*id_cols, ok.alias("valid"))
-    if mode != "violations":
-        raise ValueError(f"unknown mode {mode!r}")
+    cells = lw.lower(resolved, JV(v), ())
     cell_arr = F.array(*[
-        F.struct(F.lit(cid).alias("constraint_id"),
-                 F.coalesce(p, F.lit(False)).alias("ok"),
+        F.struct(F.lit(cid).alias("constraint_id"), p.alias("ok"),
                  obs.cast("string").alias("observed"))
         for cid, p, obs in cells
     ]) if cells else F.array().cast(

@@ -234,6 +234,15 @@ def chi_square_drift(
     scan), broadcast back onto the per-partition histogram.  The statistic is
     pure Column math; ``threshold`` is the critical value (default ≈ χ²₀.₀₀₁
     for ~8 dof) since p-values need scipy, which stays optional.
+
+    ``materialize_hist=True`` (the default) stores the histogram with
+    ``localCheckpoint``, which trades fault tolerance for speed: its blocks
+    live only on the executors that computed them, with no lineage left to
+    recompute from, so losing one of those executors fails the query
+    (``Checkpoint block ... not found``) rather than recomputing it.  Pass
+    ``materialize_hist=False`` where executors are expected to go away
+    (preemptible or spot capacity); the plan then recomputes the shared
+    aggregate through exchange reuse.
     """
     hist = df.groupBy(part_col, cat_col).agg(F.count(F.lit(1)).alias("n"))
     # lazy localCheckpoint, NOT cache() (round 6): the histogram is reused
@@ -287,7 +296,12 @@ def ks_drift(
     spec section) — the whole statistic is then ONE scan of (part, num).
     Without bounds, lo/hi come from a broadcast 1-row min/max aggregate
     (still lazy — no ``collect`` — but a second narrow scan of num_col;
-    at 100 TB pass spec bounds)."""
+    at 100 TB pass spec bounds).
+
+    ``materialize_hist`` has the executor-loss tradeoff described in
+    :func:`chi_square_drift`: the default ``localCheckpoint`` fails the
+    query if an executor holding a histogram block is lost;
+    ``materialize_hist=False`` recomputes instead."""
     if bounds is not None:
         lo_c = F.lit(float(bounds[0]))
         hi_c = F.lit(float(bounds[1]))

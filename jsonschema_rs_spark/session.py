@@ -39,21 +39,43 @@ def est_scan_splits(df) -> int:
     Round 6: the previous probe — ``df.rdd.getNumPartitions()`` — forces
     full physical planning plus a DataFrame->RDD conversion on the driver
     (measured ~0.7s per call here, and it was paid once per query build).
-    The file-index byte size divided by ``files.maxPartitionBytes`` is the
-    same quantity Spark's own split packing computes, from metadata the
-    session has already cached.  Unknown/absurd statistics read as
-    "already wide" so no surprise shuffle is ever added at scale."""
+    This mirrors Spark's own split sizing (``FilePartition.maxSplitBytes``)
+    from metadata the session has already cached: every file costs
+    ``openCostInBytes`` on top of its bytes, and the split size shrinks
+    from ``maxPartitionBytes`` towards ``bytes / parallelism`` for small
+    inputs.  Unknown/absurd statistics read as "already wide" so no
+    surprise shuffle is ever added at scale."""
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats()
                    .sizeInBytes())
+        n_files = len(df.inputFiles())
     except Exception:
         return 1 << 20
     if size <= 0 or size >= (1 << 62):
         return 1 << 20
-    mpb = _parse_bytes(
-        df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes",
-                                 "134217728"))
-    return max(1, size // max(mpb, 1))
+    spark = df.sparkSession
+    conf = spark.conf
+    mpb = _parse_bytes(conf.get("spark.sql.files.maxPartitionBytes",
+                                "134217728"))
+    open_cost = _parse_bytes(conf.get("spark.sql.files.openCostInBytes",
+                                      "4194304"))
+    par = int(conf.get("spark.sql.files.minPartitionNum", None)
+              or conf.get("spark.sql.leafNodeDefaultParallelism", None)
+              or spark.sparkContext.defaultParallelism)
+    total = size + n_files * open_cost
+    split = min(mpb, max(open_cost, total // max(par, 1)))
+    return max(1, total // max(split, 1))
+
+
+def _default_driver_mem() -> str:
+    """24g, or half the host's physical memory when that is less.  A heap
+    cap above physical memory lets the driver JVM grow until the kernel
+    kills it, instead of collecting garbage."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "24g"
+    return f"{min(24 << 10, max(1 << 10, (phys // 2) >> 20))}m"
 
 
 def get_spark(app: str = "jsonschema_rs_spark", cores: int | str = "*",
@@ -76,7 +98,8 @@ def get_spark(app: str = "jsonschema_rs_spark", cores: int | str = "*",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
     )
     if shuffle_partitions is not None:

@@ -297,9 +297,6 @@ def _errors(schema: Any, value: Any, path: tuple, is_root: bool = False) -> list
                 from jsonschema_rs_spark.compiler import (
                     _claimed_positions, _items_claim_subset)
 
-                n_all, all_all = _claimed_positions(schema)
-                n_st, all_st = _claimed_positions(schema,
-                                                  conditionals=False)
                 has_contains = isinstance(schema.get("contains"),
                                           (dict, bool))
                 # round 5: node-own/allOf claims gate on claim-keyword
@@ -319,6 +316,9 @@ def _errors(schema: Any, value: Any, path: tuple, is_root: bool = False) -> list
                         nb = max(nb, len(s["prefixItems"]))
                     if isinstance(s.get("additionalItems"), (dict, bool)):
                         ab = True
+                    if s is not schema and isinstance(
+                            s.get("unevaluatedItems"), (dict, bool)):
+                        ab = True  # a nested unevaluatedItems claims all
                     if nb or ab:
                         subset = _items_claim_subset(s)
                         hg = subset is not None
@@ -333,7 +333,10 @@ def _errors(schema: Any, value: Any, path: tuple, is_root: bool = False) -> list
                                default=0)
                 gated_own = [(ok, nb, ab) for hg, ok, nb, ab in own if hg]
                 gated_all = any(ab for _, _, ab in gated_own)
-                has_branch = (n_all, all_all) != (n_st, all_st)
+                # every claiming branch gates at runtime (mirrors the
+                # engine: a branch may claim a position whose own/allOf
+                # source failed its subset gate)
+                has_branch = _has_branch_claims(schema)
                 if static_all:
                     pass
                 elif not gated_own and not has_branch and not has_contains:
@@ -371,7 +374,7 @@ def _errors(schema: Any, value: Any, path: tuple, is_root: bool = False) -> list
 
                     def _apply(s):
                         nonlocal n_rt, all_rt
-                        nb, ab = _claimed_positions(s, conditionals=False)
+                        nb, ab = _claimed_positions(s, nested=True)
                         n_rt = max(n_rt, nb)
                         all_rt = all_rt or ab
 
@@ -465,6 +468,23 @@ def _errors(schema: Any, value: Any, path: tuple, is_root: bool = False) -> list
             if not cond and "else" in schema:
                 out.extend(_errors(schema["else"], value, path + ("else",)))
     return out
+
+
+def _has_branch_claims(s: Any, in_branch: bool = False) -> bool:
+    """Does any if/then/else/anyOf/oneOf subschema applied in place at
+    ``s`` claim array positions for an ``unevaluatedItems`` there?"""
+    from jsonschema_rs_spark.compiler import _claimed_positions
+
+    if not isinstance(s, dict):
+        return False
+    if in_branch and _claimed_positions(s, nested=True) != (0, False):
+        return True
+    subs = [(x, in_branch) for x in s.get("allOf", []) or []]
+    if isinstance(s.get("if"), (dict, bool)):
+        subs += [(s.get(k), True) for k in ("if", "then", "else")]
+    subs += [(x, True) for k in ("anyOf", "oneOf")
+             for x in s.get(k, []) or []]
+    return any(_has_branch_claims(x, b) for x, b in subs)
 
 
 def _tag_index(errs: list, i: int) -> list:

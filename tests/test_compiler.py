@@ -775,6 +775,43 @@ def test_nested_unevaluated_items_claims_every_item_on_both_paths(spark):
         json_valid_column(F.col("js"), schema, opts).alias("json"),
     ).collect()[0]
     assert (row["typed"], row["json"]) == (True, True), row
+    from .py_oracle import validate_doc
+
+    assert validate_doc({"properties": {"arr": schema}},
+                        {"doc_id": "a", "arr": [1, 2]}, draft=2020) \
+        == (True, [])
+
+
+def test_items_branch_claim_counts_where_own_prefix_fails(spark):
+    """``anyOf[0]`` passes and claims position 0, so the outer
+    ``unevaluatedItems: false`` has nothing left even though the node's
+    own ``prefixItems`` fails there.  The document is invalid (the
+    ``prefixItems`` type check), but neither path nor the oracle may emit
+    an ``unevaluatedItems`` row."""
+    from .py_oracle import validate_doc
+    from jsonschema_rs_spark.json_ingest import validate_json_strings
+
+    schema = {"prefixItems": [{"type": "integer"}],
+              "anyOf": [{"prefixItems": [True]}],
+              "unevaluatedItems": False}
+    spec = {"properties": {"arr": schema}}
+    opts = EngineOptions(draft=2020)
+    df = spark.createDataFrame([("a", ["x"], '{"arr": ["x"]}')],
+                               "doc_id string, arr array<string>, js string")
+    typed = validation_frame(
+        df.select("doc_id", "arr"),
+        compile_spec(spec, df.select("doc_id", "arr").schema, opts),
+        mode="both").collect()[0]
+    typed_ids = {v["constraint_id"] for v in typed["violations"]}
+    json_ids = {r["constraint_id"] for r in validate_json_strings(
+        df, "js", spec, opts).collect()}
+    ok, viols = validate_doc(spec, {"doc_id": "a", "arr": ["x"]},
+                             draft=2020)
+    oracle_ids = {v[1] for v in viols}
+    assert not typed["valid"] and not ok and json_ids
+    for ids in (typed_ids, json_ids, oracle_ids):
+        assert ids and not any("unevaluatedItems" in c for c in ids), \
+            (typed_ids, json_ids, oracle_ids)
 
 
 def test_huge_integer_literals_never_crash(spark):

@@ -261,3 +261,21 @@ def test_est_scan_splits_reads_two_letter_size_units(spark):
     assert _parse_bytes("1gb") == _parse_bytes("1g") == 1 << 30
     with pytest.raises(ValueError):
         _parse_bytes("12 parsecs")
+
+
+@pytest.mark.parametrize("n_files", [1, 2, 8])
+def test_est_scan_splits_mirrors_spark_split_sizing(spark, tmp_path,
+                                                    n_files):
+    """Small tables (below ``maxPartitionBytes``) split by Spark's
+    ``maxSplitBytes`` rule, where each file's open cost counts: the
+    estimate stays within one of the real scan partition count."""
+    from jsonschema_rs_spark.session import est_scan_splits
+
+    path = str(tmp_path / f"t{n_files}")
+    (spark.range(0, 4000, numPartitions=n_files)
+     .selectExpr("id", "cast(id * 7 as string) AS s")
+     .write.parquet(path))
+    df = spark.read.parquet(path)
+    assert len(df.inputFiles()) == n_files
+    assert abs(est_scan_splits(df) - df.rdd.getNumPartitions()) <= 1, (
+        est_scan_splits(df), df.rdd.getNumPartitions())
