@@ -609,12 +609,12 @@ def q_dedup_exact(spark, sf_dir):
 
 
 def q_dedup_minhash_lsh(spark, sf_dir):
-    """Default per-instance hashing (round 6): the dictionary variant
-    (``broadcast_shingle_hashes``) removes ~99% of the md5 work on this
-    small-vocabulary corpus but pays a localCheckpoint plan-build +
-    materialization that erases the saving end-to-end (interleaved A/B
-    incl. build: plain wins 5/7 rounds, min 4.65s vs 5.33s) — kept as a
-    documented operator option for hash-dominated corpora."""
+    """Per-instance shingle hashing.  A distinct-shingle hash dictionary
+    broadcast back onto the shingle stream removed ~99% of the md5 work on
+    this small-vocabulary corpus, but its localCheckpoint plan-build and
+    materialization erased the saving end-to-end (interleaved A/B incl.
+    build: plain won 5/7 rounds, min 4.65s vs 5.33s), so the operator has
+    only the per-instance plan."""
     return DD.minhash_lsh_pairs(_corpus(spark, sf_dir), "doc_id", "text",
                                 n=3, n_hashes=16, bands=4)
 

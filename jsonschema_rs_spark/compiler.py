@@ -29,11 +29,14 @@ descent in ``isNull() | pred``.
 
 from __future__ import annotations
 
-import json
+import dataclasses
+import operator
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Any, Callable, Optional
 
-from pyspark.sql import Column, DataFrame
+import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -57,7 +60,8 @@ from jsonschema_rs_spark.functions.ecma import (
     ecma_to_java,
     python_fallback,
 )
-from jsonschema_rs_spark.functions.formats import FORMATS
+from jsonschema_rs_spark.functions.formats import FORMATS, FORMATS_PY
+from jsonschema_rs_spark.metaschema import validate_against_metaschema
 
 _INTEGRALS = (ByteType, ShortType, IntegerType, LongType)
 _FRACTIONALS = (FloatType, DoubleType, DecimalType)
@@ -185,8 +189,10 @@ class EngineOptions:
     # Draft dialect: 4, 6, 7, 2019, 2020, or None.  None = auto: sniff the
     # root ``$schema`` URI (reference ``options.rs:58-82``); no ``$schema``
     # -> the permissive merged dialect (round-1 behavior).  The draft
-    # controls draft-4 boolean vs numeric exclusive bounds, tuple ``items``
-    # vs ``prefixItems``, and the format-assertion default below.
+    # controls the keyword vocabulary (``prepare_spec`` drops keywords the
+    # draft does not define), draft-4 boolean vs numeric exclusive bounds,
+    # tuple ``items`` vs ``prefixItems``, and the format-assertion default
+    # below.
     draft: int | None = None
     # None = per-draft default: formats ASSERT under drafts 4/6/7 (and the
     # merged dialect), and are annotation-only under 2019-09/2020-12 unless
@@ -369,61 +375,6 @@ def _bound_pred(v, op: str, dt: DataType) -> Callable[[Column], Column]:
     return lambda x, _op=op, _v=v: getattr(x, _op)(F.lit(_v))
 
 
-def _lower_type(value: Any, dt: DataType,
-                draft: int | None = None) -> Callable[[Column], Column]:
-    """Reference ``keywords/type_.rs:295-329`` (+ integer-valued floats at
-    ``:290-292``). Static when the typed column decides it.
-
-    Draft 4 is stricter: ``is_integer`` is ``is_u64 || is_i64``
-    (``keywords/legacy/type_draft_4.rs:113-114``) — ``1.0`` is NOT an
-    integer.  A fractional Spark column holds JSON fractional
-    representations, so under draft 4 ``integer`` is statically false on it.
-    """
-    wanted = value if isinstance(value, list) else [value]
-
-    def one(t: str) -> Callable[[Column], Column]:
-        if t == "null":
-            return lambda x: x.isNull()
-        if t == "string":
-            return _true if isinstance(dt, StringType) else (lambda x: F.lit(False))
-        if t == "boolean":
-            return _true if isinstance(dt, BooleanType) else (lambda x: F.lit(False))
-        if t == "integer":
-            if isinstance(dt, _INTEGRALS):
-                return _true
-            if isinstance(dt, DecimalType) and dt.scale == 0:
-                # scale-0 decimal holds exact integers (the standard Spark
-                # ingestion type for JSON ints beyond int64) — is_i64/is_u64
-                # in the reference's sense, under EVERY draft
-                return _true
-            if isinstance(dt, _FRACTIONALS):
-                if draft == 4:
-                    return lambda x: F.lit(False)
-                return lambda x: x == F.floor(x)
-            return lambda x: F.lit(False)
-        if t == "number":
-            return _true if _is_numeric(dt) else (lambda x: F.lit(False))
-        if t == "array":
-            return _true if isinstance(dt, ArrayType) else (lambda x: F.lit(False))
-        if t == "object":
-            return (
-                _true
-                if isinstance(dt, (StructType, MapType))
-                else (lambda x: F.lit(False))
-            )
-        raise SpecError(f"unknown type {t!r}")
-
-    preds = [one(t) for t in wanted]
-
-    def pred(x: Column) -> Column:
-        out = preds[0](x)
-        for p in preds[1:]:
-            out = out | p(x)
-        return out
-
-    return pred
-
-
 def _num_literal(v, dt: DataType):
     """A literal Spark can carry for numeric equality against ``dt`` —
     integers beyond int64 have no long literal (fuzz-found
@@ -515,14 +466,7 @@ def _lower_enum(values: list, dt: DataType) -> Callable[[Column], Column]:
             return lambda x: x.isNull() | x.isin(*compat)
         return lambda x: x.isin(*compat)
     preds = [_json_eq(dt, v) for v in values]
-
-    def pred(x: Column) -> Column:
-        out = preds[0](x)
-        for p in preds[1:]:
-            out = out | p(x)
-        return out
-
-    return pred
+    return lambda x: _or_all([p(x) for p in preds])  # an empty enum: none
 
 
 def _multiple_of_decimal(k: Any):
@@ -553,8 +497,6 @@ def _lower_multiple_of(k: Any, dt: DataType) -> Callable[[Column], Column]:
     path went false-negative once |value/divisor| outgrew 1e9·ε, e.g.
     123456.7891 multipleOf 0.0001), with the epsilon double path (``:27-
     59``) kept for everything that does not round-trip."""
-    if not _is_numeric(dt):
-        return _true
     if isinstance(k, int) and isinstance(dt, _INTEGRALS) \
             and abs(k) < 2 ** 63:
         # beyond int64 a long literal cannot exist (fuzz-found
@@ -579,8 +521,9 @@ def _lower_multiple_of(k: Any, dt: DataType) -> Callable[[Column], Column]:
 def _pattern_udf(pat: str):
     """Arrow-batched fallback for patterns Java can't express (reference
     rejects those at compile time, ``ecma.rs``; we accept the Python-re
-    dialect as an extension when it compiles)."""
-    import pandas as pd
+    dialect as an extension when it compiles).  ``pd`` is a module global:
+    with postponed annotations, ``pandas_udf`` resolves the ``pd.Series``
+    hints in the module namespace."""
 
     @F.pandas_udf(BooleanType())
     def _re_search(s: pd.Series) -> pd.Series:  # pragma: no cover - exotic
@@ -605,8 +548,6 @@ def _needs_python(schema: Any, options: EngineOptions) -> bool:
     (untranslatable pattern / UDF format)?  Used to reject such leaves in
     positions where their predicate would end up inside an HOF lambda with
     no staged column to read (nested arrays, contains, map values)."""
-    from jsonschema_rs_spark.functions.formats import FORMATS_PY
-
     if not isinstance(schema, dict):
         return False
     pat = schema.get("pattern")
@@ -837,6 +778,282 @@ def claim_sources(schema: Any, kind: str) -> list[ClaimSource]:
     return out
 
 
+def dependency_keywords(schema: dict) -> tuple[dict, dict]:
+    """``dependentRequired`` and ``dependentSchemas``, with the draft 4-7
+    ``dependencies`` entries folded in by form (a list of names, or a
+    schema)."""
+    req = dict(schema.get("dependentRequired") or {})
+    sch = dict(schema.get("dependentSchemas") or {})
+    for k, v in (schema.get("dependencies") or {}).items():
+        (req if isinstance(v, list) else sch)[k] = v
+    return req, sch
+
+
+# --------------------------------------------------------------------------
+# scalar keywords: one lowering over two value backends
+# --------------------------------------------------------------------------
+#
+# ``scalar_checks`` decides every scalar keyword once; the typed lowerer
+# and ``json_ingest._JsonLowerer`` only supply the instance node.  A node
+# answers ``can_be`` (can the instance hold one of these JSON types?) at
+# compile time and builds the value primitives that really differ per
+# backend: type tests, the exact bound compare, JSON equality and enum,
+# and multipleOf.  On the typed path (:class:`_TypedNode`) the Spark type
+# answers every type test statically, so checks constant-fold; on the
+# variant path (``JV``/``SJV``) they read runtime tags.
+
+_TYPE_NAMES = ("null", "boolean", "object", "array", "number", "string",
+               "integer")
+_NUMBER = ("integer", "number")
+# keyword, comparison, and the draft-4 boolean flag that makes it strict
+# (reference ``keywords/legacy/maximum_draft_4.rs``)
+_BOUNDS = (("minimum", "__ge__", "exclusiveMinimum"),
+           ("maximum", "__le__", "exclusiveMaximum"),
+           ("exclusiveMinimum", "__gt__", None),
+           ("exclusiveMaximum", "__lt__", None))
+_STRICT = {"__ge__": "__gt__", "__le__": "__lt__"}
+
+
+def _or_all(preds: list[Column]) -> Column:
+    return reduce(operator.or_, preds) if preds else F.lit(False)
+
+
+def _and_all(preds: list[Column]) -> Column:
+    return reduce(operator.and_, preds) if preds else F.lit(True)
+
+
+def _json_kind(dt: DataType) -> Optional[str]:
+    """The JSON type of every non-NULL value of a typed column ('number'
+    covers integers)."""
+    if isinstance(dt, StringType):
+        return "string"
+    if isinstance(dt, BooleanType):
+        return "boolean"
+    if _is_numeric(dt):
+        return "number"
+    if isinstance(dt, ArrayType):
+        return "array"
+    if isinstance(dt, (StructType, MapType)):
+        return "object"
+    return None
+
+
+class _TypedNode:
+    """A typed-table instance for :func:`scalar_checks`: a Column and its
+    static Spark type.  Built without a Column for the compile-time
+    questions, and with the Column (and element index) a predicate is
+    evaluated at."""
+
+    def __init__(self, dt: DataType, c: Optional[Column] = None,
+                 i: tuple = ()):
+        self.dt, self.c, self.i = dt, c, i
+
+    @property
+    def s(self) -> Column:
+        return self.c
+
+    def can_be(self, *names: str) -> bool:
+        return _json_kind(self.dt) in names
+
+    def gate(self, names, p: Column) -> Column:
+        return p  # the static type already is one of ``names``
+
+    def type_is(self, t: str, draft) -> Column:
+        """Reference ``keywords/type_.rs:295-329`` (+ integer-valued
+        floats at ``:290-292``)."""
+        dt = self.dt
+        if t == "null":
+            return self.c.isNull()
+        if t != "integer":
+            return F.lit(_json_kind(dt) == t)
+        if isinstance(dt, _INTEGRALS) or (isinstance(dt, DecimalType)
+                                          and dt.scale == 0):
+            # scale-0 decimal holds exact integers (the standard Spark
+            # ingestion type for JSON ints beyond int64) — is_i64/is_u64
+            # in the reference's sense, under EVERY draft
+            return F.lit(True)
+        if isinstance(dt, _FRACTIONALS) and draft != 4:
+            # draft 4 is stricter: ``is_integer`` is ``is_u64 || is_i64``
+            # (``keywords/legacy/type_draft_4.rs:113-114``), and a
+            # fractional column holds JSON fractional representations
+            return self.c == F.floor(self.c)
+        return F.lit(False)
+
+    def compare(self, bound, op: str) -> Column:
+        return _bound_pred(bound, op, self.dt)(self.c)
+
+    def equals(self, v: Any) -> Column:
+        return _json_eq(self.dt, v)(self.c)
+
+    def one_of(self, values: list) -> Column:
+        return _lower_enum(values, self.dt)(self.c)
+
+    def multiple_of(self, k: Any) -> Column:
+        return _lower_multiple_of(k, self.dt)(self.c)
+
+
+@dataclass(frozen=True)
+class ScalarCheck:
+    """One lowered scalar keyword: ``pred`` maps an instance node to a
+    boolean Column; ``py_fn`` is the plain Python check of a
+    Python-backed leaf (introspection only)."""
+    keyword: str
+    pred: Callable[[Any], Column]
+    py_fn: Optional[Callable[[str], bool]] = None
+
+
+def _base64_ok(s: Column) -> Column:
+    return F.try_to_binary(s, F.lit("base64")).isNotNull()
+
+
+def _json_ok(s: Column) -> Column:
+    return F.try_parse_json(s).isNotNull()
+
+
+def _on_decoded(media: Callable[[Column], Column]):
+    """A media-type check over the base64-decoded text (draft-07
+    ``contentMediaType`` describes the decoded content).  Undecodable
+    text passes here: ``contentEncoding`` reports it."""
+    def check(s: Column) -> Column:
+        text = F.try_to_binary(s, F.lit("base64")).cast("string")
+        return text.isNull() | media(text)
+    return check
+
+
+def _content_on(support: Any, name: Any) -> bool:
+    """``support`` is True/False for every name, or the removed names."""
+    if isinstance(support, bool):
+        return support
+    return name not in support
+
+
+def scalar_checks(schema: dict, node, options: EngineOptions, where: str,
+                  py_leaf: Callable) -> list[ScalarCheck]:
+    """The scalar keywords of one schema object — ``type``, ``enum``,
+    ``const``, the four bounds, ``multipleOf``, ``min``/``maxLength``,
+    ``pattern``, ``format``, ``contentEncoding`` and ``contentMediaType``
+    — in emission order.
+
+    ``node`` answers ``can_be`` at compile time; a keyword that cannot
+    apply to it is not emitted.  A check's pred tests the value only when
+    the instance is of a type the keyword applies to (``node.gate``);
+    absence is the caller's concern.  ``py_leaf(py_fn, udf_builder,
+    what)`` returns the pred of a Python-backed leaf (an untranslatable
+    pattern, a pandas-UDF format) or raises where the caller has no site
+    for one.  Keywords registered in ``custom_keywords`` are left to the
+    caller, and keywords the draft does not define are already gone
+    (:func:`prepare_spec`)."""
+    draft = options.draft
+    out: list[ScalarCheck] = []
+
+    def has(kw: str) -> bool:
+        return kw in schema and kw not in options.custom_keywords
+
+    def add(kw, types, test, py_fn=None):
+        """``test`` maps the node to the keyword's value test."""
+        out.append(ScalarCheck(
+            kw, lambda n: test(n) if types is None
+            else n.gate(types, test(n)), py_fn))
+
+    if has("type"):
+        names = schema["type"]
+        names = names if isinstance(names, list) else [names]
+        for t in names:
+            if t not in _TYPE_NAMES:
+                raise SpecError(f"unknown type {t!r} at {where}")
+        add("type", None,
+            lambda n: _or_all([n.type_is(t, draft) for t in names]))
+    if has("enum"):
+        add("enum", None, lambda n, _v=schema["enum"]: n.one_of(_v))
+    if has("const"):
+        add("const", None, lambda n, _v=schema["const"]: n.equals(_v))
+    for kw, op, flag in _BOUNDS:
+        if not has(kw):
+            continue
+        v = schema[kw]
+        if isinstance(v, bool):
+            # the draft-4 boolean flag, folded into minimum/maximum
+            if draft not in (None, 4):
+                raise SpecError(
+                    f"boolean {kw} at {where} is the draft-4 form; draft "
+                    f"{draft} expects a number")
+            continue
+        if flag is None and draft == 4:
+            raise SpecError(
+                f"numeric {kw} at {where} is a draft-6+ form; draft 4 uses "
+                "boolean exclusiveMinimum/Maximum alongside "
+                "minimum/maximum")
+        if flag is not None and schema.get(flag) is True:
+            op = _STRICT[op]
+        if node.can_be(*_NUMBER):
+            add(kw, _NUMBER, lambda n, _v=v, _op=op: n.compare(_v, _op))
+    if has("multipleOf") and node.can_be(*_NUMBER):
+        add("multipleOf", _NUMBER,
+            lambda n, _k=schema["multipleOf"]: n.multiple_of(_k))
+
+    if not node.can_be("string"):
+        return out
+    string = ("string",)
+
+    def on_text(kw, check):
+        add(kw, string, lambda n, _c=check: _c(n.s))
+
+    if has("minLength"):
+        on_text("minLength", lambda s, _n=schema["minLength"]:
+                F.length(s) >= _n)
+    if has("maxLength"):
+        on_text("maxLength", lambda s, _n=schema["maxLength"]:
+                F.length(s) <= _n)
+    if has("pattern"):
+        pat = schema["pattern"]
+        java = ecma_to_java(pat)
+        if java is not None:
+            on_text("pattern", lambda s: s.rlike(java))
+        else:
+            # Java rejected it: Python-re fallback, else compile-time
+            # rejection (reference ``ecma.rs`` — never at runtime)
+            rx = python_fallback(pat)
+            if rx is None:
+                raise SpecError(
+                    f"pattern {pat!r} at {where} compiles in neither "
+                    "java.util.regex nor Python re")
+            py_fn = lambda v, _r=rx: _r.search(v) is not None
+            add("pattern", string,
+                py_leaf(py_fn, _pattern_udf(pat), "pattern"), py_fn)
+    if has("format") and options.validate_formats:
+        fmt = schema["format"]
+        builder = options.custom_formats.get(fmt) or FORMATS.get(fmt)
+        if builder is None:
+            if not options.ignore_unknown_formats:
+                raise SpecError(f"unknown format {fmt!r}")
+        elif fmt in FORMATS_PY and fmt not in options.custom_formats:
+            add("format", string,
+                py_leaf(FORMATS_PY[fmt], builder, f"format {fmt!r}"),
+                FORMATS_PY[fmt])
+        else:
+            on_text("format", builder)
+    # content keywords: built-in base64 / application/json (the reference
+    # defaults, ``content_encoding.rs:10-30``) plus the registration hooks
+    # of ``options.rs:137-258``; unknown names are annotations
+    encode = None
+    enc = schema.get("contentEncoding")
+    if has("contentEncoding") and _content_on(
+            options.content_encoding_support, enc):
+        encode = options.custom_encodings.get(enc) or (
+            _base64_ok if enc == "base64" else None)
+        if encode is not None:
+            on_text("contentEncoding", encode)
+    mt = schema.get("contentMediaType")
+    if has("contentMediaType") and _content_on(
+            options.content_media_type_support, mt):
+        media = options.custom_media_types.get(mt) or (
+            _json_ok if mt == "application/json" else None)
+        if media is not None:
+            on_text("contentMediaType",
+                    _on_decoded(media) if encode is _base64_ok else media)
+    return out
+
+
 # --------------------------------------------------------------------------
 # the recursive lowerer
 # --------------------------------------------------------------------------
@@ -928,137 +1145,17 @@ class Lowerer:
                 emit(ctx.cid(name),
                      self._lift(pred_b), self._lift(obs_b))
 
-        handled_custom = set(ctx.options.custom_keywords) & set(schema)
+        # ---- scalar keywords (shared with the variant path) ---------------
+        def py_leaf(py_fn, udf_builder, what):
+            staged = self._py_pred(ctx, py_fn, udf_builder, what)
+            return lambda n: staged(n.c, *n.i)
 
-        # ---- scalar / value keywords ------------------------------------
-        if "type" in schema and "type" not in handled_custom:
-            emit(ctx.cid("type"),
-                 self._lift(_lower_type(schema["type"], dt,
-                                        ctx.options.draft)),
+        for chk in scalar_checks(schema, _TypedNode(dt), ctx.options,
+                                 ctx.cid(), py_leaf):
+            emit(ctx.cid(chk.keyword),
+                 lambda x, *i, _p=chk.pred: _p(_TypedNode(dt, x, i)),
                  self._lift(obs))
-        if "enum" in schema and "enum" not in handled_custom:
-            emit(ctx.cid("enum"), self._lift(_lower_enum(schema["enum"], dt)),
-                 self._lift(obs))
-        if "const" in schema and "const" not in handled_custom:
-            emit(ctx.cid("const"), self._lift(_json_eq(dt, schema["const"])),
-                 self._lift(obs))
-        for kw, op, strict_op in (
-            ("minimum", "__ge__", "__gt__"),
-            ("maximum", "__le__", "__lt__"),
-            ("exclusiveMinimum", "__gt__", "__gt__"),
-            ("exclusiveMaximum", "__lt__", "__lt__"),
-        ):
-            if kw in schema and kw not in handled_custom:
-                v = schema[kw]
-                if isinstance(v, bool):
-                    # draft-4 boolean exclusive flag (folded into min/max)
-                    if ctx.options.draft not in (None, 4):
-                        raise SpecError(
-                            f"boolean {kw} at {ctx.cid()} is the draft-4 "
-                            f"form; draft {ctx.options.draft} expects a "
-                            "number"
-                        )
-                    continue
-                if kw.startswith("exclusive") and ctx.options.draft == 4:
-                    raise SpecError(
-                        f"numeric {kw} at {ctx.cid()} is a draft-6+ form; "
-                        "draft 4 uses boolean exclusiveMinimum/Maximum "
-                        "alongside minimum/maximum"
-                    )
-                # draft-4 legacy: boolean exclusiveMin/Max flips min/max to
-                # strict (reference keywords/legacy/maximum_draft_4.rs)
-                if kw == "minimum" and schema.get("exclusiveMinimum") is True:
-                    op = strict_op
-                if kw == "maximum" and schema.get("exclusiveMaximum") is True:
-                    op = strict_op
-                if _is_numeric(dt):
-                    emit(ctx.cid(kw),
-                         self._lift(_bound_pred(v, op, dt)),
-                         self._lift(obs))
-        if "multipleOf" in schema:
-            emit(ctx.cid("multipleOf"),
-                 self._lift(_lower_multiple_of(schema["multipleOf"], dt)),
-                 self._lift(obs))
-
-        # ---- string keywords --------------------------------------------
-        if isinstance(dt, StringType):
-            if "minLength" in schema:
-                n = schema["minLength"]
-                emit(ctx.cid("minLength"),
-                     self._lift(lambda x, _n=n: F.length(x) >= _n),
-                     self._lift(obs))
-            if "maxLength" in schema:
-                n = schema["maxLength"]
-                emit(ctx.cid("maxLength"),
-                     self._lift(lambda x, _n=n: F.length(x) <= _n),
-                     self._lift(obs))
-            if "pattern" in schema:
-                pat = schema["pattern"]
-                java = ecma_to_java(pat)
-                if java is not None:
-                    emit(ctx.cid("pattern"),
-                         self._lift(lambda x, _j=java: x.rlike(_j)),
-                         self._lift(obs))
-                else:
-                    # Java rejected it: Python-re fallback, else compile-time
-                    # rejection (reference ``ecma.rs`` — never at runtime)
-                    rx = python_fallback(pat)
-                    if rx is None:
-                        raise SpecError(
-                            f"pattern {pat!r} at {ctx.cid()} compiles in "
-                            "neither java.util.regex nor Python re"
-                        )
-                    py_fn = lambda v, _r=rx: _r.search(v) is not None
-                    emit(ctx.cid("pattern"),
-                         self._py_pred(ctx, py_fn, _pattern_udf(pat),
-                                       "pattern"),
-                         self._lift(obs))
-                    out[-1].py_fn = py_fn
-            if "format" in schema and ctx.options.validate_formats:
-                from jsonschema_rs_spark.functions.formats import FORMATS_PY
-
-                fmt = schema["format"]
-                builder = ctx.options.custom_formats.get(fmt) or FORMATS.get(fmt)
-                if builder is None:
-                    if not ctx.options.ignore_unknown_formats:
-                        raise SpecError(f"unknown format {fmt!r}")
-                elif fmt in FORMATS_PY and fmt not in ctx.options.custom_formats:
-                    emit(ctx.cid("format"),
-                         self._py_pred(ctx, FORMATS_PY[fmt], builder,
-                                       f"format {fmt!r}"),
-                         self._lift(obs))
-                    out[-1].py_fn = FORMATS_PY[fmt]
-                else:
-                    emit(ctx.cid("format"), self._lift(builder), self._lift(obs))
-            # content keywords: built-in base64 / application/json (matching
-            # the reference defaults, ``content_encoding.rs:10-30``) plus
-            # registration hooks mirroring ``options.rs:137-258``; unknown
-            # names are annotations (as in the reference).
-            def _content_on(opt, name) -> bool:
-                if isinstance(opt, bool):
-                    return opt
-                return name not in opt  # collection = removed names
-
-            if ("contentEncoding" in schema and _content_on(
-                    ctx.options.content_encoding_support,
-                    schema["contentEncoding"])):
-                enc = schema["contentEncoding"]
-                builder = ctx.options.custom_encodings.get(enc) or (
-                    (lambda x: F.try_to_binary(x, F.lit("base64")).isNotNull())
-                    if enc == "base64" else None)
-                if builder is not None:
-                    emit(ctx.cid("contentEncoding"), self._lift(builder),
-                         self._lift(obs))
-            if ("contentMediaType" in schema and _content_on(
-                    ctx.options.content_media_type_support,
-                    schema["contentMediaType"])):
-                mt = schema["contentMediaType"]
-                builder = ctx.options.custom_media_types.get(mt) or (
-                    (lambda x: self._json_parseable(x))
-                    if mt == "application/json" else None)
-                if builder is not None:
-                    emit(ctx.cid("contentMediaType"), self._lift(builder),
-                         self._lift(obs))
+            out[-1].py_fn = chk.py_fn
 
         # ---- object keywords --------------------------------------------
         if isinstance(dt, StructType):
@@ -1076,13 +1173,6 @@ class Lowerer:
         return _Lowered(out, _and(valids))
 
     # ------------------------------------------------------------------
-    def _json_parseable(self, x: Column) -> Column:
-        if hasattr(F, "try_parse_json"):
-            return F.try_parse_json(x).isNotNull()
-        return F.from_json(x, "map<string,string>").isNotNull() | x.rlike(
-            r"^\s*(\[|\{|\"|-?\d|true|false|null)"
-        )
-
     def _lift(self, fn: Callable[[Column], Column]) -> Callable[..., Column]:
         """Adapt a single-arg builder to the (x[, i]) calling convention."""
         return lambda x, *i, _fn=fn: _fn(x)
@@ -1208,12 +1298,9 @@ class Lowerer:
             out.append(c_req)
             valids.append(pred)
 
-        # dependentRequired / dependencies(list form) — reference
+        # dependentRequired / dependentSchemas — reference
         # ``keywords/dependencies.rs:204-227``
-        deps = dict(schema.get("dependentRequired", {}))
-        for k, v in schema.get("dependencies", {}).items():
-            if isinstance(v, list):
-                deps[k] = v
+        deps, dep_schemas = dependency_keywords(schema)
         for key, reqs in deps.items():
             def pred(x, *i, _k=key, _rs=tuple(reqs)):
                 need = F.lit(True)
@@ -1224,11 +1311,6 @@ class Lowerer:
                                 lambda x, *i: F.lit("missing")))
             valids.append(pred)
 
-        # dependentSchemas / dependencies(schema form)
-        dep_schemas = dict(schema.get("dependentSchemas", {}))
-        for k, v in schema.get("dependencies", {}).items():
-            if isinstance(v, (dict, bool)):
-                dep_schemas[k] = v
         for key, sub in dep_schemas.items():
             lowered = self.lower(
                 sub, _Ctx(dtype=dt, path=ctx.path + ("dependentSchemas", key),
@@ -1472,12 +1554,9 @@ class Lowerer:
                      self._lift(lambda x, _k=key: F.map_contains_key(x, F.lit(_k))),
                      self._lift(lambda x: F.lit("missing")))
 
-        # dependentRequired / dependencies(list form) on a map — reference
+        # dependentRequired / dependentSchemas on a map — reference
         # ``keywords/dependencies.rs:204-227`` over dynamic keys
-        deps = dict(schema.get("dependentRequired", {}))
-        for k, v in schema.get("dependencies", {}).items():
-            if isinstance(v, list):
-                deps[k] = v
+        deps, dep_schemas = dependency_keywords(schema)
         for key, reqs in deps.items():
             def dep_pred(x, *i, _k=key, _rs=tuple(reqs)):
                 need = F.lit(True)
@@ -1487,11 +1566,6 @@ class Lowerer:
             emit(ctx.cid("dependentRequired", key), dep_pred,
                  self._lift(lambda x: F.lit("missing")))
 
-        # dependentSchemas / dependencies(schema form) on a map
-        dep_schemas = dict(schema.get("dependentSchemas", {}))
-        for k, v in schema.get("dependencies", {}).items():
-            if isinstance(v, (dict, bool)):
-                dep_schemas[k] = v
         for key, sub in dep_schemas.items():
             lowered = self.lower(
                 sub, _Ctx(dtype=dt, path=ctx.path + ("dependentSchemas", key),
@@ -2153,22 +2227,65 @@ def _sniff_draft(schema: Any) -> int | None:
     return None
 
 
-def compile_spec(
-    schema: Any,
-    table_schema: StructType,
-    options: EngineOptions | None = None,
-) -> CompiledSpec:
-    """Compile a constraint spec against a typed table schema.
+# keyword -> the dialects that define it (None = the merged dialect); a
+# keyword not listed here exists in every dialect.  Elsewhere a keyword is
+# an annotation (reference ``compiler.rs:413-416``).
+_DRAFTS = frozenset((None, 4, 6, 7, 2019, 2020))
+_SINCE_6 = frozenset((None, 6, 7, 2019, 2020))
+_SINCE_2019 = frozenset((None, 2019, 2020))
+_VOCABULARY = {
+    "const": _SINCE_6, "contains": _SINCE_6, "propertyNames": _SINCE_6,
+    "if": frozenset((None, 7, 2019, 2020)),
+    "contentEncoding": frozenset((None, 7)),
+    "contentMediaType": frozenset((None, 7)),
+    **dict.fromkeys(("dependentRequired", "dependentSchemas",
+                     "unevaluatedProperties", "unevaluatedItems",
+                     "minContains", "maxContains"), _SINCE_2019),
+}
+# keywords whose value is a schema, or a list of schemas
+_SCHEMA_SLOTS = frozenset((
+    "items", "prefixItems", "additionalItems", "unevaluatedItems",
+    "contains", "additionalProperties", "unevaluatedProperties",
+    "propertyNames", "allOf", "anyOf", "oneOf", "not", "if", "then",
+    "else"))
+
+
+def _in_vocabulary(schema: Any, draft: int | None, custom) -> Any:
+    """``schema`` without the keywords ``draft`` does not define, removed
+    at schema positions only (never from ``enum``/``const`` values or
+    member names).  Registered custom keywords stay, values untouched."""
+    if not isinstance(schema, dict):
+        return schema
+
+    def sub(kw, v):
+        if kw in custom:
+            return v
+        if kw in _NAME_CONTAINERS and isinstance(v, dict):
+            return {k: _in_vocabulary(x, draft, custom)
+                    for k, x in v.items()}
+        if kw in _SCHEMA_SLOTS:
+            if isinstance(v, list):
+                return [_in_vocabulary(x, draft, custom) for x in v]
+            return _in_vocabulary(v, draft, custom)
+        return v
+
+    return {kw: sub(kw, v) for kw, v in schema.items()
+            if kw in custom or draft in _VOCABULARY.get(kw, _DRAFTS)}
+
+
+def prepare_spec(schema: Any, options: EngineOptions | None = None
+                 ) -> tuple[Any, EngineOptions]:
+    """The spec front end of both lowerers: returns the resolved spec and
+    the options with ``draft`` and ``validate_formats`` decided.
 
     Mirrors the reference's ``build_validator`` pipeline
-    (``compiler.rs:284-340``): detect draft → resolve refs → self-validate →
-    lower keywords.
-    """
-    import dataclasses
-
+    (``compiler.rs:284-340``): detect the draft, self-validate the RAW
+    spec against the draft's meta-schema (``compiler.rs:246-282``), inline
+    the refs, keep the draft's keyword vocabulary, then check the
+    resolved spec's keyword values."""
     options = options or EngineOptions()
     draft = options.draft if options.draft is not None else _sniff_draft(schema)
-    if draft not in (None, 4, 6, 7, 2019, 2020):
+    if draft not in _DRAFTS:
         raise SpecError(f"unsupported draft {draft!r}")
     validate_formats = options.validate_formats
     if validate_formats is None:
@@ -2177,15 +2294,24 @@ def compile_spec(
         validate_formats = draft in (None, 4, 6, 7)
     options = dataclasses.replace(
         options, draft=draft, validate_formats=validate_formats)
-    # self-validate the RAW spec against the draft's meta-schema before
-    # touching refs — the reference's compile-time gate (compiler.rs:246-282)
-    from jsonschema_rs_spark.metaschema import validate_against_metaschema
-
     validate_against_metaschema(schema, draft)
     resolved = resolve_refs(schema, resources=options.resources or None,
                             recursion_limit=options.recursion_limit,
                             draft=draft)
-    validate_spec(resolved, set(options.custom_keywords))
+    custom = set(options.custom_keywords)
+    resolved = _in_vocabulary(resolved, draft, custom)
+    validate_spec(resolved, custom)
+    return resolved, options
+
+
+def compile_spec(
+    schema: Any,
+    table_schema: StructType,
+    options: EngineOptions | None = None,
+) -> CompiledSpec:
+    """Compile a constraint spec against a typed table schema:
+    :func:`prepare_spec`, then lower every keyword."""
+    resolved, options = prepare_spec(schema, options)
     lowerer = Lowerer(table_schema, options)
     lowered = lowerer.lower_root(resolved)
     return CompiledSpec(

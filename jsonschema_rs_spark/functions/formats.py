@@ -8,8 +8,9 @@ it stays inside whole-stage codegen — or (b) an Arrow-batched pandas UDF
 crossing per call) for formats that genuinely need a parser (ipv6, idn-*,
 regex-compilability).
 
-Custom formats (reference ``options.rs:335-358``) register via
-``register_format``.
+Custom formats (reference ``options.rs:335-358``) are per compile:
+``EngineOptions.custom_formats`` maps a name to a string-Column ->
+boolean-Column builder and overrides a built-in of the same name.
 """
 
 from __future__ import annotations
@@ -280,12 +281,3 @@ FORMATS_PY: dict[str, Callable[[str], bool]] = {
     "regex": _py_regex,
     "idn-hostname": _py_idn_hostname,
 }
-
-
-def register_format(name: str, builder: Callable[[Column], Column]) -> None:
-    """Custom-format registration (mirrors reference ``options.rs:335-358``).
-
-    ``builder`` takes a string Column and returns a boolean Column; for a
-    Python checker ``f(str)->bool`` wrap it in ``F.pandas_udf('boolean')``.
-    """
-    FORMATS[name] = builder

@@ -11,6 +11,13 @@ gated on the tag so Spark's lenient coercions (number→string) can never
 leak a wrong-typed value into a check, ``map<string,variant>`` /
 ``array<variant>`` casts + higher-order functions for objects and arrays.
 
+Keyword decisions are shared with the typed engine, not repeated here:
+:func:`compiler.prepare_spec` is the spec front end of both paths (draft,
+format-assertion default, meta-validation, ``$ref`` inlining, and the
+draft's keyword vocabulary), and :func:`compiler.scalar_checks` lowers
+the scalar keywords for both, over :class:`JV`/:class:`SJV` nodes here.
+This module walks the object, array and combinator keywords.
+
 Scale notes: the whole validation is ONE projection over ONE parse per
 document — no shuffle, no Python in the hot path (the only Python-backed
 expressions are the same three pandas-UDF formats the typed engine uses,
@@ -35,7 +42,7 @@ from schema objects that were APPLIED and whose claim keywords VALIDATED
 single-element transform.  The few remaining unsupported constructs
 raise :class:`JsonIngestUnsupported` at compile time (never at action
 time): ECMA patterns that java.util.regex rejects (no Python fallback
-inside HOF lambdas), pandas-UDF formats under an array/map lambda
+on this path), pandas-UDF formats under an array/map lambda
 (no per-element Python) and ``EngineOptions.custom_keywords`` (their
 factories build typed-column predicates).  Callers (the suite harness)
 fall back to the typed path for those.
@@ -51,12 +58,13 @@ from typing import Any, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from jsonschema_rs_spark.compiler import (_as_double, _sniff_draft,
-                                          claim_sources)
+from jsonschema_rs_spark.compiler import (_and_all, _as_double,
+                                          _multiple_of_decimal, _or_all,
+                                          claim_sources,
+                                          dependency_keywords, prepare_spec,
+                                          scalar_checks)
 from jsonschema_rs_spark.functions.ecma import ecma_to_java
-from jsonschema_rs_spark.functions.formats import FORMATS, FORMATS_PY
-from jsonschema_rs_spark.metaschema import validate_against_metaschema
-from jsonschema_rs_spark.spec import SpecError, resolve_refs, validate_spec
+from jsonschema_rs_spark.spec import SpecError
 
 
 class JsonIngestUnsupported(ValueError):
@@ -166,58 +174,129 @@ class JV:
             self.e.try_cast("string"))
 
 
-class SJV:
+    # -- node protocol of compiler.scalar_checks --------------------------
+
+    def can_be(self, *names: str) -> bool:
+        return True  # the tag is only known at runtime
+
+    def gate(self, names, p: Column) -> Column:
+        """``p`` where the instance is one of ``names``, else pass."""
+        return ~self.is_(*names) | p
+
+    def type_is(self, name: str, draft) -> Column:
+        if name == "number":
+            return self.is_("integer", "number")
+        if name != "integer":
+            return self.is_(name)
+        if draft == 4:
+            # draft-4: 1.0 is NOT an integer (legacy/type_draft_4.rs:
+            # 113-114 is_u64/is_i64).  Variant parses an integer LITERAL
+            # in i64 range as BIGINT but a fractional-form literal (1.0)
+            # as DECIMAL(p,0) — so BIGINT = integer literal.  Past i64,
+            # genuine integer literals also land in DECIMAL(p,0); serde
+            # accepts u64 there, so extend by value range [2^63, 2^64)
+            # (the fractional-form literal in that window is a documented
+            # mis-classification; the reference's own guarantee stops at
+            # u64).
+            u64_ext = ((self.ndec >= F.lit(Decimal(2 ** 63)))
+                       & (self.ndec < F.lit(Decimal(2 ** 64))))
+            return ((self._sch == F.lit("BIGINT"))
+                    | (self.is_("integer") & u64_ext))
+        return self.is_("integer") | (self.is_("number")
+                                      & (self.nd == F.floor(self.nd)))
+
+    def compare(self, bound, op: str) -> Column:
+        """Bound compare over the JSON number: double math, with the exact
+        decimal path for integer-tagged values against big integer bounds
+        (mirrors compiler._bound_pred)."""
+        if isinstance(bound, int) and not isinstance(bound, bool) \
+                and 2 ** 53 < abs(bound) < 10 ** 37:
+            dec = getattr(self.ndec, op)(F.lit(Decimal(bound)))
+            dbl = getattr(self.nd, op)(F.lit(_as_double(bound)))
+            return F.when(self.is_("integer"), dec).otherwise(dbl)
+        return getattr(self.nd, op)(F.lit(_as_double(bound)))
+
+    def equals(self, lit: Any) -> Column:
+        """JSON-semantic deep equality against a Python literal."""
+        if lit is None:
+            return self.is_("null")
+        if isinstance(lit, bool):
+            return self.is_("boolean") & (self.b == F.lit(lit))
+        if isinstance(lit, int) and 2 ** 53 < abs(lit) < 10 ** 37:
+            # exact big-integer equality via decimal (1e15-scale doubles
+            # lie); beyond 37 digits no decimal literal exists — double
+            # equality is the documented residual there
+            return self.is_("integer") & (self.ndec == F.lit(Decimal(lit)))
+        if isinstance(lit, (int, float)):
+            # 1 == 1.0 per JSON Schema numeric equality
+            return (self.is_("integer", "number")
+                    & (self.nd == F.lit(_as_double(lit))))
+        if isinstance(lit, str):
+            return self.is_("string") & (self.s == F.lit(lit))
+        if isinstance(lit, list):
+            a = self.arr
+            p = self.is_("array") & (F.size(a) == len(lit))
+            for i, sub in enumerate(lit):
+                p = p & JV(F.try_element_at(a, F.lit(i + 1))).equals(sub)
+            return p
+        if isinstance(lit, dict):
+            p = self.is_("object") & (F.size(self.m) == len(lit))
+            for k, sub in lit.items():
+                p = p & F.coalesce(self.member(k).equals(sub), F.lit(False))
+            return p
+        raise SpecError(f"unsupported literal in enum/const: {lit!r}")
+
+    def one_of(self, values: list) -> Column:
+        return _or_all([self.equals(v) for v in values])
+
+    def multiple_of(self, q: Any) -> Column:
+        ratio = self.nd / F.lit(_as_double(q))
+        approx = F.abs(ratio - F.round(ratio, 0)) < F.lit(1e-9)
+        kd = _multiple_of_decimal(q)
+        if kd is not None:
+            # variant keeps the literal's exact decimal — extract it
+            # directly (no double round-trip needed for ≤6-scale
+            # literals; mirrors compiler._lower_multiple_of)
+            xd = F.when(self.is_("integer", "number"),
+                        F.try_variant_get(self.e, "$", "decimal(38,6)"))
+            exact = xd.isNotNull() & (xd.cast("double") == self.nd)
+            flt = F.when(exact, xd % F.lit(kd) == 0).otherwise(approx)
+        else:
+            flt = approx
+        if isinstance(q, int) and not isinstance(q, bool) \
+                and abs(q) < 10 ** 37:
+            # decimal modulo keeps integer-tagged values exact past 2^53;
+            # a >37-digit divisor cannot be a decimal literal
+            # (fuzz-found), so it falls to the double path
+            return F.when(self.is_("integer"),
+                          self.ndec % F.lit(Decimal(q)) == 0).otherwise(flt)
+        return flt
+
+
+class SJV(JV):
     """A plain STRING treated as a JSON instance (propertyNames applies
-    subschemas to each member NAME)."""
+    subschemas to each member NAME).  Its variant is NULL, so every
+    non-string extraction is NULL."""
 
     def __init__(self, s: Column):
+        super().__init__(F.lit(None).cast("variant"))
         self.s = self.obs = s
 
     def is_(self, *names: str) -> Column:
         return F.lit("string" in names)
 
-    @cached_property
-    def tag(self) -> Column:
-        return F.lit("string")
+    def can_be(self, *names: str) -> bool:
+        return "string" in names
 
-    @cached_property
-    def nd(self) -> Column:
-        return F.lit(None).cast("double")
+    def gate(self, names, p: Column) -> Column:
+        return p  # a name is always a string
 
-    @cached_property
-    def ndec(self) -> Column:
-        return self.nd
-
-    @cached_property
-    def b(self) -> Column:
-        return F.lit(None).cast("boolean")
-
-    @cached_property
-    def arr(self) -> Column:
-        return F.lit(None).cast("array<variant>")
-
-    @cached_property
-    def m(self) -> Column:
-        return F.lit(None).cast("map<string,variant>")
-
-    @cached_property
-    def _missing(self) -> JV:
-        return JV(F.lit(None).cast("variant"))
-
-    def member(self, key: str) -> JV:
-        return self._missing
+    def type_is(self, name: str, draft) -> Column:
+        return F.lit(name == "string")
 
     @cached_property
     def absent(self) -> Column:
         return self.s.isNull()
-
-
-def _and_all(preds: list[Column]) -> Column:
-    return reduce(operator.and_, preds) if preds else F.lit(True)
-
-
-def _or_all(preds: list[Column]) -> Column:
-    return reduce(operator.or_, preds) if preds else F.lit(False)
 
 
 def _java_pattern(pat: str, where: str) -> str:
@@ -227,38 +306,6 @@ def _java_pattern(pat: str, where: str) -> str:
             f"pattern {pat!r} at {where} does not compile in java.util.regex"
             " (no Python fallback on the variant path)")
     return java
-
-
-# JSON-semantic deep equality against a PYTHON literal ---------------------
-
-def _jeq(jv, lit: Any) -> Column:
-    if lit is None:
-        return jv.is_("null")
-    if isinstance(lit, bool):
-        return jv.is_("boolean") & (jv.b == F.lit(lit))
-    if isinstance(lit, int) and 2 ** 53 < abs(lit) < 10 ** 37:
-        # exact big-integer equality via decimal (1e15-scale doubles lie);
-        # beyond 37 digits no decimal literal exists — double equality is
-        # the documented residual there
-        return jv.is_("integer") & (jv.ndec == F.lit(Decimal(lit)))
-    if isinstance(lit, (int, float)):
-        # 1 == 1.0 per JSON Schema numeric equality
-        return (jv.is_("integer", "number")
-                & (jv.nd == F.lit(_as_double(lit))))
-    if isinstance(lit, str):
-        return jv.is_("string") & (jv.s == F.lit(lit))
-    if isinstance(lit, list):
-        a = jv.arr
-        p = jv.is_("array") & (F.size(a) == len(lit))
-        for i, sub in enumerate(lit):
-            p = p & _jeq(JV(F.try_element_at(a, F.lit(i + 1))), sub)
-        return p
-    if isinstance(lit, dict):
-        p = jv.is_("object") & (F.size(jv.m) == len(lit))
-        for k, sub in lit.items():
-            p = p & F.coalesce(_jeq(jv.member(k), sub), F.lit(False))
-        return p
-    raise SpecError(f"unsupported literal in enum/const: {lit!r}")
 
 
 # canonical rendering for uniqueItems (JSON equality: 1 == 1.0,
@@ -313,10 +360,6 @@ def _canon(jv, depth: int = _CANON_DEPTH) -> Column:
 # keyword lowering over a variant node
 # --------------------------------------------------------------------------
 
-_TYPE_NAMES = ("null", "boolean", "object", "array", "number",
-               "string", "integer")
-
-
 class _JsonLowerer:
     """Walks a RESOLVED spec over a variant node and emits ``cells`` =
     [(constraint_id, pred, observed)] for the violations stream
@@ -329,19 +372,31 @@ class _JsonLowerer:
     The structural walk mirrors the typed engine's ``_Lowered`` contract
     (compiler.py) but the instance domain is JSON-via-variant, so absent /
     JSON-null / wrong-type distinctions are native instead of
-    typed-column approximations."""
+    typed-column approximations.  The spec arrives from
+    :func:`compiler.prepare_spec`, so it holds only keywords its draft
+    defines; the scalar keywords come from :func:`compiler.scalar_checks`
+    and the draft is read only for keyword forms (tuple ``items``)."""
 
-    def __init__(self, draft: int | None, options):
-        self.draft = draft
+    def __init__(self, options):
         self.options = options
 
-    # -- helpers -----------------------------------------------------------
-
-    def _since(self, introduced: int) -> bool:
-        """Keyword known under the current draft? (unknown keywords are
-        annotations, reference compiler.rs:413-416)."""
-        d = self.draft
-        return d is None or d >= introduced
+    def _py_leaf(self, where: str, in_lambda: bool):
+        """``scalar_checks`` hook for Python-backed leaves: a pandas-UDF
+        format runs in the plain projection; inside an array/map lambda
+        it has no evaluation site, and an untranslatable pattern has no
+        Python fallback on this path."""
+        def leaf(py_fn, udf_builder, what):
+            if what == "pattern":
+                raise JsonIngestUnsupported(
+                    f"pattern at {where} does not compile in "
+                    "java.util.regex (no Python fallback on the variant "
+                    "path)")
+            if in_lambda:
+                raise JsonIngestUnsupported(
+                    f"{what} is pandas-UDF-backed and cannot run inside "
+                    "an array/map lambda on the variant path")
+            return lambda n: udf_builder(n.s)
+        return leaf
 
     def valid(self, schema: Any, jv, path: tuple[str, ...],
               in_lambda: bool = True) -> Column:
@@ -378,26 +433,10 @@ class _JsonLowerer:
         def valid_of(sub, seg: tuple[str, ...]) -> Column:
             return self.valid(sub, jv, path + seg, in_lambda)
 
-        # ---- type --------------------------------------------------------
-        if "type" in schema:
-            names = schema["type"]
-            if isinstance(names, str):
-                names = [names]
-            for n in names:
-                if n not in _TYPE_NAMES:
-                    raise SpecError(f"unknown type {n!r} at {'/'.join(path)}")
-            emit(path + ("type",), _or_all(
-                [self._type_pred(n, jv) for n in names]))
-
-        # ---- enum / const ------------------------------------------------
-        if "enum" in schema:
-            emit(path + ("enum",),
-                 _or_all([_jeq(jv, m) for m in schema["enum"]]))
-        if "const" in schema and self._since(6):
-            emit(path + ("const",), _jeq(jv, schema["const"]))
-
-        self._numeric(schema, jv, path, emit)
-        self._string(schema, jv, path, emit, in_lambda)
+        where = "/".join(path)
+        for chk in scalar_checks(schema, jv, self.options, where,
+                                 self._py_leaf(where, in_lambda)):
+            emit(path + (chk.keyword,), chk.pred(jv))
         self._object(schema, jv, path, emit, cells, in_lambda)
         self._array(schema, jv, path, emit, cells, in_lambda)
 
@@ -417,7 +456,7 @@ class _JsonLowerer:
             emit(path + ("oneOf",), cnt == 1)
         if "not" in schema:
             emit(path + ("not",), ~valid_of(schema["not"], ("not",)))
-        if "if" in schema and self._since(7):
+        if "if" in schema:
             cond = valid_of(schema["if"], ("if",))
             tv = (valid_of(schema["then"], ("then",))
                   if "then" in schema else F.lit(True))
@@ -425,144 +464,6 @@ class _JsonLowerer:
                   if "else" in schema else F.lit(True))
             emit(path + ("if",), F.when(cond, tv).otherwise(ev))
         return cells
-
-    # -- type pred ---------------------------------------------------------
-
-    def _type_pred(self, name: str, jv) -> Column:
-        if name == "integer":
-            strict = jv.is_("integer")
-            if self.draft == 4:
-                # draft-4: 1.0 is NOT an integer (legacy/type_draft_4.rs:
-                # 113-114 is_u64/is_i64).  Variant parses an integer
-                # LITERAL in i64 range as BIGINT but a fractional-form
-                # literal (1.0) as DECIMAL(p,0) — so BIGINT = integer
-                # literal.  Past i64, genuine integer literals also land
-                # in DECIMAL(p,0); serde accepts u64 there, so extend by
-                # value range [2^63, 2^64) (the fractional-form literal in
-                # that window is a documented mis-classification; the
-                # reference's own guarantee stops at u64).
-                u64_ext = ((jv.ndec >= F.lit(Decimal(2 ** 63)))
-                           & (jv.ndec < F.lit(Decimal(2 ** 64))))
-                return (jv._sch == F.lit("BIGINT")) | (strict & u64_ext)
-            return strict | (jv.is_("number") & (jv.nd == F.floor(jv.nd)))
-        if name == "number":
-            return jv.is_("integer", "number")
-        return jv.is_(name)
-
-    # -- numeric keywords --------------------------------------------------
-
-    def _num_cmp(self, jv, bound, op: str) -> Column:
-        """Bound compare over the JSON number: double math, with the exact
-        decimal path for integer-tagged values against big integer bounds
-        (mirrors compiler._bound_pred)."""
-        if isinstance(bound, int) and not isinstance(bound, bool) \
-                and 2 ** 53 < abs(bound) < 10 ** 37:
-            dec = getattr(jv.ndec, op)(F.lit(Decimal(bound)))
-            dbl = getattr(jv.nd, op)(F.lit(_as_double(bound)))
-            return F.when(jv.is_("integer"), dec).otherwise(dbl)
-        return getattr(jv.nd, op)(F.lit(_as_double(bound)))
-
-    def _numeric(self, schema, jv, path, emit):
-        def gate(p):
-            return ~jv.is_("integer", "number") | p
-
-        if "minimum" in schema:
-            v = schema["minimum"]
-            op = "__ge__"
-            if self.draft == 4 and schema.get("exclusiveMinimum") is True:
-                op = "__gt__"
-            emit(path + ("minimum",), gate(self._num_cmp(jv, v, op)))
-        if "maximum" in schema:
-            v = schema["maximum"]
-            op = "__le__"
-            if self.draft == 4 and schema.get("exclusiveMaximum") is True:
-                op = "__lt__"
-            emit(path + ("maximum",), gate(self._num_cmp(jv, v, op)))
-        for kw, op in (("exclusiveMinimum", "__gt__"),
-                       ("exclusiveMaximum", "__lt__")):
-            if kw in schema and isinstance(schema[kw], (int, float)) \
-                    and not isinstance(schema[kw], bool):
-                if self.draft == 4:
-                    raise SpecError(
-                        f"numeric {kw} is a draft-6+ form; draft 4 uses the"
-                        " boolean flag")
-                emit(path + (kw,), gate(self._num_cmp(jv, schema[kw], op)))
-        if "multipleOf" in schema:
-            q = schema["multipleOf"]
-            from jsonschema_rs_spark.compiler import _multiple_of_decimal
-
-            ratio = jv.nd / F.lit(_as_double(q))
-            approx = F.abs(ratio - F.round(ratio, 0)) < F.lit(1e-9)
-            kd = _multiple_of_decimal(q)
-            if kd is not None:
-                # variant keeps the literal's exact decimal — extract it
-                # directly (no double round-trip needed for ≤6-scale
-                # literals; mirrors compiler._lower_multiple_of)
-                xd = F.when(jv.is_("integer", "number"),
-                            F.try_variant_get(jv.e, "$", "decimal(38,6)"))
-                exact = xd.isNotNull() & (xd.cast("double") == jv.nd)
-                flt = F.when(exact, xd % F.lit(kd) == 0).otherwise(approx)
-            else:
-                flt = approx
-            if isinstance(q, int) and not isinstance(q, bool) \
-                    and abs(q) < 10 ** 37:
-                # decimal modulo keeps integer-tagged values exact past
-                # 2^53; a >37-digit divisor cannot be a decimal literal
-                # (fuzz-found), so it falls to the double path
-                p = F.when(jv.is_("integer"),
-                           jv.ndec % F.lit(Decimal(q)) == 0).otherwise(flt)
-            else:
-                p = flt
-            emit(path + ("multipleOf",), gate(p))
-
-    # -- string keywords ---------------------------------------------------
-
-    def _string(self, schema, jv, path, emit, in_lambda):
-        def gate(p):
-            return ~jv.is_("string") | p
-
-        if "minLength" in schema:
-            emit(path + ("minLength",),
-                 gate(F.length(jv.s) >= schema["minLength"]))
-        if "maxLength" in schema:
-            emit(path + ("maxLength",),
-                 gate(F.length(jv.s) <= schema["maxLength"]))
-        if "pattern" in schema:
-            java = _java_pattern(schema["pattern"], "/".join(path))
-            emit(path + ("pattern",), gate(jv.s.rlike(java)))
-        fmt = schema.get("format")
-        validate_formats = self.options.validate_formats
-        if validate_formats is None:
-            validate_formats = self.draft in (None, 4, 6, 7)
-        if fmt is not None and validate_formats:
-            builder = (self.options.custom_formats.get(fmt)
-                       or FORMATS.get(fmt))
-            if builder is None:
-                if not self.options.ignore_unknown_formats:
-                    raise SpecError(f"unknown format {fmt!r}")
-            else:
-                if in_lambda and fmt in FORMATS_PY \
-                        and fmt not in self.options.custom_formats:
-                    raise JsonIngestUnsupported(
-                        f"format {fmt!r} is pandas-UDF-backed and cannot "
-                        "run inside an array/map lambda on the variant "
-                        "path")
-                emit(path + ("format",), gate(builder(jv.s)))
-        # contentEncoding/contentMediaType assert only under draft 7 (and
-        # merged) like the typed engine; 2019+ = annotation
-        if self.draft in (None, 7):
-            enc = schema.get("contentEncoding")
-            enc_support = self.options.content_encoding_support
-            if enc == "base64" and enc_support is True:
-                emit(path + ("contentEncoding",),
-                     gate(F.try_to_binary(jv.s, F.lit("base64"))
-                          .isNotNull()))
-            mt = schema.get("contentMediaType")
-            mt_support = self.options.content_media_type_support
-            if mt == "application/json" and mt_support is True \
-                    and schema.get("contentEncoding") is None:
-                emit(path + ("contentMediaType",),
-                     gate(F.try_parse_json(jv.s).isNotNull()))
 
     # -- object keywords ---------------------------------------------------
 
@@ -589,7 +490,7 @@ class _JsonLowerer:
         if "maxProperties" in schema:
             emit(path + ("maxProperties",),
                  gate(F.size(m) <= schema["maxProperties"]))
-        if "propertyNames" in schema and self._since(6):
+        if "propertyNames" in schema:
             sub = schema["propertyNames"]
             p = F.forall(F.map_keys(m),
                          lambda k: self.valid(sub, SJV(k),
@@ -628,16 +529,7 @@ class _JsonLowerer:
                                  ap, JV(v),
                                  path + ("additionalProperties",)))
             emit(path + ("additionalProperties",), gate(p))
-        deps = schema.get("dependencies") or {}
-        dep_req = dict(schema.get("dependentRequired") or {}) \
-            if self._since(2019) else {}
-        dep_sch = dict(schema.get("dependentSchemas") or {}) \
-            if self._since(2019) else {}
-        for k, v in deps.items():
-            if isinstance(v, list):
-                dep_req[k] = v
-            else:
-                dep_sch[k] = v
+        dep_req, dep_sch = dependency_keywords(schema)
         for k, reqs in dep_req.items():
             present = F.map_contains_key(m, F.lit(k))
             p = ~present | _and_all(
@@ -648,7 +540,7 @@ class _JsonLowerer:
             v = self.valid(sub, jv, path + ("dependentSchemas", k))
             emit(path + ("dependentSchemas", k), gate(~present | v))
         ue = schema.get("unevaluatedProperties")
-        if isinstance(ue, (dict, bool)) and self._since(2019):
+        if isinstance(ue, (dict, bool)):
             srcs = [(g, src.names, tuple(
                         _java_pattern(pt, "/".join(path + src.suffix))
                         for pt in src.patterns), src.claims_all)
@@ -725,8 +617,8 @@ class _JsonLowerer:
         prefix: list = []
         rest = None
         rest_kw = "items"
-        if self.draft == 2020 or (self.draft is None
-                                  and "prefixItems" in schema):
+        draft = self.options.draft
+        if draft == 2020 or (draft is None and "prefixItems" in schema):
             prefix = schema.get("prefixItems") or []
             rest = items
         elif isinstance(items, list):
@@ -752,12 +644,12 @@ class _JsonLowerer:
                                           path + (rest_kw,)))),
                 lambda x: x)
             emit(path + (rest_kw,), gate(p))
-        if "contains" in schema and self._since(6):
+        if "contains" in schema:
             sub = schema["contains"]
             cnt = F.size(F.filter(
                 a, lambda el: self.valid(sub, JV(el), path + ("contains",))))
-            mn = schema.get("minContains", 1) if self._since(2019) else 1
-            mx = schema.get("maxContains") if self._since(2019) else None
+            mn = schema.get("minContains", 1)
+            mx = schema.get("maxContains")
             p = cnt >= mn
             if mx is not None:
                 p = p & (cnt <= mx)
@@ -771,8 +663,8 @@ class _JsonLowerer:
             emit(path + ("uniqueItems",),
                  gate(F.size(F.array_distinct(canon)) == F.size(a)))
         ue = schema.get("unevaluatedItems")
-        if isinstance(ue, (dict, bool)) and self._since(2019):
-            cont = schema.get("contains") if self._since(6) else None
+        if isinstance(ue, (dict, bool)):
+            cont = schema.get("contains")
             n_col, a_col = F.lit(0), F.lit(False)
             for g, src in self._claim_gates(schema, "items", jv, path):
                 gg = F.lit(True) if g is None else g
@@ -801,22 +693,9 @@ class _JsonLowerer:
 # public API
 # --------------------------------------------------------------------------
 
-def _compile_json(schema: Any, options=None):
-    """Resolve + meta-validate the spec; return (resolved, draft, opts)."""
-    from jsonschema_rs_spark.compiler import EngineOptions
-
-    options = options or EngineOptions()
-    draft = options.draft if options.draft is not None \
-        else _sniff_draft(schema)
-    if draft not in (None, 4, 6, 7, 2019, 2020):
-        raise SpecError(f"unsupported draft {draft!r}")
-    validate_spec(schema if not isinstance(schema, bool) else {},
-                  set(options.custom_keywords))
-    validate_against_metaschema(schema, draft)
-    resolved = resolve_refs(schema, resources=options.resources or None,
-                            recursion_limit=options.recursion_limit,
-                            draft=draft)
-    return resolved, draft, options
+# the spec front end, under the name ``perfbench/tracing.py`` times as the
+# variant path's compile layer
+_compile_json = prepare_spec
 
 
 def json_valid_column(js: Column, schema: Any, options=None,
@@ -832,10 +711,10 @@ def json_valid_column(js: Column, schema: Any, options=None,
     validate the same column in one projection (suite replay, multi-spec
     gates) a caller-staged parse keeps it at one parse per row instead of
     one per reference."""
-    resolved, draft, options = _compile_json(schema, options)
+    resolved, options = _compile_json(schema, options)
     v = parsed if parsed is not None else F.try_parse_json(js)
-    valid = _JsonLowerer(draft, options).valid(resolved, JV(v), (),
-                                                in_lambda=False)
+    valid = _JsonLowerer(options).valid(resolved, JV(v), (),
+                                        in_lambda=False)
     return v.isNotNull() & valid
 
 
@@ -852,7 +731,7 @@ def validate_json_strings(df: DataFrame, json_col: str, schema: Any,
     """
     if mode not in ("violations", "verdicts"):
         raise ValueError(f"unknown mode {mode!r}")
-    resolved, draft, options = _compile_json(schema, options)
+    resolved, options = _compile_json(schema, options)
     # stage the parsed VARIANT once per row (round 6): every constraint
     # cell dereferences the document, and composing them over the raw
     # try_parse_json expression inlined the parse dozens of times per row
@@ -862,7 +741,7 @@ def validate_json_strings(df: DataFrame, json_col: str, schema: Any,
     keep = list(id_cols) + ([json_col] if json_col not in id_cols else [])
     df = df.select(*keep, F.try_parse_json(F.col(json_col)).alias("__jv"))
     v = F.col("__jv")
-    lw = _JsonLowerer(draft, options)
+    lw = _JsonLowerer(options)
     # SQL-NULL documents are NOT parse_ok (round 6, ADVICE): verdicts mode
     # already reported them invalid, but violations mode treated NULL as
     # parsed-and-vacuously-passing and emitted zero rows — the two modes

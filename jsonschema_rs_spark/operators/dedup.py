@@ -199,30 +199,13 @@ def minhash_lsh_pairs(
     n: int = 3,
     n_hashes: int = 16,
     bands: int = 4,
-    broadcast_shingle_hashes: bool = False,
 ) -> DataFrame:
     """Candidate near-dup pairs: docs sharing any LSH band bucket.
 
     ``n_hashes/bands`` rows per band; band key = md5 of the concatenated
     signature slice.  One explode (bands per doc, constant fan-out) and one
     combinable self-join on the bucket — the classic MinHash-LSH plan.  At
-    100 TB the bucket join shuffles only (band_id, bucket, id) triples.
-
-    ``broadcast_shingle_hashes`` (round 6): when the corpus's shingle
-    VOCABULARY is small (boilerplate-heavy or low-entropy text — here 28k
-    distinct shingles under 2.7M instances), hash each distinct shingle
-    once and broadcast the (shingle -> h0..h15) dictionary back onto the
-    exploded stream instead of re-hashing every instance n_hashes times —
-    the "decide with small rows, attach with a broadcast" pattern.  Same
-    hash values, same minima, same pairs; cuts the md5 work by the
-    duplication factor.  Leave False when the vocabulary is proportional
-    to corpus size (generic web text): the dictionary would not fit a
-    broadcast, and the per-instance plan is the scale-safe default.
-    Measured caveat (round 6): the sharing localCheckpoint pays its own
-    plan-build + materialization — on the sf1.0 corpus (16 hashes, short
-    shingles) the default plan wins end-to-end (4.65s vs 5.33s incl.
-    build); reach for the dictionary only when hashing dominates (more
-    hash functions, longer shingles, fatter docs)."""
+    100 TB the bucket join shuffles only (band_id, bucket, id) triples."""
     rows_per_band = n_hashes // bands
     sh = df.select(
         F.col(id_col).alias("id"),
@@ -234,35 +217,12 @@ def minhash_lsh_pairs(
     # keyed by id (map-side combine shrinks the shuffle to one signature
     # per doc per map task).
     e = sh.select("id", F.explode("shingles").alias("s"))
-    if broadcast_shingle_hashes:
-        # lazy localCheckpoint: the dictionary (distinct shingles) and the
-        # probe side then share ONE shingle-construction pass — without it
-        # each join side re-derives the interpreted shingle pipeline as its
-        # own subtree and the "saving" costs more than it returns (measured
-        # 10.4s vs 5.8s at sf1.0).  localCheckpoint (not persist/cache):
-        # blocks are keyed by this build's RDD, so a rebuilt query
-        # recomputes from the input — nothing is shared across runs — and
-        # the first action over THIS frame materializes it exactly once.
-        e = e.localCheckpoint(eager=False)
-        hs = e.select("s").distinct().select(
-            "s",
-            *[
-                F.md5(F.concat(F.lit(f"{i}:"), F.col("s"))).alias(f"h{i}")
-                for i in range(n_hashes)
-            ],
-        )
-        sig = (
-            e.join(F.broadcast(hs), "s")
-            .groupBy("id")
-            .agg(*[F.min(f"h{i}").alias(f"h{i}") for i in range(n_hashes)])
-        )
-    else:
-        sig = e.groupBy("id").agg(
-            *[
-                F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("s")))).alias(f"h{i}")
-                for i in range(n_hashes)
-            ]
-        )
+    sig = e.groupBy("id").agg(
+        *[
+            F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("s")))).alias(f"h{i}")
+            for i in range(n_hashes)
+        ]
+    )
     band_cols = [
         F.struct(
             F.lit(b).alias("band"),

@@ -55,6 +55,23 @@ def _multiple_of_ok(value, k) -> bool:
     return abs(r - round(r)) < 1e-9
 
 
+def _base64_text(value: str) -> str | None:
+    """The decoded text of a base64 string, None when it does not decode.
+    java.util.Base64 semantics (what Spark's try_to_binary uses): padding
+    optional, but when present must complete a quad; '=' only at the end;
+    remainder-1 bodies invalid."""
+    import base64
+
+    body = value.rstrip("=")
+    pads = len(value) - len(body)
+    rem = len(body) % 4
+    if (re.fullmatch(r"[A-Za-z0-9+/]*", body) is None or pads > 2
+            or rem == 1 or (pads and (rem + pads) % 4)):
+        return None
+    raw = base64.b64decode(body + "=" * (-len(body) % 4))
+    return raw.decode("utf-8", errors="replace")
+
+
 def _is_valid(schema: Any, value: Any, is_root: bool = False) -> bool:
     return not _errors(schema, value, (), is_root)
 
@@ -424,24 +441,18 @@ def _errors(schema: Any, value: Any, path: tuple, is_root: bool = False) -> list
                                         len(bad_pos)))
         elif kw == "contentEncoding":
             if sval == "base64" and isinstance(value, str):
-                # java.util.Base64 semantics (what Spark's try_to_binary
-                # uses): padding optional, but when present must complete a
-                # quad; '=' only at the end; remainder-1 bodies invalid
-                body = value.rstrip("=")
-                pads = len(value) - len(body)
-                rem = len(body) % 4
-                ok = (
-                    re.fullmatch(r"[A-Za-z0-9+/]*", body) is not None
-                    and pads <= 2
-                    and rem != 1
-                    and (pads == 0 or (rem + pads) % 4 == 0)
-                )
-                if not ok:
+                if _base64_text(value) is None:
                     fail("contentEncoding")
         elif kw == "contentMediaType":
             if sval == "application/json" and isinstance(value, str):
+                # draft-07: with base64 enforced the media type describes
+                # the DECODED text; undecodable text is contentEncoding's
+                text = (_base64_text(value)
+                        if schema.get("contentEncoding") == "base64"
+                        else value)
                 try:
-                    json.loads(value)
+                    if text is not None:
+                        json.loads(text)
                 except ValueError:
                     fail("contentMediaType")
         elif kw == "propertyNames":

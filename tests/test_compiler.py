@@ -838,3 +838,82 @@ def test_huge_integer_literals_never_crash(spark):
         json_valid_column(F.lit("5"), s).alias(f"v{i}")
         for i, s in enumerate(specs)]).collect()[0]
     assert all(out[f"v{i}"] in (True, False) for i in range(len(specs)))
+
+
+_HEX = {"hex": lambda c: c.rlike("^([0-9a-fA-F]{2})*$")}
+_CSV = {"text/csv": lambda c: c.contains(",")}
+_JSON_B64 = {"contentMediaType": "application/json",
+             "contentEncoding": "base64"}
+
+
+@pytest.mark.parametrize("schema,value,opts,expected", [
+    # a keyword the draft does not define is an annotation
+    pytest.param({"const": "a"}, "b", EngineOptions(draft=4), True,
+                 id="draft4-const"),
+    pytest.param({"if": {"minLength": 2}, "then": {"maxLength": 3}},
+                 "abcdef", EngineOptions(draft=6), True, id="draft6-if"),
+    pytest.param({"contentEncoding": "base64"}, "@@@",
+                 EngineOptions(draft=2020), True, id="draft2020-base64"),
+    pytest.param({"contentEncoding": "base64"}, "@@@",
+                 EngineOptions(draft=6), True, id="draft6-base64"),
+    # the merged dialect keeps the draft-4 boolean exclusive bound
+    pytest.param({"minimum": 5, "exclusiveMinimum": True}, 5,
+                 EngineOptions(), False, id="merged-boolean-exclusive"),
+    # registered content checks assert on both paths
+    pytest.param({"contentEncoding": "hex"}, "zz",
+                 EngineOptions(custom_encodings=_HEX), False,
+                 id="custom-encoding"),
+    pytest.param({"contentMediaType": "text/csv"}, "abc",
+                 EngineOptions(custom_media_types=_CSV), False,
+                 id="custom-media-type"),
+    # with base64 enforced, contentMediaType reads the decoded text
+    pytest.param(_JSON_B64, "e30=", EngineOptions(draft=7), True,
+                 id="base64-json-valid"),       # {}
+    pytest.param(_JSON_B64, "ezp9Cg==", EngineOptions(draft=7), False,
+                 id="base64-json-invalid"),     # {:}
+    # an empty enum admits nothing (it crashed the typed plan build on
+    # complex columns)
+    pytest.param({"enum": []}, [1], EngineOptions(), False,
+                 id="empty-enum"),
+])
+def test_scalar_keywords_agree_on_both_paths(spark, schema, value, opts,
+                                             expected):
+    """Each scalar keyword is decided once, so the typed and the variant
+    path give the same verdict on the same value, and it is the spec's."""
+    import json
+
+    from jsonschema_rs_spark.json_ingest import json_valid_column
+    from jsonschema_rs_spark.plans.validate import valid_column
+
+    ddl = {str: "string", int: "bigint", list: "array<bigint>"}[type(value)]
+    df = spark.createDataFrame([("a", value, json.dumps(value))],
+                               f"doc_id string, v {ddl}, js string")
+    typed = df.select("doc_id", "v")
+    c = compile_spec({"properties": {"v": schema}}, typed.schema, opts)
+    row = df.select(
+        valid_column(c, F.struct("doc_id", "v")).alias("typed"),
+        json_valid_column(F.col("js"), schema, opts).alias("json"),
+    ).collect()[0]
+    assert (row["typed"], row["json"]) == (expected, expected), row
+    if opts.draft in (None, 7) and not (opts.custom_encodings
+                                        or opts.custom_media_types):
+        # the oracle knows the draft-7 vocabulary and no registered checks
+        from .py_oracle import validate_doc
+
+        ok, _ = validate_doc({"properties": {"v": schema}},
+                             {"doc_id": "a", "v": value}, draft=opts.draft)
+        assert ok == expected
+
+
+def test_python_only_pattern_falls_back_on_typed_path(spark):
+    """A pattern java.util.regex rejects but Python ``re`` compiles runs
+    as a pandas UDF on the typed path (its ``pd.Series`` hints must
+    resolve at UDF creation)."""
+    df = spark.createDataFrame([("aa",), ("ab",)], "doc_id string")
+    c = compile_spec({"properties": {"doc_id": {
+        "pattern": r"(?P<x>a)(?P=x)"}}}, df.schema)
+    assert c.constraints[0].py_fn is not None
+    got = {r["doc_id"]: r["valid"] for r in
+           validation_frame(df, c, id_cols=("doc_id",),
+                            mode="verdicts").collect()}
+    assert got == {"aa": True, "ab": False}

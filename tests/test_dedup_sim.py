@@ -274,19 +274,6 @@ def test_dedup_keepers_removes_chain_members(spark):
         assert kept == [mk(i) for i in (0, 1, 4, 5, 6, 7, 9)], (typ, kept)
 
 
-def test_minhash_broadcast_dictionary_identical_pairs(spark):
-    """Round 6: the distinct-shingle hash dictionary variant must emit
-    EXACTLY the pairs of the default per-instance plan (same md5 values,
-    same minima => same buckets)."""
-    corpus, _ = _corpus(spark)
-    base = {(r["id_a"], r["id_b"]) for r in
-            DD.minhash_lsh_pairs(corpus, "doc_id", "text").collect()}
-    dic = {(r["id_a"], r["id_b"]) for r in
-           DD.minhash_lsh_pairs(corpus, "doc_id", "text",
-                                broadcast_shingle_hashes=True).collect()}
-    assert base == dic and base
-
-
 def test_word_shingles_zip_construction(spark):
     """Round 6: zip_with+slice shingles must equal the definitional
     n-gram set (distinct, first-occurrence order, incomplete tails

@@ -4,11 +4,14 @@ These assert the properties the 100-TB design depends on, so a refactor
 can't silently reintroduce a shuffle or break scan pruning.
 """
 
+import os
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from jsonschema_rs_spark.compiler import compile_spec
-from jsonschema_rs_spark.flagship import FLAGSHIP_SPEC
+from jsonschema_rs_spark.flagship import FLAGSHIP_SPEC, compile_flagship
 from jsonschema_rs_spark.plans.validate import (
     partition_rollup,
     validation_frame,
@@ -18,6 +21,8 @@ from jsonschema_rs_spark.plans.validate import (
 from jsonschema_rs_spark.sources.spans import derive_spans
 
 SF = "/root/testdata/sf0.001"
+GOLDEN_FLAGSHIP = os.path.join(os.path.dirname(__file__), "golden",
+                               "flagship_typed_plans.txt")
 
 
 def _physical(df) -> str:
@@ -28,6 +33,32 @@ def _spans_parquet(spark, tmp_path):
     path = str(tmp_path / "spans.parquet")
     derive_spans(spark, SF).write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
+
+
+def flagship_logical_plans(spark) -> str:
+    """The optimised logical plans of ``violations`` and ``verdicts`` for
+    the flagship spec over the derived span table.  Expression ids
+    (``#123``) and the session-global lambda-variable counter
+    (``lambda x_7``) are normalised so the text is stable across builds."""
+    df = derive_spans(spark, SF)
+    compiled = compile_flagship(df.schema)
+    parts = []
+    for name, frame in (("violations", violations(df, compiled)),
+                        ("verdicts", verdicts(df, compiled))):
+        plan = frame._jdf.queryExecution().optimizedPlan().toString()
+        plan = re.sub(r"#[0-9]+", "#N", plan)
+        plan = re.sub(r"(lambda [A-Za-z]+)_[0-9]+", r"\1_N", plan)
+        parts.append(f"== {name} ==\n{plan}")
+    return "\n".join(parts)
+
+
+def test_flagship_typed_plans_match_golden(spark):
+    """Keyword-lowering refactors must leave the typed flagship plans
+    byte-identical.  Regenerate the golden file from
+    ``flagship_logical_plans`` only for a change meant to alter them."""
+    with open(GOLDEN_FLAGSHIP) as fh:
+        golden = fh.read()
+    assert flagship_logical_plans(spark) == golden
 
 
 def test_violations_plan_has_no_shuffle(spark, tmp_path):
