@@ -264,10 +264,12 @@ class _Ctx:
     # for scope='element': doc-root -> the array this element belongs to
     array: Optional[Callable[[Column], Column]] = None
     array_key: Optional[tuple[str, ...]] = None
-    # element scope: True when a python-backed leaf here can be staged as an
-    # Arrow adapter column (single array, pure field descent from the
-    # element root).  False inside nested arrays / contains / map values /
-    # propertyNames, where no per-element staged lookup exists.
+    # True when a python-backed leaf can be evaluated at this node.  Doc
+    # scope: everywhere except inside an array or map lambda (nested
+    # arrays, contains, map values, property names), where the pandas UDF
+    # would sit in the lambda.  Element scope: when the leaf can be staged
+    # as an Arrow adapter column (single array, pure field descent from
+    # the element root).
     stageable: bool = False
     options: EngineOptions = field(default_factory=EngineOptions)
 
@@ -535,88 +537,6 @@ def _pattern_udf(pat: str):
     return lambda x: _re_search(x)
 
 
-# keyword containers whose dict KEYS are member names / patterns / anchor
-# names, not schema keywords (the values are the schemas)
-_NAME_CONTAINERS = frozenset((
-    "properties", "patternProperties", "$defs", "definitions",
-    "dependentSchemas", "dependencies",
-))
-
-
-def _needs_python(schema: Any, options: EngineOptions) -> bool:
-    """Static check: does this subtree contain a python-backed leaf check
-    (untranslatable pattern / UDF format)?  Used to reject such leaves in
-    positions where their predicate would end up inside an HOF lambda with
-    no staged column to read (nested arrays, contains, map values)."""
-    if not isinstance(schema, dict):
-        return False
-    pat = schema.get("pattern")
-    if isinstance(pat, str) and ecma_to_java(pat) is None:
-        return True
-    fmt = schema.get("format")
-    if (
-        options.validate_formats
-        and isinstance(fmt, str)  # a property literally named "format"
-        and fmt in FORMATS_PY     # puts a dict here — not a format assert
-        and fmt not in options.custom_formats
-    ):
-        return True
-    for k, v in schema.items():
-        if k in ("enum", "const"):
-            continue
-        if k in _NAME_CONTAINERS:
-            # values of these containers ARE schemas, but their KEYS are
-            # member names / patterns — never interpret a dict keyed by
-            # property names as a schema (a property named "format" would
-            # otherwise read as a format assertion)
-            if isinstance(v, dict) and any(
-                isinstance(s, dict) and _needs_python(s, options)
-                for s in v.values()
-            ):
-                return True
-            continue
-        if isinstance(v, dict) and _needs_python(v, options):
-            return True
-        if isinstance(v, list) and any(
-            isinstance(s, dict) and _needs_python(s, options) for s in v
-        ):
-            return True
-    return False
-
-
-def _claimed_positions(schema: Any, nested: bool = False
-                       ) -> tuple[int, bool]:
-    """Static positions 'evaluated' for unevaluatedItems by the node and
-    its ``allOf`` chain: max prefixItems length; object-form items claims
-    all, and so does a nested ``unevaluatedItems`` (``nested=True``: the
-    schema itself is applied in place below the node, so its own counts).
-    The lowerers resolve claims with ``claim_sources``; this summary is
-    kept for the test oracle."""
-    n_prefix = 0
-    all_claimed = False
-
-    def walk(s, nested):
-        nonlocal n_prefix, all_claimed
-        if not isinstance(s, dict):
-            return
-        it = s.get("items")
-        if isinstance(it, (dict, bool)):
-            all_claimed = True
-        if isinstance(it, list):
-            n_prefix = max(n_prefix, len(it))
-        if isinstance(s.get("prefixItems"), list):
-            n_prefix = max(n_prefix, len(s["prefixItems"]))
-        if isinstance(s.get("additionalItems"), (dict, bool)):
-            all_claimed = True
-        if nested and isinstance(s.get("unevaluatedItems"), (dict, bool)):
-            all_claimed = True
-        for sub in s.get("allOf", []) or []:
-            walk(sub, True)
-
-    walk(schema, nested)
-    return n_prefix, all_claimed
-
-
 # Round 5: unevaluated* claims count only from SUCCESSFUL subschemas
 # (reference output.rs:139-164 — annotations are dropped from failed
 # schemas).  Claim keywords whose subschemas cannot fail stay on the
@@ -703,7 +623,10 @@ class ClaimSource:
     its ``allOf`` chain have no terms; for them ``subset`` holds the claim
     keywords that can fail (round 5: annotations only from successful
     subschemas, reference ``output.rs:139-164``), None when none can.  A
-    valid branch implies its own subset, so branch sources carry none."""
+    valid branch implies its own subset, so branch sources carry none.
+
+    A ``contains`` (items kind) is a source of its own, with no subset:
+    the items its subschema matches are claimed when the terms hold."""
     suffix: tuple[str, ...]
     terms: tuple
     subset: Any
@@ -711,6 +634,7 @@ class ClaimSource:
     patterns: tuple[str, ...] = ()
     n_prefix: int = 0
     claims_all: bool = False
+    contains: Any = None
 
 
 def claim_sources(schema: Any, kind: str) -> list[ClaimSource]:
@@ -723,9 +647,9 @@ def claim_sources(schema: Any, kind: str) -> list[ClaimSource]:
     validity), ``then``/``else`` (gated on the ``if`` outcome and their own
     validity), ``anyOf``/``oneOf`` branches and, for properties,
     ``dependentSchemas`` (gated on key presence and validity).  ``not``
-    claims nothing, and ``contains`` is left to the caller.  A nested
-    ``unevaluated*`` claims everything.  Objects that claim nothing are
-    walked but not returned."""
+    claims nothing; for items, each ``contains`` claims the items it
+    matches (2020-12).  A nested ``unevaluated*`` claims everything.
+    Objects that claim nothing are walked but not returned."""
     props = kind == "props"
     ue = "unevaluatedProperties" if props else "unevaluatedItems"
     out: list[ClaimSource] = []
@@ -754,6 +678,9 @@ def claim_sources(schema: Any, kind: str) -> list[ClaimSource]:
                           else _items_claim_subset)(s)
             out.append(ClaimSource(suffix, terms, subset, names, pats, n,
                                    claims_all))
+        if not props and isinstance(s.get("contains"), (dict, bool)):
+            out.append(ClaimSource(suffix, terms, None,
+                                   contains=s["contains"]))
         for idx, sub in enumerate(s.get("allOf") or []):
             walk(sub, terms, suffix + ("allOf", str(idx)))
         if isinstance(s.get("if"), (dict, bool)):
@@ -890,6 +817,45 @@ class _TypedNode:
 
     def multiple_of(self, k: Any) -> Column:
         return _lower_multiple_of(k, self.dt)(self.c)
+
+    # -- applicator protocol (maps and arrays) ---------------------------
+
+    @property
+    def m(self) -> Column:
+        return self.c
+
+    arr = m
+
+    def present(self, key: str) -> Column:
+        if isinstance(self.dt, MapType):
+            return F.map_contains_key(self.c, F.lit(key))
+        return self.c.getField(key).isNotNull()
+
+    def child(self, col: Optional[Column]) -> "_TypedNode":
+        dt = self.dt
+        return _TypedNode(dt.valueType if isinstance(dt, MapType)
+                          else dt.elementType, col)
+
+    def name(self, col: Optional[Column]) -> "_TypedNode":
+        return _TypedNode(StringType(), col)
+
+    def unique(self) -> Column:
+        # typed columns make 1 == 1.0 collisions impossible by construction
+        return F.size(self.c) == F.size(F.array_distinct(self.c))
+
+    def key_regex(self, pat: str, where: str) -> str:
+        java = ecma_to_java(pat)
+        if java is None:
+            raise SpecError(
+                f"patternProperties key pattern {pat!r} at {where} is not "
+                "expressible in the Java regex dialect (map keys are matched "
+                "with rlike — no Python fallback)")
+        return java
+
+
+def _on_node(dt: DataType, fn: Callable) -> Callable[..., Column]:
+    """Adapt a function of a typed node to the (x[, i]) convention."""
+    return lambda x, *i, _fn=fn: _fn(_TypedNode(dt, x, i))
 
 
 @dataclass(frozen=True)
@@ -1055,6 +1021,295 @@ def scalar_checks(schema: dict, node, options: EngineOptions, where: str,
 
 
 # --------------------------------------------------------------------------
+# applicator keywords: one lowering over two value backends
+# --------------------------------------------------------------------------
+#
+# ``object_checks``, ``array_checks`` and ``logic_checks`` decide the
+# object, array and combinator keywords once, and ``claim_gates`` /
+# ``item_claims`` fold the ``unevaluated*`` claim sources, over the nodes
+# of ``scalar_checks``.  A node also answers ``m``/``arr``
+# (its members as a map, its items as an array), ``present(key)``,
+# ``child(col)`` (a map value or array element bound to a lambda
+# variable), ``name(col)`` (a member name), ``unique()`` and
+# ``key_regex(pattern, where)`` (a member-name pattern in java.util.regex,
+# or the backend's refusal).
+#
+# Subschemas go through the caller's ``sub(schema, segs, at, in_lambda)``
+# hook.  It returns a validity function over a node that is never NULL:
+# ``at`` names the node the subschema applies to (None: this node,
+# "child": a map value or array element, "name": a member name), and
+# ``in_lambda`` says whether it is evaluated inside an array or map
+# lambda, where a Python-backed leaf has no evaluation site.  The typed
+# backend lowers the subschema when the hook is called; the variant
+# backend when the returned function meets its node.
+
+_OBJECT = ("object",)
+_ARRAY = ("array",)
+
+
+@dataclass(frozen=True)
+class NodeCheck:
+    """One lowered applicator keyword: ``segs`` extend the node's
+    constraint id and ``pred`` maps the node to a boolean Column.
+    ``observed`` is a str for a fixed observed text on both paths, a
+    function of the node for the typed path's rendering (the variant path
+    renders the node itself), or None for the node's own rendering."""
+    segs: tuple
+    pred: Callable[[Any], Column]
+    observed: Any = None
+
+
+def claim_gates(schema: Any, kind: str, sub: Callable) -> list:
+    """[(gate, ClaimSource)] for the ``unevaluated*`` at ``schema``: the
+    gate maps the node to the never-NULL condition under which the
+    source's claims count, None when they are unconditional.  Each branch
+    schema lowers once, however many sources share it as a term."""
+    valids: dict = {}
+
+    def term(k, arg, suffix):
+        if k == "present":
+            return lambda n: F.coalesce(n.present(arg), F.lit(False))
+        if suffix not in valids:
+            valids[suffix] = sub(arg, suffix, None, False)
+        v = valids[suffix]
+        return (lambda n: ~v(n)) if k == "invalid" else v
+
+    out = []
+    for src in claim_sources(schema, kind):
+        if src.terms:
+            parts = [term(*t) for t in src.terms]
+        elif src.subset is not None:
+            parts = [sub(src.subset, src.suffix, None, False)]
+        else:
+            out.append((None, src))
+            continue
+        out.append((lambda n, _ps=tuple(parts): _and_all([p(n) for p in _ps]),
+                    src))
+    return out
+
+
+def item_claims(gated: list, sub: Callable):
+    """The per-item claim fold of an ``unevaluatedItems`` over its
+    ``claim_gates`` records: ``bind(node)`` lists the Columns to bind once
+    per row (``n``: the claimed prefix, ``a``: every item claimed, ``c0``,
+    ``c1``...: the gates of ``contains`` sources), and ``claimed(b, el,
+    i)`` reads them for the item node ``el`` at index ``i``."""
+    conts = [(g, sub(src.contains, src.suffix + ("contains",), "child",
+                     True))
+             for g, src in gated if src.contains is not None]
+    cont_gates = [g for g, _ in conts if g is not None]
+
+    def bind(node) -> list[Column]:
+        n_col, a_col = F.lit(0), F.lit(False)
+        for g, src in gated:
+            if src.contains is not None:
+                continue
+            gg = F.lit(True) if g is None else g(node)
+            if src.claims_all:
+                a_col = a_col | gg
+            elif src.n_prefix:
+                n_col = F.greatest(n_col, F.when(
+                    gg, F.lit(src.n_prefix)).otherwise(F.lit(0)))
+        return [n_col.alias("n"), a_col.alias("a")] + [
+            g(node).alias(f"c{j}") for j, g in enumerate(cont_gates)]
+
+    def claimed(b, el, i) -> Column:
+        c = b.getField("a") | (i < b.getField("n"))
+        j = 0
+        for g, cont in conts:
+            # 2020-12: a contains claims the items it matches
+            if g is None:
+                c = c | cont(el)
+            else:
+                c = c | (b.getField(f"c{j}") & cont(el))
+                j += 1
+        return c
+
+    return bind, claimed
+
+
+def _bind_gates(n, gates: list, body: Callable) -> Column:
+    """``body(b)`` with the gate Columns bound once per row as the fields
+    ``g0``, ``g1``... of ``b`` (a single-element transform), so per-member
+    and per-item lambdas read booleans instead of re-validating every
+    branch; ``b`` is None when there are no gates."""
+    if not gates:
+        return body(None)
+    bound = F.struct(*[g(n).alias(f"g{j}") for j, g in enumerate(gates)])
+    return F.element_at(F.transform(F.array(bound), body), 1)
+
+
+def object_checks(schema: dict, node, sub: Callable,
+                  where: str) -> list[NodeCheck]:
+    """The object keywords whose member names are known only at run time
+    (typed maps, JSON objects), ``properties`` excepted: ``required``,
+    ``min``/``maxProperties``, ``propertyNames``, ``patternProperties``,
+    ``additionalProperties``, the dependency keywords and
+    ``unevaluatedProperties``, in emission order."""
+    out: list[NodeCheck] = []
+
+    def add(segs, test, observed=None):
+        out.append(NodeCheck(segs, lambda n: n.gate(_OBJECT, test(n)),
+                             observed))
+
+    def size(n):
+        return F.size(n.m).cast("string")
+
+    for k in schema.get("required") or []:
+        add(("required", k), lambda n, _k=k: n.present(_k), "missing")
+    for kw, op in (("minProperties", "__ge__"), ("maxProperties", "__le__")):
+        if kw in schema:
+            add((kw,), lambda n, _v=schema[kw], _op=op:
+                getattr(F.size(n.m), _op)(_v), size)
+    if "propertyNames" in schema:
+        nv = sub(schema["propertyNames"], ("propertyNames",), "name", True)
+        add(("propertyNames",),
+            lambda n: F.forall(F.map_keys(n.m), lambda k: nv(n.name(k))),
+            lambda n: F.to_json(F.map_keys(n.m)))
+    pats = {p: node.key_regex(p, f"{where}/patternProperties")
+            for p in schema.get("patternProperties") or {}}
+    for pat, s in (schema.get("patternProperties") or {}).items():
+        v = sub(s, ("patternProperties", pat), "child", True)
+        add(("patternProperties", pat),
+            lambda n, _j=pats[pat], _v=v: F.forall(
+                F.map_entries(n.m),
+                lambda e: ~e.getField("key").rlike(_j)
+                | _v(n.child(e.getField("value")))))
+
+    def rest(kw, s, gates, claimed):
+        """``s`` applies to every member ``claimed(b, key)`` leaves, with
+        ``b`` the bound ``gates``; false reports the unclaimed names."""
+        if s is False:
+            add((kw,), lambda n: _bind_gates(n, gates, lambda b: F.forall(
+                    F.map_keys(n.m), lambda k: claimed(b, k))),
+                lambda n: _bind_gates(n, gates, lambda b: F.to_json(
+                    F.filter(F.map_keys(n.m), lambda k: ~claimed(b, k)))))
+            return
+        v = sub(s, (kw,), "child", True)
+        add((kw,), lambda n: _bind_gates(n, gates, lambda b: F.forall(
+            F.map_entries(n.m),
+            lambda e: claimed(b, e.getField("key"))
+            | v(n.child(e.getField("value"))))))
+
+    def matches(k, names, patterns):
+        return _or_all(([k.isin(*names)] if names else [])
+                       + [k.rlike(j) for j in patterns])
+
+    ap = schema.get("additionalProperties")
+    if isinstance(ap, (dict, bool)) and not _always_valid_schema(ap):
+        named = tuple(schema.get("properties") or {})
+        rest("additionalProperties", ap, [],
+             lambda b, k: matches(k, named, tuple(pats.values())))
+    dep_req, dep_sch = dependency_keywords(schema)
+    for k, reqs in dep_req.items():
+        add(("dependentRequired", k),
+            lambda n, _k=k, _rs=tuple(reqs): ~n.present(_k)
+            | _and_all([n.present(r) for r in _rs]),
+            lambda n: F.lit("missing"))
+    for k, s in dep_sch.items():
+        v = sub(s, ("dependentSchemas", k), None, False)
+        add(("dependentSchemas", k),
+            lambda n, _k=k, _v=v: ~n.present(_k) | _v(n))
+    ue = schema.get("unevaluatedProperties")
+    if isinstance(ue, (dict, bool)):
+        gated = claim_gates(schema, "props", sub)
+        if not any(g is None and src.claims_all for g, src in gated):
+            # (gate index | None, names, patterns, claims all)
+            srcs, gates = [], []
+            for g, src in gated:
+                srcs.append((None if g is None else len(gates), src.names,
+                             tuple(node.key_regex(
+                                 p, "/".join((where, *src.suffix)).strip("/"))
+                                 for p in src.patterns), src.claims_all))
+                if g is not None:
+                    gates.append(g)
+
+            def claimed(b, k):
+                terms = []
+                for j, names, patterns, claims_all in srcs:
+                    hit = None if claims_all else matches(k, names, patterns)
+                    if j is not None:
+                        g = b.getField(f"g{j}")
+                        hit = g if hit is None else g & hit
+                    terms.append(hit)
+                return _or_all(terms)
+
+            rest("unevaluatedProperties", ue, gates, claimed)
+    return out
+
+
+def array_checks(schema: dict, sub: Callable) -> list[NodeCheck]:
+    """The node-level array keywords: ``minItems``, ``maxItems``,
+    ``uniqueItems`` and ``contains`` with ``min``/``maxContains`` (ids
+    ``contains``, or ``minContains`` when declared, and ``maxContains``),
+    in emission order."""
+    out: list[NodeCheck] = []
+
+    def add(segs, test, observed=None):
+        out.append(NodeCheck(segs, lambda n: n.gate(_ARRAY, test(n)),
+                             observed))
+
+    def size(n):
+        return F.size(n.arr).cast("string")
+
+    if "minItems" in schema:
+        add(("minItems",), lambda n, _k=schema["minItems"]:
+            F.size(n.arr) >= _k, size)
+    if "maxItems" in schema:
+        add(("maxItems",), lambda n, _k=schema["maxItems"]:
+            F.size(n.arr) <= _k, size)
+    if schema.get("uniqueItems") is True:
+        # reference ``unique_items.rs:66-97``; the observed value counts
+        # the duplicates
+        add(("uniqueItems",), lambda n: n.unique(),
+            lambda n: (F.size(n.arr)
+                       - F.size(F.array_distinct(n.arr))).cast("string"))
+    if "contains" in schema:
+        # reference ``keywords/contains.rs:339-375``
+        v = sub(schema["contains"], ("contains",), "child", True)
+
+        def count(n):
+            return F.size(F.filter(n.arr, lambda e: v(n.child(e))))
+
+        def count_obs(n):
+            return count(n).cast("string")
+
+        min_c = schema.get("minContains", 1)
+        max_c = schema.get("maxContains")
+        if min_c > 0:
+            kw = ("contains" if min_c == 1 and "minContains" not in schema
+                  else "minContains")
+            add((kw,), lambda n: count(n) >= min_c, count_obs)
+        if max_c is not None:
+            add(("maxContains",), lambda n: count(n) <= max_c, count_obs)
+    return out
+
+
+def logic_checks(schema: dict, sub: Callable) -> list[NodeCheck]:
+    """``anyOf``, ``oneOf`` and ``not`` (reference ``any_of.rs:46``,
+    ``one_of.rs:43-69``, ``not.rs:28-45``): each collapses its branches
+    into one check."""
+    out: list[NodeCheck] = []
+
+    def branches(kw):
+        return [sub(s, (kw, str(i)), None, False)
+                for i, s in enumerate(schema[kw])]
+
+    if "anyOf" in schema:
+        vs = branches("anyOf")
+        out.append(NodeCheck(("anyOf",),
+                             lambda n: _or_all([v(n) for v in vs])))
+    if "oneOf" in schema:
+        ws = branches("oneOf")
+        out.append(NodeCheck(("oneOf",), lambda n: reduce(
+            operator.add, [v(n).cast("int") for v in ws]) == 1))
+    if "not" in schema:
+        nv = sub(schema["not"], ("not",), None, False)
+        out.append(NodeCheck(("not",), lambda n: ~nv(n)))
+    return out
+
+
+# --------------------------------------------------------------------------
 # the recursive lowerer
 # --------------------------------------------------------------------------
 
@@ -1070,27 +1325,27 @@ class Lowerer:
                  what: str) -> Callable[..., Column]:
         """Predicate for a python-backed leaf check.
 
-        - doc scope: the Arrow UDF runs in the plain projection — legal.
-        - element scope, stageable: register a PyStage; when a staging
-          context is active at plan-build time (HOF plans) the leaf resolves
-          to ``element_at(staged_col, i+1)``; otherwise (exploded plans,
+        - not ``ctx.stageable``: no legal evaluation site exists (the pred
+          would sit inside an HOF lambda) → SpecError at compile time,
+          mirroring the reference's compile-time rejection (``ecma.rs``)
+          instead of a runtime AnalysisException.
+        - doc scope: the Arrow UDF runs in the plain projection.
+        - element scope: register a PyStage; when a staging context is
+          active at plan-build time (HOF plans) the leaf resolves to
+          ``element_at(staged_col, i+1)``; otherwise (exploded plans,
           which evaluate preds in plain post-explode projections) it calls
           the UDF directly.
-        - element scope, not stageable: no legal evaluation site exists
-          (the pred would sit inside an HOF lambda) → SpecError at compile
-          time, mirroring the reference's compile-time rejection
-          (``ecma.rs``) instead of a runtime AnalysisException.
         """
-        if ctx.scope != "element":
-            return lambda x, *i: udf_builder(x)
         if not ctx.stageable:
             raise SpecError(
                 f"python-backed check ({what}) at {ctx.cid()} sits in a "
-                "position with no staged-column evaluation site (nested "
-                "array, contains, map values, or property names); use a "
-                "Column-expressible pattern/format here, or restructure the "
-                "schema so the check applies within one span-array element"
+                "position with no evaluation site (nested array, contains, "
+                "map values, or property names); use a Column-expressible "
+                "pattern/format here, or restructure the schema so the "
+                "check applies within one span-array element"
             )
+        if ctx.scope != "element":
+            return lambda x, *i: udf_builder(x)
         sid = len(self.stages)
         self.stages.append(PyStage(
             stage_id=sid,
@@ -1112,7 +1367,7 @@ class Lowerer:
     # -- entry ----------------------------------------------------------
     def lower_root(self, schema: Any) -> _Lowered:
         ctx = _Ctx(dtype=self.table_schema, path=(), scope="doc",
-                   options=self.options)
+                   stageable=True, options=self.options)
         return self.lower(schema, ctx)
 
     # -- node ------------------------------------------------------------
@@ -1150,27 +1405,62 @@ class Lowerer:
             staged = self._py_pred(ctx, py_fn, udf_builder, what)
             return lambda n: staged(n.c, *n.i)
 
-        for chk in scalar_checks(schema, _TypedNode(dt), ctx.options,
-                                 ctx.cid(), py_leaf):
-            emit(ctx.cid(chk.keyword),
-                 lambda x, *i, _p=chk.pred: _p(_TypedNode(dt, x, i)),
+        node = _TypedNode(dt)
+        for chk in scalar_checks(schema, node, ctx.options, ctx.cid(),
+                                 py_leaf):
+            emit(ctx.cid(chk.keyword), _on_node(dt, chk.pred),
                  self._lift(obs))
             out[-1].py_fn = chk.py_fn
+
+        # ---- applicator keywords (shared with the variant path) ----------
+        sub = self._sub(ctx)
+
+        def emit_checks(checks: list[NodeCheck]) -> None:
+            for chk in checks:
+                o = chk.observed
+                if o is None:
+                    observed = self._lift(obs)
+                elif isinstance(o, str):
+                    observed = self._lift(lambda x, _o=o: F.lit(_o))
+                else:
+                    observed = _on_node(dt, o)
+                emit(ctx.cid(*chk.segs), _on_node(dt, chk.pred), observed)
 
         # ---- object keywords --------------------------------------------
         if isinstance(dt, StructType):
             self._lower_struct(schema, ctx, out, valids)
         elif isinstance(dt, MapType):
-            self._lower_map(schema, ctx, out, valids, emit)
+            self._lower_map_properties(schema, ctx, emit)
+            emit_checks(object_checks(schema, node, sub, ctx.cid()))
 
         # ---- array keywords ----------------------------------------------
         if isinstance(dt, ArrayType):
+            emit_checks(array_checks(schema, sub))
             self._lower_array(schema, ctx, out, valids, emit)
 
         # ---- combinators --------------------------------------------------
-        self._lower_logic(schema, ctx, out, valids)
+        self._lower_all_of(schema, ctx, out, valids)
+        emit_checks(logic_checks(schema, sub))
+        self._lower_if(schema, ctx, out, valids)
 
         return _Lowered(out, _and(valids))
+
+    def _sub(self, ctx: _Ctx) -> Callable:
+        """The applicator keywords' subschema hook at ``ctx``: lowers the
+        subschema now, at the node ``at`` names, and returns its validity
+        over a node, where NULL (an absent instance) passes."""
+        def sub(schema, segs, at, in_lambda):
+            node = _TypedNode(ctx.dtype)
+            dt = (node if at is None else getattr(node, at)(None)).dt
+            valid = self.lower(schema, _Ctx(
+                dtype=dt, path=ctx.path + segs, scope=ctx.scope,
+                dpath=ctx.dpath if at is None else (), elementable=False,
+                array=ctx.array, array_key=ctx.array_key,
+                spointer=_sp(ctx) + segs,
+                stageable=ctx.stageable and not in_lambda,
+                options=ctx.options)).valid
+            return lambda n: F.coalesce(valid(n.c, *n.i), F.lit(True))
+        return sub
 
     # ------------------------------------------------------------------
     def _lift(self, fn: Callable[[Column], Column]) -> Callable[..., Column]:
@@ -1350,10 +1640,13 @@ class Lowerer:
         # (reference ``keywords/property_names.rs`` iterates actual keys).
         if "propertyNames" in schema:
             sub = schema["propertyNames"]
+            # the names are literals in the plain projection: no staged
+            # lookup exists for them at element scope
             name_ctx = _Ctx(dtype=StringType(), path=ctx.path + ("propertyNames",),
                             scope=ctx.scope, elementable=False, array=ctx.array,
                             array_key=ctx.array_key,
                             spointer=_sp(ctx) + ("propertyNames",),
+                            stageable=ctx.scope == "doc" and ctx.stageable,
                             options=ctx.options)
             # compile the name schema, then evaluate it per static field name
             lowered = self.lower(sub, name_ctx)
@@ -1424,10 +1717,10 @@ class Lowerer:
         # that were successfully applied.  Subset-only gates are SOFT.
         if isinstance(schema.get("unevaluatedProperties"), (dict, bool)):
             sub = schema["unevaluatedProperties"]
-            gate = self._claim_gate(ctx, ctx.stageable)
-            claims = [(gate(src), src, [driver_regex_matcher(p)
-                                        for p in src.patterns])
-                      for src in claim_sources(schema, "props")]
+            claims = [(gate, src, [driver_regex_matcher(p)
+                                   for p in src.patterns])
+                      for gate, src in claim_gates(schema, "props",
+                                                   self._sub(ctx))]
             for fname in fields:
                 conds = []
                 any_hard = False
@@ -1469,11 +1762,8 @@ class Lowerer:
                     )
                 # field claimed only conditionally: the unevaluated check
                 # applies exactly when NO claimant branch applied
-                def claimed(x, *i, _cs=tuple(conds)):
-                    o = F.lit(False)
-                    for cf in _cs:
-                        o = o | F.coalesce(cf(x, *i), F.lit(False))
-                    return o
+                claimed = _on_node(dt, lambda n, _cs=tuple(conds):
+                                   _or_all([cf(n) for cf in _cs]))
                 for c in out[mark_out:]:
                     if c.scope == ctx.scope:
                         prev = c.pred
@@ -1487,140 +1777,19 @@ class Lowerer:
                                   | F.coalesce(_p(x, *i), F.lit(True)))
 
     # ------------------------------------------------------------------
-    def _claim_gate(self, ctx: _Ctx, stageable: bool):
-        """Fold for ``claim_sources`` records at this node: returns
-        ``gate(src)`` — a validity fn over the NODE instance, or None when
-        the source's claims are unconditional.  Each branch schema lowers
-        once per fold, however many sources share it as a term."""
-        memo: dict = {}
-
-        def valid(s, suffix):
-            return self.lower(s, _Ctx(
-                dtype=ctx.dtype, path=ctx.path + suffix, scope=ctx.scope,
-                dpath=ctx.dpath, elementable=False, array=ctx.array,
-                array_key=ctx.array_key, spointer=_sp(ctx) + suffix,
-                stageable=stageable, options=ctx.options)).valid
-
-        def term(kind, arg, suffix):
-            if kind == "present":
-                if isinstance(ctx.dtype, MapType):
-                    return lambda x, *i: F.map_contains_key(x, F.lit(arg))
-                return lambda x, *i: x.getField(arg).isNotNull()
-            if suffix not in memo:
-                memo[suffix] = valid(arg, suffix)
-            v = memo[suffix]
-            if kind == "invalid":
-                return lambda x, *i: ~F.coalesce(v(x, *i), F.lit(False))
-            return v
-
-        def gate(src: ClaimSource):
-            if src.terms:
-                fns = [term(*t) for t in src.terms]
-            elif src.subset is not None:
-                fns = [valid(src.subset, src.suffix)]
-            else:
-                return None
-            if len(fns) == 1:
-                return fns[0]
-
-            def conj(x, *i, _fns=tuple(fns)):
-                o = F.coalesce(_fns[0](x, *i), F.lit(False))
-                for f in _fns[1:]:
-                    o = o & F.coalesce(f(x, *i), F.lit(False))
-                return o
-            return conj
-
-        return gate
-
-    # ------------------------------------------------------------------
-    def _lower_map(self, schema, ctx: _Ctx, out, valids, emit) -> None:
+    def _lower_map_properties(self, schema, ctx: _Ctx, emit) -> None:
+        """``properties`` on a map: the subschema applies when the key is
+        present, one collapsed constraint per member.  A plain
+        ``element_at`` (no lambda), so a doc-scope python leaf is legal
+        here; at element scope a map value has no staged lookup."""
         dt: MapType = ctx.dtype
-        obs = _obs_str(dt)
-        key_of = F.map_keys
-
-        if "minProperties" in schema:
-            n = schema["minProperties"]
-            emit(ctx.cid("minProperties"),
-                 self._lift(lambda x, _n=n: F.size(x) >= _n),
-                 self._lift(lambda x: F.size(x).cast("string")))
-        if "maxProperties" in schema:
-            n = schema["maxProperties"]
-            emit(ctx.cid("maxProperties"),
-                 self._lift(lambda x, _n=n: F.size(x) <= _n),
-                 self._lift(lambda x: F.size(x).cast("string")))
-        if "required" in schema:
-            for key in schema["required"]:
-                emit(ctx.cid("required", key),
-                     self._lift(lambda x, _k=key: F.map_contains_key(x, F.lit(_k))),
-                     self._lift(lambda x: F.lit("missing")))
-
-        # dependentRequired / dependentSchemas on a map — reference
-        # ``keywords/dependencies.rs:204-227`` over dynamic keys
-        deps, dep_schemas = dependency_keywords(schema)
-        for key, reqs in deps.items():
-            def dep_pred(x, *i, _k=key, _rs=tuple(reqs)):
-                need = F.lit(True)
-                for r in _rs:
-                    need = need & F.map_contains_key(x, F.lit(r))
-                return ~F.map_contains_key(x, F.lit(_k)) | need
-            emit(ctx.cid("dependentRequired", key), dep_pred,
-                 self._lift(lambda x: F.lit("missing")))
-
-        for key, sub in dep_schemas.items():
-            lowered = self.lower(
-                sub, _Ctx(dtype=dt, path=ctx.path + ("dependentSchemas", key),
-                          scope=ctx.scope, elementable=False, array=ctx.array,
-                          array_key=ctx.array_key,
-                          spointer=_sp(ctx) + ("dependentSchemas", key),
-                          options=ctx.options))
-            emit(ctx.cid("dependentSchemas", key),
-                 self._lift(lambda x, _k=key, _v=lowered.valid:
-                            ~F.map_contains_key(x, F.lit(_k))
-                            | F.coalesce(_v(x), F.lit(True))),
-                 self._lift(obs))
-
-        # Map applicators evaluate value schemas inside F.forall lambdas —
-        # python-backed leaves have no legal site there; reject at compile
-        # time (clear SpecError instead of a Spark AnalysisException).
-        # (``properties`` on a map uses plain element_at — no lambda — so
-        # doc-scope python leaves are legal there; element scope is rejected
-        # by _py_pred's stageable check.)
-        for kw in ("propertyNames", "patternProperties",
-                   "additionalProperties", "unevaluatedProperties"):
-            subs = schema.get(kw)
-            if kw == "patternProperties" and isinstance(subs, dict):
-                subs = list(subs.values())  # dict-of-schemas
-            else:
-                subs = [subs]
-            for s in subs:
-                if isinstance(s, dict) and _needs_python(s, ctx.options):
-                    raise SpecError(
-                        f"python-backed check (format/pattern) under map "
-                        f"{kw} at {ctx.cid()} is not supported — map values "
-                        "are evaluated inside array lambdas"
-                    )
-
-        # propertyNames — reference ``keywords/property_names.rs``
-        if "propertyNames" in schema:
-            lowered = self.lower(
-                schema["propertyNames"],
-                _Ctx(dtype=StringType(), path=ctx.path + ("propertyNames",),
-                     scope=ctx.scope, elementable=False, array=ctx.array,
-                     array_key=ctx.array_key,
-                     spointer=_sp(ctx) + ("propertyNames",),
-                     options=ctx.options))
-            emit(ctx.cid("propertyNames"),
-                 self._lift(lambda x, _v=lowered.valid: F.forall(
-                     key_of(x), lambda k: _v(k))),
-                 self._lift(lambda x: F.to_json(key_of(x))))
-
-        # properties on a map: apply subschema when the key is present
         for name, sub in schema.get("properties", {}).items():
             lowered = self.lower(
                 sub, _Ctx(dtype=dt.valueType, path=ctx.path + (name,),
                           scope=ctx.scope, elementable=False, array=ctx.array,
                           array_key=ctx.array_key,
                           spointer=_sp(ctx) + ("properties", name),
+                          stageable=ctx.scope == "doc" and ctx.stageable,
                           options=ctx.options))
             emit(ctx.cid(name),
                  self._lift(lambda x, _k=name, _v=lowered.valid:
@@ -1629,173 +1798,10 @@ class Lowerer:
                  self._lift(lambda x, _k=name:
                             F.element_at(x, F.lit(_k)).cast("string")))
 
-        # patternProperties — reference ``keywords/pattern_properties.rs``
-        pat_pairs = []
-        for pat, sub in schema.get("patternProperties", {}).items():
-            java = ecma_to_java(pat)
-            if java is None:
-                raise SpecError(
-                    f"patternProperties key pattern {pat!r} at {ctx.cid()} is "
-                    "not expressible in the Java regex dialect (map keys are "
-                    "matched with rlike inside lambdas — no Python fallback)"
-                )
-            lowered = self.lower(
-                sub, _Ctx(dtype=dt.valueType,
-                          path=ctx.path + ("patternProperties", pat),
-                          scope=ctx.scope, elementable=False, array=ctx.array,
-                          array_key=ctx.array_key,
-                          spointer=_sp(ctx) + ("patternProperties", pat),
-                          options=ctx.options))
-            pat_pairs.append((java, lowered.valid))
-            emit(ctx.cid("patternProperties", pat),
-                 self._lift(lambda x, _p=java, _v=lowered.valid: F.forall(
-                     F.map_entries(x),
-                     lambda e: ~e.getField("key").rlike(_p)
-                     | _v(e.getField("value")))),
-                 self._lift(obs))
-
-        # additionalProperties — reference 8 fused variants
-        # (``additional_properties.rs:79-864``); here a single forall whose
-        # claim-set folds properties + patternProperties.
-        # unevaluatedProperties on a map lowers the same way but with the
-        # claim-set resolved statically across in-place applicators.
-        ap_kw = None
-        map_conds: list = []
-        if "additionalProperties" in schema:
-            ap_kw = "additionalProperties"
-            named = tuple(schema.get("properties", {}))
-            pats = tuple(p for p, _ in pat_pairs)
-        elif isinstance(schema.get("unevaluatedProperties"), (dict, bool)):
-            ap_kw = "unevaluatedProperties"
-            # sources whose claims cannot fail match statically; the rest
-            # gate at runtime on their branch terms or, round 5, on their
-            # claim-keyword validity
-            srcs = claim_sources(schema, "props")
-            static = [s for s in srcs if not s.terms and s.subset is None]
-            if any(s.claims_all for s in static):
-                ap_kw = None  # unconditionally all claimed
-            else:
-                def java(p):
-                    jp = ecma_to_java(p)
-                    if jp is None:
-                        raise SpecError(
-                            f"patternProperties key pattern {p!r} at "
-                            f"{ctx.cid()} is not expressible in the Java "
-                            "regex dialect")
-                    return jp
-
-                gate = self._claim_gate(ctx, stageable=False)
-                named = tuple(n for s in static for n in s.names)
-                pats = tuple(java(p) for s in static for p in s.patterns)
-                map_conds = [
-                    (gate(s), s.names, tuple(java(p) for p in s.patterns),
-                     s.claims_all)
-                    for s in srcs if s.terms or s.subset is not None]
-        if ap_kw is not None:
-            ap = schema[ap_kw]
-
-            def claimed_by(b, k: Column) -> Column:
-                """b = the bound per-row branch-validity struct (None when
-                there are no conditional sources)."""
-                c = F.lit(False)
-                if named:
-                    c = c | k.isin(*named)
-                for p in pats:
-                    c = c | k.rlike(p)
-                for j, (_cond, nm_j, ps_j, all_j) in enumerate(map_conds):
-                    cj = F.lit(all_j)
-                    if nm_j:
-                        cj = cj | k.isin(*nm_j)
-                    for p in ps_j:
-                        cj = cj | k.rlike(p)
-                    c = c | (b.getField(f"c{j}") & cj)
-                return c
-
-            def with_conds(x: Column, inner) -> Column:
-                """Evaluate every branch-validity cond ONCE per row and bind
-                the results as a lambda variable (single-element transform),
-                so the per-key lambda reads booleans instead of re-running
-                whole-map branch validation per key (interpreted HOF path)."""
-                if not map_conds:
-                    return inner(F.struct(F.lit(False).alias("c_")))
-                cs = F.struct(*[
-                    F.coalesce(c(x), F.lit(False)).alias(f"c{j}")
-                    for j, (c, _, _, _) in enumerate(map_conds)
-                ])
-                return F.element_at(F.transform(F.array(cs), inner), 1)
-
-            if ap is False:
-                emit(ctx.cid(ap_kw),
-                     self._lift(lambda x: with_conds(x, lambda b: F.forall(
-                         key_of(x), lambda k: claimed_by(b, k)))),
-                     self._lift(lambda x: with_conds(x, lambda b: F.to_json(
-                         F.filter(key_of(x),
-                                  lambda k: ~claimed_by(b, k))))))
-            elif isinstance(ap, dict) and ap:
-                lowered = self.lower(
-                    ap, _Ctx(dtype=dt.valueType,
-                             path=ctx.path + (ap_kw,),
-                             scope=ctx.scope, elementable=False, array=ctx.array,
-                             array_key=ctx.array_key,
-                             spointer=_sp(ctx) + (ap_kw,),
-                             options=ctx.options))
-                emit(ctx.cid(ap_kw),
-                     self._lift(lambda x, _v=lowered.valid: with_conds(
-                         x, lambda b: F.forall(
-                             F.map_entries(x),
-                             lambda e: claimed_by(b, e.getField("key"))
-                             | _v(e.getField("value"))))),
-                     self._lift(obs))
-
     # ------------------------------------------------------------------
     def _lower_array(self, schema, ctx: _Ctx, out, valids, emit) -> None:
         dt: ArrayType = ctx.dtype
         elem_dt = dt.elementType
-        obs = _obs_str(dt)
-
-        if "minItems" in schema:
-            n = schema["minItems"]
-            emit(ctx.cid("minItems"),
-                 self._lift(lambda x, _n=n: F.size(x) >= _n),
-                 self._lift(lambda x: F.size(x).cast("string")))
-        if "maxItems" in schema:
-            n = schema["maxItems"]
-            emit(ctx.cid("maxItems"),
-                 self._lift(lambda x, _n=n: F.size(x) <= _n),
-                 self._lift(lambda x: F.size(x).cast("string")))
-        if "uniqueItems" in schema and schema["uniqueItems"] is True:
-            # reference ``unique_items.rs:66-97`` adaptive pairwise/hash;
-            # array_distinct is the set-oriented equivalent (typed columns
-            # make 1==1.0 collisions impossible by construction).
-            emit(ctx.cid("uniqueItems"),
-                 self._lift(lambda x: F.size(x) == F.size(F.array_distinct(x))),
-                 self._lift(lambda x: (
-                     F.size(x) - F.size(F.array_distinct(x))).cast("string")))
-
-        # contains / minContains / maxContains — reference
-        # ``keywords/contains.rs:339-375`` fused variants
-        if "contains" in schema:
-            if _needs_python(schema["contains"], ctx.options):
-                raise SpecError(
-                    f"python-backed check (format/pattern) under contains at "
-                    f"{ctx.cid()} is not supported — contains counts matches "
-                    "inside an array lambda"
-                )
-            sub_l = self._lower_element_valid(schema["contains"], elem_dt, ctx,
-                                              ("contains",))
-            min_c = schema.get("minContains", 1)
-            max_c = schema.get("maxContains")
-            def count(x: Column, _v=sub_l) -> Column:
-                return F.size(F.filter(x, lambda e: F.coalesce(_v(e), F.lit(False))))
-            if min_c > 0:
-                emit(ctx.cid("contains" if min_c == 1 and "minContains" not in schema
-                             else "minContains"),
-                     self._lift(lambda x, _n=min_c: count(x) >= _n),
-                     self._lift(lambda x: count(x).cast("string")))
-            if max_c is not None:
-                emit(ctx.cid("maxContains"),
-                     self._lift(lambda x, _n=max_c: count(x) <= _n),
-                     self._lift(lambda x: count(x).cast("string")))
 
         # tuple forms: prefixItems (2020-12) / items: [..] (draft 4-2019)
         draft = ctx.options.draft
@@ -1839,10 +1845,13 @@ class Lowerer:
         # gated path is one node-level HOF check (rare corner;
         # per-position attribution is kept on the common static path).
         if isinstance(schema.get("unevaluatedItems"), (dict, bool)):
-            srcs = claim_sources(schema, "items")
-            own = [s for s in srcs if not s.terms]
-            static = [s for s in own if s.subset is None]
-            soft = [s for s in own if s.subset is not None]
+            sub = self._sub(ctx)
+            gated = claim_gates(schema, "items", sub)
+            # 2020-12: a `contains` claims the items it MATCHES — an
+            # element-level runtime claim, handled on the gated path
+            has_contains = any(s.contains is not None for _, s in gated)
+            static = [s for g, s in gated if g is None]
+            soft = [s for g, s in gated if g is not None and not s.terms]
 
             def extent(ss):
                 return (max([s.n_prefix for s in ss], default=0),
@@ -1850,12 +1859,9 @@ class Lowerer:
 
             # every branch source gates at runtime: it may claim a
             # position whose node or allOf source failed its subset gate
-            has_branch_conds = any(s.terms for s in srcs)
+            has_branch_conds = any(s.terms for _, s in gated)
             n_static, static_all = extent(static)
             n_soft, soft_all = extent(soft)
-            # 2020-12: `contains` claims the items it MATCHES — an
-            # element-level runtime claim, handled on the gated path
-            has_contains = isinstance(schema.get("contains"), (dict, bool))
             if static_all:
                 pass  # unconditionally all claimed: nothing unevaluated
             elif not soft and not has_branch_conds and not has_contains:
@@ -1878,54 +1884,30 @@ class Lowerer:
                         schema["unevaluatedItems"], ctx, elem_dt, out,
                         valids, path_suffix=("unevaluatedItems",),
                         index_gate=("ge", upper))
-                gate = self._claim_gate(ctx, stageable=False)
-                conds = [(gate(s), s.n_prefix, s.claims_all)
-                         for s in srcs if s.subset is not None
-                         or (s.terms and has_branch_conds)]
-                cont_ok = None
-                if has_contains:
-                    cont_ok = self._lower_element_valid(
-                        schema["contains"], elem_dt, ctx, ("contains",))
-                ue_ok = self._lower_element_valid(
-                    schema["unevaluatedItems"], elem_dt, ctx,
-                    ("unevaluatedItems",))
+                bind, claimed_at = item_claims(gated, sub)
+                ue_ok = sub(schema["unevaluatedItems"], ("unevaluatedItems",),
+                            "child", True)
 
-                def _bounds(x, _conds=conds, _n=n_static):
-                    n_col = F.lit(_n)
-                    all_col = F.lit(False)
-                    for cond, nb, ab in _conds:
-                        a = F.coalesce(cond(x), F.lit(False))
-                        if ab:
-                            all_col = all_col | a
-                        elif nb:
-                            n_col = F.greatest(
-                                n_col,
-                                F.when(a, F.lit(nb)).otherwise(F.lit(0)))
-                    return n_col, all_col
-
-                def _gated_cells(x, mk, _ok=ue_ok, _cont=cont_ok):
+                def _gated_cells(x, mk, _ok=ue_ok):
                     """One per-position value via ``mk(ok, e, i)`` under the
                     SHARED gated claim math — the node-level pred and the
                     per-position rows must never drift apart.
 
                     The branch-validity bounds bind ONCE as a lambda
                     variable (single-element transform — the word_shingles
-                    trick): referencing ``_bounds(x)`` inside the
+                    trick): referencing the bounds inside the
                     per-element lambda would re-validate every branch per
                     element in Spark's interpreted HOF path (O(n²)/row)."""
-                    n_col, all_col = _bounds(x)
-                    bound = F.struct(n_col.alias("n"), all_col.alias("a"))
+                    bound = F.struct(*bind(_TypedNode(dt, x)))
 
                     def cell_ok(b, e, i):
-                        claimed = b.getField("a") | (i < b.getField("n"))
+                        el = _TypedNode(elem_dt, e)
+                        claimed = claimed_at(b, el, i)
                         if upper is not None:
                             # positions >= upper are handled by the static
                             # per-position check above (round-5 split)
                             claimed = claimed | (i >= F.lit(upper))
-                        if _cont is not None:  # contains-matched items
-                            claimed = claimed | F.coalesce(
-                                _cont(e), F.lit(False))
-                        return claimed | F.coalesce(_ok(e), F.lit(True))
+                        return claimed | _ok(el)
 
                     return F.element_at(
                         F.transform(
@@ -1977,14 +1959,6 @@ class Lowerer:
                 out[-1].viol_positions = self._lift(_pos_structs)
                 out[-1].unit_positions = self._lift(_unit_structs)
 
-    def _lower_element_valid(self, sub, elem_dt, ctx: _Ctx, suffix) -> Callable:
-        lowered = self.lower(sub, _Ctx(
-            dtype=elem_dt, path=ctx.path + suffix, scope=ctx.scope,
-            elementable=False,
-            array=ctx.array, array_key=ctx.array_key,
-            spointer=_sp(ctx) + suffix, options=ctx.options))
-        return lowered.valid
-
     def _emit_items(self, sub, ctx: _Ctx, elem_dt, out, valids,
                     path_suffix, index_gate) -> None:
         """Lower an element subschema.
@@ -2032,24 +2006,15 @@ class Lowerer:
             valids.append(arr_valid)
         else:
             # nested array inside an element: collapse to forall
-            if _needs_python(sub, ctx.options):
-                raise SpecError(
-                    f"python-backed check (format/pattern) inside a nested "
-                    f"array at {ctx.cid(*path_suffix)} is not supported — "
-                    "the element predicate runs inside an array lambda with "
-                    "no staged-column site; apply it on the outer span "
-                    "array, or use a Column-expressible pattern/format"
-                )
-            lowered_valid = self._lower_element_valid(sub, elem_dt, ctx,
-                                                      path_suffix)
+            valid = self._sub(ctx)(sub, path_suffix, "child", True)
 
             # the positional gate must survive the collapse: a prefixItems
             # subschema inside a combinator branch applies to ITS position
             # only, not every element (round-3 fix — the ungated forall made
             # anyOf-of-prefixItems branches reject valid arrays)
-            def pred(x, *i, _v=lowered_valid, _gate=index_gate):
+            def pred(x, *i, _v=valid, _gate=index_gate):
                 def body(e, j):
-                    ok = F.coalesce(_v(e), F.lit(True))
+                    ok = _v(_TypedNode(elem_dt, e))
                     if _gate is not None:
                         kind, n = _gate
                         gate_c = (j == n) if kind == "eq" else (j >= n)
@@ -2073,7 +2038,7 @@ class Lowerer:
         return acc
 
     # ------------------------------------------------------------------
-    def _lower_logic(self, schema, ctx: _Ctx, out, valids) -> None:
+    def _lower_all_of(self, schema, ctx: _Ctx, out, valids) -> None:
         # allOf — pass children through (reference ``all_of.rs:37``)
         for idx, sub in enumerate(schema.get("allOf", [])):
             lowered = self.lower(sub, _Ctx(
@@ -2085,61 +2050,8 @@ class Lowerer:
             out.extend(lowered.constraints)
             valids.append(lowered.valid)
 
+    def _lower_if(self, schema, ctx: _Ctx, out, valids) -> None:
         obs = _obs_str(ctx.dtype)
-
-        # anyOf — collapse to one constraint (reference ``any_of.rs:46``)
-        if "anyOf" in schema:
-            subs = [
-                self.lower(s, _Ctx(dtype=ctx.dtype,
-                                   path=ctx.path + ("anyOf", str(i)),
-                                   scope=ctx.scope, dpath=ctx.dpath,
-                                   elementable=False, array=ctx.array,
-                                   array_key=ctx.array_key,
-                                   spointer=_sp(ctx) + ("anyOf", str(i)),
-                                   stageable=ctx.stageable,
-                                   options=ctx.options)).valid
-                for i, s in enumerate(schema["anyOf"])
-            ]
-            def pred(*a, _subs=tuple(subs)):
-                outp = F.coalesce(_subs[0](*a), F.lit(False))
-                for s in _subs[1:]:
-                    outp = outp | F.coalesce(s(*a), F.lit(False))
-                return outp
-            out.append(self._mk(ctx, ctx.cid("anyOf"), pred, self._lift(obs)))
-            valids.append(pred)
-
-        # oneOf — exactly one (reference ``one_of.rs:43-69``)
-        if "oneOf" in schema:
-            subs = [
-                self.lower(s, _Ctx(dtype=ctx.dtype,
-                                   path=ctx.path + ("oneOf", str(i)),
-                                   scope=ctx.scope, dpath=ctx.dpath,
-                                   elementable=False, array=ctx.array,
-                                   array_key=ctx.array_key,
-                                   spointer=_sp(ctx) + ("oneOf", str(i)),
-                                   stageable=ctx.stageable,
-                                   options=ctx.options)).valid
-                for i, s in enumerate(schema["oneOf"])
-            ]
-            def pred(*a, _subs=tuple(subs)):
-                total = F.lit(0)
-                for s in _subs:
-                    total = total + F.coalesce(s(*a), F.lit(False)).cast("int")
-                return total == 1
-            out.append(self._mk(ctx, ctx.cid("oneOf"), pred, self._lift(obs)))
-            valids.append(pred)
-
-        # not — reference ``not.rs:28-45``
-        if "not" in schema:
-            sub_valid = self.lower(schema["not"], _Ctx(
-                dtype=ctx.dtype, path=ctx.path + ("not",), scope=ctx.scope,
-                dpath=ctx.dpath, elementable=False,
-                array=ctx.array, array_key=ctx.array_key,
-                spointer=_sp(ctx) + ("not",),
-                stageable=ctx.stageable, options=ctx.options)).valid
-            pred = lambda *a, _v=sub_valid: ~F.coalesce(_v(*a), F.lit(True))
-            out.append(self._mk(ctx, ctx.cid("not"), pred, self._lift(obs)))
-            valids.append(pred)
 
         # if/then/else — reference pre-fused variants ``if_.rs:183-202``.
         # Same-scope children keep per-constraint identity with a gated pred;
@@ -2242,6 +2154,10 @@ _VOCABULARY = {
                      "unevaluatedProperties", "unevaluatedItems",
                      "minContains", "maxContains"), _SINCE_2019),
 }
+# keywords whose value maps member names, patterns or anchors to schemas
+_SCHEMA_MAPS = frozenset((
+    "properties", "patternProperties", "$defs", "definitions",
+    "dependentSchemas", "dependencies"))
 # keywords whose value is a schema, or a list of schemas
 _SCHEMA_SLOTS = frozenset((
     "items", "prefixItems", "additionalItems", "unevaluatedItems",
@@ -2260,7 +2176,7 @@ def _in_vocabulary(schema: Any, draft: int | None, custom) -> Any:
     def sub(kw, v):
         if kw in custom:
             return v
-        if kw in _NAME_CONTAINERS and isinstance(v, dict):
+        if kw in _SCHEMA_MAPS and isinstance(v, dict):
             return {k: _in_vocabulary(x, draft, custom)
                     for k, x in v.items()}
         if kw in _SCHEMA_SLOTS:

@@ -14,9 +14,15 @@ leak a wrong-typed value into a check, ``map<string,variant>`` /
 Keyword decisions are shared with the typed engine, not repeated here:
 :func:`compiler.prepare_spec` is the spec front end of both paths (draft,
 format-assertion default, meta-validation, ``$ref`` inlining, and the
-draft's keyword vocabulary), and :func:`compiler.scalar_checks` lowers
-the scalar keywords for both, over :class:`JV`/:class:`SJV` nodes here.
-This module walks the object, array and combinator keywords.
+draft's keyword vocabulary); :func:`compiler.scalar_checks` lowers the
+scalar keywords, :func:`compiler.object_checks`,
+:func:`compiler.array_checks` and :func:`compiler.logic_checks` the
+object, array and combinator keywords, and :func:`compiler.claim_gates`
+folds the ``unevaluated*`` claim sources, for both paths, over
+:class:`JV`/:class:`SJV` nodes here.  This module keeps the walk itself
+and the keywords whose typed form differs: ``properties``, the items
+family, ``allOf``, ``if``/``then``/``else`` and the ``unevaluatedItems``
+consumer.
 
 Scale notes: the whole validation is ONE projection over ONE parse per
 document — no shuffle, no Python in the hot path (the only Python-backed
@@ -50,19 +56,19 @@ fall back to the typed path for those.
 
 from __future__ import annotations
 
-import operator
 from decimal import Decimal
-from functools import cached_property, reduce
+from functools import cached_property
 from typing import Any, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from jsonschema_rs_spark.compiler import (_and_all, _as_double,
+from jsonschema_rs_spark.compiler import (_ARRAY, _and_all, _as_double,
                                           _multiple_of_decimal, _or_all,
-                                          claim_sources,
-                                          dependency_keywords, prepare_spec,
-                                          scalar_checks)
+                                          array_checks, claim_gates,
+                                          item_claims, logic_checks,
+                                          object_checks,
+                                          prepare_spec, scalar_checks)
 from jsonschema_rs_spark.functions.ecma import ecma_to_java
 from jsonschema_rs_spark.spec import SpecError
 
@@ -70,9 +76,6 @@ from jsonschema_rs_spark.spec import SpecError
 class JsonIngestUnsupported(ValueError):
     """Schema uses a construct the variant lowering cannot express; the
     caller should fall back to the typed-table engine."""
-
-
-_INTERNAL = ("$__abs__", "$__lenient__")
 
 
 def _null_str() -> Column:
@@ -249,6 +252,24 @@ class JV:
     def one_of(self, values: list) -> Column:
         return _or_all([self.equals(v) for v in values])
 
+    # -- applicator protocol of compiler.object_checks & co ----------------
+
+    def present(self, key: str) -> Column:
+        return F.map_contains_key(self.m, F.lit(key))
+
+    def child(self, col: Column) -> "JV":
+        return JV(col)
+
+    def name(self, col: Column) -> "JV":
+        return SJV(col)
+
+    def unique(self) -> Column:
+        canon = F.transform(self.arr, lambda el: _canon(JV(el)))
+        return F.size(F.array_distinct(canon)) == F.size(self.arr)
+
+    def key_regex(self, pat: str, where: str) -> str:
+        return _java_pattern(pat, where)
+
     def multiple_of(self, q: Any) -> Column:
         ratio = self.nd / F.lit(_as_double(q))
         approx = F.abs(ratio - F.round(ratio, 0)) < F.lit(1e-9)
@@ -374,8 +395,11 @@ class _JsonLowerer:
     JSON-null / wrong-type distinctions are native instead of
     typed-column approximations.  The spec arrives from
     :func:`compiler.prepare_spec`, so it holds only keywords its draft
-    defines; the scalar keywords come from :func:`compiler.scalar_checks`
-    and the draft is read only for keyword forms (tuple ``items``)."""
+    defines.  The scalar, object, array and combinator keywords come from
+    the shared ``compiler`` lowerings (``scalar_checks``,
+    ``object_checks``, ``array_checks``, ``logic_checks``), which reach
+    subschemas through the ``sub`` hook of :meth:`lower`; the draft is
+    read only for keyword forms (tuple ``items``)."""
 
     def __init__(self, options):
         self.options = options
@@ -430,189 +454,56 @@ class _JsonLowerer:
                           jv.absent | F.coalesce(pred, F.lit(False)),
                           jv.obs if obs is None else obs))
 
-        def valid_of(sub, seg: tuple[str, ...]) -> Column:
-            return self.valid(sub, jv, path + seg, in_lambda)
+        def sub(s, segs, at, lam):
+            # one Column per node: claim gates share their branch terms
+            memo: dict = {}
+
+            def valid(n):
+                if id(n) not in memo:
+                    memo[id(n)] = (n, self.valid(s, n, path + segs,
+                                                 in_lambda or lam))
+                return memo[id(n)][1]
+            return valid
+
+        def emit_checks(checks):
+            for chk in checks:
+                o = chk.observed
+                emit(path + chk.segs, chk.pred(jv),
+                     F.lit(o) if isinstance(o, str) else None)
 
         where = "/".join(path)
         for chk in scalar_checks(schema, jv, self.options, where,
                                  self._py_leaf(where, in_lambda)):
             emit(path + (chk.keyword,), chk.pred(jv))
-        self._object(schema, jv, path, emit, cells, in_lambda)
-        self._array(schema, jv, path, emit, cells, in_lambda)
+        for k, s in (schema.get("properties") or {}).items():
+            # no object re-gate: ``m`` is NULL for a non-object, so every
+            # member is absent and its cells pass
+            cells.extend(self.lower(s, jv.member(k), path + (k,),
+                                    in_lambda))
+        emit_checks(object_checks(schema, jv, sub, where))
+        self._items(schema, jv, path, emit, cells, in_lambda)
+        emit_checks(array_checks(schema, sub))
+        self._unevaluated_items(schema, jv, path, emit, sub)
 
         # ---- combinators -------------------------------------------------
         if "allOf" in schema:
-            for i, sub in enumerate(schema["allOf"]):
-                cells.extend(self.lower(sub, jv, path + ("allOf", str(i)),
+            for i, s in enumerate(schema["allOf"]):
+                cells.extend(self.lower(s, jv, path + ("allOf", str(i)),
                                         in_lambda))
-        if "anyOf" in schema:
-            emit(path + ("anyOf",), _or_all(
-                [valid_of(sub, ("anyOf", str(i)))
-                 for i, sub in enumerate(schema["anyOf"])]))
-        if "oneOf" in schema:
-            cnt = reduce(operator.add, [
-                valid_of(sub, ("oneOf", str(i))).cast("int")
-                for i, sub in enumerate(schema["oneOf"])])
-            emit(path + ("oneOf",), cnt == 1)
-        if "not" in schema:
-            emit(path + ("not",), ~valid_of(schema["not"], ("not",)))
+        emit_checks(logic_checks(schema, sub))
         if "if" in schema:
-            cond = valid_of(schema["if"], ("if",))
-            tv = (valid_of(schema["then"], ("then",))
-                  if "then" in schema else F.lit(True))
-            ev = (valid_of(schema["else"], ("else",))
-                  if "else" in schema else F.lit(True))
-            emit(path + ("if",), F.when(cond, tv).otherwise(ev))
+            def branch(kw):
+                return (sub(schema[kw], (kw,), None, False)(jv)
+                        if kw in schema else F.lit(True))
+            emit(path + ("if",), F.when(branch("if"), branch("then"))
+                 .otherwise(branch("else")))
         return cells
-
-    # -- object keywords ---------------------------------------------------
-
-    def _object(self, schema, jv, path, emit, cells, in_lambda):
-        m = jv.m
-
-        def gate(p):
-            return ~jv.is_("object") | p
-
-        props = schema.get("properties") or {}
-        for k, sub in props.items():
-            # no object re-gate: ``m`` is NULL for a non-object, so every
-            # member is absent and its cells pass
-            cells.extend(self.lower(sub, jv.member(k), path + (k,),
-                                    in_lambda))
-        if "required" in schema:
-            for k in schema["required"]:
-                emit(path + ("required", k),
-                     gate(F.map_contains_key(m, F.lit(k))),
-                     obs=F.lit("missing"))
-        if "minProperties" in schema:
-            emit(path + ("minProperties",),
-                 gate(F.size(m) >= schema["minProperties"]))
-        if "maxProperties" in schema:
-            emit(path + ("maxProperties",),
-                 gate(F.size(m) <= schema["maxProperties"]))
-        if "propertyNames" in schema:
-            sub = schema["propertyNames"]
-            p = F.forall(F.map_keys(m),
-                         lambda k: self.valid(sub, SJV(k),
-                                              path + ("propertyNames",)))
-            emit(path + ("propertyNames",), gate(p))
-        pats = {p: s for p, s in
-                (schema.get("patternProperties") or {}).items()}
-        pat_java = {p: _java_pattern(p, "/".join(path
-                                                 + ("patternProperties",)))
-                    for p in pats}
-        for pat, sub in pats.items():
-            # NOTE: no default-arg lambdas — pyspark HOFs dispatch on
-            # lambda ARITY, a default arg would bind an extra HOF slot.
-            # Plain closures are safe: pyspark calls the lambda immediately
-            # inside this loop iteration, so late binding never bites.
-            java = pat_java[pat]
-            matched = F.map_filter(m, lambda k, v: k.rlike(java))
-            p = F.forall(F.map_values(matched),
-                         lambda v: self.valid(
-                             sub, JV(v), path + ("patternProperties", pat)))
-            emit(path + ("patternProperties", pat), gate(p))
-        ap = schema.get("additionalProperties")
-        if isinstance(ap, (bool, dict)) and ap is not True:
-            named = list(props)
-
-            def is_extra(k):
-                return _and_all(([~k.isin(*named)] if named else [])
-                                + [~k.rlike(j) for j in pat_java.values()])
-
-            extras = F.map_filter(m, lambda k, v: is_extra(k))
-            if ap is False:
-                p = F.size(extras) == 0
-            else:
-                p = F.forall(F.map_values(extras),
-                             lambda v: self.valid(
-                                 ap, JV(v),
-                                 path + ("additionalProperties",)))
-            emit(path + ("additionalProperties",), gate(p))
-        dep_req, dep_sch = dependency_keywords(schema)
-        for k, reqs in dep_req.items():
-            present = F.map_contains_key(m, F.lit(k))
-            p = ~present | _and_all(
-                [F.map_contains_key(m, F.lit(r)) for r in reqs])
-            emit(path + ("dependentRequired", k), gate(p))
-        for k, sub in dep_sch.items():
-            present = F.map_contains_key(m, F.lit(k))
-            v = self.valid(sub, jv, path + ("dependentSchemas", k))
-            emit(path + ("dependentSchemas", k), gate(~present | v))
-        ue = schema.get("unevaluatedProperties")
-        if isinstance(ue, (dict, bool)):
-            srcs = [(g, src.names, tuple(
-                        _java_pattern(pt, "/".join(path + src.suffix))
-                        for pt in src.patterns), src.claims_all)
-                    for g, src in self._claim_gates(schema, "props", jv,
-                                                    path)]
-            bound = F.struct(*([
-                (g if g is not None else F.lit(True)).alias(f"g{j}")
-                for j, (g, _, _, _) in enumerate(srcs)
-            ] or [F.lit(False).alias("g_")]))
-
-            def _claimed(b, k):
-                terms = []
-                for j, (_, names, pats, allc) in enumerate(srcs):
-                    g = b.getField(f"g{j}")
-                    if not allc:
-                        g = g & _or_all(([k.isin(*names)] if names else [])
-                                        + [k.rlike(pj) for pj in pats])
-                    terms.append(g)
-                return _or_all(terms)
-
-            entries = F.map_entries(m)
-            p = F.element_at(F.transform(F.array(bound), lambda b: F.forall(
-                entries,
-                lambda e: _claimed(b, e.getField("key"))
-                | self.valid(ue, JV(e.getField("value")),
-                             path + ("unevaluatedProperties",)))), 1)
-            emit(path + ("unevaluatedProperties",), gate(p))
-
-    # -- unevaluated* claim sources (runtime annotation algebra) -----------
-    #
-    # In the variant lowering everything is already a per-row Column, so
-    # the 2020-12 rule — annotations count only from schema objects that
-    # were APPLIED and whose claim keywords VALIDATED — composes directly:
-    # each ``claim_sources`` record folds to a gate Column, bound ONCE per
-    # row via a single-element transform so the per-key/per-position
-    # lambdas read booleans (the typed engine's word_shingles trick).
-
-    def _claim_gates(self, schema, kind, jv, path):
-        """[(gate Column | None, ClaimSource)] for the ``unevaluated*``
-        at this node; gate None = the claims are unconditional."""
-        memo: dict = {}
-
-        def term(k, arg, suffix):
-            if k == "present":
-                # NULL off an object; validity terms are never NULL
-                return F.coalesce(F.map_contains_key(jv.m, F.lit(arg)),
-                                  F.lit(False))
-            if suffix not in memo:
-                memo[suffix] = self.valid(arg, jv, path + suffix)
-            v = memo[suffix]
-            return ~v if k == "invalid" else v
-
-        out = []
-        for src in claim_sources(schema, kind):
-            if src.terms:
-                parts = [term(*t) for t in src.terms]
-            elif src.subset is not None:
-                parts = [self.valid(src.subset, jv, path + src.suffix)]
-            else:
-                parts = []
-            out.append((_and_all(parts) if parts else None, src))
-        return out
 
     # -- array keywords ----------------------------------------------------
 
-    def _array(self, schema, jv, path, emit, cells, in_lambda):
-        a = jv.arr
-
-        def gate(p):
-            return ~jv.is_("array") | p
-
-        # tuple vs element forms per draft (mirrors compiler._lower_array)
+    def _items(self, schema, jv, path, emit, cells, in_lambda):
+        """The items family: tuple and rest forms per draft (mirrors
+        compiler._lower_array)."""
         items = schema.get("items")
         prefix: list = []
         rest = None
@@ -627,67 +518,45 @@ class _JsonLowerer:
             rest_kw = "additionalItems"
         else:
             rest = items
-        for j, sub in enumerate(prefix):
+        for j, s in enumerate(prefix):
             # no array re-gate: the array cast is NULL for a non-array,
             # so every element is absent and its cells pass
             cells.extend(self.lower(
-                sub, JV(F.try_element_at(a, F.lit(j + 1))),
+                s, JV(F.try_element_at(jv.arr, F.lit(j + 1))),
                 path + ("items", str(j)), in_lambda))
         n_pre = len(prefix)
         if rest is False:
-            emit(path + (rest_kw,), gate(F.size(a) <= n_pre))
+            emit(path + (rest_kw,),
+                 jv.gate(_ARRAY, F.size(jv.arr) <= n_pre))
         elif isinstance(rest, (dict, bool)) and rest is not True:
             p = F.forall(
                 F.transform(
-                    a, lambda el, i: F.when(i < n_pre, F.lit(True))
+                    jv.arr, lambda el, i: F.when(i < n_pre, F.lit(True))
                     .otherwise(self.valid(rest, JV(el),
                                           path + (rest_kw,)))),
                 lambda x: x)
-            emit(path + (rest_kw,), gate(p))
-        if "contains" in schema:
-            sub = schema["contains"]
-            cnt = F.size(F.filter(
-                a, lambda el: self.valid(sub, JV(el), path + ("contains",))))
-            mn = schema.get("minContains", 1)
-            mx = schema.get("maxContains")
-            p = cnt >= mn
-            if mx is not None:
-                p = p & (cnt <= mx)
-            emit(path + ("contains",), gate(p))
-        if "minItems" in schema:
-            emit(path + ("minItems",), gate(F.size(a) >= schema["minItems"]))
-        if "maxItems" in schema:
-            emit(path + ("maxItems",), gate(F.size(a) <= schema["maxItems"]))
-        if schema.get("uniqueItems") is True:
-            canon = F.transform(a, lambda el: _canon(JV(el)))
-            emit(path + ("uniqueItems",),
-                 gate(F.size(F.array_distinct(canon)) == F.size(a)))
+            emit(path + (rest_kw,), jv.gate(_ARRAY, p))
+
+    def _unevaluated_items(self, schema, jv, path, emit, sub):
+        """``unevaluatedItems`` over the runtime annotation algebra: each
+        ``claim_gates`` record folds to a gate Column, bound once per row
+        via a single-element transform so the per-item lambda reads
+        booleans."""
         ue = schema.get("unevaluatedItems")
-        if isinstance(ue, (dict, bool)):
-            cont = schema.get("contains")
-            n_col, a_col = F.lit(0), F.lit(False)
-            for g, src in self._claim_gates(schema, "items", jv, path):
-                gg = F.lit(True) if g is None else g
-                if src.claims_all:
-                    a_col = a_col | gg
-                elif src.n_prefix:
-                    n_col = F.greatest(n_col, F.when(
-                        gg, F.lit(src.n_prefix)).otherwise(F.lit(0)))
-            bound = F.struct(n_col.alias("n"), a_col.alias("a"))
+        if not isinstance(ue, (dict, bool)):
+            return
+        bind, claimed = item_claims(claim_gates(schema, "items", sub), sub)
+        ue_ok = sub(ue, ("unevaluatedItems",), "child", True)
 
-            def _cell(b, el, i):
-                el = JV(el)
-                claimed = b.getField("a") | (i < b.getField("n"))
-                if isinstance(cont, (dict, bool)):
-                    claimed = claimed | self.valid(cont, el,
-                                                   path + ("contains",))
-                return claimed | self.valid(ue, el,
-                                            path + ("unevaluatedItems",))
+        def _cell(b, el, i):
+            el = JV(el)
+            return claimed(b, el, i) | ue_ok(el)
 
-            p = F.element_at(F.transform(F.array(bound), lambda b: F.forall(
-                F.transform(a, lambda el, i: _cell(b, el, i)),
-                lambda xx: xx)), 1)
-            emit(path + ("unevaluatedItems",), gate(p))
+        bound = F.struct(*bind(jv))
+        p = F.element_at(F.transform(F.array(bound), lambda b: F.forall(
+            F.transform(jv.arr, lambda el, i: _cell(b, el, i)),
+            lambda xx: xx)), 1)
+        emit(path + ("unevaluatedItems",), jv.gate(_ARRAY, p))
 
 # --------------------------------------------------------------------------
 # public API

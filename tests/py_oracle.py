@@ -311,11 +311,12 @@ def _errors(schema: Any, value: Any, path: tuple, is_root: bool = False) -> list
                             sval, v, path + ("unevaluatedProperties", name)))
         elif kw == "unevaluatedItems":
             if isinstance(value, list) and isinstance(sval, (dict, bool)):
-                from jsonschema_rs_spark.compiler import (
-                    _claimed_positions, _items_claim_subset)
+                from jsonschema_rs_spark.compiler import _items_claim_subset
 
-                has_contains = isinstance(schema.get("contains"),
-                                          (dict, bool))
+                # 2020-12: a contains applied in place claims the items
+                # it matches
+                contains = _contains_sources(schema)
+                has_contains = bool(contains)
                 # round 5: node-own/allOf claims gate on claim-keyword
                 # validity (mirrors _own_items_claim_sources)
                 own: list = []  # (has_gate, gate_ok, nb, ab)
@@ -420,12 +421,13 @@ def _errors(schema: Any, value: Any, path: tuple, is_root: bool = False) -> list
                     if has_branch:
                         _walk(schema, False)
                     if not all_rt:
-                        # 2020-12: contains claims the items it matches
+                        applied = [c for c, terms in contains
+                                   if all(_is_valid(x, value) == want
+                                          for want, x in terms)]
                         bad_pos = [
                             (i, v) for i, v in enumerate(value)
                             if i >= n_rt and (upper is None or i < upper)
-                            and not (has_contains and _is_valid(
-                                schema["contains"], v))
+                            and not any(_is_valid(c, v) for c in applied)
                             and not _is_valid(sval, v)]
                         if _ELEM_DEPTH == 0:
                             # per-position rows (round 4, doc scope)
@@ -481,11 +483,40 @@ def _errors(schema: Any, value: Any, path: tuple, is_root: bool = False) -> list
     return out
 
 
+def _claimed_positions(schema: Any, nested: bool = False
+                       ) -> tuple[int, bool]:
+    """Static positions 'evaluated' for unevaluatedItems by the node and
+    its ``allOf`` chain: max prefixItems length; object-form items claims
+    all, and so does a nested ``unevaluatedItems`` (``nested=True``: the
+    schema itself is applied in place below the node, so its own counts)."""
+    n_prefix = 0
+    all_claimed = False
+
+    def walk(s, nested):
+        nonlocal n_prefix, all_claimed
+        if not isinstance(s, dict):
+            return
+        it = s.get("items")
+        if isinstance(it, (dict, bool)):
+            all_claimed = True
+        if isinstance(it, list):
+            n_prefix = max(n_prefix, len(it))
+        if isinstance(s.get("prefixItems"), list):
+            n_prefix = max(n_prefix, len(s["prefixItems"]))
+        if isinstance(s.get("additionalItems"), (dict, bool)):
+            all_claimed = True
+        if nested and isinstance(s.get("unevaluatedItems"), (dict, bool)):
+            all_claimed = True
+        for sub in s.get("allOf", []) or []:
+            walk(sub, True)
+
+    walk(schema, nested)
+    return n_prefix, all_claimed
+
+
 def _has_branch_claims(s: Any, in_branch: bool = False) -> bool:
     """Does any if/then/else/anyOf/oneOf subschema applied in place at
     ``s`` claim array positions for an ``unevaluatedItems`` there?"""
-    from jsonschema_rs_spark.compiler import _claimed_positions
-
     if not isinstance(s, dict):
         return False
     if in_branch and _claimed_positions(s, nested=True) != (0, False):
@@ -496,6 +527,29 @@ def _has_branch_claims(s: Any, in_branch: bool = False) -> bool:
     subs += [(x, True) for k in ("anyOf", "oneOf")
              for x in s.get(k, []) or []]
     return any(_has_branch_claims(x, b) for x, b in subs)
+
+
+def _contains_sources(s: Any, terms: tuple = ()) -> list:
+    """[(contains schema, terms)] for every ``contains`` applied in place
+    at ``s``: its own, its ``allOf`` chain's, and those of the
+    if/then/else and anyOf/oneOf branches.  ``terms`` are the (expected
+    validity, schema) pairs under which the branch applies."""
+    if not isinstance(s, dict):
+        return []
+    out = ([(s["contains"], terms)]
+           if isinstance(s.get("contains"), (dict, bool)) else [])
+    for sub in s.get("allOf") or []:
+        out += _contains_sources(sub, terms)
+    if isinstance(s.get("if"), (dict, bool)):
+        out += _contains_sources(s["if"], terms + ((True, s["if"]),))
+        for kw, want in (("then", True), ("else", False)):
+            if isinstance(s.get(kw), (dict, bool)):
+                out += _contains_sources(
+                    s[kw], terms + ((want, s["if"]), (True, s[kw])))
+    for kw in ("anyOf", "oneOf"):
+        for sub in s.get(kw) or []:
+            out += _contains_sources(sub, terms + ((True, sub),))
+    return out
 
 
 def _tag_index(errs: list, i: int) -> list:
@@ -611,6 +665,48 @@ def _sniff_draft_uri(schema) -> int | None:
     return None
 
 
+# The keywords each draft does not define: there they are annotations,
+# so the oracle drops them.  The merged dialect (no ``$schema``) defines
+# every keyword.  Kept apart from the engine's own table on purpose.
+_SINCE_2019 = frozenset((
+    "dependentRequired", "dependentSchemas", "unevaluatedProperties",
+    "unevaluatedItems", "minContains", "maxContains"))
+_CONTENT = frozenset(("contentEncoding", "contentMediaType"))
+_UNDEFINED = {
+    4: _SINCE_2019 | _CONTENT | {"const", "contains", "propertyNames", "if"},
+    6: _SINCE_2019 | _CONTENT | {"if"},
+    7: _SINCE_2019,
+    2019: _CONTENT,
+    2020: _CONTENT,
+}
+# keywords whose value maps names to schemas, and keywords whose value is
+# a schema or a list of schemas
+_NAMED_SCHEMAS = ("properties", "patternProperties", "$defs", "definitions",
+                  "dependentSchemas", "dependencies")
+_SUBSCHEMAS = ("items", "prefixItems", "additionalItems", "unevaluatedItems",
+               "contains", "additionalProperties", "unevaluatedProperties",
+               "propertyNames", "allOf", "anyOf", "oneOf", "not", "if",
+               "then", "else")
+
+
+def _in_draft(schema: Any, undefined: frozenset) -> Any:
+    """``schema`` without the ``undefined`` keywords, at schema positions
+    only (never inside ``enum``/``const`` values or member names)."""
+    if not isinstance(schema, dict):
+        return schema
+    out = {}
+    for kw, v in schema.items():
+        if kw in undefined:
+            continue
+        if kw in _NAMED_SCHEMAS and isinstance(v, dict):
+            v = {k: _in_draft(x, undefined) for k, x in v.items()}
+        elif kw in _SUBSCHEMAS:
+            v = ([_in_draft(x, undefined) for x in v] if isinstance(v, list)
+                 else _in_draft(v, undefined))
+        out[kw] = v
+    return out
+
+
 def validate_doc(schema: dict, data: dict, draft: int | None = None):
     """(valid, violations) for one document; violations are
     (doc_id, constraint_id, span_index, observed) matching the engine."""
@@ -620,6 +716,7 @@ def validate_doc(schema: dict, data: dict, draft: int | None = None):
     _DRAFT = draft if draft is not None else _sniff_draft_uri(schema)
     try:
         schema = resolve_refs(schema, draft=_DRAFT)
+        schema = _in_draft(schema, _UNDEFINED.get(_DRAFT, frozenset()))
         raw = _errors(schema, data, (), is_root=True)
     finally:
         _DRAFT = None

@@ -264,25 +264,24 @@ def test_verdict_fastpath_agrees_with_violations(spark):
     df.unpersist()
 
 
-def test_needs_python_ignores_keyword_named_properties(spark):
-    """A property literally named 'format' or 'pattern' must not be read as
-    a keyword (ADVICE r2: `fmt in FORMATS_PY` raised TypeError on the
-    unhashable subschema dict)."""
-    from jsonschema_rs_spark.compiler import _needs_python
+def test_member_named_like_a_keyword_is_not_a_python_leaf(spark):
+    """A member literally named ``format`` or ``pattern`` is not read as a
+    keyword (ADVICE r2: `fmt in FORMATS_PY` raised TypeError on the
+    unhashable subschema dict), while a real Python-backed leaf inside a
+    map lambda is still refused at compile time."""
+    from pyspark.sql.types import (MapType, StringType, StructField,
+                                   StructType)
 
     opts = EngineOptions(validate_formats=True)
-    s = {"contains": {"properties": {"format": {"type": "string"}}}}
-    assert _needs_python(s, opts) is False
-    s2 = {"properties": {"pattern": {"minLength": 1},
-                         "format": {"type": "integer"}}}
-    assert _needs_python(s2, opts) is False
-    # a REAL python-backed leaf under a container is still detected
-    s3 = {"properties": {"x": {"format": "idn-hostname"}}}
-    assert _needs_python(s3, opts) is True
-    # ... and a real one inside a dependency schema
-    s4 = {"dependentSchemas": {"format": {"properties": {
-        "y": {"format": "ipv6"}}}}}
-    assert _needs_python(s4, opts) is True
+    table = StructType([StructField("m", MapType(
+        StringType(), StructType([StructField("format", StringType())])))])
+    c = compile_spec({"properties": {"m": {"additionalProperties": {
+        "properties": {"format": {"type": "string"}}}}}}, table, opts)
+    assert c.constraints
+    table = StructType([StructField("m", MapType(StringType(), StringType()))])
+    with pytest.raises(SpecError, match="python-backed"):
+        compile_spec({"properties": {"m": {"additionalProperties": {
+            "format": "ipv6"}}}}, table, opts)
 
 
 def test_schema_with_keyword_named_property_compiles(spark):
@@ -895,9 +894,9 @@ def test_scalar_keywords_agree_on_both_paths(spark, schema, value, opts,
         json_valid_column(F.col("js"), schema, opts).alias("json"),
     ).collect()[0]
     assert (row["typed"], row["json"]) == (expected, expected), row
-    if opts.draft in (None, 7) and not (opts.custom_encodings
-                                        or opts.custom_media_types):
-        # the oracle knows the draft-7 vocabulary and no registered checks
+    if not (opts.custom_encodings or opts.custom_media_types):
+        # the oracle knows every draft's vocabulary, but no registered
+        # checks
         from .py_oracle import validate_doc
 
         ok, _ = validate_doc({"properties": {"v": schema}},
@@ -917,3 +916,98 @@ def test_python_only_pattern_falls_back_on_typed_path(spark):
            validation_frame(df, c, id_cols=("doc_id",),
                             mode="verdicts").collect()}
     assert got == {"aa": True, "ab": False}
+
+
+@pytest.mark.parametrize("schema,value,opts,ddl", [
+    pytest.param({"contains": {"minimum": 5}, "minContains": 2}, [5, 1],
+                 EngineOptions(draft=2020), "array<bigint>",
+                 id="minContains"),
+    pytest.param({"contains": {"minimum": 5}, "maxContains": 1}, [5, 6],
+                 EngineOptions(draft=2020), "array<bigint>",
+                 id="maxContains"),
+    pytest.param({"dependentSchemas": {"a": {"properties": {
+        "b": {"format": "ipv6"}}}}}, {"a": "x", "b": "zz"},
+        EngineOptions(draft=2019, validate_formats=True),
+        "map<string,string>", id="dependentSchemas-python-format"),
+    pytest.param({"properties": {"a": True},
+                  "anyOf": [{"properties": {"b": {"format": "ipv6"}}}],
+                  "unevaluatedProperties": False}, {"a": "x", "b": "zz"},
+                 EngineOptions(draft=2020, validate_formats=True),
+                 "map<string,string>", id="claim-gate-python-format"),
+])
+def test_applicator_keywords_agree_on_both_paths(spark, schema, value, opts,
+                                                 ddl):
+    """Each applicator keyword is lowered once, so the typed and the
+    variant path report the same constraint ids and the same verdict."""
+    import json
+
+    from jsonschema_rs_spark.json_ingest import (json_valid_column,
+                                                 validate_json_strings)
+    from jsonschema_rs_spark.plans.validate import validation_frame
+
+    df = spark.createDataFrame([("a", value, json.dumps({"v": value}))],
+                               f"doc_id string, v {ddl}, js string")
+    spec = {"properties": {"v": schema}}
+    typed = df.select("doc_id", "v")
+    row = validation_frame(typed, compile_spec(spec, typed.schema, opts),
+                           mode="both").collect()[0]
+    typed_ids = {v["constraint_id"] for v in row["violations"]}
+    json_ids = {r["constraint_id"] for r in
+                validate_json_strings(df, "js", spec, opts).collect()}
+    json_ok = df.select(json_valid_column(F.col("js"), spec, opts)
+                        .alias("ok")).collect()[0]["ok"]
+    assert typed_ids == json_ids and typed_ids, (typed_ids, json_ids)
+    assert row["valid"] is False and json_ok is False
+
+
+def test_python_leaf_under_property_names_is_refused_on_both_paths(spark):
+    """A pandas-UDF format on member names sits in a map lambda on either
+    path, so both refuse it at compile time."""
+    from jsonschema_rs_spark.json_ingest import (JsonIngestUnsupported,
+                                                 json_valid_column)
+
+    spec = {"properties": {"v": {"propertyNames": {"format": "ipv6"}}}}
+    opts = EngineOptions(draft=2020, validate_formats=True)
+    table = spark.createDataFrame([("a", {"k": "x"})],
+                                  "doc_id string, v map<string,string>")
+    with pytest.raises(SpecError, match="python-backed"):
+        compile_spec(spec, table.schema, opts)
+    with pytest.raises(JsonIngestUnsupported):
+        json_valid_column(F.lit('{"v": {"k": "x"}}'), spec, opts)
+
+
+@pytest.mark.parametrize("schema,value,expected", [
+    pytest.param({"if": {"contains": {"minimum": 2}},
+                  "unevaluatedItems": {"maximum": 1}}, [3], True,
+                 id="if-contains"),
+    pytest.param({"anyOf": [{"contains": {"minimum": 2}}, True],
+                  "unevaluatedItems": False}, [3], True,
+                 id="anyOf-contains-claims"),
+    pytest.param({"anyOf": [{"contains": {"minimum": 2}}, True],
+                  "unevaluatedItems": False}, [3, 1], False,
+                 id="anyOf-contains-leaves-unmatched"),
+])
+def test_nested_contains_claims_items(spark, schema, value, expected):
+    """Under 2020-12 a ``contains`` applied in place (in an ``if`` or an
+    ``anyOf`` branch) claims the items it matches for
+    ``unevaluatedItems``; python-jsonschema's Draft202012Validator gives
+    the same answers."""
+    import json
+
+    from jsonschema_rs_spark.json_ingest import json_valid_column
+    from jsonschema_rs_spark.plans.validate import valid_column
+
+    from .py_oracle import validate_doc
+
+    opts = EngineOptions(draft=2020)
+    spec = {"properties": {"v": schema}}
+    df = spark.createDataFrame([("a", value, json.dumps({"v": value}))],
+                               "doc_id string, v array<bigint>, js string")
+    c = compile_spec(spec, df.select("doc_id", "v").schema, opts)
+    row = df.select(
+        valid_column(c, F.struct("doc_id", "v")).alias("typed"),
+        json_valid_column(F.col("js"), spec, opts).alias("json"),
+    ).collect()[0]
+    assert (row["typed"], row["json"]) == (expected, expected), row
+    ok, _ = validate_doc(spec, {"doc_id": "a", "v": value}, draft=2020)
+    assert ok == expected

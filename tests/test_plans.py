@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from jsonschema_rs_spark.compiler import compile_spec
 from jsonschema_rs_spark.flagship import FLAGSHIP_SPEC, compile_flagship
+from jsonschema_rs_spark.json_ingest import validate_json_strings
 from jsonschema_rs_spark.plans.validate import (
     partition_rollup,
     validation_frame,
@@ -23,6 +24,8 @@ from jsonschema_rs_spark.sources.spans import derive_spans
 SF = "/root/testdata/sf0.001"
 GOLDEN_FLAGSHIP = os.path.join(os.path.dirname(__file__), "golden",
                                "flagship_typed_plans.txt")
+GOLDEN_VARIANT = os.path.join(os.path.dirname(__file__), "golden",
+                              "flagship_variant_plans.txt")
 
 
 def _physical(df) -> str:
@@ -46,9 +49,25 @@ def flagship_logical_plans(spark) -> str:
     for name, frame in (("violations", violations(df, compiled)),
                         ("verdicts", verdicts(df, compiled))):
         plan = frame._jdf.queryExecution().optimizedPlan().toString()
-        plan = re.sub(r"#[0-9]+", "#N", plan)
-        plan = re.sub(r"(lambda [A-Za-z]+)_[0-9]+", r"\1_N", plan)
-        parts.append(f"== {name} ==\n{plan}")
+        parts.append(f"== {name} ==\n{_normalised(plan)}")
+    return "\n".join(parts)
+
+
+def _normalised(plan: str) -> str:
+    plan = re.sub(r"#[0-9]+", "#N", plan)
+    return re.sub(r"(lambda [A-Za-z]+)_[0-9]+", r"\1_N", plan)
+
+
+def flagship_variant_plans(spark) -> str:
+    """The optimised logical plans of ``validate_json_strings`` in both
+    modes for the flagship spec over a one-row raw JSON frame, normalised
+    like :func:`flagship_logical_plans`."""
+    df = spark.createDataFrame([("d1", "{}")], "doc_id string, doc string")
+    parts = []
+    for mode in ("violations", "verdicts"):
+        frame = validate_json_strings(df, "doc", FLAGSHIP_SPEC, mode=mode)
+        plan = frame._jdf.queryExecution().optimizedPlan().toString()
+        parts.append(f"== {mode} ==\n{_normalised(plan)}")
     return "\n".join(parts)
 
 
@@ -59,6 +78,15 @@ def test_flagship_typed_plans_match_golden(spark):
     with open(GOLDEN_FLAGSHIP) as fh:
         golden = fh.read()
     assert flagship_logical_plans(spark) == golden
+
+
+def test_flagship_variant_plans_match_golden(spark):
+    """The same guarantee for the variant path: ``validate_json_strings``
+    plans of the flagship spec stay byte-identical.  Regenerate from
+    ``flagship_variant_plans`` only for a change meant to alter them."""
+    with open(GOLDEN_VARIANT) as fh:
+        golden = fh.read()
+    assert flagship_variant_plans(spark) == golden
 
 
 def test_violations_plan_has_no_shuffle(spark, tmp_path):
