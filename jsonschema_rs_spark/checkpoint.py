@@ -14,6 +14,11 @@ partitions.  Design:
   predicate (``~part_col.isin(done)``) — on an Iceberg/parquet table
   partitioned by ``part_col`` the skip happens at the metadata level and
   finished data is never read.
+- A run plans once: one stats pass (a grouped aggregate over the pending
+  rows) yields every pending key with its doc count and HLL state, and
+  ONE ``violations`` plan is built over the pending rows with the part
+  key as an extra id column.  Each key's output is that plan filtered to
+  the key, so the scan prunes to the key's own files.
 - Violations for each partition are written under
   ``{out_dir}/part={K}/`` BEFORE its manifest entry commits, so a crash
   between them re-does (idempotent overwrite) rather than loses work.
@@ -99,53 +104,70 @@ def run_resumable_validation(
 
     Partition granularity is the CHECKPOINT unit, not the parallelism unit:
     within one part_key Spark still fans out across all cores/executors.
-    Driver-side loop cost is O(#logical partitions), which is small by
-    design (the manifest is per Iceberg partition, not per task).
+    A run plans once — one stats pass and one ``violations`` build over
+    the pending rows — and each pending key then costs a filtered write
+    and a read-back of its own output.
     """
+    from jsonschema_rs_spark.operators.dataset import hll_sketches
     from jsonschema_rs_spark.plans.validate import violations
 
     done = finished_partitions(manifest_dir)
-    parts = [
-        r[0]
-        for r in df.select(part_col).distinct().collect()
-        if r[0] not in done
-    ]
-    if any(pk is None for pk in parts):
+    pending = resume_filter(df, part_col, manifest_dir)
+    # stats pass: ONE grouped aggregate over the unfinished rows gives
+    # every pending key with its doc count and mergeable HLL state
+    stats = {r[part_col]: r for r in
+             hll_sketches(pending, sketch_cols, part_col).collect()}
+    if None in stats:
         raise ValueError(
             f"NULL {part_col!r} partition keys found: a NULL key cannot be "
             "tracked in the resume manifest — repair or bucket them first "
             "(e.g. coalesce(part_col, -1))"
         )
+    if not stats:
+        return done
+    # one build: the part key rides along as an id column so each key's
+    # rows are a filter away; on a table partitioned by part_col that
+    # filter prunes the scan to the key's own files
+    keep_part = part_col in id_cols
+    viol_all = violations(
+        pending, compiled,
+        id_cols=tuple(id_cols) if keep_part else (*id_cols, part_col))
+    null_id = F.lit(False)
+    for c in id_cols:
+        null_id = null_id | F.col(c).isNull()
     spark = df.sparkSession
-    for pk in sorted(parts):
-        # partition-prunable predicate: on an Iceberg/parquet table
-        # partitioned by part_col this reads ONLY partition pk
-        pdf = df.filter(F.col(part_col) == pk)
+    for pk, srow in sorted(stats.items()):
         out_path = os.path.join(out_dir, f"part={pk}")
-        # scan 1 (the heavy one): the codegen violations plan -> parquet
-        viol = violations(pdf, compiled, id_cols=id_cols)
+        viol = viol_all.filter(F.col(part_col) == pk)
+        if not keep_part:
+            viol = viol.drop(part_col)
         viol.write.mode("overwrite").parquet(out_path)
-        # scan 2 (narrow: id + sketch columns only): doc count + mergeable
-        # HLL state in ONE agg; the violation counters come from the just-
-        # written (violations-sized) parquet instead of a third full scan.
-        aggs = [F.count(F.lit(1)).alias("_docs")]
-        aggs += [F.hll_sketch_agg(F.col(c)).alias(c) for c in sketch_cols]
-        srow = pdf.agg(*aggs).collect()[0]
-        docs = srow["_docs"]
-        sketches = None
-        if sketch_cols:
-            sketches = {
-                c: base64.b64encode(bytes(srow[c])).decode()
-                for c in sketch_cols
-            }
+        # the violation counters come from the just-written (violations-
+        # sized) parquet instead of another scan of the input; its schema
+        # is known, which spares the footer-reading schema inference job
         vrow = (
-            spark.read.parquet(out_path)
+            spark.read.schema(viol.schema).parquet(out_path)
             .agg(
                 F.count(F.lit(1)).alias("vr"),
                 F.count_distinct(*[F.col(c) for c in id_cols]).alias("bad"),
+                F.count(F.when(null_id, 1)).alias("null_ids"),
             )
             .collect()[0]
         )
+        if vrow["null_ids"]:
+            # count_distinct skips NULL ids: such a doc would read as valid
+            raise ValueError(
+                f"partition {pk}: {vrow['null_ids']} violation rows have a "
+                f"NULL id in {tuple(id_cols)!r}; their docs cannot be "
+                "counted as invalid — repair the ids first"
+            )
+        docs = srow["__rows"]
+        sketches = None
+        if sketch_cols:
+            sketches = {
+                c: base64.b64encode(bytes(srow[f"{c}__hll"])).decode()
+                for c in sketch_cols
+            }
         entry = PartitionEntry(
             part_key=pk,
             docs=docs,

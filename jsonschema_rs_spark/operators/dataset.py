@@ -129,12 +129,15 @@ def column_stats_verdicts(
 
 
 def hll_sketches(df: DataFrame, columns: Sequence[str], part_col: str) -> DataFrame:
-    """Mergeable HLL sketch state per partition (Spark 3.5+ datasketches).
+    """Row count (``__rows``) and mergeable HLL sketch state (``{c}__hll``)
+    per partition, in one grouped aggregate (Spark 3.5+ datasketches).
 
     The binary sketches go into the checkpoint manifest; on resume they merge
-    with ``hll_union_agg`` instead of rescanning finished partitions."""
+    with ``hll_union_agg`` instead of rescanning finished partitions.  The
+    suffixed names keep a sketch of ``part_col`` itself apart from the
+    group key."""
     aggs = [F.hll_sketch_agg(F.col(c)).alias(f"{c}__hll") for c in columns]
-    return df.groupBy(part_col).agg(*aggs)
+    return df.groupBy(part_col).agg(F.count(F.lit(1)).alias("__rows"), *aggs)
 
 
 def merge_hll(sketch_frames: DataFrame, columns: Sequence[str]) -> DataFrame:

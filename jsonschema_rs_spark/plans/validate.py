@@ -1201,8 +1201,15 @@ def partition_rollup(
         .agg(
             F.sum("_is_doc").alias("docs"),
             F.sum(F.col("_nv").cast("long")).alias("violation_rows"),
+            # count_distinct skips NULL: a violating doc with a NULL id
+            # would count as valid, so it fails the query instead
             F.count_distinct(
-                F.when(F.col("_nv") > 0, F.col("_doc"))
+                F.when(F.col("_nv") > 0, F.coalesce(
+                    F.col("_doc"),
+                    F.raise_error(F.lit(
+                        f"a violating doc has a NULL {id_cols[0]!r}; it "
+                        "cannot be counted as invalid")),
+                ))
             ).alias("_invalid_docs"),
         )
         .select(

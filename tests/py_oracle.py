@@ -193,14 +193,19 @@ def _errors(schema: Any, value: Any, path: tuple, is_root: bool = False) -> list
                 for name in sval:
                     if value.get(name) is None:
                         out.append((path + ("required", name), "missing"))
-        elif kw == "dependentRequired":
+        elif kw in ("dependentRequired", "dependentSchemas", "dependencies"):
+            # draft 4-7 ``dependencies`` entries report like their 2019
+            # split by form: a list of names, or a schema
             if isinstance(value, dict):
-                for name, reqs in sval.items():
-                    if value.get(name) is not None and any(
-                        value.get(r) is None for r in reqs
-                    ):
-                        out.append(
-                            (path + ("dependentRequired", name), "missing"))
+                for name, dep in sval.items():
+                    if value.get(name) is None:
+                        continue
+                    if isinstance(dep, list):
+                        if any(value.get(r) is None for r in dep):
+                            out.append((path + ("dependentRequired", name),
+                                        "missing"))
+                    elif not _is_valid(dep, value):
+                        fail("dependentSchemas", name)
         elif kw == "minItems":
             if isinstance(value, list) and len(value) < sval:
                 fail("minItems", obs=len(value))
@@ -224,14 +229,20 @@ def _errors(schema: Any, value: Any, path: tuple, is_root: bool = False) -> list
                     fail(cid, obs=cnt)
                 if max_c is not None and cnt > max_c:
                     fail("maxContains", obs=cnt)
-        elif kw == "items":
+        elif (kw == "items" and not isinstance(sval, list)) or (
+                kw == "additionalItems"
+                and isinstance(schema.get("items"), list)):
+            # the tail after a tuple form: items after prefixItems,
+            # additionalItems after the draft 4-2019 array form of items
             if isinstance(value, list) and isinstance(sval, (dict, bool)):
-                skip = len(schema.get("prefixItems", []))
+                skip = len(schema.get(
+                    "prefixItems" if kw == "items" else "items", []))
                 for i, v in enumerate(value):
                     if i >= skip:
                         out.extend(
-                            _tag_index(_elem_errors(sval, v, path + ("items",)), i))
-        elif kw == "prefixItems":
+                            _tag_index(_elem_errors(sval, v, path + (kw,)), i))
+        elif kw == "prefixItems" or kw == "items":
+            # the array form of items reports like prefixItems
             if isinstance(value, list):
                 for i, sub in enumerate(sval):
                     if i < len(value):

@@ -1011,3 +1011,39 @@ def test_nested_contains_claims_items(spark, schema, value, expected):
     assert (row["typed"], row["json"]) == (expected, expected), row
     ok, _ = validate_doc(spec, {"doc_id": "a", "v": value}, draft=2020)
     assert ok == expected
+
+
+@pytest.mark.parametrize("schema,doc,draft,ddl", [
+    pytest.param({"dependentSchemas": {"a": {"required": ["b"]}}},
+                 {"doc_id": "x", "a": 1}, 2020, "a bigint, b bigint",
+                 id="dependentSchemas"),
+    pytest.param({"dependencies": {"a": ["b"]}}, {"doc_id": "x", "a": 1}, 7,
+                 "a bigint, b bigint", id="dependencies-array"),
+    pytest.param({"dependencies": {"a": {"required": ["b"]}}},
+                 {"doc_id": "x", "a": 1}, 7, "a bigint, b bigint",
+                 id="dependencies-schema"),
+    pytest.param({"properties": {"v": {"items": [{}],
+                                       "additionalItems": False}}},
+                 {"doc_id": "x", "v": [1, 2]}, 7, "v array<bigint>",
+                 id="additionalItems"),
+])
+def test_oracle_reports_dependency_and_tail_keywords(spark, schema, doc,
+                                                     draft, ddl):
+    """The test oracle reports these keywords row for row as the typed
+    path does, and the variant path rejects the same instance."""
+    import json
+
+    from jsonschema_rs_spark.json_ingest import json_valid_column
+    from jsonschema_rs_spark.plans.validate import violations
+
+    from .py_oracle import validate_doc
+
+    opts = EngineOptions(draft=draft)
+    df = spark.createDataFrame([doc], f"doc_id string, {ddl}")
+    typed = [tuple(r) for r in
+             violations(df, compile_spec(schema, df.schema, opts)).collect()]
+    json_ok = df.select(json_valid_column(F.lit(json.dumps(doc)), schema,
+                                          opts).alias("ok")).collect()[0]
+    ok, want = validate_doc(schema, doc, draft=draft)
+    assert not ok and typed == want, (typed, want)
+    assert json_ok["ok"] is False

@@ -132,6 +132,25 @@ def test_rollup_single_shuffle(spark, tmp_path):
     assert plan.count("Exchange hashpartitioning") <= 2, plan
 
 
+def test_rollup_fails_on_violating_null_id(spark):
+    """``count_distinct`` skips NULL ids, so a violating doc with a NULL id
+    would read as valid: the rollup raises instead.  A valid doc with a
+    NULL id still counts."""
+    from pyspark.errors import SparkRuntimeException
+
+    ddl = "doc_id string, name string, part_key int"
+    spec = {"properties": {"name": {"minLength": 1}}}
+    bad = spark.createDataFrame([(None, "", 0), ("b", "ok", 0)], ddl)
+    with pytest.raises(SparkRuntimeException, match="NULL 'doc_id'"):
+        partition_rollup(bad, compile_spec(spec, bad.schema),
+                         "part_key").collect()
+    ok = spark.createDataFrame([(None, "ok", 0), ("b", "", 0)], ddl)
+    row = partition_rollup(ok, compile_spec(spec, ok.schema),
+                           "part_key").collect()[0]
+    assert (row["docs"], row["valid_docs"], row["violation_rows"],
+            row["pass"]) == (2, 1, 1, False)
+
+
 def test_column_pruning_reaches_scan(spark, tmp_path):
     df = _spans_parquet(spark, tmp_path)
     compiled = compile_spec(
