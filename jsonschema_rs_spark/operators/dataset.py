@@ -6,26 +6,90 @@ null rates, drift) are exactly what the Spark engine adds.  Design notes per
 operator, with the 100-TB rationale:
 
 - Column stats (null-rate / min / max / cardinality) all fold into ONE
-  ``groupBy(partition).agg(...)`` — a single map-side-combinable shuffle of
-  tiny partial-agg state.  At 10^12 rows the shuffle payload is
-  O(partitions × constraints), not O(rows).
+  ``GROUP BY partition`` aggregate — a single map-side-combinable shuffle
+  of tiny partial-agg state, holding only the aggregates a declared bound
+  reads.  At 10^12 rows the shuffle payload is O(partitions × bounds),
+  not O(rows).
 - Uniqueness is a two-phase count (partial agg → final agg on key).  Only
   keys with count > 1 survive the filter, so the emitted violation set is
   skew-proof; AQE handles residual reducer skew.
-- Referential integrity broadcasts the catalog when small (explicit
-  ``F.broadcast``) — a map-side anti join, zero shuffle of the fact side.
-- Drift (χ² for categorical, KS for numeric) aggregates per-partition
-  histograms/quantiles first; the statistic is computed on the tiny
-  aggregated frame with Column math (no scipy dependency, no UDF).
+- Referential integrity broadcasts the catalog when small (a
+  ``BROADCAST`` hint) — a map-side anti join, zero shuffle of the fact
+  side.
+- Drift (χ² for categorical, KS for numeric) aggregates ONE per-partition
+  histogram; every total and cumulative sum the statistic needs is a
+  window function over that histogram, so nothing joins it back to itself
+  and nothing is materialised.  The statistic is SQL arithmetic (no scipy
+  dependency, no UDF).
+
+Each check is a SQL fragment added to a :class:`Statement`, which runs as
+one ``spark.sql`` call: the frames are bound as ``{name}`` format
+arguments, every bound, threshold and constraint id as a named ``:param``.
+``dataset_spec.validate_dataset`` composes the fragments of a whole
+``x-dataset`` section into one statement; the functions below run one
+fragment each.  A statement is analysed once on the JVM side, where a
+DataFrame chain pays a py4j round trip and an analysis per call.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Sequence
+from typing import Any, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+# --------------------------------------------------------------------------
+# one SQL statement per gate
+# --------------------------------------------------------------------------
+
+def ident(name: str) -> str:
+    """``name`` as ONE backticked SQL identifier (inner backticks doubled;
+    braces doubled for the ``str.format`` pass that ``spark.sql`` makes
+    over text with frame arguments)."""
+    quoted = "`" + name.replace("`", "``") + "`"
+    return quoted.replace("{", "{{").replace("}", "}}")
+
+
+def ref(name: str) -> str:
+    """A column reference: each dotted segment quoted on its own, so
+    ``a.b`` reaches the nested field ``b`` of ``a`` as ``F.col`` does."""
+    return ".".join(ident(seg) for seg in name.split("."))
+
+
+class Statement:
+    """One ``spark.sql`` statement under construction: CTEs over frame
+    arguments, with every value bound as a named parameter."""
+
+    def __init__(self) -> None:
+        self.ctes: list[str] = []
+        self.args: dict[str, Any] = {}
+        self.frames: dict[str, DataFrame] = {}
+
+    def frame(self, df: DataFrame) -> str:
+        """The SQL name of ``df``; ``spark.sql`` registers one temporary
+        view per distinct frame object."""
+        k = f"f{len(self.frames)}"
+        self.frames[k] = df
+        return "{" + k + "}"
+
+    def arg(self, value: Any) -> str:
+        """A named parameter marker bound to ``value``."""
+        k = f"a{len(self.args)}"
+        self.args[k] = value
+        return ":" + k
+
+    def cte(self, body: str) -> str:
+        """Add ``body`` as a CTE; returns its name."""
+        name = f"q{len(self.ctes)}"
+        self.ctes.append(f"{name} AS ({body})")
+        return name
+
+    def run(self, select: str) -> DataFrame:
+        spark = next(iter(self.frames.values())).sparkSession
+        with_ = f"WITH {', '.join(self.ctes)}\n" if self.ctes else ""
+        return spark.sql(with_ + select, args=self.args, **self.frames)
 
 
 # --------------------------------------------------------------------------
@@ -42,22 +106,50 @@ class ColumnStatsConstraint:
     min_distinct: int | None = None
 
 
-def column_stats(
-    df: DataFrame,
-    constraints: Sequence[ColumnStatsConstraint],
-    part_col: str,
-) -> DataFrame:
-    """One pass: per-partition stats for every constrained column, fused into
-    a single aggregate (map-side combine keeps shuffle state tiny)."""
-    aggs: list[Column] = [F.count(F.lit(1)).alias("rows")]
+# (bound attribute, statistic, comparison that violates, id suffix)
+_STATS_BOUNDS = (
+    ("max_null_rate", "null_rate", ">", "null_rate"),
+    ("min_value", "min", "<", "min"),
+    ("max_value", "max", ">", "max"),
+    ("max_distinct", "distinct", ">", "max_cardinality"),
+    ("min_distinct", "distinct", "<", "min_cardinality"),
+)
+_STATS_SQL = {
+    "null_rate": "avg(CAST({c} IS NULL AS DOUBLE))",
+    "min": "min({c})",
+    "max": "max({c})",
+    "distinct": "approx_count_distinct({c})",
+}
+
+
+def stats_sql(st: Statement, src: str,
+              constraints: Sequence[ColumnStatsConstraint],
+              part_col: str) -> str:
+    """CTE of stats-bound violations ``(p, constraint_id, observed)``.
+
+    One grouped aggregate computes each statistic that a declared bound
+    reads, once per column, and nothing else; the violated bounds of a
+    partition come out of one ``explode`` of the per-bound checks."""
+    aggs: dict[tuple[str, str], str] = {}
+    checks = []
     for c in constraints:
-        col = F.col(c.column)
-        safe = c.column.replace(".", "_")
-        aggs.append(F.avg(col.isNull().cast("double")).alias(f"{safe}__null_rate"))
-        aggs.append(F.min(col).alias(f"{safe}__min"))
-        aggs.append(F.max(col).alias(f"{safe}__max"))
-        aggs.append(F.approx_count_distinct(col).alias(f"{safe}__approx_distinct"))
-    return df.groupBy(part_col).agg(*aggs)
+        for attr, stat, op, suffix in _STATS_BOUNDS:
+            bound = getattr(c, attr)
+            if bound is None:
+                continue
+            s = aggs.setdefault((c.column, stat), f"s{len(aggs)}")
+            checks.append(
+                f"CASE WHEN {s} {op} {st.arg(bound)} THEN named_struct("
+                f"'constraint_id', {st.arg(f'dataset/{c.column}/{suffix}')}, "
+                f"'observed', CAST({s} AS STRING)) END")
+    cols = ", ".join(_STATS_SQL[stat].format(c=ref(col)) + f" AS {s}"
+                     for (col, stat), s in aggs.items())
+    stats = st.cte(f"SELECT {ref(part_col)} AS p, {cols} FROM {src} "
+                   f"GROUP BY {ref(part_col)}")
+    return st.cte(
+        "SELECT p, v.constraint_id, v.observed FROM (SELECT p, explode("
+        f"filter(array({', '.join(checks)}), x -> x IS NOT NULL)) AS v "
+        f"FROM {stats})")
 
 
 def column_stats_verdicts(
@@ -66,66 +158,10 @@ def column_stats_verdicts(
     part_col: str,
 ) -> DataFrame:
     """Violation rows ``(part, constraint_id, observed)`` for stats bounds."""
-    stats = column_stats(df, constraints, part_col)
-    checks: list[Column] = []
-    for c in constraints:
-        safe = c.column.replace(".", "_")
-        if c.max_null_rate is not None:
-            checks.append(
-                F.when(
-                    F.col(f"{safe}__null_rate") > c.max_null_rate,
-                    F.struct(
-                        F.lit(f"dataset/{c.column}/null_rate").alias("constraint_id"),
-                        F.col(f"{safe}__null_rate").cast("string").alias("observed"),
-                    ),
-                )
-            )
-        if c.min_value is not None:
-            checks.append(
-                F.when(
-                    F.col(f"{safe}__min") < c.min_value,
-                    F.struct(
-                        F.lit(f"dataset/{c.column}/min").alias("constraint_id"),
-                        F.col(f"{safe}__min").cast("string").alias("observed"),
-                    ),
-                )
-            )
-        if c.max_value is not None:
-            checks.append(
-                F.when(
-                    F.col(f"{safe}__max") > c.max_value,
-                    F.struct(
-                        F.lit(f"dataset/{c.column}/max").alias("constraint_id"),
-                        F.col(f"{safe}__max").cast("string").alias("observed"),
-                    ),
-                )
-            )
-        if c.max_distinct is not None:
-            checks.append(
-                F.when(
-                    F.col(f"{safe}__approx_distinct") > c.max_distinct,
-                    F.struct(
-                        F.lit(f"dataset/{c.column}/max_cardinality").alias("constraint_id"),
-                        F.col(f"{safe}__approx_distinct").cast("string").alias("observed"),
-                    ),
-                )
-            )
-        if c.min_distinct is not None:
-            checks.append(
-                F.when(
-                    F.col(f"{safe}__approx_distinct") < c.min_distinct,
-                    F.struct(
-                        F.lit(f"dataset/{c.column}/min_cardinality").alias("constraint_id"),
-                        F.col(f"{safe}__approx_distinct").cast("string").alias("observed"),
-                    ),
-                )
-            )
-    v = F.explode(F.filter(F.array(*checks), lambda x: x.isNotNull())).alias("v")
-    return stats.select(F.col(part_col), v).select(
-        part_col,
-        F.col("v.constraint_id").alias("constraint_id"),
-        F.col("v.observed").alias("observed"),
-    )
+    st = Statement()
+    v = stats_sql(st, st.frame(df), constraints, part_col)
+    return st.run(f"SELECT p AS {ident(part_col)}, constraint_id, observed "
+                  f"FROM {v}")
 
 
 def hll_sketches(df: DataFrame, columns: Sequence[str], part_col: str) -> DataFrame:
@@ -140,34 +176,50 @@ def hll_sketches(df: DataFrame, columns: Sequence[str], part_col: str) -> DataFr
     return df.groupBy(part_col).agg(F.count(F.lit(1)).alias("__rows"), *aggs)
 
 
-def merge_hll(sketch_frames: DataFrame, columns: Sequence[str]) -> DataFrame:
-    aggs = [
-        F.hll_sketch_estimate(F.hll_union_agg(F.col(f"{c}__hll"))).alias(
-            f"{c}__distinct"
-        )
-        for c in columns
-    ]
-    return sketch_frames.agg(*aggs)
-
-
 # --------------------------------------------------------------------------
 # uniqueness
 # --------------------------------------------------------------------------
+
+def unique_sql(st: Statement, src: str, key_cols: Sequence[str]) -> str:
+    """CTE of duplicate keys ``(key..., n_dups)``, each key column named
+    by its full name."""
+    keys = ", ".join(ref(k) for k in key_cols)
+    named = ", ".join(f"{ref(k)} AS {ident(k)}" for k in key_cols)
+    return st.cte(f"SELECT {named}, count(1) AS n_dups FROM {src} "
+                  f"GROUP BY {keys} HAVING count(1) > 1")
+
 
 def uniqueness_violations(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """Global duplicate keys: two-phase hash agg (partial count per map task
     → final count per key), then filter count > 1.  Emits
     ``(key..., n_dups)``.  Never a window over the full table."""
-    return (
-        df.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("n_dups"))
-        .filter(F.col("n_dups") > 1)
-    )
+    st = Statement()
+    return st.run(f"SELECT * FROM {unique_sql(st, st.frame(df), key_cols)}")
 
 
 # --------------------------------------------------------------------------
 # referential integrity
 # --------------------------------------------------------------------------
+
+def ref_counts_sql(st: Statement, src: str, ref_col: str) -> str:
+    """CTE ``(media_ref, n_refs)``: the non-null values of ``ref_col`` with
+    their row counts."""
+    return st.cte(f"SELECT {ref(ref_col)} AS media_ref, count(1) AS n_refs "
+                  f"FROM {src} WHERE {ref(ref_col)} IS NOT NULL "
+                  f"GROUP BY {ref(ref_col)}")
+
+
+def referential_sql(st: Statement, src: str, ref_col: str, catalog: str,
+                    catalog_key: str, broadcast_catalog: bool = True) -> str:
+    """CTE ``(media_ref, n_refs)`` of the counted values of ``ref_col``
+    that no ``catalog_key`` of ``catalog`` matches."""
+    counts = ref_counts_sql(st, src, ref_col)
+    hint = "/*+ BROADCAST(k) */ " if broadcast_catalog else ""
+    return st.cte(
+        f"SELECT {hint}c.media_ref, c.n_refs FROM {counts} c LEFT ANTI JOIN "
+        f"(SELECT DISTINCT {ref(catalog_key)} AS media_ref FROM {catalog}) k "
+        "ON c.media_ref = k.media_ref")
+
 
 def referential_violations(
     fact: DataFrame,
@@ -196,24 +248,22 @@ def referential_violations(
         raise ValueError(
             "referential_violations needs catalog and catalog_key, or "
             "catalog_pred")
-    counts = (
-        fact.select(F.col(ref_col).alias("media_ref"))
-        .filter(F.col("media_ref").isNotNull())
-        .groupBy("media_ref")
-        .agg(F.count(F.lit(1)).alias("n_refs"))
-    )
-    if catalog_pred is not None:
-        # the always-false `n_refs < 0` disjunct references the AGGREGATED
-        # column, so the optimizer cannot push the catalog predicate below
-        # the aggregate — both join sides then share the identical
-        # partial-agg subtree and the planner reuses one exchange (one
-        # input scan); without it the pushed-down filter forks the catalog
-        # into its own full scan+explode
-        cat = counts.filter(
-            catalog_pred(F.col("media_ref"))
-            | (F.col("n_refs") < F.lit(0))).select("media_ref")
-    else:
-        cat = catalog.select(F.col(catalog_key).alias("media_ref")).distinct()
+    st = Statement()
+    src = st.frame(fact)
+    if catalog_pred is None:
+        dangling = referential_sql(st, src, ref_col, st.frame(catalog),
+                                   catalog_key, broadcast_catalog)
+        return st.run(f"SELECT * FROM {dangling}")
+    counts = st.run(f"SELECT * FROM {ref_counts_sql(st, src, ref_col)}")
+    # the always-false `n_refs < 0` disjunct references the AGGREGATED
+    # column, so the optimizer cannot push the catalog predicate below
+    # the aggregate — both join sides then share the identical
+    # partial-agg subtree and the planner reuses one exchange (one
+    # input scan); without it the pushed-down filter forks the catalog
+    # into its own full scan+explode
+    cat = counts.filter(
+        catalog_pred(F.col("media_ref"))
+        | (F.col("n_refs") < F.lit(0))).select("media_ref")
     if broadcast_catalog:
         cat = F.broadcast(cat)
     return counts.join(cat, "media_ref", "left_anti")
@@ -223,60 +273,84 @@ def referential_violations(
 # distribution drift
 # --------------------------------------------------------------------------
 
+def chi2_sql(st: Statement, src: str, cat_col: str, part_col: str,
+             threshold: float) -> str:
+    """CTE ``(p, chi2, n_rows, drifted)``, one row per non-NULL partition.
+
+    The partition × category histogram is the only aggregate over
+    ``src``; the category totals, partition totals and grand total are
+    window sums over it.  A NULL category or partition counts in those
+    totals but is never a term of the statistic (nor of ``n_rows``)."""
+    hist = st.cte(f"SELECT {ref(part_col)} AS p, {ref(cat_col)} AS c, "
+                  f"count(1) AS n FROM {src} "
+                  f"GROUP BY {ref(part_col)}, {ref(cat_col)}")
+    expected = st.cte(
+        "SELECT p, n, sum(n) OVER (PARTITION BY c) / sum(n) OVER () "
+        "* sum(n) OVER (PARTITION BY p) AS e, "
+        f"p IS NOT NULL AND c IS NOT NULL AS term FROM {hist}")
+    chi2 = st.cte(f"SELECT p, sum(power(n - e, 2) / e) AS chi2, "
+                  f"sum(n) AS n_rows FROM {expected} WHERE term GROUP BY p")
+    return st.cte(f"SELECT p, chi2, n_rows, chi2 > {st.arg(threshold)} "
+                  f"AS drifted FROM {chi2}")
+
+
 def chi_square_drift(
     df: DataFrame,
     cat_col: str,
     part_col: str,
     threshold: float = 27.0,
-    materialize_hist: bool = True,
 ) -> DataFrame:
     """χ² statistic per partition vs the GLOBAL category distribution.
 
-    Plan: one ``groupBy(part, cat).count()`` (map-side combinable), then the
-    global distribution derives from the same aggregated frame (no second
-    scan), broadcast back onto the per-partition histogram.  The statistic is
-    pure Column math; ``threshold`` is the critical value (default ≈ χ²₀.₀₀₁
-    for ~8 dof) since p-values need scipy, which stays optional.
-
-    ``materialize_hist=True`` (the default) stores the histogram with
-    ``localCheckpoint``, which trades fault tolerance for speed: its blocks
-    live only on the executors that computed them, with no lineage left to
-    recompute from, so losing one of those executors fails the query
-    (``Checkpoint block ... not found``) rather than recomputing it.  Pass
-    ``materialize_hist=False`` where executors are expected to go away
-    (preemptible or spot capacity); the plan then recomputes the shared
-    aggregate through exchange reuse.
+    Plan: one ``GROUP BY part, cat`` count (map-side combinable); the
+    global distribution and the partition totals are window sums over that
+    same histogram (no second scan, no self-join, nothing materialised).
+    The statistic is SQL arithmetic; ``threshold`` is the critical value
+    (default ≈ χ²₀.₀₀₁ for ~8 dof) since p-values need scipy, which stays
+    optional.  Emits ``(part, chi2, n_rows, drifted)``.
     """
-    hist = df.groupBy(part_col, cat_col).agg(F.count(F.lit(1)).alias("n"))
-    # lazy localCheckpoint, NOT cache() (round 6): the histogram is reused
-    # by three consumers within this query, but cache() registers the
-    # logical plan in the session CacheManager, where an identical later
-    # build would silently reuse materialized results ACROSS runs —
-    # checkpoint blocks are keyed by this build's RDD, so every fresh
-    # build recomputes from the input.  materialize_hist=False keeps the
-    # plan transparent (exchange reuse still dedupes the shared agg) —
-    # measured slightly slower, available for plan inspection/debugging.
-    if materialize_hist:
-        hist = hist.localCheckpoint(eager=False)
-    global_hist = hist.groupBy(cat_col).agg(F.sum("n").alias("gn"))
-    totals = hist.groupBy(part_col).agg(F.sum("n").alias("pn"))
-    gtotal = global_hist.agg(F.sum("gn").alias("gt"))
-    joined = (
-        hist.join(F.broadcast(global_hist), cat_col)
-        .join(F.broadcast(totals), part_col)
-        .crossJoin(F.broadcast(gtotal))
-        .withColumn("expected", F.col("gn") / F.col("gt") * F.col("pn"))
-    )
-    return (
-        joined.groupBy(part_col)
-        .agg(
-            F.sum(
-                (F.col("n") - F.col("expected")) ** 2 / F.col("expected")
-            ).alias("chi2"),
-            F.sum("n").alias("n_rows"),
-        )
-        .withColumn("drifted", F.col("chi2") > threshold)
-    )
+    st = Statement()
+    out = chi2_sql(st, st.frame(df), cat_col, part_col, threshold)
+    return st.run(f"SELECT p AS {ident(part_col)}, chi2, n_rows, drifted "
+                  f"FROM {out}")
+
+
+def ks_sql(st: Statement, src: str, num_col: str, part_col: str,
+           n_bins: int, threshold: float,
+           bounds: tuple[float, float] | None = None) -> str:
+    """CTE ``(p, ks_stat, drifted)``, one row per partition (NULL
+    included).
+
+    One histogram of equi-width buckets per partition; both CDFs are
+    running window sums over it, ordered by bucket.  A NULL bucket (NULL
+    value) sorts first, so it counts in every cumulative sum and in the
+    totals, but it is never a term of the max."""
+    x = ref(num_col)
+    if bounds is None:
+        span = st.cte(f"SELECT CAST(min({x}) AS DOUBLE) AS lo, "
+                      f"CAST(max({x}) AS DOUBLE) AS hi FROM {src}")
+        lo, hi = "lo", "hi"
+        hint, join = f"/*+ BROADCAST({span}) */ ", f" CROSS JOIN {span}"
+    else:
+        lo, hi = st.arg(float(bounds[0])), st.arg(float(bounds[1]))
+        hint = join = ""
+    w = f"({hi} - {lo}) / {st.arg(float(n_bins))}"
+    bucket = (f"least({st.arg(n_bins - 1)}, floor(({x} - {lo}) / "
+              f"CASE WHEN {w} = 0 THEN 1.0D ELSE {w} END))")
+    hist = st.cte(
+        f"SELECT p, bucket, count(1) AS n FROM (SELECT {hint}"
+        f"{ref(part_col)} AS p, {bucket} AS bucket FROM {src}{join}) "
+        "GROUP BY p, bucket")
+    cdf = st.cte(
+        "SELECT p, bucket, "
+        "sum(n) OVER (PARTITION BY p ORDER BY bucket) "
+        "/ sum(n) OVER (PARTITION BY p) AS p_cdf, "
+        "sum(n) OVER (ORDER BY bucket) / sum(n) OVER () AS g_cdf "
+        f"FROM {hist}")
+    ks = st.cte("SELECT p, max(abs(p_cdf - g_cdf)) AS ks_stat "
+                f"FROM {cdf} WHERE bucket IS NOT NULL GROUP BY p")
+    return st.cte(f"SELECT p, ks_stat, ks_stat > {st.arg(threshold)} "
+                  f"AS drifted FROM {ks}")
 
 
 def ks_drift(
@@ -286,64 +360,24 @@ def ks_drift(
     n_bins: int = 64,
     threshold: float = 0.15,
     bounds: tuple[float, float] | None = None,
-    materialize_hist: bool = True,
 ) -> DataFrame:
     """Approximate two-sample KS per partition vs the global distribution.
 
     Exact KS needs a full sort; at scale we bin the numeric column into
-    equi-width buckets (one agg), build per-partition and global CDFs over
-    the bucket histogram, and take the max CDF gap.  Bin count bounds the
-    approximation error at 1/n_bins.
+    equi-width buckets (one agg), take the per-partition and global CDFs
+    as running window sums over that one bucket histogram, and take the
+    max CDF gap.  Bin count bounds the approximation error at 1/n_bins.
 
     ``bounds=(lo, hi)`` bins against KNOWN bounds (e.g. from the x-dataset
     spec section) — the whole statistic is then ONE scan of (part, num).
     Without bounds, lo/hi come from a broadcast 1-row min/max aggregate
     (still lazy — no ``collect`` — but a second narrow scan of num_col;
-    at 100 TB pass spec bounds).
-
-    ``materialize_hist`` has the executor-loss tradeoff described in
-    :func:`chi_square_drift`: the default ``localCheckpoint`` fails the
-    query if an executor holding a histogram block is lost;
-    ``materialize_hist=False`` recomputes instead."""
-    if bounds is not None:
-        lo_c = F.lit(float(bounds[0]))
-        hi_c = F.lit(float(bounds[1]))
-        base = df.select(F.col(part_col), F.col(num_col))
-    else:
-        mm = df.agg(
-            F.min(num_col).cast("double").alias("__ks_lo"),
-            F.max(num_col).cast("double").alias("__ks_hi"),
-        )
-        base = df.select(F.col(part_col), F.col(num_col)).crossJoin(
-            F.broadcast(mm))
-        lo_c, hi_c = F.col("__ks_lo"), F.col("__ks_hi")
-    width = (hi_c - lo_c) / F.lit(float(n_bins))
-    width = F.when(width == 0, F.lit(1.0)).otherwise(width)
-    bucket = F.least(
-        F.lit(n_bins - 1),
-        F.floor((F.col(num_col) - lo_c) / width),
-    ).alias("bucket")
-    hist = base.select(F.col(part_col), bucket).groupBy(part_col, "bucket").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    # lazy localCheckpoint instead of cache(): see chi_square_drift
-    if materialize_hist:
-        hist = hist.localCheckpoint(eager=False)
-    g = hist.groupBy("bucket").agg(F.sum("n").alias("gn"))
-    w_p = Window.partitionBy(part_col).orderBy("bucket")
-    w_g = Window.orderBy("bucket")
-    pc = hist.withColumn(
-        "p_cdf",
-        F.sum("n").over(w_p)
-        / F.sum("n").over(Window.partitionBy(part_col)),
-    )
-    gc = g.withColumn("g_cdf", F.sum("gn").over(w_g) / F.sum("gn").over(Window.partitionBy()))
-    joined = pc.join(F.broadcast(gc.select("bucket", "g_cdf")), "bucket")
-    return (
-        joined.groupBy(part_col)
-        .agg(F.max(F.abs(F.col("p_cdf") - F.col("g_cdf"))).alias("ks_stat"))
-        .withColumn("drifted", F.col("ks_stat") > threshold)
-    )
+    at 100 TB pass spec bounds).  Emits ``(part, ks_stat, drifted)``."""
+    st = Statement()
+    out = ks_sql(st, st.frame(df), num_col, part_col, n_bins, threshold,
+                 bounds)
+    return st.run(f"SELECT p AS {ident(part_col)}, ks_stat, drifted "
+                  f"FROM {out}")
 
 
 # --------------------------------------------------------------------------

@@ -48,7 +48,8 @@ def test_hll_cardinality_within_5pct(spark):
 
     # mergeable sketch state: per-partition sketches union to the global
     sk = DS.hll_sketches(fs, ["media_ref"], "part_key")
-    merged = DS.merge_hll(sk, ["media_ref"]).collect()[0][0]
+    merged = sk.agg(F.hll_sketch_estimate(
+        F.hll_union_agg("media_ref__hll"))).collect()[0][0]
     assert abs(merged - exact) / exact <= 0.05
 
 
@@ -88,13 +89,9 @@ def test_ks_with_spec_bounds_single_scan_same_result(spark, tmp_path):
     flat_spans(spark, SF).write.mode("overwrite").parquet(path)
     fs = spark.read.parquet(path)
     lo, hi = fs.agg(F.min("offset"), F.max("offset")).collect()[0]
-    # materialize_hist=False: the localCheckpoint boundary (round 6) hides
-    # the subtree behind a LogicalRDD, so the scan-count assertion needs
-    # the transparent plan; values are asserted on the default plans below
     bounded = DS.ks_drift(fs, "offset", "part_key",
-                          bounds=(float(lo), float(hi)),
-                          materialize_hist=False)
-    derived = DS.ks_drift(fs, "offset", "part_key", materialize_hist=False)
+                          bounds=(float(lo), float(hi)))
+    derived = DS.ks_drift(fs, "offset", "part_key")
     # bounds remove the min/max pre-pass entirely: fewer scans, no extra agg
     n_bounded = bounded._jdf.queryExecution().executedPlan().toString().count(
         "FileScan")
