@@ -182,17 +182,20 @@ def hll_sketches(df: DataFrame, columns: Sequence[str], part_col: str) -> DataFr
 
 def unique_sql(st: Statement, src: str, key_cols: Sequence[str]) -> str:
     """CTE of duplicate keys ``(key..., n_dups)``, each key column named
-    by its full name."""
+    by its full name.  Only rows whose key columns are all non-NULL take
+    part, as in SQL ``UNIQUE``: a NULL key equals no other key."""
     keys = ", ".join(ref(k) for k in key_cols)
     named = ", ".join(f"{ref(k)} AS {ident(k)}" for k in key_cols)
+    non_null = " AND ".join(f"{ref(k)} IS NOT NULL" for k in key_cols)
     return st.cte(f"SELECT {named}, count(1) AS n_dups FROM {src} "
-                  f"GROUP BY {keys} HAVING count(1) > 1")
+                  f"WHERE {non_null} GROUP BY {keys} HAVING count(1) > 1")
 
 
 def uniqueness_violations(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """Global duplicate keys: two-phase hash agg (partial count per map task
     → final count per key), then filter count > 1.  Emits
-    ``(key..., n_dups)``.  Never a window over the full table."""
+    ``(key..., n_dups)``; rows with a NULL key column are not counted.
+    Never a window over the full table."""
     st = Statement()
     return st.run(f"SELECT * FROM {unique_sql(st, st.frame(df), key_cols)}")
 

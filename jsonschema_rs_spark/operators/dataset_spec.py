@@ -21,7 +21,8 @@ annotation, exactly like the reference treats unknown keywords —
         },
         "drift": {
           "chi2": {"column": "kind", "threshold": 27.0},
-          "ks":   {"column": "offset", "threshold": 0.15, "bins": 64}
+          "ks":   {"column": "offset", "threshold": 0.15, "bins": 64,
+                   "bounds": [0, 4096]}    # optional: saves a min/max scan
         }
       }
     }
@@ -33,8 +34,9 @@ and the flat table and catalogs are its frame arguments.  The result is a
 single violation frame ``(scope, scope_key, constraint_id, observed)`` —
 the dataset-side analogue of the row-level violation rows.  A key the
 section does not define, a column with no bound, a drift test that is not
-``chi2``/``ks`` and a referential target without ``catalog`` raise
-``SpecError`` naming the key.
+``chi2``/``ks``, ``ks`` ``bounds`` that are not two numbers with lo < hi,
+and a referential target without ``catalog`` raise ``SpecError`` naming
+the key.
 """
 
 from __future__ import annotations
@@ -52,7 +54,7 @@ _BOUNDS = {"max_null_rate": "max_null_rate", "min": "min_value",
            "min_distinct": "min_distinct"}
 _SECTION_KEYS = ("columns", "unique", "referential", "drift")
 _DRIFT_KEYS = {"chi2": ("column", "threshold"),
-               "ks": ("column", "threshold", "bins")}
+               "ks": ("column", "threshold", "bins", "bounds")}
 _TARGET_KEYS = ("catalog", "key")
 
 
@@ -66,8 +68,12 @@ def _known(where: str, got, allowed) -> None:
                         f"(allowed: {', '.join(allowed)})")
 
 
+def _is_number(v) -> bool:
+    return isinstance(v, (int, float)) and not isinstance(v, bool)
+
+
 def _number(where: str, v) -> None:
-    if isinstance(v, bool) or not isinstance(v, (int, float)):
+    if not _is_number(v):
         raise SpecError(f"x-dataset {where} must be a number, got {v!r}")
 
 
@@ -106,6 +112,11 @@ def _section(spec: dict[str, Any]) -> dict[str, Any]:
         if isinstance(bins, bool) or not isinstance(bins, int) or bins < 1:
             raise SpecError(f"x-dataset drift.{kind}.bins must be a "
                             f"positive integer, got {bins!r}")
+        b = d.get("bounds", [0, 1])
+        if (not isinstance(b, list) or len(b) != 2
+                or not all(map(_is_number, b)) or not b[0] < b[1]):
+            raise SpecError(f"x-dataset drift.{kind} key 'bounds' must be "
+                            f"two numbers [lo, hi] with lo < hi, got {b!r}")
     if not any(ds.get(k) for k in _SECTION_KEYS):
         raise SpecError("x-dataset section is empty")
     return ds
@@ -182,6 +193,7 @@ def validate_dataset(
         branch("partition", part, st.arg(f"dataset/drift_ks/{d['column']}"),
                "CAST(round(ks_stat, 4) AS STRING)",
                DS.ks_sql(st, src, d["column"], part_col, d.get("bins", 64),
-                         d.get("threshold", 0.15)), " WHERE drifted")
+                         d.get("threshold", 0.15), d.get("bounds")),
+               " WHERE drifted")
 
     return st.run("\nUNION ALL\n".join(branches))

@@ -472,13 +472,16 @@ def violations(df: DataFrame, compiled: CompiledSpec,
             return _viol_struct_located(c, span_index, observed, i)
         return _viol_struct(c.constraint_id, span_index, observed)
 
-    def doc_cells(root_col: Column) -> list[Column]:
+    def violated(c, *args) -> Column:
+        return ~F.coalesce(c.pred(*args), F.lit(True))
+
+    def doc_cells(root_col: Column, bads: list[Column]) -> list[Column]:
+        """One cell per ``doc_plain`` constraint, ``bads`` its
+        ``violated`` Columns in the same order."""
         return [
-            F.when(
-                ~F.coalesce(c.pred(root_col), F.lit(True)),
-                _mk_cell(c, F.lit(None).cast("int"), c.observed(root_col)),
-            )
-            for c in doc_plain
+            F.when(b, _mk_cell(c, F.lit(None).cast("int"),
+                               c.observed(root_col)))
+            for c, b in zip(doc_plain, bads)
         ]
 
     _EMPTY_POS = "array<struct<pos:int,obs:string>>"
@@ -524,26 +527,31 @@ def violations(df: DataFrame, compiled: CompiledSpec,
             F.posexplode_outer(arr).alias("_pos", "_elem"),
         )
         x, i = F.col("_elem"), F.col("_pos")
+        # each predicate is built once and shared by its cell and the
+        # pre-filter below: the plan is the same as building it twice, at
+        # half the py4j round trips
+        bads = [violated(c, x, i) for c in group]
         cells = [
-            F.when(
-                i.isNotNull() & ~F.coalesce(c.pred(x, i), F.lit(True)),
-                _mk_cell(c, i, c.observed(x, i), i=i),
-            )
-            for c in group
+            F.when(i.isNotNull() & b, _mk_cell(c, i, c.observed(x, i), i=i))
+            for c, b in zip(group, bads)
         ]
         # cheap boolean pre-filter: only rows with >=1 violation reach the
         # per-constraint stack+explode (cuts the Generate fan-out by the
         # pass rate — normally ~100x in production; predicates re-evaluate
         # only on violating rows)
         span_any = F.lit(False)
-        for c in group:
-            span_any = span_any | ~F.coalesce(c.pred(x, i), F.lit(True))
+        for b in bads:
+            span_any = span_any | b
         keep = i.isNotNull() & span_any
         stack_arr = F.array(*cells)
         if n == 0 and doc_cs:
             first = i.isNull() | (i == 0)
+            doc_root = F.col("_root")
+            doc_bads = [violated(c, doc_root) for c in doc_cs]
+            plain_bads = [b for c, b in zip(doc_cs, doc_bads)
+                          if c.viol_positions is None]
             dcells = [F.when(first, cell)
-                      for cell in doc_cells(F.col("_root"))]
+                      for cell in doc_cells(doc_root, plain_bads)]
             stack_arr = F.array(*cells, *dcells)
             # typed empty literal on non-first rows: an
             # F.filter(pa, false) there would materialize the whole gated
@@ -558,9 +566,8 @@ def violations(df: DataFrame, compiled: CompiledSpec,
                     F.when(first, pa).otherwise(
                         F.expr("array()").cast(cell_t)))
             doc_any = F.lit(False)
-            for c in doc_cs:
-                doc_any = doc_any | ~F.coalesce(
-                    c.pred(F.col("_root")), F.lit(True))
+            for b in doc_bads:
+                doc_any = doc_any | b
             keep = keep | (first & doc_any)
         # explode_OUTER on a never-empty cell array (one cell per
         # constraint): identical rows, but a plain explode lets
@@ -593,7 +600,9 @@ def violations(df: DataFrame, compiled: CompiledSpec,
         # whole constraint chain per row on the unsplit input (round 6:
         # 12.1s -> 2.5s on kw_unique_items).  The post-Generate isNotNull
         # filter cannot be pushed below its own generator.
-        vs = F.array(*doc_cells(root)) if doc_plain else None
+        vs = (F.array(*doc_cells(root, [violated(c, root)
+                                        for c in doc_plain]))
+              if doc_plain else None)
         for pa in pos_cell_arrays(root):
             vs = pa if vs is None else F.concat(vs, pa)
         stacked = (

@@ -9,6 +9,18 @@ that matter identically on a 1000-executor cluster:
 - Arrow enabled for every pandas-UDF crossing.
 - ``files.maxPartitionBytes`` sized so a scan task's batch fits executor
   memory with room for the fused constraint projection.
+- DataFrame debugging off (``ENGINE_CONF``, also set by the
+  ``run_validation.py`` CLI).  With it on, PySpark wraps every ``F.*`` and
+  ``Column`` call to record its Python call site in the JVM, about four
+  py4j round trips per call on top of the one that builds the Column
+  node; off, a plan build costs about one round trip per Column.  PySpark
+  reads the setting once per Python process, at the first API call made
+  while a session is active, so it must be on the session before the
+  first plan is built: a session factory is the place for it.  What an
+  error loses: an ``AnalysisException`` keeps its error class, its
+  message and the failing operation's name (``divide``); only the query
+  context's call site becomes a JVM frame instead of ``file.py:line``,
+  which inside the engine would point into this package anyway.
 """
 
 from __future__ import annotations
@@ -67,6 +79,10 @@ def est_scan_splits(df) -> int:
     return max(1, total // max(split, 1))
 
 
+# the session settings the engine needs wherever it runs, cluster included
+ENGINE_CONF = {"spark.python.sql.dataFrameDebugging.enabled": "false"}
+
+
 def _default_driver_mem() -> str:
     """24g, or half the host's physical memory when that is less.  A heap
     cap above physical memory lets the driver JVM grow until the kernel
@@ -101,6 +117,7 @@ def get_spark(app: str = "jsonschema_rs_spark", cores: int | str = "*",
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
+        .config(map=ENGINE_CONF)
     )
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions",

@@ -55,8 +55,10 @@ def main(argv=None) -> int:
         violations,
     )
     from jsonschema_rs_spark import checkpoint as CP
+    from jsonschema_rs_spark.session import ENGINE_CONF
 
-    spark = SparkSession.builder.appName("jsonschema-rs-spark").getOrCreate()
+    spark = (SparkSession.builder.appName("jsonschema-rs-spark")
+             .config(map=ENGINE_CONF).getOrCreate())
 
     with open(args.spec) as f:
         spec = json.load(f)

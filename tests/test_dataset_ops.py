@@ -19,6 +19,21 @@ def test_uniqueness_planted_dupes(spark):
     assert got == want
 
 
+def test_uniqueness_ignores_null_keys(spark):
+    """A NULL in any key column makes the row take no part (SQL
+    ``UNIQUE``): NULL keys are never reported as a duplicate group, and
+    a duplicated non-NULL key counts only its non-NULL rows."""
+    df = spark.createDataFrame(
+        [("a", 1), ("a", 1), ("a", None), ("b", 2), (None, 3), (None, 3),
+         (None, None), (None, None), ("c", None), ("c", None)],
+        "k1 string, k2 int")
+    got = {tuple(r) for r in DS.uniqueness_violations(df, ["k1"]).collect()}
+    assert got == {("a", 3), ("c", 2)}
+    got = {tuple(r)
+           for r in DS.uniqueness_violations(df, ["k1", "k2"]).collect()}
+    assert got == {("a", 1, 2)}
+
+
 def test_referential_integrity_exact_dangling_set(spark):
     fs = flat_spans(spark, SF).filter(F.col("media_ref").isNotNull()).cache()
     catalog = fs.select("media_ref").distinct().filter(

@@ -217,13 +217,43 @@ def test_dataset_plan_is_one_statement_with_only_bounded_aggregates(
     assert out.count() > 0
 
 
+def test_ks_bounds_skip_the_min_max_scan(spark, tmp_path):
+    """A ``ks`` entry with ``bounds`` equal to the data's min/max gives the
+    same rows as one without, from a plan with one fewer file scan (no
+    min/max pre-pass)."""
+    flat, _ = golden_tables(spark)
+    flat.write.parquet(str(tmp_path / "flat"))
+    flat = spark.read.parquet(str(tmp_path / "flat"))
+    lo, hi = flat.agg(F.min("offset"), F.max("offset")).first()
+    ks = {"column": "offset", "threshold": 0.08, "bins": 16}
+    derived = validate_dataset(
+        flat, {"x-dataset": {"drift": {"ks": ks}}}, "part_key")
+    bounded = validate_dataset(
+        flat, {"x-dataset": {"drift": {"ks": {**ks, "bounds": [lo, hi]}}}},
+        "part_key")
+
+    def file_scans(df):
+        return df._jdf.queryExecution().executedPlan().toString().count(
+            "FileScan")
+
+    assert file_scans(bounded) == file_scans(derived) - 1
+    rows = {tuple(r) for r in derived.collect()}
+    assert rows and {tuple(r) for r in bounded.collect()} == rows
+
+
 @pytest.mark.parametrize("section, bad_key", [
     ({"columns": {"offset": {"minimum": 0}}}, "minimum"),
     ({"drift": {"psi": {"column": "offset"}}}, "psi"),
     ({"columns": {"offset": {"min": 0}}, "uniq": ["span_key"]}, "uniq"),
     ({"referential": {"media_ref": {"key": "media_ref"}}}, "catalog"),
+    ({"drift": {"ks": {"column": "offset", "bounds": [0]}}}, "bounds"),
+    ({"drift": {"ks": {"column": "offset", "bounds": [1, 1]}}}, "bounds"),
+    ({"drift": {"ks": {"column": "offset", "bounds": [0, "9"]}}}, "bounds"),
+    ({"drift": {"ks": {"column": "offset", "bounds": "0,1"}}}, "bounds"),
 ], ids=["unknown-bound", "unknown-drift-kind", "unknown-section-key",
-        "target-without-catalog"])
+        "target-without-catalog", "ks-bounds-one-number",
+        "ks-bounds-lo-not-below-hi", "ks-bounds-not-a-number",
+        "ks-bounds-not-a-list"])
 def test_malformed_section_names_the_bad_key(spark, section, bad_key):
     flat, catalog = golden_tables(spark)
     with pytest.raises(SpecError, match=repr(bad_key)):

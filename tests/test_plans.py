@@ -8,6 +8,7 @@ import os
 import re
 
 import pytest
+from py4j.protocol import CALL_COMMAND_NAME
 from pyspark.sql import functions as F
 
 from jsonschema_rs_spark.compiler import compile_spec
@@ -87,6 +88,36 @@ def test_flagship_variant_plans_match_golden(spark):
     with open(GOLDEN_VARIANT) as fh:
         golden = fh.read()
     assert flagship_variant_plans(spark) == golden
+
+
+def test_engine_session_turns_off_dataframe_debugging(spark):
+    """With DataFrame debugging on, PySpark sends several extra py4j round
+    trips per ``F.*``/``Column`` call to record its Python call site."""
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_typed_build_jvm_call_budget(spark):
+    """Plan-build cost on the typed path is the number of Column nodes
+    built over py4j: one round trip per node, and each constraint's
+    predicate built once per plan site.  About 3,600 JVM calls with the
+    per-call origin capture on."""
+    df = derive_spans(spark, SF)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = 0
+
+    def counting(command, *a, **k):
+        nonlocal calls
+        calls += command.startswith(CALL_COMMAND_NAME)
+        return send(command, *a, **k)
+
+    client.send_command = counting
+    try:
+        violations(df, compile_spec(FLAGSHIP_SPEC, df.schema))
+    finally:
+        del client.send_command
+    assert calls <= 1200, calls
 
 
 def test_violations_plan_has_no_shuffle(spark, tmp_path):
