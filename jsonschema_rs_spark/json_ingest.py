@@ -31,15 +31,22 @@ and only at doc scope).  Variant parse + path extraction are JVM
 expressions, so the plan stays embarrassingly parallel in input splits
 exactly like the typed ``violations`` plan.
 
-Build cost: the driver-side plan build, not execution, dominates this
-path.  It is proportional to the number of Column nodes built over py4j;
-each PySpark function call costs about five round trips beyond the call
-itself (call-site capture).  So every derived Column of a node — its tag
-CaseWhen, type tests, extractions, members and observed rendering — is
-memoised on the node (:class:`JV`) and built once.  NULL is guarded once
-per cell, in ``emit``: a cell is never NULL, so validity is the bare
-conjunction of the cells and is built only where it is read
-(combinators, claim gates, HOF lambdas, verdicts).
+Run-time binding: a node's type tag is a CASE chain over its
+``schema_of_variant`` string, and every check tests it.  Spark shares no
+subexpression inside ``Generate`` or a ``transform`` lambda, and the
+optimizer expands each tag test into the whole chain, so a tag derived
+at every reference ran ``schema_of_variant`` hundreds of times per row.
+:class:`_Binder` instead binds each node's ``schema_of_variant`` string,
+tag, map/array casts and ``properties`` members once: per row as plain
+columns below the cell projection (``validate_json_strings``), and per
+element inside the items lambda (both entry points).  The flagship plan
+went from 372 ``schemaOfVariant`` calls to 8, one per node, and the
+smaller expression also analyses faster at build time.  Every derived
+Column of a node is still memoised on it (:class:`JV`), so each is built
+once over py4j.  NULL is guarded once per cell, in ``emit``: a cell is
+never NULL, so validity is the bare conjunction of the cells and is
+built only where it is read (combinators, claim gates, HOF lambdas,
+verdicts).
 
 ``unevaluatedProperties``/``unevaluatedItems`` lower natively (round 5):
 in expression land the 2020-12 annotation algebra — claims count only
@@ -58,7 +65,7 @@ from __future__ import annotations
 
 from decimal import Decimal
 from functools import cached_property
-from typing import Any, Optional
+from typing import Any, NamedTuple, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -86,16 +93,28 @@ class JV:
     """One JSON instance node: a VARIANT Column where SQL NULL = absent
     (vs ``is_variant_null`` = JSON null).
 
-    Every derived Column is built once per node and reused: each PySpark
-    function call costs several py4j round trips, so rebuilding the tag
-    CaseWhen on every access dominated the plan build.  A lambda variable
-    always gets a fresh ``JV``, so nothing memoised crosses a lambda
-    scope."""
+    Every derived Column is built once per node and reused, which saves
+    plan-build round trips; a node made by :meth:`bound` also reads its
+    costly values (``schema_of_variant``, tag, casts, members) from
+    columns bound once per row or element, which is what shares them at
+    run time.  A lambda variable always gets a fresh ``JV``, so nothing
+    memoised crosses a lambda scope."""
 
     def __init__(self, e: Column):
         self.e = e
         self._is: dict[tuple[str, ...], Column] = {}
         self._members: dict[str, JV] = {}
+
+    @classmethod
+    def bound(cls, e: Column, members: Optional[dict] = None,
+              **cols: Column) -> "JV":
+        """A node whose derived Columns ``cols`` (any of ``_sch``,
+        ``tag``, ``m``, ``arr``) and ``members`` are given, as references
+        to values bound by a :class:`_Binder`."""
+        jv = cls(e)
+        jv.__dict__.update(cols)
+        jv._members.update(members or {})
+        return jv
 
     @cached_property
     def _sch(self) -> Column:
@@ -108,16 +127,16 @@ class JV:
         an integer literal (BIGINT or DECIMAL(p,0) — variant preserves the
         exact parse, which is what draft-4 strict-integer needs)."""
         e, sch = self.e, self._sch
+        # plain str values become literals in the JVM call itself
         return (F.when(self.absent, _null_str())
-                .when(F.is_variant_null(e), F.lit("null"))
-                .when(sch.startswith("OBJECT"), F.lit("object"))
-                .when(sch.startswith("ARRAY"), F.lit("array"))
-                .when(sch == "STRING", F.lit("string"))
-                .when(sch == "BOOLEAN", F.lit("boolean"))
+                .when(F.is_variant_null(e), "null")
+                .when(sch.startswith("OBJECT"), "object")
+                .when(sch.startswith("ARRAY"), "array")
+                .when(sch == "STRING", "string")
+                .when(sch == "BOOLEAN", "boolean")
                 .when((sch == "BIGINT")
-                      | sch.rlike(r"^DECIMAL\([0-9]+,0\)$"),
-                      F.lit("integer"))
-                .otherwise(F.lit("number")))
+                      | sch.rlike(r"^DECIMAL\([0-9]+,0\)$"), "integer")
+                .otherwise("number"))
 
     def is_(self, *names: str) -> Column:
         """``tag IN names`` (NULL when absent)."""
@@ -378,6 +397,158 @@ def _canon(jv, depth: int = _CANON_DEPTH) -> Column:
 
 
 # --------------------------------------------------------------------------
+# run-time binding: each node's costly values once per row or element
+# --------------------------------------------------------------------------
+
+# keywords that read a node's map<string,variant> / array<variant> cast
+_OBJECT_KWS = frozenset((
+    "properties", "required", "minProperties", "maxProperties",
+    "propertyNames", "patternProperties", "additionalProperties",
+    "dependentRequired", "dependentSchemas", "dependencies",
+    "unevaluatedProperties"))
+_ARRAY_KWS = frozenset((
+    "items", "prefixItems", "additionalItems", "minItems", "maxItems",
+    "uniqueItems", "contains", "unevaluatedItems"))
+
+
+class _Need(NamedTuple):
+    """What to bind at one node beyond its ``schema_of_variant`` string
+    and tag: the map cast, the array cast, and the ``properties`` members
+    (name -> their own need)."""
+    m: bool
+    arr: bool
+    members: dict
+
+
+def _needs(schemas: list) -> _Need:
+    """The binding need of a node, read from the schemas applied to it:
+    ``schemas`` and every subschema applied in place to the same instance
+    (``allOf``/``anyOf``/``oneOf``, ``not``, ``if``/``then``/``else`` and
+    the dependent schemas).  A value no check reads is not bound, and one
+    not bound here is still derived where it is read."""
+    todo = list(schemas)
+    here: list[dict] = []
+    while todo:
+        s = todo.pop()
+        if not isinstance(s, dict):
+            continue
+        here.append(s)
+        for kw in ("allOf", "anyOf", "oneOf"):
+            todo.extend(s.get(kw) or [])
+        todo.extend(s[kw] for kw in ("not", "if", "then", "else")
+                    if kw in s)
+        for kw in ("dependentSchemas", "dependencies"):
+            if isinstance(s.get(kw), dict):
+                todo.extend(s[kw].values())
+    kws = {kw for s in here for kw in s}
+    lits = [s["const"] for s in here if "const" in s]
+    lits += [v for s in here for v in s.get("enum") or []]
+    props: dict[str, list] = {}
+    for s in here:
+        for k, sub in (s.get("properties") or {}).items():
+            if sub is not True and sub != {}:
+                props.setdefault(k, []).append(sub)
+    return _Need(
+        m=bool(kws & _OBJECT_KWS) or any(isinstance(v, dict) for v in lits),
+        arr=bool(kws & _ARRAY_KWS) or any(isinstance(v, list) for v in lits),
+        members={k: _needs(ss) for k, ss in props.items()})
+
+
+class _Binder:
+    """The costly values of a node and of its ``properties`` members,
+    bound once per row or per array element (:func:`_needs` says which):
+    every node's ``schema_of_variant`` string and the tag derived from
+    it, the map and array casts, and each member's variant.  A value is
+    bound one level above the values it reads: at doc scope a level is
+    one projection (:meth:`select`), inside a lambda one ``transform`` of
+    the array into structs (:meth:`transform`).  ``node`` makes the
+    bound :class:`JV` from a name accessor, so the checks read references
+    instead of re-deriving each value at every reference (the optimizer
+    would also expand each tag test into the whole tag CASE chain).
+
+    Doc-scope values are plain columns, not one struct: CollapseProject
+    keeps a non-cheap alias that has several consumers, but it would
+    inline a ``named_struct`` and simplify the field reads back into the
+    full expressions."""
+
+    def __init__(self, need: _Need, root: str):
+        self.root = root
+        self.levels: list[list] = [[]]  # level 0: the root, bound already
+        self.level_of = {root: 0}
+        # node(get): the bound root JV; ``get`` maps a bound name to its
+        # Column
+        self.node = self._bind(need, root, 0)
+
+    def _put(self, level: int, fn) -> str:
+        while len(self.levels) <= level:
+            self.levels.append([])
+        name = f"{self.root}_{len(self.level_of)}"
+        self.levels[level].append((name, fn))
+        self.level_of[name] = level
+        return name
+
+    def _bind(self, need: _Need, e: str, level: int):
+        """Binds the values of the node whose variant is the name ``e``
+        (bound at ``level``); returns the factory of its :class:`JV`."""
+        put = self._put
+        sch = put(level + 1, lambda g: F.schema_of_variant(g(e)))
+        cols = {"_sch": sch, "tag": put(
+            level + 2, lambda g: JV.bound(g(e), _sch=g(sch)).tag)}
+        if need.m:
+            cols["m"] = m = put(level + 1, lambda g: JV(g(e)).m)
+        if need.arr:
+            cols["arr"] = put(level + 1, lambda g: JV(g(e)).arr)
+        members = {
+            k: self._bind(sub, put(level + 2, lambda g, _k=k: JV.bound(
+                g(e), m=g(m)).member(_k).e), level + 2)
+            for k, sub in need.members.items()}
+
+        def make(g) -> JV:
+            return JV.bound(g(e), {k: mk(g) for k, mk in members.items()},
+                            **{a: g(n) for a, n in cols.items()})
+        return make
+
+    def select(self, df: DataFrame) -> DataFrame:
+        """``df`` (holding the root column) with every value bound as a
+        column, one projection per level."""
+        for level in self.levels[1:]:
+            df = df.withColumns({n: fn(F.col) for n, fn in level})
+        return df
+
+    def transform(self, arr: Column) -> Column:
+        """``arr`` (of root variants) as an array of structs, one
+        ``transform`` per level: a level's struct holds its values and,
+        as ``p``, the struct of the level below (the element itself below
+        level 1), so no value is copied forward."""
+        for top, level in enumerate(self.levels[1:]):
+            arr = F.transform(arr, self._step(level, top))
+        return arr
+
+    def _step(self, level: list, top: int):
+        def step(x: Column) -> Column:
+            g = self.reader(x, top)
+            return F.struct(x.alias("p"),
+                            *[fn(g).alias(n) for n, fn in level])
+        return step
+
+    def reader(self, x: Column, top: int = -1):
+        """``get`` over ``x``, a struct of level ``top`` (default: the last)
+        of :meth:`transform`: a value bound at level ``l`` is a field of
+        the struct ``top - l`` ``p`` fields down, and the root is that
+        chain itself."""
+        top = len(self.levels) - 1 if top < 0 else top
+        chain = [x]
+
+        def get(name: str) -> Column:
+            depth = top - self.level_of[name]
+            while len(chain) <= depth:
+                chain.append(chain[-1].getField("p"))
+            return (chain[depth] if name == self.root
+                    else chain[depth].getField(name))
+        return get
+
+
+# --------------------------------------------------------------------------
 # keyword lowering over a variant node
 # --------------------------------------------------------------------------
 
@@ -528,13 +699,14 @@ class _JsonLowerer:
         if rest is False:
             emit(path + (rest_kw,),
                  jv.gate(_ARRAY, F.size(jv.arr) <= n_pre))
-        elif isinstance(rest, (dict, bool)) and rest is not True:
-            p = F.forall(
-                F.transform(
-                    jv.arr, lambda el, i: F.when(i < n_pre, F.lit(True))
-                    .otherwise(self.valid(rest, JV(el),
-                                          path + (rest_kw,)))),
-                lambda x: x)
+        elif isinstance(rest, dict) and rest:
+            # each element's costly values bound once (_Binder), then the
+            # checks run over the bound structs
+            rest_arr = (F.slice(jv.arr, n_pre + 1, F.size(jv.arr)) if n_pre
+                        else jv.arr)
+            b = _Binder(_needs([rest]), "el")
+            p = F.forall(b.transform(rest_arr), lambda x: self.valid(
+                rest, b.node(b.reader(x)), path + (rest_kw,)))
             emit(path + (rest_kw,), jv.gate(_ARRAY, p))
 
     def _unevaluated_items(self, schema, jv, path, emit, sub):
@@ -609,7 +781,12 @@ def validate_json_strings(df: DataFrame, json_col: str, schema: Any,
     # multiple consumers), so the parse runs once
     keep = list(id_cols) + ([json_col] if json_col not in id_cols else [])
     df = df.select(*keep, F.try_parse_json(F.col(json_col)).alias("__jv"))
-    v = F.col("__jv")
+    # the same staging for each node's costly values (_Binder): one
+    # projection per level, so every check reads plain columns
+    binder = _Binder(_needs([resolved]), "__jv")
+    df = binder.select(df)
+    root = binder.node(F.col)
+    v = root.e
     lw = _JsonLowerer(options)
     # SQL-NULL documents are NOT parse_ok (round 6, ADVICE): verdicts mode
     # already reported them invalid, but violations mode treated NULL as
@@ -619,9 +796,9 @@ def validate_json_strings(df: DataFrame, json_col: str, schema: Any,
     parse_ok = v.isNotNull()
     if mode == "verdicts":
         ok = (F.col(json_col).isNotNull() & parse_ok
-              & lw.valid(resolved, JV(v), (), in_lambda=False))
+              & lw.valid(resolved, root, (), in_lambda=False))
         return df.select(*id_cols, ok.alias("valid"))
-    cells = lw.lower(resolved, JV(v), ())
+    cells = lw.lower(resolved, root, ())
     cell_arr = F.array(*[
         F.struct(F.lit(cid).alias("constraint_id"), p.alias("ok"),
                  obs.cast("string").alias("observed"))

@@ -278,21 +278,22 @@ def referential_violations(
 
 def chi2_sql(st: Statement, src: str, cat_col: str, part_col: str,
              threshold: float) -> str:
-    """CTE ``(p, chi2, n_rows, drifted)``, one row per non-NULL partition.
+    """CTE ``(p, chi2, n_rows, drifted)``, one row per partition (NULL
+    included, as in :func:`ks_sql`).
 
     The partition × category histogram is the only aggregate over
     ``src``; the category totals, partition totals and grand total are
-    window sums over it.  A NULL category or partition counts in those
-    totals but is never a term of the statistic (nor of ``n_rows``)."""
+    window sums over it.  A NULL category counts in those totals but is
+    never a term of the statistic (nor of ``n_rows``)."""
     hist = st.cte(f"SELECT {ref(part_col)} AS p, {ref(cat_col)} AS c, "
                   f"count(1) AS n FROM {src} "
                   f"GROUP BY {ref(part_col)}, {ref(cat_col)}")
     expected = st.cte(
-        "SELECT p, n, sum(n) OVER (PARTITION BY c) / sum(n) OVER () "
-        "* sum(n) OVER (PARTITION BY p) AS e, "
-        f"p IS NOT NULL AND c IS NOT NULL AS term FROM {hist}")
+        "SELECT p, c, n, sum(n) OVER (PARTITION BY c) / sum(n) OVER () "
+        f"* sum(n) OVER (PARTITION BY p) AS e FROM {hist}")
     chi2 = st.cte(f"SELECT p, sum(power(n - e, 2) / e) AS chi2, "
-                  f"sum(n) AS n_rows FROM {expected} WHERE term GROUP BY p")
+                  f"sum(n) AS n_rows FROM {expected} WHERE c IS NOT NULL "
+                  "GROUP BY p")
     return st.cte(f"SELECT p, chi2, n_rows, chi2 > {st.arg(threshold)} "
                   f"AS drifted FROM {chi2}")
 

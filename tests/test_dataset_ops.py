@@ -83,6 +83,36 @@ def test_chi2_flags_planted_drift(spark):
     assert n_flagged <= 3  # only the planted partition (and near-noise)
 
 
+def test_chi2_tests_the_null_partition(spark):
+    """A NULL partition is a partition of the statistic, as in KS; a NULL
+    category counts in the totals but is never a term nor a row."""
+    counts = {(1, "text"): 50, (1, "image"): 50, (2, "text"): 50,
+              (2, "image"): 50, (None, "text"): 90, (None, "image"): 10,
+              (None, None): 5}
+    df = spark.createDataFrame(
+        [(p, c) for (p, c), n in counts.items() for _ in range(n)],
+        "part_key int, kind string")
+    total = sum(counts.values())
+
+    def chi2(part):
+        n_part = sum(n for (p, _), n in counts.items() if p == part)
+        out = 0.0
+        for (p, c), n in counts.items():
+            if p == part and c is not None:
+                e = sum(m for (_, k), m in counts.items()
+                        if k == c) / total * n_part
+                out += (n - e) ** 2 / e
+        return out
+
+    out = DS.chi_square_drift(df, "kind", "part_key", threshold=27.0)
+    rows = {r["part_key"]: r for r in out.collect()}
+    assert set(rows) == {1, 2, None}
+    for p, r in rows.items():
+        assert r["chi2"] == pytest.approx(chi2(p))
+    assert rows[None]["n_rows"] == 100 and rows[1]["n_rows"] == 100
+    assert [p for p, r in rows.items() if r["drifted"]] == [None]
+
+
 def test_ks_flags_planted_shift(spark):
     fs = flat_spans(spark, SF)
     shifted = fs.withColumn(

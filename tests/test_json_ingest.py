@@ -295,3 +295,63 @@ def test_variant_violations_agree_with_verdicts_on_suite_sample(spark):
     disagree = sorted(d for d, ok in verdict.items()
                       if ok != (d not in flagged))
     assert not disagree, disagree
+
+
+def test_flagship_binding_edges(spark):
+    """The flagship spec binds each node's tag, casts and members once
+    per row and once per span element; these documents hit every
+    absent, JSON-null and wrong-type edge of those bound values.  The
+    expected rows are the ones the engine gave before the binding."""
+    from jsonschema_rs_spark.flagship import FLAGSHIP_SPEC
+
+    doc = "doc-000000000001"
+    ok = {"kind": "text", "offset": 0, "text": "abcd"}
+    media = {"media_ref": "media://1"}
+    docs = {
+        "spans-object": {"doc_id": doc, "spans": {"kind": "text"}},
+        "spans-string": {"doc_id": doc, "spans": "x"},
+        "spans-null": {"doc_id": doc, "spans": None},
+        "spans-absent": {"doc_id": doc},
+        "el-null": {"doc_id": doc, "spans": [ok, None]},
+        "el-5": {"doc_id": doc, "spans": [ok, 5]},
+        "el-array": {"doc_id": doc, "spans": [ok, []]},
+        "el-object": {"doc_id": doc, "spans": [ok, {}]},
+        "kind-missing": {"doc_id": doc, "spans": [ok, {"offset": 8,
+                                                       **media}]},
+        "kind-null": {"doc_id": doc, "spans": [
+            ok, {"kind": None, "offset": 8, **media}]},
+        "kind-3": {"doc_id": doc, "spans": [
+            ok, {"kind": 3, "offset": 8, **media}]},
+        "offset-1.0": {"doc_id": doc, "spans": [
+            ok, {"kind": "image", "offset": 1.0, **media}]},
+        "offset-8.0": {"doc_id": doc, "spans": [
+            ok, {"kind": "image", "offset": 8.0, **media}]},
+        "offset-2**63": {"doc_id": doc, "spans": [
+            ok, {"kind": "audio", "offset": 2 ** 63, **media}]},
+        "valid": {"doc_id": doc, "spans": [ok]},
+    }
+    df = spark.createDataFrame([(k, json.dumps(v)) for k, v in docs.items()],
+                               "doc_id string, doc string")
+    first = '[{"kind":"text","offset":0,"text":"abcd"},'
+    second = {
+        "el-5": "5", "el-array": "[]", "el-null": "null", "el-object": "{}",
+        "kind-3": '{"kind":3,"media_ref":"media://1","offset":8}',
+        "kind-missing": '{"media_ref":"media://1","offset":8}',
+        "kind-null": '{"kind":null,"media_ref":"media://1","offset":8}',
+        "offset-1.0": '{"kind":"image","media_ref":"media://1","offset":1}',
+    }
+    expected = {(d, "spans/items", first + o + "]") for d, o in second.items()}
+    expected |= {("spans-absent", "required/spans", "missing"),
+                 ("spans-null", "spans/type", None),
+                 ("spans-object", "spans/type", '{"kind":"text"}'),
+                 ("spans-string", "spans/type", "x")}
+    rows = [tuple(r) for r in
+            validate_json_strings(df, "doc", FLAGSHIP_SPEC).collect()]
+    assert sorted(rows, key=str) == sorted(expected, key=str)
+    valid = {d: d not in {r[0] for r in expected} for d in docs}
+    assert valid["offset-2**63"] and valid["offset-8.0"] and valid["valid"]
+    verdicts = validate_json_strings(df, "doc", FLAGSHIP_SPEC,
+                                     mode="verdicts").collect()
+    assert {r["doc_id"]: r["valid"] for r in verdicts} == valid
+    col = json_valid_column(F.col("doc"), FLAGSHIP_SPEC)
+    assert {r[0]: r[1] for r in df.select("doc_id", col).collect()} == valid

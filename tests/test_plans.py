@@ -90,6 +90,19 @@ def test_flagship_variant_plans_match_golden(spark):
     assert flagship_variant_plans(spark) == golden
 
 
+def test_variant_plan_derives_each_node_once(spark):
+    """Each variant node's ``schema_of_variant`` runs once per row or
+    span element: one per node of the flagship spec (the document,
+    ``doc_id``, ``spans``, a span and its four members).  The executed
+    plan held 372 ``schemaOfVariant`` and 505 ``try_variant_get`` calls
+    when every reference re-derived the tag, which the optimizer expands
+    into the whole tag CASE chain."""
+    df = spark.createDataFrame([("d1", "{}")], "doc_id string, doc string")
+    plan = _physical(validate_json_strings(df, "doc", FLAGSHIP_SPEC))
+    assert plan.count("schemaOfVariant(") <= 8, plan
+    assert plan.count("try_variant_get(") <= 40, plan
+
+
 def test_engine_session_turns_off_dataframe_debugging(spark):
     """With DataFrame debugging on, PySpark sends several extra py4j round
     trips per ``F.*``/``Column`` call to record its Python call site."""
@@ -308,6 +321,52 @@ def test_annotation_units_empty_array_keeps_node_unit(spark):
             if r["constraint_id"] == "spans/unevaluatedItems"]
     assert sorted(rows) == [("d-empty", None, True),
                             ("d-null", None, True)], rows
+
+
+def test_annotation_units_doc_only_spec(spark):
+    """A spec with no element-scope constraint takes the doc-only branch
+    of ``annotation_units``: one unit per (doc, keyword) with its
+    ``valid`` flag, and one per position for a conditional
+    ``unevaluatedItems`` (a node-level unit when the array is absent)."""
+    from jsonschema_rs_spark.plans.validate import basic_output
+
+    df = spark.createDataFrame(
+        [("doc-00001", [{"kind": "text", "offset": 0},
+                        {"kind": "image", "offset": 8}]),
+         ("d2", [{"kind": "text", "offset": 0}]),
+         ("doc-00003", None)],
+        "doc_id string, spans array<struct<kind:string,offset:int>>")
+    plain = {"doc_id": {"minLength": 5}, "spans": {"minItems": 2}}
+    want = {
+        ("d2", "doc_id/minLength", None, False),
+        ("d2", "spans/minItems", None, False),
+        ("doc-00001", "doc_id/minLength", None, True),
+        ("doc-00001", "spans/minItems", None, True),
+        ("doc-00003", "doc_id/minLength", None, True),
+        ("doc-00003", "spans/minItems", None, True),
+    }
+    uneval = {
+        "if": {"minItems": 3},
+        "then": {"prefixItems": [True, True, True]},
+        "else": {"prefixItems": [True]},
+        "unevaluatedItems": {"properties": {"kind": {"const": "text"}}},
+    }
+    want_uneval = {
+        ("d2", "spans/unevaluatedItems", 0, True),
+        ("doc-00001", "spans/unevaluatedItems", 0, True),
+        ("doc-00001", "spans/unevaluatedItems", 1, False),
+        ("doc-00003", "spans/unevaluatedItems", None, True),
+    }
+    for props, expected in (
+            (plain, want),
+            ({**plain, "spans": {**plain["spans"], **uneval}},
+             want | want_uneval)):
+        compiled = compile_spec({"properties": props}, df.schema)
+        assert all(c.scope == "doc" for c in compiled.constraints)
+        units = basic_output(df, compiled, include_annotations=True)
+        got = [tuple(r) for r in units.select(
+            "doc_id", "constraint_id", "span_index", "valid").collect()]
+        assert sorted(got, key=str) == sorted(expected, key=str)
 
 
 def test_simhash_buckets_uses_codegen_agg_not_interpreted_hof(spark):
