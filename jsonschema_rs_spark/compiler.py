@@ -32,7 +32,7 @@ from __future__ import annotations
 import dataclasses
 import operator
 from dataclasses import dataclass, field
-from functools import reduce
+from functools import partial, reduce
 from typing import Any, Callable, Optional
 
 import pandas as pd
@@ -52,6 +52,7 @@ from pyspark.sql.types import (
     ShortType,
     StringType,
     StructType,
+    VariantType,
 )
 
 from jsonschema_rs_spark.spec import SpecError, resolve_refs, validate_spec
@@ -276,18 +277,26 @@ class _Ctx:
     def cid(self, *extra: str) -> str:
         return "/".join(self.path + tuple(extra))
 
+    def child(self, **changes) -> "_Ctx":
+        """This context with ``changes``: a child node's, or a
+        subschema's at the same node."""
+        return dataclasses.replace(self, **changes)
+
 
 @dataclass
 class _Lowered:
     """Constraints emitted at a node + the node's combined validity fn
-    (used by combinators; relative to the node's own instance column)."""
+    (used by combinators; a function of the node)."""
 
     constraints: list[CompiledConstraint]
-    valid: Callable[..., Column]   # (x) at doc scope; (x, i) at element scope
+    valid: Callable[..., Column]
 
 
 def _true(*_a) -> Column:
     return F.lit(True)
+
+
+_node_obs = operator.attrgetter("obs")  # a check's observed: its node
 
 
 def _and(fns: list[Callable[..., Column]]) -> Callable[..., Column]:
@@ -720,14 +729,15 @@ def dependency_keywords(schema: dict) -> tuple[dict, dict]:
 # scalar keywords: one lowering over two value backends
 # --------------------------------------------------------------------------
 #
-# ``scalar_checks`` decides every scalar keyword once; the typed lowerer
-# and ``json_ingest._JsonLowerer`` only supply the instance node.  A node
-# answers ``can_be`` (can the instance hold one of these JSON types?) at
-# compile time and builds the value primitives that really differ per
-# backend: type tests, the exact bound compare, JSON equality and enum,
-# and multipleOf.  On the typed path (:class:`_TypedNode`) the Spark type
+# ``scalar_checks`` decides every scalar keyword once; the walk
+# (:class:`Lowerer`) supplies the instance node.  A node answers
+# ``can_be`` (can the instance hold one of these JSON types?) at compile
+# time and builds the value primitives that really differ per backend:
+# type tests, the exact bound compare, JSON equality and enum, and
+# multipleOf.  On the typed path (:class:`_TypedNode`) the Spark type
 # answers every type test statically, so checks constant-fold; on the
-# variant path (``JV``/``SJV``) they read runtime tags.
+# variant path (``json_ingest.JV``) they read runtime tags; a member name
+# is a typed string node on both paths.
 
 _TYPE_NAMES = ("null", "boolean", "object", "array", "number", "string",
                "integer")
@@ -766,10 +776,10 @@ def _json_kind(dt: DataType) -> Optional[str]:
 
 
 class _TypedNode:
-    """A typed-table instance for :func:`scalar_checks`: a Column and its
-    static Spark type.  Built without a Column for the compile-time
-    questions, and with the Column (and element index) a predicate is
-    evaluated at."""
+    """A typed-table instance node of the walk: a Column and its static
+    Spark type.  Built without a Column for the compile-time questions,
+    and with the Column (and element index) a predicate is evaluated
+    at."""
 
     def __init__(self, dt: DataType, c: Optional[Column] = None,
                  i: tuple = ()):
@@ -852,10 +862,62 @@ class _TypedNode:
                 "with rlike — no Python fallback)")
         return java
 
+    # -- walk protocol of Lowerer ----------------------------------------
 
-def _on_node(dt: DataType, fn: Callable) -> Callable[..., Column]:
-    """Adapt a function of a typed node to the (x[, i]) convention."""
+    @property
+    def obs(self) -> Column:
+        return _obs_str(self.dt)(self.c)
+
+    def member(self, key: str) -> "_TypedNode":
+        return _TypedNode(self.dt[key].dataType, self.c.getField(key),
+                          self.i)
+
+    def item(self, p: int) -> "_TypedNode":
+        return _TypedNode(self.dt.elementType,
+                          F.try_element_at(self.c, F.lit(p + 1)), self.i)
+
+    def checked(self, p: Column) -> Column:
+        return p  # a NULL check passes: the plans read coalesce(pred, true)
+
+    def passes(self, valid: Column) -> Column:
+        return F.coalesce(valid, F.lit(True))
+
+    def absent_passes(self, p: Column) -> Column:
+        return self.c.isNull() | p
+
+    def render(self, observed: Callable) -> Column:
+        return observed(self)
+
+    def all_items(self, schema: Any, start: int, valid: Callable) -> Column:
+        """``valid`` holds for every item from ``start`` on: the items
+        are the lambda variables of one ``transform``."""
+        def body(e, j):
+            ok = valid(self.child(e))
+            return ~(j >= start) | ok if start else ok
+        return F.coalesce(F.forall(F.transform(self.c, body), lambda b: b),
+                          F.lit(True))
+
+
+def _as_columns(dt: DataType, fn: Callable) -> Callable[..., Column]:
+    """The typed adapter: a function of a node as the plans' ``(x[, i])``
+    function of a typed Column of ``dt`` (and, at element scope, the
+    element index)."""
     return lambda x, *i, _fn=fn: _fn(_TypedNode(dt, x, i))
+
+
+def _leave_walk(c: CompiledConstraint, dt: DataType) -> None:
+    """Turns ``c``'s functions of a typed node into ``(x[, i])`` Column
+    functions; typed constraints leave the walk here, at their scope
+    root."""
+    for name in ("pred", "observed", "viol_positions", "unit_positions"):
+        fn = getattr(c, name)
+        if fn is not None:
+            setattr(c, name, _as_columns(dt, fn))
+
+
+class JsonIngestUnsupported(ValueError):
+    """Schema uses a construct the variant lowering cannot express; the
+    caller should fall back to the typed-table engine."""
 
 
 @dataclass(frozen=True)
@@ -1034,14 +1096,13 @@ def scalar_checks(schema: dict, node, options: EngineOptions, where: str,
 # ``key_regex(pattern, where)`` (a member-name pattern in java.util.regex,
 # or the backend's refusal).
 #
-# Subschemas go through the caller's ``sub(schema, segs, at, in_lambda)``
-# hook.  It returns a validity function over a node that is never NULL:
-# ``at`` names the node the subschema applies to (None: this node,
+# Subschemas go through the walk's ``sub(schema, segs, at, in_lambda)``
+# hook (:meth:`Lowerer._sub`), which lowers the subschema once, when it
+# is called, and returns a validity function over a node that is never
+# NULL: ``at`` names the node the subschema applies to (None: this node,
 # "child": a map value or array element, "name": a member name), and
 # ``in_lambda`` says whether it is evaluated inside an array or map
-# lambda, where a Python-backed leaf has no evaluation site.  The typed
-# backend lowers the subschema when the hook is called; the variant
-# backend when the returned function meets its node.
+# lambda, where a Python-backed leaf has no evaluation site.
 
 _OBJECT = ("object",)
 _ARRAY = ("array",)
@@ -1314,21 +1375,58 @@ def logic_checks(schema: dict, sub: Callable) -> list[NodeCheck]:
 # --------------------------------------------------------------------------
 
 class Lowerer:
-    def __init__(self, table_schema: StructType, options: EngineOptions):
+    """The one schema walk, for both node domains.
+
+    Every check is a function of a node.  Over a typed table
+    (``table_schema`` a StructType) the node is a :class:`_TypedNode`, and
+    typed constraints leave the walk through one adapter
+    (:func:`_leave_walk`: at :meth:`lower_root` for doc scope, at
+    :meth:`_emit_items` for element scope), so the plans read ``(x[,
+    i])`` Column functions.  Over raw JSON (``table_schema`` the
+    VariantType) the node is a ``json_ingest.JV``, which the variant path
+    binds and passes in.
+
+    Dispatch follows the node's static type: a struct resolves its
+    members and names at compile time (:meth:`_lower_struct`); a map and
+    a JSON node take the object keywords whose names are known at run
+    time; an array and a JSON node take the items family.  Each subschema
+    is lowered once.  What differs per domain is a node method next to
+    ``gate``: ``member``/``item`` (a member or tuple position),
+    ``checked`` (the NULL rule of a check), ``passes`` (of a subschema's
+    validity), ``absent_passes`` (of a member), ``render`` (a check's
+    observed text) and ``all_items`` (the element node of a ``forall``);
+    Python-backed leaves and custom keywords are refused on the variant
+    path."""
+
+    def __init__(self, table_schema: DataType, options: EngineOptions):
         self.table_schema = table_schema
         self.options = options
         self.stages: list[PyStage] = []
+        self.variant = isinstance(table_schema, VariantType)
+
+    @staticmethod
+    def _node(dt: DataType):
+        """A node of static type ``dt`` without a Column, for the
+        compile-time questions."""
+        if isinstance(dt, VariantType):
+            # json_ingest imports this module
+            from jsonschema_rs_spark.json_ingest import JV
+            return JV(None)
+        return _TypedNode(dt)
 
     # -- python-backed leaves ---------------------------------------------
     def _py_pred(self, ctx: _Ctx, py_fn: Callable[[str], bool],
                  udf_builder: Callable[[Column], Column],
-                 what: str) -> Callable[..., Column]:
+                 what: str) -> Callable:
         """Predicate for a python-backed leaf check.
 
+        - variant path: an untranslatable pattern has no Python fallback
+          (:class:`JsonIngestUnsupported`).
         - not ``ctx.stageable``: no legal evaluation site exists (the pred
-          would sit inside an HOF lambda) → SpecError at compile time,
-          mirroring the reference's compile-time rejection (``ecma.rs``)
-          instead of a runtime AnalysisException.
+          would sit inside an HOF lambda) → SpecError at compile time
+          (JsonIngestUnsupported on the variant path), mirroring the
+          reference's compile-time rejection (``ecma.rs``) instead of a
+          runtime AnalysisException.
         - doc scope: the Arrow UDF runs in the plain projection.
         - element scope: register a PyStage; when a staging context is
           active at plan-build time (HOF plans) the leaf resolves to
@@ -1336,8 +1434,12 @@ class Lowerer:
           which evaluate preds in plain post-explode projections) it calls
           the UDF directly.
         """
+        if self.variant and what == "pattern":
+            raise JsonIngestUnsupported(
+                f"pattern at {ctx.cid()} does not compile in "
+                "java.util.regex (no Python fallback on the variant path)")
         if not ctx.stageable:
-            raise SpecError(
+            raise (JsonIngestUnsupported if self.variant else SpecError)(
                 f"python-backed check ({what}) at {ctx.cid()} sits in a "
                 "position with no evaluation site (nested array, contains, "
                 "map values, or property names); use a Column-expressible "
@@ -1345,7 +1447,7 @@ class Lowerer:
                 "check applies within one span-array element"
             )
         if ctx.scope != "element":
-            return lambda x, *i: udf_builder(x)
+            return lambda n: udf_builder(n.s)
         sid = len(self.stages)
         self.stages.append(PyStage(
             stage_id=sid,
@@ -1356,117 +1458,168 @@ class Lowerer:
             touched=frozenset({ctx.dpath[0]}) if ctx.dpath else None,
         ))
 
-        def pred(x: Column, *i) -> Column:
+        def pred(n) -> Column:
             name = _stage_lookup(sid)
-            if name is not None and len(i) == 1:
-                return F.element_at(F.col(name), (i[0] + 1).cast("int"))
-            return udf_builder(x)
+            if name is not None and len(n.i) == 1:
+                return F.element_at(F.col(name), (n.i[0] + 1).cast("int"))
+            return udf_builder(n.c)
 
         return pred
 
     # -- entry ----------------------------------------------------------
     def lower_root(self, schema: Any) -> _Lowered:
-        ctx = _Ctx(dtype=self.table_schema, path=(), scope="doc",
-                   stageable=True, options=self.options)
-        return self.lower(schema, ctx)
+        """The lowering at the document root; a typed one as ``(x[, i])``
+        Column functions, a variant one as functions of a JSON node."""
+        dt = self.table_schema
+        lowered = self.lower(schema, _Ctx(
+            dtype=dt, path=(), scope="doc", elementable=not self.variant,
+            stageable=True, options=self.options))
+        if self.variant:
+            return lowered
+        for c in lowered.constraints:
+            if c.scope == "doc":
+                _leave_walk(c, dt)
+        return _Lowered(lowered.constraints, _as_columns(dt, lowered.valid))
 
     # -- node ------------------------------------------------------------
     def lower(self, schema: Any, ctx: _Ctx) -> _Lowered:
         if schema is True or (isinstance(schema, dict) and not schema):
             return _Lowered([], _true)
-        if schema is False:
-            c = self._mk(ctx, ctx.cid("false"),
-                         lambda x, *i: F.lit(False),
-                         lambda x, *i: F.lit("schema is false"))
-            return _Lowered([c], lambda *a: F.lit(False))
-        if not isinstance(schema, dict):
+        if not isinstance(schema, (dict, bool)):
             raise SpecError(f"schema at {ctx.cid()} must be dict/bool")
 
         out: list[CompiledConstraint] = []
         valids: list[Callable[..., Column]] = []
 
         def emit(cid: str, pred, observed):
-            out.append(self._mk(ctx, cid, pred, observed))
-            valids.append(pred)
+            c = self._mk(ctx, cid, lambda n, _p=pred: n.checked(_p(n)),
+                         observed)
+            out.append(c)
+            valids.append(c.pred)
 
-        obs = _obs_str(ctx.dtype)
+        if schema is False:
+            emit(ctx.cid("false"), lambda n: F.lit(False),
+                 lambda n: n.render(lambda _: F.lit("schema is false")))
+            return self._lowered(out, valids)
+
         dt = ctx.dtype
-
+        is_json = isinstance(dt, VariantType)
         # ---- custom keywords override builtins (reference custom.rs) ----
-        for name, value in schema.items():
-            if name in ctx.options.custom_keywords:
-                factory = ctx.options.custom_keywords[name]
-                pred_b, obs_b = factory(value, dt)
-                emit(ctx.cid(name),
-                     self._lift(pred_b), self._lift(obs_b))
+        custom = [k for k in schema if k in ctx.options.custom_keywords]
+        if custom and self.variant:
+            raise JsonIngestUnsupported(
+                f"custom keyword(s) {sorted(custom)} at {ctx.cid() or '#'}: "
+                "custom keyword factories build typed-column predicates "
+                "and have no variant lowering")
+        for name in custom:
+            pred_b, obs_b = ctx.options.custom_keywords[name](schema[name],
+                                                              dt)
+            emit(ctx.cid(name), lambda n, _p=pred_b: _p(n.c),
+                 lambda n, _o=obs_b: _o(n.c))
 
-        # ---- scalar keywords (shared with the variant path) ---------------
-        def py_leaf(py_fn, udf_builder, what):
-            staged = self._py_pred(ctx, py_fn, udf_builder, what)
-            return lambda n: staged(n.c, *n.i)
-
-        node = _TypedNode(dt)
+        # ---- scalar keywords ----------------------------------------------
+        node = self._node(dt)
         for chk in scalar_checks(schema, node, ctx.options, ctx.cid(),
-                                 py_leaf):
-            emit(ctx.cid(chk.keyword), _on_node(dt, chk.pred),
-                 self._lift(obs))
+                                 partial(self._py_pred, ctx)):
+            emit(ctx.cid(chk.keyword), chk.pred, _node_obs)
             out[-1].py_fn = chk.py_fn
 
-        # ---- applicator keywords (shared with the variant path) ----------
+        # ---- applicator keywords ------------------------------------------
         sub = self._sub(ctx)
 
         def emit_checks(checks: list[NodeCheck]) -> None:
             for chk in checks:
                 o = chk.observed
                 if o is None:
-                    observed = self._lift(obs)
+                    observed = _node_obs
                 elif isinstance(o, str):
-                    observed = self._lift(lambda x, _o=o: F.lit(_o))
+                    observed = lambda n, _o=o: F.lit(_o)
                 else:
-                    observed = _on_node(dt, o)
-                emit(ctx.cid(*chk.segs), _on_node(dt, chk.pred), observed)
+                    observed = lambda n, _o=o: n.render(_o)
+                emit(ctx.cid(*chk.segs), chk.pred, observed)
 
-        # ---- object keywords --------------------------------------------
+        # ---- object keywords: names static on a struct, known at run time
+        # on a map or a JSON object ----------------------------------------
         if isinstance(dt, StructType):
             self._lower_struct(schema, ctx, out, valids)
         elif isinstance(dt, MapType):
             self._lower_map_properties(schema, ctx, emit)
+        elif is_json:
+            for k, s in (schema.get("properties") or {}).items():
+                # no object re-gate: a non-object has no members, so each
+                # member is absent and its checks pass
+                self._descend(self.lower(s, ctx.child(
+                    path=ctx.path + (k,), dpath=ctx.dpath + (k,),
+                    spointer=_sp(ctx) + ("properties", k))),
+                    ctx, out, valids, lambda n, _k=k: n.member(_k))
+        if isinstance(dt, MapType) or is_json:
             emit_checks(object_checks(schema, node, sub, ctx.cid()))
 
-        # ---- array keywords ----------------------------------------------
-        if isinstance(dt, ArrayType):
-            emit_checks(array_checks(schema, sub))
-            self._lower_array(schema, ctx, out, valids, emit)
+        # ---- array keywords (a JSON node keeps the variant path's cell
+        # order: the items family first) -----------------------------------
+        if isinstance(dt, ArrayType) or is_json:
+            if not is_json:
+                emit_checks(array_checks(schema, sub))
+            self._lower_items(schema, ctx, out, valids, emit)
+            if is_json:
+                emit_checks(array_checks(schema, sub))
+            self._lower_unevaluated_items(schema, ctx, out, valids, emit)
 
         # ---- combinators --------------------------------------------------
         self._lower_all_of(schema, ctx, out, valids)
         emit_checks(logic_checks(schema, sub))
         self._lower_if(schema, ctx, out, valids)
+        return self._lowered(out, valids)
 
-        return _Lowered(out, _and(valids))
+    def _lowered(self, out, valids) -> _Lowered:
+        # a variant check is never NULL and passes on an absent node, so a
+        # variant node's validity is the flat conjunction of its checks
+        return _Lowered(out, _and([c.pred for c in out] if self.variant
+                                  else valids))
 
     def _sub(self, ctx: _Ctx) -> Callable:
         """The applicator keywords' subschema hook at ``ctx``: lowers the
         subschema now, at the node ``at`` names, and returns its validity
-        over a node, where NULL (an absent instance) passes."""
+        over a node, NULL read by the node's ``passes``."""
         def sub(schema, segs, at, in_lambda):
-            node = _TypedNode(ctx.dtype)
+            node = self._node(ctx.dtype)
             dt = (node if at is None else getattr(node, at)(None)).dt
-            valid = self.lower(schema, _Ctx(
-                dtype=dt, path=ctx.path + segs, scope=ctx.scope,
+            valid = self.lower(schema, ctx.child(
+                dtype=dt, path=ctx.path + segs,
                 dpath=ctx.dpath if at is None else (), elementable=False,
-                array=ctx.array, array_key=ctx.array_key,
                 spointer=_sp(ctx) + segs,
-                stageable=ctx.stageable and not in_lambda,
-                options=ctx.options)).valid
-            return lambda n: F.coalesce(valid(n.c, *n.i), F.lit(True))
+                stageable=ctx.stageable and not in_lambda)).valid
+            return lambda n: n.passes(valid(n))
         return sub
 
-    # ------------------------------------------------------------------
-    def _lift(self, fn: Callable[[Column], Column]) -> Callable[..., Column]:
-        """Adapt a single-arg builder to the (x[, i]) calling convention."""
-        return lambda x, *i, _fn=fn: _fn(x)
+    def _descend(self, lowered: _Lowered, ctx: _Ctx, out, valids,
+                 step: Callable) -> None:
+        """Re-anchors a child node's lowering at this node: ``step(n)`` is
+        the child (a member or a tuple position) of the node ``n``, and
+        an absent child passes.  Constraints of another scope carry their
+        own array accessor (built from the doc root at the ``items``
+        site) and stay as they are."""
+        def at(fn):
+            return lambda n, _fn=fn: _fn(step(n))
 
+        def at_pass(fn):
+            def pred(n, _fn=fn):
+                m = step(n)
+                return m.absent_passes(_fn(m))
+            return pred
+
+        for c in lowered.constraints:
+            if c.scope == ctx.scope:
+                c.pred, c.observed = at_pass(c.pred), at(c.observed)
+                if c.viol_positions is not None:
+                    # absent field → null array → plans coalesce to empty
+                    c.viol_positions = at(c.viol_positions)
+                if c.unit_positions is not None:
+                    c.unit_positions = at(c.unit_positions)
+            out.append(c)
+        valids.append(at_pass(lowered.valid))
+
+    # ------------------------------------------------------------------
     def _mk(self, ctx: _Ctx, cid: str, pred, observed) -> CompiledConstraint:
         touched = None
         if ctx.scope == "element" and ctx.dpath:
@@ -1478,6 +1631,8 @@ class Lowerer:
         rem_segs = tuple(rem.split("/")) if rem else ()
         if rem_segs and rem_segs[0] in ("required", "dependentRequired"):
             rem_segs = rem_segs[:1]  # the keyword, not the key name
+        if rem_segs == ("false",):
+            rem_segs = ()  # a false schema's location is the schema itself
         sp = ctx.spointer if ctx.spointer is not None else ctx.path
         schema_path = "/" + "/".join(
             _esc_pointer(s) for s in (*sp, *rem_segs))
@@ -1504,45 +1659,13 @@ class Lowerer:
                     f"schema at {ctx.cid()} references field {name!r} not in the "
                     f"typed table schema (fields: {sorted(fields)})"
                 )
-            child_ctx = _Ctx(dtype=fields[name], path=ctx.path + extra_path,
-                             scope=ctx.scope, dpath=ctx.dpath + (name,),
-                             elementable=ctx.elementable,
-                             array=ctx.array,
-                             array_key=ctx.array_key,
-                             spointer=_sp(ctx) + (
-                                 sp_extra if sp_extra is not None
-                                 else ("properties", name)),
-                             stageable=ctx.stageable, options=ctx.options)
-            lowered = self.lower(sub, child_ctx)
-
-            def wrap(fn, _name=name):
-                def wrapped(x, *i, _fn=fn):
-                    fx = x.getField(_name)
-                    return _fn(fx, *i)
-                return wrapped
-
-            def wrap_pass(fn, _name=name):
-                def wrapped(x, *i, _fn=fn):
-                    fx = x.getField(_name)
-                    return fx.isNull() | _fn(fx, *i)
-                return wrapped
-
-            for c in lowered.constraints:
-                # Element-scope constraints carry an absolute array accessor
-                # (built from the doc root at the `items` site) — leave them
-                # untouched.  Same-scope constraints re-anchor through this
-                # field with JSON absent≡pass semantics.
-                c.pred = wrap_pass(c.pred) if c.scope == ctx.scope else c.pred
-                c.observed = (
-                    wrap(c.observed) if c.scope == ctx.scope else c.observed
-                )
-                if c.scope == ctx.scope and c.viol_positions is not None:
-                    # absent field → null array → plans coalesce to empty
-                    c.viol_positions = wrap(c.viol_positions)
-                if c.scope == ctx.scope and c.unit_positions is not None:
-                    c.unit_positions = wrap(c.unit_positions)
-                out.append(c)
-            valids.append(wrap_pass(lowered.valid))
+            lowered = self.lower(sub, ctx.child(
+                dtype=fields[name], path=ctx.path + extra_path,
+                dpath=ctx.dpath + (name,),
+                spointer=_sp(ctx) + (sp_extra if sp_extra is not None
+                                     else ("properties", name))))
+            self._descend(lowered, ctx, out, valids,
+                          lambda n, _k=name: n.member(_k))
 
         # properties — reference ``keywords/properties.rs:13-106``
         for name, sub in schema.get("properties", {}).items():
@@ -1553,7 +1676,6 @@ class Lowerer:
         # ``pattern_properties.rs`` does it per doc).  The driver-side
         # matcher prefers Python re and falls back to the JVM dialect for
         # Java-valid/Python-invalid patterns (named groups, \\p{L}).
-        import re as _re
         for pat, sub in schema.get("patternProperties", {}).items():
             try:
                 matches = driver_regex_matcher(pat)
@@ -1572,16 +1694,16 @@ class Lowerer:
                     # typed object exists but can never carry this member:
                     # required fails for every present instance (ancestor
                     # null-passes still apply when the object is absent)
-                    pred = lambda x, *i: F.lit(False)
+                    pred = lambda n: F.lit(False)
                     out.append(self._mk(ctx, ctx.cid("required", key), pred,
-                                        lambda x, *i: F.lit("missing")))
+                                        lambda n: F.lit("missing")))
                     valids.append(pred)
                     continue
                 raise SpecError(
                     f"required key {key!r} at {ctx.cid()} not in typed schema"
                 )
-            pred = lambda x, *i, _k=key: x.getField(_k).isNotNull()
-            observed = lambda x, *i: F.lit("missing")
+            pred = lambda n, _k=key: n.c.getField(_k).isNotNull()
+            observed = lambda n: F.lit("missing")
             c_req = self._mk(ctx, ctx.cid("required", key), pred, observed)
             if ctx.scope == "element" and not ctx.dpath:
                 c_req.touched = frozenset({key})
@@ -1592,27 +1714,24 @@ class Lowerer:
         # ``keywords/dependencies.rs:204-227``
         deps, dep_schemas = dependency_keywords(schema)
         for key, reqs in deps.items():
-            def pred(x, *i, _k=key, _rs=tuple(reqs)):
+            def pred(n, _k=key, _rs=tuple(reqs)):
+                x = n.c
                 need = F.lit(True)
                 for r in _rs:
                     need = need & x.getField(r).isNotNull()
                 return x.getField(_k).isNull() | need
             out.append(self._mk(ctx, ctx.cid("dependentRequired", key), pred,
-                                lambda x, *i: F.lit("missing")))
+                                lambda n: F.lit("missing")))
             valids.append(pred)
 
         for key, sub in dep_schemas.items():
-            lowered = self.lower(
-                sub, _Ctx(dtype=dt, path=ctx.path + ("dependentSchemas", key),
-                          scope=ctx.scope, dpath=ctx.dpath,
-                          elementable=ctx.elementable, array=ctx.array,
-                          array_key=ctx.array_key,
-                          spointer=_sp(ctx) + ("dependentSchemas", key),
-                          stageable=ctx.stageable, options=ctx.options))
-            def pred(x, *i, _k=key, _v=lowered.valid):
-                return x.getField(_k).isNull() | _v(x, *i)
+            lowered = self.lower(sub, ctx.child(
+                path=ctx.path + ("dependentSchemas", key),
+                spointer=_sp(ctx) + ("dependentSchemas", key)))
+            def pred(n, _k=key, _v=lowered.valid):
+                return n.c.getField(_k).isNull() | _v(n)
             out.append(self._mk(ctx, ctx.cid("dependentSchemas", key), pred,
-                                self._lift(_obs_str(dt))))
+                                _node_obs))
             valids.append(pred)
 
         # min/maxProperties on struct = count of non-null members
@@ -1622,16 +1741,16 @@ class Lowerer:
                 cnt = cnt + x.getField(f_.name).isNotNull().cast("int")
             return cnt
         if "minProperties" in schema:
-            n = schema["minProperties"]
-            pred = lambda x, *i, _n=n: _nonnull_count(x) >= _n
+            k = schema["minProperties"]
+            pred = lambda n, _k=k: _nonnull_count(n.c) >= _k
             out.append(self._mk(ctx, ctx.cid("minProperties"), pred,
-                                lambda x, *i: _nonnull_count(x).cast("string")))
+                                lambda n: _nonnull_count(n.c).cast("string")))
             valids.append(pred)
         if "maxProperties" in schema:
-            n = schema["maxProperties"]
-            pred = lambda x, *i, _n=n: _nonnull_count(x) <= _n
+            k = schema["maxProperties"]
+            pred = lambda n, _k=k: _nonnull_count(n.c) <= _k
             out.append(self._mk(ctx, ctx.cid("maxProperties"), pred,
-                                lambda x, *i: _nonnull_count(x).cast("string")))
+                                lambda n: _nonnull_count(n.c).cast("string")))
             valids.append(pred)
 
         # propertyNames on a typed struct: static field-name check, gated on
@@ -1639,35 +1758,29 @@ class Lowerer:
         # present members, and absent ≡ NULL under the typed convention
         # (reference ``keywords/property_names.rs`` iterates actual keys).
         if "propertyNames" in schema:
-            sub = schema["propertyNames"]
             # the names are literals in the plain projection: no staged
             # lookup exists for them at element scope
-            name_ctx = _Ctx(dtype=StringType(), path=ctx.path + ("propertyNames",),
-                            scope=ctx.scope, elementable=False, array=ctx.array,
-                            array_key=ctx.array_key,
-                            spointer=_sp(ctx) + ("propertyNames",),
-                            stageable=ctx.scope == "doc" and ctx.stageable,
-                            options=ctx.options)
-            # compile the name schema, then evaluate it per static field name
-            lowered = self.lower(sub, name_ctx)
+            lowered = self.lower(schema["propertyNames"], ctx.child(
+                dtype=StringType(), path=ctx.path + ("propertyNames",),
+                dpath=(), elementable=False,
+                spointer=_sp(ctx) + ("propertyNames",),
+                stageable=ctx.scope == "doc" and ctx.stageable))
+
+            def name_ok(nm, _v=lowered.valid) -> Column:
+                return F.coalesce(_v(_TypedNode(StringType(), F.lit(nm))),
+                                  F.lit(True))
             # static evaluation happens at plan time with lit() names; emit a
             # single constraint whose pred folds the per-name results.
-            def pred(x, *i, _v=lowered.valid, _names=tuple(fields)):
+            def pred(n, _names=tuple(fields)):
                 outp = F.lit(True)
                 for nm in _names:
-                    outp = outp & (
-                        x.getField(nm).isNull()
-                        | F.coalesce(_v(F.lit(nm)), F.lit(True))
-                    )
+                    outp = outp & (n.c.getField(nm).isNull() | name_ok(nm))
                 return outp
-            def observed(x, *i, _v=lowered.valid, _names=tuple(fields)):
+            def observed(n, _names=tuple(fields)):
                 # the present member names whose name-schema failed
                 return F.concat_ws(",", *[
-                    F.when(
-                        x.getField(nm).isNotNull()
-                        & ~F.coalesce(_v(F.lit(nm)), F.lit(True)),
-                        F.lit(nm),
-                    )
+                    F.when(n.c.getField(nm).isNotNull() & ~name_ok(nm),
+                           F.lit(nm))
                     for nm in _names
                 ])
             out.append(self._mk(ctx, ctx.cid("propertyNames"), pred, observed))
@@ -1699,11 +1812,10 @@ class Lowerer:
                       if isinstance(ap, dict) else ap)
             if ap is False or ap_cmp == {"not": {}}:
                 for nm in extra_fields:
-                    pred = lambda x, *i, _k=nm: x.getField(_k).isNull()
-                    obs_f = _obs_str(fields[nm])
+                    pred = lambda n, _k=nm: n.c.getField(_k).isNull()
                     out.append(self._mk(
                         ctx, ctx.cid("additionalProperties", nm), pred,
-                        lambda x, *i, _k=nm, _o=obs_f: _o(x.getField(_k))))
+                        lambda n, _k=nm: n.member(_k).obs))
                     valids.append(pred)
             else:
                 for nm in extra_fields:
@@ -1762,19 +1874,15 @@ class Lowerer:
                     )
                 # field claimed only conditionally: the unevaluated check
                 # applies exactly when NO claimant branch applied
-                claimed = _on_node(dt, lambda n, _cs=tuple(conds):
-                                   _or_all([cf(n) for cf in _cs]))
+                def claimed(n, _cs=tuple(conds)):
+                    return _or_all([cf(n) for cf in _cs])
                 for c in out[mark_out:]:
                     if c.scope == ctx.scope:
-                        prev = c.pred
-                        c.pred = (lambda x, *i, _p=prev, _cl=claimed:
-                                  _cl(x, *i)
-                                  | F.coalesce(_p(x, *i), F.lit(True)))
+                        c.pred = (lambda n, _p=c.pred, _cl=claimed: _cl(n)
+                                  | F.coalesce(_p(n), F.lit(True)))
                 for vi in range(mark_val, len(valids)):
-                    prev_v = valids[vi]
-                    valids[vi] = (lambda x, *i, _p=prev_v, _cl=claimed:
-                                  _cl(x, *i)
-                                  | F.coalesce(_p(x, *i), F.lit(True)))
+                    valids[vi] = (lambda n, _p=valids[vi], _cl=claimed:
+                                  _cl(n) | F.coalesce(_p(n), F.lit(True)))
 
     # ------------------------------------------------------------------
     def _lower_map_properties(self, schema, ctx: _Ctx, emit) -> None:
@@ -1784,202 +1892,180 @@ class Lowerer:
         here; at element scope a map value has no staged lookup."""
         dt: MapType = ctx.dtype
         for name, sub in schema.get("properties", {}).items():
-            lowered = self.lower(
-                sub, _Ctx(dtype=dt.valueType, path=ctx.path + (name,),
-                          scope=ctx.scope, elementable=False, array=ctx.array,
-                          array_key=ctx.array_key,
-                          spointer=_sp(ctx) + ("properties", name),
-                          stageable=ctx.scope == "doc" and ctx.stageable,
-                          options=ctx.options))
+            lowered = self.lower(sub, ctx.child(
+                dtype=dt.valueType, path=ctx.path + (name,), dpath=(),
+                elementable=False, spointer=_sp(ctx) + ("properties", name),
+                stageable=ctx.scope == "doc" and ctx.stageable))
             emit(ctx.cid(name),
-                 self._lift(lambda x, _k=name, _v=lowered.valid:
-                            ~F.map_contains_key(x, F.lit(_k))
-                            | _v(F.element_at(x, F.lit(_k)))),
-                 self._lift(lambda x, _k=name:
-                            F.element_at(x, F.lit(_k)).cast("string")))
+                 lambda n, _k=name, _v=lowered.valid:
+                 ~F.map_contains_key(n.c, F.lit(_k))
+                 | _v(_TypedNode(dt.valueType, F.element_at(n.c, F.lit(_k)))),
+                 lambda n, _k=name:
+                 F.element_at(n.c, F.lit(_k)).cast("string"))
 
     # ------------------------------------------------------------------
-    def _lower_array(self, schema, ctx: _Ctx, out, valids, emit) -> None:
-        dt: ArrayType = ctx.dtype
-        elem_dt = dt.elementType
-
-        # tuple forms: prefixItems (2020-12) / items: [..] (draft 4-2019)
+    def _lower_items(self, schema, ctx: _Ctx, out, valids, emit) -> None:
+        """The items family: the tuple form — ``prefixItems`` (2020-12) or
+        the array form of ``items`` (drafts 4-2019), each position named
+        by the keyword declared — and the rest: ``items`` after
+        ``prefixItems`` or alone, ``additionalItems`` after tuple
+        ``items``."""
         draft = ctx.options.draft
-        tuple_schemas = None
+        tuple_kw, rest_kw = None, "items"
         if isinstance(schema.get("prefixItems"), list):
             if draft in (4, 6, 7, 2019):
                 raise SpecError(
                     f"prefixItems at {ctx.cid()} is a 2020-12 keyword; "
                     f"draft {draft} uses the array form of items"
                 )
-            tuple_schemas = schema["prefixItems"]
-            tail_kw = "items"
+            tuple_kw = "prefixItems"
         elif isinstance(schema.get("items"), list):
             if draft == 2020:
                 raise SpecError(
                     f"array-form items at {ctx.cid()} was removed in "
                     "2020-12; use prefixItems"
                 )
-            tuple_schemas = schema["items"]
-            tail_kw = "additionalItems"
-        if tuple_schemas is not None:
-            for p, sub in enumerate(tuple_schemas):
-                self._emit_items(sub, ctx, elem_dt, out, valids,
-                                 path_suffix=("prefixItems", str(p)),
-                                 index_gate=("eq", p))
-            tail = schema.get(tail_kw)
-            if isinstance(tail, (dict, bool)) and tail is not True:
-                self._emit_items(tail, ctx, elem_dt, out, valids,
-                                 path_suffix=(tail_kw,),
-                                 index_gate=("ge", len(tuple_schemas)))
-        elif isinstance(schema.get("items"), (dict, bool)) and schema["items"] is not True:
+            tuple_kw, rest_kw = "items", "additionalItems"
+        prefix = schema[tuple_kw] if tuple_kw else []
+        for p, sub in enumerate(prefix):
+            self._emit_items(sub, ctx, out, valids, emit,
+                             (tuple_kw, str(p)), ("eq", p))
+        rest = schema.get(rest_kw)
+        if isinstance(rest, (dict, bool)):
             # object-form items — reference ``keywords/items.rs:186-206``
-            self._emit_items(schema["items"], ctx, elem_dt, out, valids,
-                             path_suffix=("items",), index_gate=None)
+            self._emit_items(rest, ctx, out, valids, emit, (rest_kw,),
+                             ("ge", len(prefix)) if tuple_kw else None)
 
-        # unevaluatedItems (reference tracks evaluated positions via runtime
-        # annotations, ``unevaluated_items.rs``).  ``claim_sources`` records
-        # with no terms and no claim-keyword subset resolve statically;
-        # the rest gate on runtime validity — an element position counts
-        # as evaluated only when the source that claims it applied.  The
-        # gated path is one node-level HOF check (rare corner;
-        # per-position attribution is kept on the common static path).
-        if isinstance(schema.get("unevaluatedItems"), (dict, bool)):
-            sub = self._sub(ctx)
-            gated = claim_gates(schema, "items", sub)
-            # 2020-12: a `contains` claims the items it MATCHES — an
-            # element-level runtime claim, handled on the gated path
-            has_contains = any(s.contains is not None for _, s in gated)
-            static = [s for g, s in gated if g is None]
-            soft = [s for g, s in gated if g is not None and not s.terms]
+    def _lower_unevaluated_items(self, schema, ctx: _Ctx, out, valids,
+                                 emit) -> None:
+        """``unevaluatedItems`` (reference tracks evaluated positions via
+        runtime annotations, ``unevaluated_items.rs``).  ``claim_sources``
+        records with no terms and no claim-keyword subset resolve
+        statically; the rest gate on runtime validity — an element
+        position counts as evaluated only when the source that claims it
+        applied.  The gated path is one node-level HOF check (rare corner;
+        per-position attribution is kept on the common static path)."""
+        ue = schema.get("unevaluatedItems")
+        if not isinstance(ue, (dict, bool)):
+            return
+        sub = self._sub(ctx)
+        gated = claim_gates(schema, "items", sub)
+        # 2020-12: a `contains` claims the items it MATCHES — an
+        # element-level runtime claim, handled on the gated path
+        has_contains = any(s.contains is not None for _, s in gated)
+        static = [s for g, s in gated if g is None]
+        soft = [s for g, s in gated if g is not None and not s.terms]
 
-            def extent(ss):
-                return (max([s.n_prefix for s in ss], default=0),
-                        any(s.claims_all for s in ss))
+        def extent(ss):
+            return (max([s.n_prefix for s in ss], default=0),
+                    any(s.claims_all for s in ss))
 
-            # every branch source gates at runtime: it may claim a
-            # position whose node or allOf source failed its subset gate
-            has_branch_conds = any(s.terms for _, s in gated)
-            n_static, static_all = extent(static)
-            n_soft, soft_all = extent(soft)
-            if static_all:
-                pass  # unconditionally all claimed: nothing unevaluated
-            elif not soft and not has_branch_conds and not has_contains:
-                # no conditional sources: static per-position attribution
-                self._emit_items(
-                    schema["unevaluatedItems"], ctx, elem_dt, out, valids,
-                    path_suffix=("unevaluatedItems",),
-                    index_gate=("ge", n_static) if n_static else None)
-            else:
-                # round-5 split: when the only runtime sources are gated
-                # PREFIX claims (no branch conds, no contains, no gated
-                # claims-all), positions past every potentially-claimed
-                # prefix keep the rich static per-position attribution;
-                # only the prefix window goes through the gated check
-                upper = None
-                if soft and not soft_all and not has_branch_conds \
-                        and not has_contains:
-                    upper = max(n_static, n_soft)
-                    self._emit_items(
-                        schema["unevaluatedItems"], ctx, elem_dt, out,
-                        valids, path_suffix=("unevaluatedItems",),
-                        index_gate=("ge", upper))
-                bind, claimed_at = item_claims(gated, sub)
-                ue_ok = sub(schema["unevaluatedItems"], ("unevaluatedItems",),
-                            "child", True)
+        # every branch source gates at runtime: it may claim a position
+        # whose node or allOf source failed its subset gate
+        has_branch_conds = any(s.terms for _, s in gated)
+        n_static, static_all = extent(static)
+        n_soft, soft_all = extent(soft)
+        if static_all:
+            return  # unconditionally all claimed: nothing unevaluated
+        if not soft and not has_branch_conds and not has_contains:
+            # no conditional sources: static per-position attribution
+            self._emit_items(ue, ctx, out, valids, emit,
+                             ("unevaluatedItems",),
+                             ("ge", n_static) if n_static else None)
+            return
+        # round-5 split: when the only runtime sources are gated PREFIX
+        # claims (no branch conds, no contains, no gated claims-all),
+        # positions past every potentially-claimed prefix keep the rich
+        # static per-position attribution; only the prefix window goes
+        # through the gated check
+        upper = None
+        if soft and not soft_all and not has_branch_conds \
+                and not has_contains:
+            upper = max(n_static, n_soft)
+            self._emit_items(ue, ctx, out, valids, emit,
+                             ("unevaluatedItems",), ("ge", upper))
+        bind, claimed_at = item_claims(gated, sub)
+        ue_ok = sub(ue, ("unevaluatedItems",), "child", True)
 
-                def _gated_cells(x, mk, _ok=ue_ok):
-                    """One per-position value via ``mk(ok, e, i)`` under the
-                    SHARED gated claim math — the node-level pred and the
-                    per-position rows must never drift apart.
+        def _gated_cells(n, mk):
+            """One per-position value via ``mk(ok, e, i)`` under the
+            SHARED gated claim math — the node-level pred and the
+            per-position rows must never drift apart.
 
-                    The branch-validity bounds bind ONCE as a lambda
-                    variable (single-element transform — the word_shingles
-                    trick): referencing the bounds inside the
-                    per-element lambda would re-validate every branch per
-                    element in Spark's interpreted HOF path (O(n²)/row)."""
-                    bound = F.struct(*bind(_TypedNode(dt, x)))
+            The branch-validity bounds bind ONCE as a lambda variable
+            (single-element transform — the word_shingles trick):
+            referencing the bounds inside the per-element lambda would
+            re-validate every branch per element in Spark's interpreted
+            HOF path (O(n²)/row)."""
+            bound = F.struct(*bind(n))
 
-                    def cell_ok(b, e, i):
-                        el = _TypedNode(elem_dt, e)
-                        claimed = claimed_at(b, el, i)
-                        if upper is not None:
-                            # positions >= upper are handled by the static
-                            # per-position check above (round-5 split)
-                            claimed = claimed | (i >= F.lit(upper))
-                        return claimed | _ok(el)
+            def cell_ok(b, e, i):
+                el = n.child(e)
+                claimed = claimed_at(b, el, i)
+                if upper is not None:
+                    # positions >= upper are handled by the static
+                    # per-position check above (round-5 split)
+                    claimed = claimed | (i >= F.lit(upper))
+                return claimed | ue_ok(el)
 
-                    return F.element_at(
-                        F.transform(
-                            F.array(bound),
-                            lambda b: F.transform(
-                                x, lambda e, i: mk(cell_ok(b, e, i), e, i)),
-                        ),
-                        1,
-                    )
+            return F.element_at(
+                F.transform(F.array(bound), lambda b: F.transform(
+                    n.arr, lambda e, i: mk(cell_ok(b, e, i), e, i))),
+                1)
 
-                def _cells(x):
-                    return _gated_cells(x, lambda ok, e, i: ok)
+        def _cells(n):
+            return _gated_cells(n, lambda ok, e, i: ok)
 
-                emit(ctx.cid("unevaluatedItems"),
-                     self._lift(lambda x: F.coalesce(
-                         F.forall(_cells(x), lambda b: b), F.lit(True))),
-                     self._lift(lambda x: F.size(
-                         F.filter(_cells(x), lambda b: ~b)).cast("string")))
+        emit(ctx.cid("unevaluatedItems"),
+             lambda n: n.gate(_ARRAY, n.passes(
+                 F.forall(_cells(n), lambda b: b))),
+             lambda n: n.render(lambda m: F.size(
+                 F.filter(_cells(m), lambda b: ~b)).cast("string")))
 
-                # per-position violation rows (round 4): same gated cell
-                # math, emitting (pos, observed) structs for FAILING
-                # positions instead of one node-level count row
-                obs_e = _obs_str(elem_dt)
+        # per-position violation rows (round 4): same gated cell math,
+        # emitting (pos, observed) structs for FAILING positions instead
+        # of one node-level count row; typed plans only
+        def _pos_structs(n):
+            structs = _gated_cells(n, lambda ok, e, i: F.when(~ok, F.struct(
+                i.cast("int").alias("pos"),
+                n.child(e).obs.cast("string").alias("obs"))))
+            return F.filter(structs, lambda v: v.isNotNull())
 
-                def _pos_structs(x, _obs=obs_e):
-                    structs = _gated_cells(
-                        x,
-                        lambda ok, e, i: F.when(
-                            ~ok,
-                            F.struct(
-                                i.cast("int").alias("pos"),
-                                _obs(e).cast("string").alias("obs"),
-                            ),
-                        ),
-                    )
-                    return F.filter(structs, lambda v: v.isNotNull())
+        def _unit_structs(n):
+            # BOTH-polarity per-position units (annotation stream)
+            return _gated_cells(n, lambda ok, e, i: F.struct(
+                i.cast("int").alias("pos"), ok.alias("ok"),
+                n.child(e).obs.cast("string").alias("obs")))
 
-                def _unit_structs(x, _obs=obs_e):
-                    # BOTH-polarity per-position units (annotation stream)
-                    return _gated_cells(
-                        x,
-                        lambda ok, e, i: F.struct(
-                            i.cast("int").alias("pos"),
-                            ok.alias("ok"),
-                            _obs(e).cast("string").alias("obs"),
-                        ),
-                    )
+        out[-1].viol_positions = _pos_structs
+        out[-1].unit_positions = _unit_structs
 
-                out[-1].viol_positions = self._lift(_pos_structs)
-                out[-1].unit_positions = self._lift(_unit_structs)
+    def _emit_items(self, sub, ctx: _Ctx, out, valids, emit, path_suffix,
+                    index_gate) -> None:
+        """Lower an element subschema: at the tuple position ``("eq",
+        p)``, or at every position from ``("ge", n)`` on (None: all).
 
-    def _emit_items(self, sub, ctx: _Ctx, elem_dt, out, valids,
-                    path_suffix, index_gate) -> None:
-        """Lower an element subschema.
-
-        At doc scope over a doc-rooted array this produces *element-scope*
-        constraints (per-element violation rows with span_index, evaluated
-        inside one fused ``transform`` — the explode happens once, at
-        violation-emission time only).  Deeper nesting collapses into a
-        ``forall`` on the node's validity (no per-element attribution).
+        At doc scope over a doc-rooted typed array this produces
+        *element-scope* constraints (per-element violation rows with
+        span_index, evaluated inside one fused ``transform`` — the explode
+        happens once, at violation-emission time only).  Elsewhere, and
+        on every JSON node, a tuple position descends like a member, and
+        the rest collapses into a ``forall`` on the node's validity (no
+        per-element attribution).
         """
+        if sub is True or sub == {}:
+            return
         if ctx.scope == "doc" and ctx.elementable:
             # element scope: array accessor follows the pure field path
             # from the doc root (dpath), independent of combinator nesting
-            arr_path = ctx.dpath
-            elem_ctx = _Ctx(
+            elem_dt = ctx.dtype.elementType
+            lowered = self.lower(sub, ctx.child(
                 dtype=elem_dt, path=ctx.path + path_suffix, scope="element",
-                array=self._array_accessor(arr_path), array_key=arr_path,
-                spointer=_sp(ctx) + path_suffix,
-                stageable=True, options=self.options)
-            lowered = self.lower(sub, elem_ctx)
+                dpath=(), elementable=True,
+                array=self._array_accessor(ctx.dpath), array_key=ctx.dpath,
+                spointer=_sp(ctx) + path_suffix, stageable=True))
             for c in lowered.constraints:
+                _leave_walk(c, elem_dt)
                 if index_gate is not None:
                     prev = c.pred
                     kind, n = index_gate
@@ -1989,44 +2075,40 @@ class Lowerer:
                         c.pred = lambda x, i, _p=prev, _n=n: (i < _n) | _p(x, i)
                     c.index_gate = index_gate
                 out.append(c)
+
             # node-level validity for combinators / verdict fast path
-            def arr_valid(x: Column, *_, _v=lowered.valid,
-                          _gate=index_gate) -> Column:
+            def arr_valid(n, _v=lowered.valid, _gate=index_gate) -> Column:
                 def body(e, i):
-                    ok = F.coalesce(_v(e, i), F.lit(True))
+                    ok = F.coalesce(_v(_TypedNode(elem_dt, e, (i,))),
+                                    F.lit(True))
                     if _gate is not None:
-                        kind, n = _gate
-                        gate_c = (i == n) if kind == "eq" else (i >= n)
+                        kind, k = _gate
+                        gate_c = (i == k) if kind == "eq" else (i >= k)
                         ok = ~gate_c | ok
                     return ok
                 return F.coalesce(
-                    F.forall(F.transform(x, lambda e, i: body(e, i)),
+                    F.forall(F.transform(n.c, lambda e, i: body(e, i)),
                              lambda b: b),
                     F.lit(True))
             valids.append(arr_valid)
+        elif index_gate is not None and index_gate[0] == "eq":
+            # a tuple position: element_at, no lambda, so a doc-scope
+            # python leaf is legal here; at element scope it has no
+            # staged lookup
+            p = index_gate[1]
+            self._descend(self.lower(sub, ctx.child(
+                dtype=self._node(ctx.dtype).child(None).dt,
+                path=ctx.path + path_suffix, elementable=False,
+                spointer=_sp(ctx) + path_suffix,
+                stageable=ctx.scope == "doc" and ctx.stageable)),
+                ctx, out, valids, lambda n: n.item(p))
         else:
-            # nested array inside an element: collapse to forall
+            # the rest of a nested array collapses into one forall
             valid = self._sub(ctx)(sub, path_suffix, "child", True)
-
-            # the positional gate must survive the collapse: a prefixItems
-            # subschema inside a combinator branch applies to ITS position
-            # only, not every element (round-3 fix — the ungated forall made
-            # anyOf-of-prefixItems branches reject valid arrays)
-            def pred(x, *i, _v=valid, _gate=index_gate):
-                def body(e, j):
-                    ok = _v(_TypedNode(elem_dt, e))
-                    if _gate is not None:
-                        kind, n = _gate
-                        gate_c = (j == n) if kind == "eq" else (j >= n)
-                        ok = ~gate_c | ok
-                    return ok
-                return F.coalesce(
-                    F.forall(F.transform(x, body), lambda b: b),
-                    F.lit(True))
-
-            out.append(self._mk(ctx, ctx.cid(*path_suffix), pred,
-                                self._lift(lambda x: F.size(x).cast("string"))))
-            valids.append(pred)
+            start = index_gate[1] if index_gate else 0
+            emit(ctx.cid(*path_suffix),
+                 lambda n: n.gate(_ARRAY, n.all_items(sub, start, valid)),
+                 lambda n: n.render(lambda m: F.size(m.arr).cast("string")))
 
     @staticmethod
     def _array_accessor(path: tuple[str, ...]) -> Callable[[Column], Column]:
@@ -2041,76 +2123,64 @@ class Lowerer:
     def _lower_all_of(self, schema, ctx: _Ctx, out, valids) -> None:
         # allOf — pass children through (reference ``all_of.rs:37``)
         for idx, sub in enumerate(schema.get("allOf", [])):
-            lowered = self.lower(sub, _Ctx(
-                dtype=ctx.dtype, path=ctx.path + ("allOf", str(idx)),
-                scope=ctx.scope, dpath=ctx.dpath, elementable=ctx.elementable,
-                array=ctx.array, array_key=ctx.array_key,
-                spointer=_sp(ctx) + ("allOf", str(idx)),
-                stageable=ctx.stageable, options=ctx.options))
+            segs = ("allOf", str(idx))
+            lowered = self.lower(sub, ctx.child(
+                path=ctx.path + segs, spointer=_sp(ctx) + segs))
             out.extend(lowered.constraints)
             valids.append(lowered.valid)
 
     def _lower_if(self, schema, ctx: _Ctx, out, valids) -> None:
-        obs = _obs_str(ctx.dtype)
-
         # if/then/else — reference pre-fused variants ``if_.rs:183-202``.
         # Same-scope children keep per-constraint identity with a gated pred;
         # cross-scope children collapse into a node-level constraint.
-        if "if" in schema and ("then" in schema or "else" in schema):
-            cond_lowered = self.lower(schema["if"], _Ctx(
-                dtype=ctx.dtype, path=ctx.path + ("if",), scope=ctx.scope,
-                dpath=ctx.dpath, elementable=False,
-                array=ctx.array, array_key=ctx.array_key,
-                spointer=_sp(ctx) + ("if",),
-                stageable=ctx.stageable, options=ctx.options))
-            cond = cond_lowered.valid
-            cond_touched = frozenset()
-            for cc in cond_lowered.constraints:
-                if cc.touched is None:
-                    cond_touched = None
-                    break
-                cond_touched = cond_touched | cc.touched
+        if "if" not in schema or ("then" not in schema
+                                  and "else" not in schema):
+            return
+        cond_lowered = self.lower(schema["if"], ctx.child(
+            path=ctx.path + ("if",), elementable=False,
+            spointer=_sp(ctx) + ("if",)))
+        cond = cond_lowered.valid
+        cond_touched = frozenset()
+        for cc in cond_lowered.constraints:
+            if cc.touched is None:
+                cond_touched = None
+                break
+            cond_touched = cond_touched | cc.touched
 
-            def gate(branch_schema, branch_name, polarity):
-                lowered = self.lower(branch_schema, _Ctx(
-                    dtype=ctx.dtype, path=ctx.path + (branch_name,),
-                    scope=ctx.scope, dpath=ctx.dpath,
-                    elementable=ctx.elementable,
-                    array=ctx.array, array_key=ctx.array_key,
-                    spointer=_sp(ctx) + (branch_name,),
-                    stageable=ctx.stageable, options=ctx.options))
-                same = all(c.scope == ctx.scope for c in lowered.constraints)
-                def gated_c(cond_v, *a):
-                    g = F.coalesce(cond_v, F.lit(False))
-                    return g if polarity else ~g
-                if same:
-                    for c in lowered.constraints:
-                        prev = c.pred
-                        # the gated pred can't gate a per-position row
-                        # builder — fall back to the node-level row
-                        c.viol_positions = None
-                        c.unit_positions = None
-                        c.pred = (lambda *a, _p=prev:
-                                  ~gated_c(cond(*a), *a) | F.coalesce(_p(*a), F.lit(True)))
-                        # the gated pred now also reads the if-condition's
-                        # fields
-                        if c.touched is not None:
-                            c.touched = (None if cond_touched is None
-                                         else c.touched | cond_touched)
-                        out.append(c)
-                        valids.append(c.pred)
-                else:
-                    pred = (lambda *a, _v=lowered.valid:
-                            ~gated_c(cond(*a), *a)
-                            | F.coalesce(_v(*a), F.lit(True)))
-                    out.append(self._mk(ctx, ctx.cid(branch_name), pred,
-                                        self._lift(obs)))
-                    valids.append(pred)
+        def gate(branch_name, polarity):
+            lowered = self.lower(schema[branch_name], ctx.child(
+                path=ctx.path + (branch_name,),
+                spointer=_sp(ctx) + (branch_name,)))
 
-            if "then" in schema:
-                gate(schema["then"], "then", True)
-            if "else" in schema:
-                gate(schema["else"], "else", False)
+            def applies(n):
+                g = F.coalesce(cond(n), F.lit(False))
+                return g if polarity else ~g
+            if all(c.scope == ctx.scope for c in lowered.constraints):
+                for c in lowered.constraints:
+                    # the gated pred can't gate a per-position row
+                    # builder — fall back to the node-level row
+                    c.viol_positions = None
+                    c.unit_positions = None
+                    c.pred = (lambda n, _p=c.pred: ~applies(n)
+                              | F.coalesce(_p(n), F.lit(True)))
+                    # the gated pred now also reads the if-condition's
+                    # fields
+                    if c.touched is not None:
+                        c.touched = (None if cond_touched is None
+                                     else c.touched | cond_touched)
+                    out.append(c)
+                    valids.append(c.pred)
+            else:
+                pred = (lambda n, _v=lowered.valid: ~applies(n)
+                        | F.coalesce(_v(n), F.lit(True)))
+                out.append(self._mk(ctx, ctx.cid(branch_name), pred,
+                                    _node_obs))
+                valids.append(pred)
+
+        if "then" in schema:
+            gate("then", True)
+        if "else" in schema:
+            gate("else", False)
 
 
 # --------------------------------------------------------------------------

@@ -11,18 +11,15 @@ gated on the tag so Spark's lenient coercions (number→string) can never
 leak a wrong-typed value into a check, ``map<string,variant>`` /
 ``array<variant>`` casts + higher-order functions for objects and arrays.
 
-Keyword decisions are shared with the typed engine, not repeated here:
-:func:`compiler.prepare_spec` is the spec front end of both paths (draft,
-format-assertion default, meta-validation, ``$ref`` inlining, and the
-draft's keyword vocabulary); :func:`compiler.scalar_checks` lowers the
-scalar keywords, :func:`compiler.object_checks`,
-:func:`compiler.array_checks` and :func:`compiler.logic_checks` the
-object, array and combinator keywords, and :func:`compiler.claim_gates`
-folds the ``unevaluated*`` claim sources, for both paths, over
-:class:`JV`/:class:`SJV` nodes here.  This module keeps the walk itself
-and the keywords whose typed form differs: ``properties``, the items
-family, ``allOf``, ``if``/``then``/``else`` and the ``unevaluatedItems``
-consumer.
+The schema walk is not repeated here: :func:`compiler.prepare_spec` is
+the spec front end of both paths (draft, format-assertion default,
+meta-validation, ``$ref`` inlining, and the draft's keyword vocabulary),
+and :class:`compiler.Lowerer` is the one walk, here over :class:`JV`
+nodes (``Lowerer(VariantType(), options)``).  This module keeps the JSON
+node itself: its value primitives (type tags, bound compares, JSON
+equality, ``uniqueItems`` canon), its side of the walk protocol (member
+and position nodes, the NULL rule of a check, the observed rendering,
+the element node of a ``forall``), and the run-time binding below.
 
 Scale notes: the whole validation is ONE projection over ONE parse per
 document — no shuffle, no Python in the hot path (the only Python-backed
@@ -43,10 +40,10 @@ element inside the items lambda (both entry points).  The flagship plan
 went from 372 ``schemaOfVariant`` calls to 8, one per node, and the
 smaller expression also analyses faster at build time.  Every derived
 Column of a node is still memoised on it (:class:`JV`), so each is built
-once over py4j.  NULL is guarded once per cell, in ``emit``: a cell is
-never NULL, so validity is the bare conjunction of the cells and is
-built only where it is read (combinators, claim gates, HOF lambdas,
-verdicts).
+once over py4j.  NULL is guarded once per check (:meth:`JV.checked`): a
+check is never NULL, so validity is the bare conjunction of the checks
+and is built only where it is read (combinators, claim gates, HOF
+lambdas, verdicts).
 
 ``unevaluatedProperties``/``unevaluatedItems`` lower natively (round 5):
 in expression land the 2020-12 annotation algebra — claims count only
@@ -69,20 +66,13 @@ from typing import Any, NamedTuple, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, VariantType
 
-from jsonschema_rs_spark.compiler import (_ARRAY, _and_all, _as_double,
-                                          _multiple_of_decimal, _or_all,
-                                          array_checks, claim_gates,
-                                          item_claims, logic_checks,
-                                          object_checks,
-                                          prepare_spec, scalar_checks)
+from jsonschema_rs_spark.compiler import (JsonIngestUnsupported, Lowerer,
+                                          _as_double, _multiple_of_decimal,
+                                          _or_all, _TypedNode, prepare_spec)
 from jsonschema_rs_spark.functions.ecma import ecma_to_java
 from jsonschema_rs_spark.spec import SpecError
-
-
-class JsonIngestUnsupported(ValueError):
-    """Schema uses a construct the variant lowering cannot express; the
-    caller should fall back to the typed-table engine."""
 
 
 def _null_str() -> Column:
@@ -279,8 +269,8 @@ class JV:
     def child(self, col: Column) -> "JV":
         return JV(col)
 
-    def name(self, col: Column) -> "JV":
-        return SJV(col)
+    def name(self, col: Column) -> _TypedNode:
+        return _TypedNode(StringType(), col)
 
     def unique(self) -> Column:
         canon = F.transform(self.arr, lambda el: _canon(JV(el)))
@@ -312,31 +302,37 @@ class JV:
                           self.ndec % F.lit(Decimal(q)) == 0).otherwise(flt)
         return flt
 
+    # -- walk protocol of compiler.Lowerer ---------------------------------
 
-class SJV(JV):
-    """A plain STRING treated as a JSON instance (propertyNames applies
-    subschemas to each member NAME).  Its variant is NULL, so every
-    non-string extraction is NULL."""
+    dt = VariantType()
 
-    def __init__(self, s: Column):
-        super().__init__(F.lit(None).cast("variant"))
-        self.s = self.obs = s
+    def item(self, p: int) -> "JV":
+        return JV(F.try_element_at(self.arr, F.lit(p + 1)))
 
-    def is_(self, *names: str) -> Column:
-        return F.lit("string" in names)
+    def checked(self, p: Column) -> Column:
+        """An absent node passes every keyword (presence is the parent's
+        concern, via required/dependencies); a NULL check on a present
+        node fails.  The one NULL guard of the variant path."""
+        return self.absent | F.coalesce(p, F.lit(False))
 
-    def can_be(self, *names: str) -> bool:
-        return "string" in names
+    def passes(self, valid: Column) -> Column:
+        return valid  # never NULL: each check is guarded
 
-    def gate(self, names, p: Column) -> Column:
-        return p  # a name is always a string
+    def absent_passes(self, p: Column) -> Column:
+        return p  # the member's own checks pass it when absent
 
-    def type_is(self, name: str, draft) -> Column:
-        return F.lit(name == "string")
+    def render(self, observed) -> Column:
+        return self.obs  # the variant path renders the node itself
 
-    @cached_property
-    def absent(self) -> Column:
-        return self.s.isNull()
+    def all_items(self, schema: Any, start: int, valid) -> Column:
+        """``valid`` holds for every item from ``start`` on: each item's
+        costly values are bound once (:class:`_Binder`), then ``valid``
+        runs over the bound structs."""
+        arr = (F.slice(self.arr, start + 1, F.size(self.arr)) if start
+               else self.arr)
+        b = _Binder(_needs([schema]), "el")
+        return F.forall(b.transform(arr),
+                        lambda x: valid(b.node(b.reader(x))))
 
 
 def _java_pattern(pat: str, where: str) -> str:
@@ -549,188 +545,6 @@ class _Binder:
 
 
 # --------------------------------------------------------------------------
-# keyword lowering over a variant node
-# --------------------------------------------------------------------------
-
-class _JsonLowerer:
-    """Walks a RESOLVED spec over a variant node and emits ``cells`` =
-    [(constraint_id, pred, observed)] for the violations stream
-    (conjunctive scopes only — combinator branches collapse into one
-    cell, reference basic-output granularity for failed branches).  A
-    cell is never NULL and passes when its node is absent, so a node's
-    full validity (:meth:`valid`, read by combinators, claim gates, HOF
-    lambdas and verdicts) is just the conjunction of its cells.
-
-    The structural walk mirrors the typed engine's ``_Lowered`` contract
-    (compiler.py) but the instance domain is JSON-via-variant, so absent /
-    JSON-null / wrong-type distinctions are native instead of
-    typed-column approximations.  The spec arrives from
-    :func:`compiler.prepare_spec`, so it holds only keywords its draft
-    defines.  The scalar, object, array and combinator keywords come from
-    the shared ``compiler`` lowerings (``scalar_checks``,
-    ``object_checks``, ``array_checks``, ``logic_checks``), which reach
-    subschemas through the ``sub`` hook of :meth:`lower`; the draft is
-    read only for keyword forms (tuple ``items``)."""
-
-    def __init__(self, options):
-        self.options = options
-
-    def _py_leaf(self, where: str, in_lambda: bool):
-        """``scalar_checks`` hook for Python-backed leaves: a pandas-UDF
-        format runs in the plain projection; inside an array/map lambda
-        it has no evaluation site, and an untranslatable pattern has no
-        Python fallback on this path."""
-        def leaf(py_fn, udf_builder, what):
-            if what == "pattern":
-                raise JsonIngestUnsupported(
-                    f"pattern at {where} does not compile in "
-                    "java.util.regex (no Python fallback on the variant "
-                    "path)")
-            if in_lambda:
-                raise JsonIngestUnsupported(
-                    f"{what} is pandas-UDF-backed and cannot run inside "
-                    "an array/map lambda on the variant path")
-            return lambda n: udf_builder(n.s)
-        return leaf
-
-    def valid(self, schema: Any, jv, path: tuple[str, ...],
-              in_lambda: bool = True) -> Column:
-        """Full validity of ``schema`` at ``jv``; ``in_lambda`` defaults
-        to the HOF-lambda rules (no pandas-UDF formats)."""
-        return _and_all([p for _, p, _ in
-                         self.lower(schema, jv, path, in_lambda)])
-
-    def lower(self, schema: Any, jv, path: tuple[str, ...],
-              in_lambda: bool = False) -> list:
-        cells: list[tuple[str, Column, Column]] = []
-        if schema is True or schema == {}:
-            return cells
-        if schema is False:
-            cells.append(("/".join(path) or "false", jv.absent, jv.obs))
-            return cells
-        if not isinstance(schema, dict):
-            raise SpecError(f"schema must be dict/bool, got {schema!r}")
-        custom = sorted(set(schema) & set(self.options.custom_keywords))
-        if custom:
-            raise JsonIngestUnsupported(
-                f"custom keyword(s) {custom} at {'/'.join(path) or '#'}: "
-                "custom keyword factories build typed-column predicates "
-                "and have no variant lowering")
-
-        def emit(kw_path: tuple[str, ...], pred: Column,
-                 obs: Optional[Column] = None):
-            # absent node passes every keyword (presence is the parent's
-            # concern via required/dependencies); the one NULL guard
-            cells.append(("/".join(kw_path),
-                          jv.absent | F.coalesce(pred, F.lit(False)),
-                          jv.obs if obs is None else obs))
-
-        def sub(s, segs, at, lam):
-            # one Column per node: claim gates share their branch terms
-            memo: dict = {}
-
-            def valid(n):
-                if id(n) not in memo:
-                    memo[id(n)] = (n, self.valid(s, n, path + segs,
-                                                 in_lambda or lam))
-                return memo[id(n)][1]
-            return valid
-
-        def emit_checks(checks):
-            for chk in checks:
-                o = chk.observed
-                emit(path + chk.segs, chk.pred(jv),
-                     F.lit(o) if isinstance(o, str) else None)
-
-        where = "/".join(path)
-        for chk in scalar_checks(schema, jv, self.options, where,
-                                 self._py_leaf(where, in_lambda)):
-            emit(path + (chk.keyword,), chk.pred(jv))
-        for k, s in (schema.get("properties") or {}).items():
-            # no object re-gate: ``m`` is NULL for a non-object, so every
-            # member is absent and its cells pass
-            cells.extend(self.lower(s, jv.member(k), path + (k,),
-                                    in_lambda))
-        emit_checks(object_checks(schema, jv, sub, where))
-        self._items(schema, jv, path, emit, cells, in_lambda)
-        emit_checks(array_checks(schema, sub))
-        self._unevaluated_items(schema, jv, path, emit, sub)
-
-        # ---- combinators -------------------------------------------------
-        if "allOf" in schema:
-            for i, s in enumerate(schema["allOf"]):
-                cells.extend(self.lower(s, jv, path + ("allOf", str(i)),
-                                        in_lambda))
-        emit_checks(logic_checks(schema, sub))
-        if "if" in schema:
-            def branch(kw):
-                return (sub(schema[kw], (kw,), None, False)(jv)
-                        if kw in schema else F.lit(True))
-            emit(path + ("if",), F.when(branch("if"), branch("then"))
-                 .otherwise(branch("else")))
-        return cells
-
-    # -- array keywords ----------------------------------------------------
-
-    def _items(self, schema, jv, path, emit, cells, in_lambda):
-        """The items family: tuple and rest forms per draft (mirrors
-        compiler._lower_array)."""
-        items = schema.get("items")
-        prefix: list = []
-        rest = None
-        rest_kw = "items"
-        draft = self.options.draft
-        if draft == 2020 or (draft is None and "prefixItems" in schema):
-            prefix = schema.get("prefixItems") or []
-            rest = items
-        elif isinstance(items, list):
-            prefix = items
-            rest = schema.get("additionalItems")
-            rest_kw = "additionalItems"
-        else:
-            rest = items
-        for j, s in enumerate(prefix):
-            # no array re-gate: the array cast is NULL for a non-array,
-            # so every element is absent and its cells pass
-            cells.extend(self.lower(
-                s, JV(F.try_element_at(jv.arr, F.lit(j + 1))),
-                path + ("items", str(j)), in_lambda))
-        n_pre = len(prefix)
-        if rest is False:
-            emit(path + (rest_kw,),
-                 jv.gate(_ARRAY, F.size(jv.arr) <= n_pre))
-        elif isinstance(rest, dict) and rest:
-            # each element's costly values bound once (_Binder), then the
-            # checks run over the bound structs
-            rest_arr = (F.slice(jv.arr, n_pre + 1, F.size(jv.arr)) if n_pre
-                        else jv.arr)
-            b = _Binder(_needs([rest]), "el")
-            p = F.forall(b.transform(rest_arr), lambda x: self.valid(
-                rest, b.node(b.reader(x)), path + (rest_kw,)))
-            emit(path + (rest_kw,), jv.gate(_ARRAY, p))
-
-    def _unevaluated_items(self, schema, jv, path, emit, sub):
-        """``unevaluatedItems`` over the runtime annotation algebra: each
-        ``claim_gates`` record folds to a gate Column, bound once per row
-        via a single-element transform so the per-item lambda reads
-        booleans."""
-        ue = schema.get("unevaluatedItems")
-        if not isinstance(ue, (dict, bool)):
-            return
-        bind, claimed = item_claims(claim_gates(schema, "items", sub), sub)
-        ue_ok = sub(ue, ("unevaluatedItems",), "child", True)
-
-        def _cell(b, el, i):
-            el = JV(el)
-            return claimed(b, el, i) | ue_ok(el)
-
-        bound = F.struct(*bind(jv))
-        p = F.element_at(F.transform(F.array(bound), lambda b: F.forall(
-            F.transform(jv.arr, lambda el, i: _cell(b, el, i)),
-            lambda xx: xx)), 1)
-        emit(path + ("unevaluatedItems",), jv.gate(_ARRAY, p))
-
-# --------------------------------------------------------------------------
 # public API
 # --------------------------------------------------------------------------
 
@@ -753,10 +567,9 @@ def json_valid_column(js: Column, schema: Any, options=None,
     gates) a caller-staged parse keeps it at one parse per row instead of
     one per reference."""
     resolved, options = _compile_json(schema, options)
+    valid = Lowerer(VariantType(), options).lower_root(resolved).valid
     v = parsed if parsed is not None else F.try_parse_json(js)
-    valid = _JsonLowerer(options).valid(resolved, JV(v), (),
-                                        in_lambda=False)
-    return v.isNotNull() & valid
+    return v.isNotNull() & valid(JV(v))
 
 
 def validate_json_strings(df: DataFrame, json_col: str, schema: Any,
@@ -773,6 +586,7 @@ def validate_json_strings(df: DataFrame, json_col: str, schema: Any,
     if mode not in ("violations", "verdicts"):
         raise ValueError(f"unknown mode {mode!r}")
     resolved, options = _compile_json(schema, options)
+    lowered = Lowerer(VariantType(), options).lower_root(resolved)
     # stage the parsed VARIANT once per row (round 6): every constraint
     # cell dereferences the document, and composing them over the raw
     # try_parse_json expression inlined the parse dozens of times per row
@@ -787,7 +601,6 @@ def validate_json_strings(df: DataFrame, json_col: str, schema: Any,
     df = binder.select(df)
     root = binder.node(F.col)
     v = root.e
-    lw = _JsonLowerer(options)
     # SQL-NULL documents are NOT parse_ok (round 6, ADVICE): verdicts mode
     # already reported them invalid, but violations mode treated NULL as
     # parsed-and-vacuously-passing and emitted zero rows — the two modes
@@ -796,13 +609,14 @@ def validate_json_strings(df: DataFrame, json_col: str, schema: Any,
     parse_ok = v.isNotNull()
     if mode == "verdicts":
         ok = (F.col(json_col).isNotNull() & parse_ok
-              & lw.valid(resolved, root, (), in_lambda=False))
+              & lowered.valid(root))
         return df.select(*id_cols, ok.alias("valid"))
-    cells = lw.lower(resolved, root, ())
+    cells = lowered.constraints
     cell_arr = F.array(*[
-        F.struct(F.lit(cid).alias("constraint_id"), p.alias("ok"),
-                 obs.cast("string").alias("observed"))
-        for cid, p, obs in cells
+        F.struct(F.lit(c.constraint_id).alias("constraint_id"),
+                 c.pred(root).alias("ok"),
+                 c.observed(root).cast("string").alias("observed"))
+        for c in cells
     ]) if cells else F.array().cast(
         "array<struct<constraint_id:string,ok:boolean,observed:string>>")
     parse_cell = F.when(

@@ -665,7 +665,9 @@ def error_kind_column(constraint_id: Column,
     constraint (``/properties/<name>/<kw>``), so property names can never
     shadow a keyword — the only key-terminal forms are
     ``patternProperties/<pat>`` / ``dependentSchemas/<key>`` (kind Schema,
-    the default) and boolean ``prefixItems`` positions.  Classification
+    the default), boolean tuple positions (``prefixItems/<n>``,
+    ``items/<n>``: Items) and false member schemas (``properties/<name>``:
+    a false schema's location is the schema itself).  Classification
     from the compact ``constraint_id`` alone stays heuristic: keyed
     keywords take precedence over coincidental keyword-named keys, guarded
     one container level up (a deeper double collision like
@@ -683,7 +685,9 @@ def error_kind_column(constraint_id: Column,
         kw2 = F.when(F.size(segs) >= 2, F.element_at(segs, -2))
         # key-terminal containers first: a regex / dependency key that
         # happens to spell a keyword name must not classify as that keyword
-        expr = F.when(kw2 == "prefixItems", F.lit("Items"))
+        expr = F.when((kw2 == "prefixItems") | (
+            (kw2 == "items") & kw.rlike("^[0-9]+$")), F.lit("Items"))
+        expr = expr.when(kw2 == "properties", F.lit("FalseSchema"))
         for k in ("patternProperties", "dependentSchemas"):
             expr = expr.when(kw2 == k, F.lit("Schema"))
         for k, v in _ERROR_KINDS.items():

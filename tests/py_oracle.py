@@ -242,13 +242,12 @@ def _errors(schema: Any, value: Any, path: tuple, is_root: bool = False) -> list
                         out.extend(
                             _tag_index(_elem_errors(sval, v, path + (kw,)), i))
         elif kw == "prefixItems" or kw == "items":
-            # the array form of items reports like prefixItems
+            # a tuple position is named by the keyword declared
             if isinstance(value, list):
                 for i, sub in enumerate(sval):
                     if i < len(value):
                         out.extend(_tag_index(
-                            _elem_errors(sub, value[i],
-                                         path + ("prefixItems", str(i))),
+                            _elem_errors(sub, value[i], path + (kw, str(i))),
                             i))
         elif kw == "allOf":
             for i, sub in enumerate(sval):

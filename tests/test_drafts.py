@@ -108,3 +108,27 @@ def test_no_schema_key_keeps_merged_dialect():
     c = compile_spec({"properties": {"doc_id": {"format": "uuid"}}},
                      SPAN_TABLE_SCHEMA)
     assert any("format" in x.constraint_id for x in c.constraints)
+
+
+def test_tuple_items_locations_name_the_declared_keyword(spark):
+    """Draft-7 array-form ``items``: constraint ids and keyword locations
+    say ``items/<n>`` (the keyword the schema declares), every location
+    resolves as a JSON Pointer into the schema, and a boolean position
+    gets kind ``Items``."""
+    from jsonschema_rs_spark.plans.validate import basic_output
+    from jsonschema_rs_spark.spec import _pointer_get
+
+    spec = {"properties": {"arr": {"items": [{"minimum": 5}, False]}}}
+    df = spark.createDataFrame([("a", [1, 2]), ("b", [6])],
+                               "doc_id string, arr array<int>")
+    rows = basic_output(df, compile_spec(spec, df.schema,
+                                         EngineOptions(draft=7))).collect()
+    got = {(r["constraint_id"], r["keyword_location"], r["kind"],
+            r["instance_path"]) for r in rows}
+    assert got == {
+        ("arr/items/0/minimum", "/properties/arr/items/0/minimum",
+         "Minimum", "/arr/0"),
+        ("arr/items/1/false", "/properties/arr/items/1", "Items", "/arr/1"),
+    }, got
+    for _, loc, _, _ in got:
+        _pointer_get(spec, "#" + loc)

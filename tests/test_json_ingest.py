@@ -355,3 +355,47 @@ def test_flagship_binding_edges(spark):
     assert {r["doc_id"]: r["valid"] for r in verdicts} == valid
     col = json_valid_column(F.col("doc"), FLAGSHIP_SPEC)
     assert {r[0]: r[1] for r in df.select("doc_id", col).collect()} == valid
+
+
+def test_walk_ids_agree_on_both_paths(spark):
+    """Typed ``violations`` and ``validate_json_strings`` on ``to_json`` of
+    the same rows report the same ``(doc_id, constraint_id)`` set: one
+    schema walk names every constraint for both paths.  The rows keep the
+    tuple tail passing, whose element-scope typed rows the variant path
+    still collapses into one row per array."""
+    from jsonschema_rs_spark.compiler import compile_spec
+    from jsonschema_rs_spark.plans.validate import violations
+
+    cases = [
+        ({"if": {"properties": {"kind": {"const": "t"}}},
+          "then": {"required": ["text"]},
+          "else": {"properties": {"text": {"maxLength": 0}}}}, None,
+         "doc_id string, kind string, text string",
+         [("a", "t", None), ("b", "u", "xx"), ("c", "t", "x"),
+          ("d", "u", None)]),
+        ({"properties": {"arr": {"items": [{"minimum": 5}],
+                                 "additionalItems": {"maximum": 5}}}}, 7,
+         "doc_id string, arr array<int>",
+         [("a", [1]), ("b", [6, 3]), ("c", [9]), ("d", [])]),
+        ({"properties": {"arr": {"prefixItems": [{"minimum": 5},
+                                                 {"maximum": 1}]}}}, 2020,
+         "doc_id string, arr array<int>",
+         [("a", [1, 3]), ("b", [6]), ("c", [5, 0, 9])]),
+        ({"allOf": [{"allOf": [{"properties": {"n": {"minimum": 0}}}]},
+                    {"required": ["s"]}]}, None,
+         "doc_id string, n int, s string",
+         [("a", -1, None), ("b", 3, "x"), ("c", None, None)]),
+        ({"properties": {"s": {"minLength": 2}, "n": {"maximum": 10}},
+          "required": ["s", "n"]}, None,
+         "doc_id string, n int, s string",
+         [("a", 11, "x"), ("b", None, "xyz"), ("c", 1, None)]),
+    ]
+    for spec, draft, ddl, rows in cases:
+        opts = EngineOptions(draft=draft)
+        df = spark.createDataFrame(rows, ddl)
+        typed = {(r["doc_id"], r["constraint_id"]) for r in violations(
+            df, compile_spec(spec, df.schema, opts)).collect()}
+        js = df.select("doc_id", F.to_json(F.struct(*df.columns)).alias("js"))
+        variant = {(r["doc_id"], r["constraint_id"]) for r in
+                   validate_json_strings(js, "js", spec, opts).collect()}
+        assert typed and typed == variant, (spec, typed, variant)

@@ -7,6 +7,10 @@ arrays, boundary offsets), asserting the Spark engine's verdicts AND
 violation (constraint_id, span_index) sets match the pure-Python oracle on
 every generated example.
 
+Both tests also run the variant path (``validate_json_strings``) on
+``to_json`` of the same rows, where a NULL member is an absent one, and
+assert the oracle's verdict there too.
+
 One Spark job per example is slow, so examples batch into a single
 DataFrame per generated schema.
 """
@@ -15,7 +19,10 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from pyspark.sql import functions as F
+
 from jsonschema_rs_spark.compiler import compile_spec
+from jsonschema_rs_spark.json_ingest import validate_json_strings
 from jsonschema_rs_spark.plans.validate import validation_frame
 from jsonschema_rs_spark.sources.spans import SPAN_TABLE_SCHEMA
 
@@ -100,6 +107,13 @@ _schema = st.one_of(
 _docs = st.lists(_spans, min_size=1, max_size=6)
 
 
+def _variant_verdicts(df, schema) -> dict:
+    """doc_id -> the variant path's verdict on ``to_json`` of each row."""
+    js = df.select("doc_id", F.to_json(F.struct(*df.columns)).alias("js"))
+    return {r["doc_id"]: r["valid"] for r in validate_json_strings(
+        js, "js", schema, mode="verdicts").collect()}
+
+
 @settings(max_examples=20, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(schema=_schema, docs=_docs)
@@ -110,6 +124,7 @@ def test_engine_matches_py_oracle(spark, schema, docs):
     compiled = compile_spec(schema, df.schema)
     got = {r["doc_id"]: r
            for r in validation_frame(df, compiled, mode="both").collect()}
+    variant = _variant_verdicts(df, schema)
     for row in rows:
         py_valid, py_viols = validate_doc(schema, row)
         eng = got[row["doc_id"]]
@@ -117,6 +132,9 @@ def test_engine_matches_py_oracle(spark, schema, docs):
             f"verdict mismatch for {row} under {schema}: "
             f"engine={eng['valid']} viols={eng['violations']} "
             f"oracle={py_viols}")
+        assert variant[row["doc_id"]] == py_valid, (
+            f"variant verdict mismatch for {row} under {schema}: "
+            f"variant={variant[row['doc_id']]} oracle={py_viols}")
         eng_set = {(v["constraint_id"], v["span_index"])
                    for v in eng["violations"]}
         py_set = {(cid, idx) for (_d, cid, idx, _o) in py_viols}
@@ -163,8 +181,12 @@ def test_map_engine_matches_py_oracle(spark, schema, docs):
     compiled = compile_spec(schema, df.schema)
     got = {r["doc_id"]: r["valid"]
            for r in validation_frame(df, compiled, mode="both").collect()}
+    variant = _variant_verdicts(df, schema)
     for row in rows:
         py_valid, _ = validate_doc(schema, row)
         assert got[row["doc_id"]] == py_valid, (
             f"verdict mismatch for {row} under {schema}: "
             f"engine={got[row['doc_id']]} oracle={py_valid}")
+        assert variant[row["doc_id"]] == py_valid, (
+            f"variant verdict mismatch for {row} under {schema}: "
+            f"variant={variant[row['doc_id']]} oracle={py_valid}")
