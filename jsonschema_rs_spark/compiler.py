@@ -247,6 +247,11 @@ def _esc_pointer(seg: str) -> str:
     return seg.replace("~", "~0").replace("/", "~1")
 
 
+def _pointer(segs: tuple) -> str:
+    """The RFC 6901 JSON Pointer of ``segs`` ('' is the root)."""
+    return "".join("/" + _esc_pointer(s) for s in segs)
+
+
 @dataclass
 class _Ctx:
     dtype: DataType
@@ -725,6 +730,19 @@ def dependency_keywords(schema: dict) -> tuple[dict, dict]:
     return req, sch
 
 
+def _declared_location(schema: dict, segs: tuple) -> Optional[tuple]:
+    """The keyword location of the check ``segs`` when its id does not
+    give it: a draft 4-7 ``dependencies`` entry keeps its 2019-09 id but
+    is located at the keyword declared, like ``dependentRequired`` (a
+    list of names) or ``dependentSchemas``."""
+    dep = (schema.get("dependencies") or {}).get(segs[-1])
+    if segs[0] == "dependentRequired" and isinstance(dep, list):
+        return ("dependencies",)
+    if segs[0] == "dependentSchemas" and isinstance(dep, (dict, bool)):
+        return ("dependencies", segs[1])
+    return None
+
+
 # --------------------------------------------------------------------------
 # scalar keywords: one lowering over two value backends
 # --------------------------------------------------------------------------
@@ -839,7 +857,17 @@ class _TypedNode:
     def present(self, key: str) -> Column:
         if isinstance(self.dt, MapType):
             return F.map_contains_key(self.c, F.lit(key))
+        if key not in self.dt.names:
+            return F.lit(False)  # a lenient struct's member never exists
         return self.c.getField(key).isNotNull()
+
+    def member_count(self) -> Column:
+        if isinstance(self.dt, MapType):
+            return F.size(self.c)
+        # a struct's members are its non-NULL fields
+        return reduce(operator.add, [self.c.getField(f).isNotNull()
+                                     .cast("int") for f in self.dt.names],
+                      F.lit(0))
 
     def child(self, col: Optional[Column]) -> "_TypedNode":
         dt = self.dt
@@ -1086,11 +1114,12 @@ def scalar_checks(schema: dict, node, options: EngineOptions, where: str,
 # applicator keywords: one lowering over two value backends
 # --------------------------------------------------------------------------
 #
-# ``object_checks``, ``array_checks`` and ``logic_checks`` decide the
-# object, array and combinator keywords once, and ``claim_gates`` /
-# ``item_claims`` fold the ``unevaluated*`` claim sources, over the nodes
-# of ``scalar_checks``.  A node also answers ``m``/``arr``
-# (its members as a map, its items as an array), ``present(key)``,
+# ``presence_checks``, ``name_checks``, ``array_checks`` and
+# ``logic_checks`` decide the object, array and combinator keywords once,
+# and ``claim_gates`` / ``item_claims`` fold the ``unevaluated*`` claim
+# sources, over the nodes of ``scalar_checks``.  A node also answers
+# ``m``/``arr`` (its members as a map, its items as an array),
+# ``present(key)``, ``member_count()`` (its present members),
 # ``child(col)`` (a map value or array element bound to a lambda
 # variable), ``name(col)`` (a member name), ``unique()`` and
 # ``key_regex(pattern, where)`` (a member-name pattern in java.util.regex,
@@ -1118,6 +1147,16 @@ class NodeCheck:
     segs: tuple
     pred: Callable[[Any], Column]
     observed: Any = None
+
+
+def _gated_adder(out: list, kinds: tuple) -> Callable:
+    """``add(segs, test, observed=None)`` appends to ``out`` a check
+    whose ``test`` applies to a node of one of the JSON types ``kinds``
+    (any other node passes)."""
+    def add(segs, test, observed=None):
+        out.append(NodeCheck(segs, lambda n: n.gate(kinds, test(n)),
+                             observed))
+    return add
 
 
 def claim_gates(schema: Any, kind: str, sub: Callable) -> list:
@@ -1200,28 +1239,42 @@ def _bind_gates(n, gates: list, body: Callable) -> Column:
     return F.element_at(F.transform(F.array(bound), body), 1)
 
 
-def object_checks(schema: dict, node, sub: Callable,
-                  where: str) -> list[NodeCheck]:
-    """The object keywords whose member names are known only at run time
-    (typed maps, JSON objects), ``properties`` excepted: ``required``,
-    ``min``/``maxProperties``, ``propertyNames``, ``patternProperties``,
-    ``additionalProperties``, the dependency keywords and
-    ``unevaluatedProperties``, in emission order."""
+def presence_checks(schema: dict, sub: Callable) -> list[NodeCheck]:
+    """The object keywords that read member presence and count, shared by
+    every object node (typed structs, typed maps, JSON objects):
+    ``required``, ``min``/``maxProperties`` and the dependency keywords,
+    in emission order."""
     out: list[NodeCheck] = []
-
-    def add(segs, test, observed=None):
-        out.append(NodeCheck(segs, lambda n: n.gate(_OBJECT, test(n)),
-                             observed))
-
-    def size(n):
-        return F.size(n.m).cast("string")
-
+    add = _gated_adder(out, _OBJECT)
     for k in schema.get("required") or []:
         add(("required", k), lambda n, _k=k: n.present(_k), "missing")
     for kw, op in (("minProperties", "__ge__"), ("maxProperties", "__le__")):
         if kw in schema:
             add((kw,), lambda n, _v=schema[kw], _op=op:
-                getattr(F.size(n.m), _op)(_v), size)
+                getattr(n.member_count(), _op)(_v),
+                lambda n: n.member_count().cast("string"))
+    dep_req, dep_sch = dependency_keywords(schema)
+    for k, reqs in dep_req.items():
+        add(("dependentRequired", k),
+            lambda n, _k=k, _rs=tuple(reqs): ~n.present(_k)
+            | _and_all([n.present(r) for r in _rs]),
+            lambda n: F.lit("missing"))
+    for k, s in dep_sch.items():
+        v = sub(s, ("dependentSchemas", k), None, False)
+        add(("dependentSchemas", k),
+            lambda n, _k=k, _v=v: ~n.present(_k) | _v(n))
+    return out
+
+
+def name_checks(schema: dict, node, sub: Callable,
+                where: str) -> list[NodeCheck]:
+    """The object keywords over the set of member names, for the nodes
+    whose names are known only at run time (typed maps, JSON objects):
+    ``propertyNames``, ``patternProperties``, ``additionalProperties`` and
+    ``unevaluatedProperties``, in emission order."""
+    out: list[NodeCheck] = []
+    add = _gated_adder(out, _OBJECT)
+
     if "propertyNames" in schema:
         nv = sub(schema["propertyNames"], ("propertyNames",), "name", True)
         add(("propertyNames",),
@@ -1261,16 +1314,6 @@ def object_checks(schema: dict, node, sub: Callable,
         named = tuple(schema.get("properties") or {})
         rest("additionalProperties", ap, [],
              lambda b, k: matches(k, named, tuple(pats.values())))
-    dep_req, dep_sch = dependency_keywords(schema)
-    for k, reqs in dep_req.items():
-        add(("dependentRequired", k),
-            lambda n, _k=k, _rs=tuple(reqs): ~n.present(_k)
-            | _and_all([n.present(r) for r in _rs]),
-            lambda n: F.lit("missing"))
-    for k, s in dep_sch.items():
-        v = sub(s, ("dependentSchemas", k), None, False)
-        add(("dependentSchemas", k),
-            lambda n, _k=k, _v=v: ~n.present(_k) | _v(n))
     ue = schema.get("unevaluatedProperties")
     if isinstance(ue, (dict, bool)):
         gated = claim_gates(schema, "props", sub)
@@ -1305,10 +1348,7 @@ def array_checks(schema: dict, sub: Callable) -> list[NodeCheck]:
     ``contains``, or ``minContains`` when declared, and ``maxContains``),
     in emission order."""
     out: list[NodeCheck] = []
-
-    def add(segs, test, observed=None):
-        out.append(NodeCheck(segs, lambda n: n.gate(_ARRAY, test(n)),
-                             observed))
+    add = _gated_adder(out, _ARRAY)
 
     def size(n):
         return F.size(n.arr).cast("string")
@@ -1386,12 +1426,17 @@ class Lowerer:
     VariantType) the node is a ``json_ingest.JV``, which the variant path
     binds and passes in.
 
-    Dispatch follows the node's static type: a struct resolves its
-    members and names at compile time (:meth:`_lower_struct`); a map and
-    a JSON node take the object keywords whose names are known at run
-    time; an array and a JSON node take the items family.  Each subschema
-    is lowered once.  What differs per domain is a node method next to
-    ``gate``: ``member``/``item`` (a member or tuple position),
+    Dispatch follows the node's static type.  A struct, a map and a JSON
+    node are object nodes: each takes ``properties`` (a struct and a JSON
+    node descend into the member, a map collapses it into one check) and
+    the presence keywords (:func:`presence_checks`).  A struct resolves
+    its member names at compile time (:meth:`_resolve_members`) and its
+    name-set keywords statically (:meth:`_lower_struct`); a map and a
+    JSON node take those at run time (:func:`name_checks`).  An array
+    and a JSON node take the items family.  Each subschema is lowered
+    once.  What differs per domain is a node method next to ``gate``:
+    ``present``/``member_count`` (member presence and count),
+    ``member``/``item`` (a member or tuple position),
     ``checked`` (the NULL rule of a check), ``passes`` (of a subschema's
     validity), ``absent_passes`` (of a member), ``render`` (a check's
     observed text) and ``all_items`` (the element node of a ``forall``);
@@ -1537,23 +1582,31 @@ class Lowerer:
                 else:
                     observed = lambda n, _o=o: n.render(_o)
                 emit(ctx.cid(*chk.segs), chk.pred, observed)
+                loc = _declared_location(schema, chk.segs)
+                if loc is not None:
+                    out[-1].schema_path = _pointer((*_sp(ctx), *loc))
 
-        # ---- object keywords: names static on a struct, known at run time
-        # on a map or a JSON object ----------------------------------------
-        if isinstance(dt, StructType):
-            self._lower_struct(schema, ctx, out, valids)
-        elif isinstance(dt, MapType):
-            self._lower_map_properties(schema, ctx, emit)
-        elif is_json:
+        # ---- object keywords: member names static on a struct, known at
+        # run time on a map or a JSON object -------------------------------
+        is_struct = isinstance(dt, StructType)
+        if isinstance(dt, MapType):
+            self._lower_map_properties(schema, ctx, out, valids)
+        elif is_struct or is_json:
+            if is_struct:
+                self._resolve_members(schema, ctx)
             for k, s in (schema.get("properties") or {}).items():
-                # no object re-gate: a non-object has no members, so each
-                # member is absent and its checks pass
-                self._descend(self.lower(s, ctx.child(
-                    path=ctx.path + (k,), dpath=ctx.dpath + (k,),
-                    spointer=_sp(ctx) + ("properties", k))),
-                    ctx, out, valids, lambda n, _k=k: n.member(_k))
-        if isinstance(dt, MapType) or is_json:
-            emit_checks(object_checks(schema, node, sub, ctx.cid()))
+                # a lenient struct's unknown member never exists; no
+                # object re-gate on a JSON node: a non-object has no
+                # members, so each member is absent and its checks pass
+                if not is_struct or k in dt.names:
+                    self._member(ctx, out, valids, s, k, (k,),
+                                 ("properties", k))
+        if isinstance(dt, (StructType, MapType)) or is_json:
+            emit_checks(presence_checks(schema, sub))
+            if is_struct:
+                self._lower_struct(schema, ctx, out, valids)
+            else:
+                emit_checks(name_checks(schema, node, sub, ctx.cid()))
 
         # ---- array keywords (a JSON node keeps the variant path's cell
         # order: the items family first) -----------------------------------
@@ -1592,6 +1645,18 @@ class Lowerer:
             return lambda n: n.passes(valid(n))
         return sub
 
+    def _member(self, ctx: _Ctx, out, valids, schema, name: str,
+                segs: tuple, sp_segs: tuple) -> None:
+        """Lowers ``schema`` at the member ``name`` of a struct or JSON
+        node (id segments ``segs``, pointer segments ``sp_segs``) and
+        re-anchors it here."""
+        dt = ctx.dtype
+        self._descend(self.lower(schema, ctx.child(
+            dtype=dt[name].dataType if isinstance(dt, StructType) else dt,
+            path=ctx.path + segs, dpath=ctx.dpath + (name,),
+            spointer=_sp(ctx) + sp_segs)),
+            ctx, out, valids, lambda n: n.member(name))
+
     def _descend(self, lowered: _Lowered, ctx: _Ctx, out, valids,
                  step: Callable) -> None:
         """Re-anchors a child node's lowering at this node: ``step(n)`` is
@@ -1621,137 +1686,78 @@ class Lowerer:
 
     # ------------------------------------------------------------------
     def _mk(self, ctx: _Ctx, cid: str, pred, observed) -> CompiledConstraint:
-        touched = None
-        if ctx.scope == "element" and ctx.dpath:
-            touched = frozenset({ctx.dpath[0]})
         # keywordLocation: the node's FULL pointer + the keyword segments
         # (everything in cid beyond the node's compact path)
         prefix = "/".join(ctx.path)
         rem = cid[len(prefix):].lstrip("/") if cid.startswith(prefix) else cid
         rem_segs = tuple(rem.split("/")) if rem else ()
-        if rem_segs and rem_segs[0] in ("required", "dependentRequired"):
-            rem_segs = rem_segs[:1]  # the keyword, not the key name
+        touched, key = None, rem[len("required/"):]
+        if ctx.scope == "element" and ctx.dpath:
+            touched = frozenset(ctx.dpath[:1])
+        elif (ctx.scope == "element" and rem_segs[:1] == ("required",)
+              and key in getattr(ctx.dtype, "names", ())):
+            touched = frozenset({key})  # an element-root required
+        if rem_segs and rem_segs[0] in ("required", "dependentRequired",
+                                        "additionalProperties"):
+            # the keyword, not the key name (a struct's extra field)
+            rem_segs = rem_segs[:1]
         if rem_segs == ("false",):
             rem_segs = ()  # a false schema's location is the schema itself
-        sp = ctx.spointer if ctx.spointer is not None else ctx.path
-        schema_path = "/" + "/".join(
-            _esc_pointer(s) for s in (*sp, *rem_segs))
         return CompiledConstraint(
             constraint_id=cid, scope=ctx.scope, pred=pred, observed=observed,
             array=ctx.array, array_key=ctx.array_key, touched=touched,
-            schema_path=schema_path, instance_fields=ctx.dpath,
+            schema_path=_pointer((*_sp(ctx), *rem_segs)),
+            instance_fields=ctx.dpath,
         )
 
     # ------------------------------------------------------------------
-    def _lower_struct(self, schema, ctx: _Ctx, out, valids) -> None:
-        dt: StructType = ctx.dtype
-        fields = {f.name: f.dataType for f in dt.fields}
-
-        def descend(name: str, sub, extra_path: tuple[str, ...],
-                    sp_extra: tuple[str, ...] | None = None):
-            if name not in fields:
-                if isinstance(sub, dict) and sub.get("$__lenient__"):
-                    # dynamically-unrolled subtree past the typed nesting
-                    # depth: the member can never exist, so every keyword
-                    # except required passes trivially — emit nothing
-                    return
+    @staticmethod
+    def _resolve_members(schema, ctx: _Ctx) -> None:
+        """Every member name a struct's schema gives (``properties``,
+        ``required``, the dependency keywords) is a field, except in a
+        ``$__lenient__`` subtree (a dynamic reference unrolled past the
+        table's nesting depth), where the member never exists."""
+        if schema.get("$__lenient__"):
+            return
+        names = [("properties", k) for k, s in
+                 (schema.get("properties") or {}).items()
+                 if not (isinstance(s, dict) and s.get("$__lenient__"))]
+        names += [("required", k) for k in schema.get("required") or []]
+        for kw in ("dependentRequired", "dependentSchemas", "dependencies"):
+            for k, v in (schema.get(kw) or {}).items():
+                names += [(kw, r) for r in
+                          (k, *(v if isinstance(v, list) else ()))]
+        fields = ctx.dtype.names
+        for kw, k in names:
+            if k not in fields:
                 raise SpecError(
-                    f"schema at {ctx.cid()} references field {name!r} not in the "
-                    f"typed table schema (fields: {sorted(fields)})"
-                )
-            lowered = self.lower(sub, ctx.child(
-                dtype=fields[name], path=ctx.path + extra_path,
-                dpath=ctx.dpath + (name,),
-                spointer=_sp(ctx) + (sp_extra if sp_extra is not None
-                                     else ("properties", name))))
-            self._descend(lowered, ctx, out, valids,
-                          lambda n, _k=name: n.member(_k))
+                    f"{kw} at {ctx.cid() or '#'} names member {k!r}, which "
+                    f"is not in the typed table schema (fields: "
+                    f"{sorted(fields)})")
 
-        # properties — reference ``keywords/properties.rs:13-106``
-        for name, sub in schema.get("properties", {}).items():
-            descend(name, sub, (name,))
+    def _lower_struct(self, schema, ctx: _Ctx, out, valids) -> None:
+        """The name-set keywords on a typed struct, whose member names
+        are its fields: ``patternProperties``, ``propertyNames``,
+        ``additionalProperties`` and ``unevaluatedProperties`` resolve
+        their names at compile time."""
+        fields = ctx.dtype.names
+        member = partial(self._member, ctx, out, valids)
 
         # patternProperties on a typed struct: field names are static, so
         # the regex match resolves at compile time (reference
         # ``pattern_properties.rs`` does it per doc).  The driver-side
         # matcher prefers Python re and falls back to the JVM dialect for
         # Java-valid/Python-invalid patterns (named groups, \\p{L}).
-        for pat, sub in schema.get("patternProperties", {}).items():
-            try:
-                matches = driver_regex_matcher(pat)
-            except ValueError as e:
-                raise SpecError(str(e))
+        pats = schema.get("patternProperties") or {}
+        try:
+            matchers = {pat: driver_regex_matcher(pat) for pat in pats}
+        except ValueError as e:
+            raise SpecError(str(e))
+        for pat, sub in pats.items():
             for name in fields:
-                if matches(name):
-                    descend(name, sub, ("patternProperties", pat, name),
-                            sp_extra=("patternProperties", pat))
-
-        # required — reference ``keywords/required.rs:16-117`` (per-key
-        # specialization ≡ one constraint per key here)
-        for key in schema.get("required", []):
-            if key not in fields:
-                if schema.get("$__lenient__"):
-                    # typed object exists but can never carry this member:
-                    # required fails for every present instance (ancestor
-                    # null-passes still apply when the object is absent)
-                    pred = lambda n: F.lit(False)
-                    out.append(self._mk(ctx, ctx.cid("required", key), pred,
-                                        lambda n: F.lit("missing")))
-                    valids.append(pred)
-                    continue
-                raise SpecError(
-                    f"required key {key!r} at {ctx.cid()} not in typed schema"
-                )
-            pred = lambda n, _k=key: n.c.getField(_k).isNotNull()
-            observed = lambda n: F.lit("missing")
-            c_req = self._mk(ctx, ctx.cid("required", key), pred, observed)
-            if ctx.scope == "element" and not ctx.dpath:
-                c_req.touched = frozenset({key})
-            out.append(c_req)
-            valids.append(pred)
-
-        # dependentRequired / dependentSchemas — reference
-        # ``keywords/dependencies.rs:204-227``
-        deps, dep_schemas = dependency_keywords(schema)
-        for key, reqs in deps.items():
-            def pred(n, _k=key, _rs=tuple(reqs)):
-                x = n.c
-                need = F.lit(True)
-                for r in _rs:
-                    need = need & x.getField(r).isNotNull()
-                return x.getField(_k).isNull() | need
-            out.append(self._mk(ctx, ctx.cid("dependentRequired", key), pred,
-                                lambda n: F.lit("missing")))
-            valids.append(pred)
-
-        for key, sub in dep_schemas.items():
-            lowered = self.lower(sub, ctx.child(
-                path=ctx.path + ("dependentSchemas", key),
-                spointer=_sp(ctx) + ("dependentSchemas", key)))
-            def pred(n, _k=key, _v=lowered.valid):
-                return n.c.getField(_k).isNull() | _v(n)
-            out.append(self._mk(ctx, ctx.cid("dependentSchemas", key), pred,
-                                _node_obs))
-            valids.append(pred)
-
-        # min/maxProperties on struct = count of non-null members
-        def _nonnull_count(x: Column) -> Column:
-            cnt = F.lit(0)
-            for f_ in dt.fields:
-                cnt = cnt + x.getField(f_.name).isNotNull().cast("int")
-            return cnt
-        if "minProperties" in schema:
-            k = schema["minProperties"]
-            pred = lambda n, _k=k: _nonnull_count(n.c) >= _k
-            out.append(self._mk(ctx, ctx.cid("minProperties"), pred,
-                                lambda n: _nonnull_count(n.c).cast("string")))
-            valids.append(pred)
-        if "maxProperties" in schema:
-            k = schema["maxProperties"]
-            pred = lambda n, _k=k: _nonnull_count(n.c) <= _k
-            out.append(self._mk(ctx, ctx.cid("maxProperties"), pred,
-                                lambda n: _nonnull_count(n.c).cast("string")))
-            valids.append(pred)
+                if matchers[pat](name):
+                    member(sub, name, ("patternProperties", pat, name),
+                           ("patternProperties", pat))
 
         # propertyNames on a typed struct: static field-name check, gated on
         # member PRESENCE — JSON Schema applies the name schema only to
@@ -1760,67 +1766,40 @@ class Lowerer:
         if "propertyNames" in schema:
             # the names are literals in the plain projection: no staged
             # lookup exists for them at element scope
-            lowered = self.lower(schema["propertyNames"], ctx.child(
-                dtype=StringType(), path=ctx.path + ("propertyNames",),
-                dpath=(), elementable=False,
-                spointer=_sp(ctx) + ("propertyNames",),
-                stageable=ctx.scope == "doc" and ctx.stageable))
+            ok = self._sub(ctx)(schema["propertyNames"], ("propertyNames",),
+                                "name", ctx.scope == "element")
 
-            def name_ok(nm, _v=lowered.valid) -> Column:
-                return F.coalesce(_v(_TypedNode(StringType(), F.lit(nm))),
-                                  F.lit(True))
-            # static evaluation happens at plan time with lit() names; emit a
-            # single constraint whose pred folds the per-name results.
-            def pred(n, _names=tuple(fields)):
-                outp = F.lit(True)
-                for nm in _names:
-                    outp = outp & (n.c.getField(nm).isNull() | name_ok(nm))
-                return outp
-            def observed(n, _names=tuple(fields)):
-                # the present member names whose name-schema failed
-                return F.concat_ws(",", *[
-                    F.when(n.c.getField(nm).isNotNull() & ~name_ok(nm),
-                           F.lit(nm))
-                    for nm in _names
-                ])
-            out.append(self._mk(ctx, ctx.cid("propertyNames"), pred, observed))
+            def bad(n, nm):  # a present member whose name fails
+                return n.present(nm) & ~ok(n.name(F.lit(nm)))
+            pred = lambda n: ~_or_all([bad(n, nm) for nm in fields])
+            out.append(self._mk(ctx, ctx.cid("propertyNames"), pred,
+                                lambda n: F.concat_ws(",", *[
+                                    F.when(bad(n, nm), F.lit(nm))
+                                    for nm in fields])))
             valids.append(pred)
 
-        # additionalProperties on a typed struct: applies to PRESENT fields
-        # not matched by properties/patternProperties (reference
-        # ``additional_properties.rs:79-864``).  A declared span table is
-        # usually closed-world (every field named in properties → nothing
-        # emitted), but when the typed struct carries extra fields the
-        # keyword must gate them, presence-checked via non-NULL.
+        # additionalProperties on a typed struct: applies to the PRESENT
+        # (non-NULL) fields not matched by properties/patternProperties
+        # (reference ``additional_properties.rs:79-864``).
         ap = schema.get("additionalProperties")
-        if isinstance(ap, (dict, bool)) and ap is not True:
-            named = set(schema.get("properties", {}) or {})
-            matchers = []
-            for pat in (schema.get("patternProperties", {}) or {}):
-                try:
-                    matchers.append(driver_regex_matcher(pat))
-                except ValueError as e:
-                    raise SpecError(str(e))
-            extra_fields = [nm for nm in fields
-                            if nm not in named
-                            and not any(m(nm) for m in matchers)]
-            # structural comparison must ignore the $__abs__ provenance
-            # marker resolve_refs stamps on $ref-inlined subtrees
-            # (round-5 ADVICE low #5)
-            ap_cmp = ({k: v for k, v in ap.items()
-                       if k not in ("$__abs__", "$__lenient__")}
-                      if isinstance(ap, dict) else ap)
-            if ap is False or ap_cmp == {"not": {}}:
-                for nm in extra_fields:
-                    pred = lambda n, _k=nm: n.c.getField(_k).isNull()
-                    out.append(self._mk(
-                        ctx, ctx.cid("additionalProperties", nm), pred,
-                        lambda n, _k=nm: n.member(_k).obs))
-                    valids.append(pred)
-            else:
-                for nm in extra_fields:
-                    descend(nm, ap, ("additionalProperties", nm),
-                            sp_extra=("additionalProperties",))
+        if isinstance(ap, (dict, bool)) and not _always_valid_schema(ap):
+            named = schema.get("properties") or {}
+            # false, or a schema nothing passes: one check per extra field
+            never = ap is False or {k: v for k, v in ap.items()
+                                    if k not in _ANNOTATION_ONLY} == {
+                                        "not": {}}
+            for nm in fields:
+                if nm in named or any(m(nm) for m in matchers.values()):
+                    continue
+                if not never:
+                    member(ap, nm, ("additionalProperties", nm),
+                           ("additionalProperties",))
+                    continue
+                pred = lambda n, _k=nm: n.c.getField(_k).isNull()
+                out.append(self._mk(
+                    ctx, ctx.cid("additionalProperties", nm), pred,
+                    lambda n, _k=nm: n.member(_k).obs))
+                valids.append(pred)
 
         # unevaluatedProperties — CONDITIONAL claim resolution on a typed
         # struct: field names are known at compile time, and each
@@ -1834,30 +1813,20 @@ class Lowerer:
                       for gate, src in claim_gates(schema, "props",
                                                    self._sub(ctx))]
             for fname in fields:
-                conds = []
-                any_hard = False
-                unconditional = False
-                for cond, src, matchers in claims:
-                    hit = src.claims_all or fname in src.names or any(
-                        m(fname) for m in matchers)
-                    if not hit:
-                        continue
-                    if cond is None:
-                        unconditional = True
-                        break
-                    conds.append(cond)
-                    any_hard = any_hard or bool(src.terms)
-                if unconditional:
-                    continue
+                hits = [(cond, src) for cond, src, ms in claims
+                        if src.claims_all or fname in src.names
+                        or any(m(fname) for m in ms)]
+                if any(cond is None for cond, _ in hits):
+                    continue  # claimed unconditionally
                 mark_out, mark_val = len(out), len(valids)
-                descend(fname, sub, ("unevaluatedProperties", fname),
-                        sp_extra=("unevaluatedProperties",))
-                if not conds:
+                member(sub, fname, ("unevaluatedProperties", fname),
+                       ("unevaluatedProperties",))
+                if not hits:
                     continue
                 if any(c.scope != ctx.scope for c in out[mark_out:]):
                     # cross-scope (element) constraints can't see the node
                     # instance the claim conditions evaluate on
-                    if not any_hard:
+                    if not any(src.terms for _, src in hits):
                         # only SOFT validity gates (round 5): fall back to
                         # the unconditional claim — drop the unevaluated
                         # check for this field (documented approximation)
@@ -1866,15 +1835,12 @@ class Lowerer:
                         continue
                     raise SpecError(
                         f"unevaluatedProperties at {ctx.cid()}: field "
-                        f"{fname!r} is claimed only conditionally but its "
-                        "unevaluated schema produces nested-array element "
-                        "constraints, which cannot be gated on the claim "
-                        "condition; claim it unconditionally or simplify "
-                        "the unevaluated schema"
-                    )
+                        f"{fname!r} is claimed only conditionally, and its "
+                        "element-scope constraints cannot be gated on the "
+                        "claim; claim it unconditionally")
                 # field claimed only conditionally: the unevaluated check
                 # applies exactly when NO claimant branch applied
-                def claimed(n, _cs=tuple(conds)):
+                def claimed(n, _cs=tuple(cond for cond, _ in hits)):
                     return _or_all([cf(n) for cf in _cs])
                 for c in out[mark_out:]:
                     if c.scope == ctx.scope:
@@ -1885,23 +1851,23 @@ class Lowerer:
                                   _cl(n) | F.coalesce(_p(n), F.lit(True)))
 
     # ------------------------------------------------------------------
-    def _lower_map_properties(self, schema, ctx: _Ctx, emit) -> None:
-        """``properties`` on a map: the subschema applies when the key is
-        present, one collapsed constraint per member.  A plain
-        ``element_at`` (no lambda), so a doc-scope python leaf is legal
-        here; at element scope a map value has no staged lookup."""
-        dt: MapType = ctx.dtype
+    def _lower_map_properties(self, schema, ctx: _Ctx, out, valids) -> None:
+        """``properties`` on a map: one collapsed constraint per member,
+        located at its schema.  A plain ``element_at`` (no lambda), so a
+        doc-scope python leaf is legal here; at element scope a map value
+        has no staged lookup."""
         for name, sub in schema.get("properties", {}).items():
-            lowered = self.lower(sub, ctx.child(
-                dtype=dt.valueType, path=ctx.path + (name,), dpath=(),
-                elementable=False, spointer=_sp(ctx) + ("properties", name),
-                stageable=ctx.scope == "doc" and ctx.stageable))
-            emit(ctx.cid(name),
-                 lambda n, _k=name, _v=lowered.valid:
-                 ~F.map_contains_key(n.c, F.lit(_k))
-                 | _v(_TypedNode(dt.valueType, F.element_at(n.c, F.lit(_k)))),
-                 lambda n, _k=name:
-                 F.element_at(n.c, F.lit(_k)).cast("string"))
+            at = ctx.child(path=ctx.path + (name,),
+                           spointer=_sp(ctx) + ("properties", name))
+            valid = self._sub(at)(sub, (), "child", ctx.scope == "element")
+            c = self._mk(
+                at, at.cid(),
+                lambda n, _k=name, _v=valid: ~n.present(_k)
+                | _v(n.child(F.element_at(n.c, F.lit(_k)))),
+                lambda n, _k=name:
+                F.element_at(n.c, F.lit(_k)).cast("string"))
+            out.append(c)
+            valids.append(c.pred)
 
     # ------------------------------------------------------------------
     def _lower_items(self, schema, ctx: _Ctx, out, valids, emit) -> None:
@@ -2064,32 +2030,25 @@ class Lowerer:
                 dpath=(), elementable=True,
                 array=self._array_accessor(ctx.dpath), array_key=ctx.dpath,
                 spointer=_sp(ctx) + path_suffix, stageable=True))
+            kind, k = index_gate or (None, None)
+
+            def skip(i):  # the positions the subschema does not apply to
+                return (i != k) if kind == "eq" else (i < k)
             for c in lowered.constraints:
                 _leave_walk(c, elem_dt)
                 if index_gate is not None:
-                    prev = c.pred
-                    kind, n = index_gate
-                    if kind == "eq":
-                        c.pred = lambda x, i, _p=prev, _n=n: (i != _n) | _p(x, i)
-                    else:
-                        c.pred = lambda x, i, _p=prev, _n=n: (i < _n) | _p(x, i)
+                    c.pred = lambda x, i, _p=c.pred: skip(i) | _p(x, i)
                     c.index_gate = index_gate
                 out.append(c)
 
             # node-level validity for combinators / verdict fast path
-            def arr_valid(n, _v=lowered.valid, _gate=index_gate) -> Column:
+            def arr_valid(n, _v=lowered.valid) -> Column:
                 def body(e, i):
                     ok = F.coalesce(_v(_TypedNode(elem_dt, e, (i,))),
                                     F.lit(True))
-                    if _gate is not None:
-                        kind, k = _gate
-                        gate_c = (i == k) if kind == "eq" else (i >= k)
-                        ok = ~gate_c | ok
-                    return ok
-                return F.coalesce(
-                    F.forall(F.transform(n.c, lambda e, i: body(e, i)),
-                             lambda b: b),
-                    F.lit(True))
+                    return ok if index_gate is None else skip(i) | ok
+                return F.coalesce(F.forall(F.transform(n.c, body),
+                                           lambda b: b), F.lit(True))
             valids.append(arr_valid)
         elif index_gate is not None and index_gate[0] == "eq":
             # a tuple position: element_at, no lambda, so a doc-scope
@@ -2140,12 +2099,9 @@ class Lowerer:
             path=ctx.path + ("if",), elementable=False,
             spointer=_sp(ctx) + ("if",)))
         cond = cond_lowered.valid
-        cond_touched = frozenset()
-        for cc in cond_lowered.constraints:
-            if cc.touched is None:
-                cond_touched = None
-                break
-            cond_touched = cond_touched | cc.touched
+        touches = [cc.touched for cc in cond_lowered.constraints]
+        cond_touched = None if None in touches else frozenset().union(
+            *touches)
 
         def gate(branch_name, polarity):
             lowered = self.lower(schema[branch_name], ctx.child(
@@ -2177,10 +2133,9 @@ class Lowerer:
                                     _node_obs))
                 valids.append(pred)
 
-        if "then" in schema:
-            gate("then", True)
-        if "else" in schema:
-            gate("else", False)
+        for branch_name, polarity in (("then", True), ("else", False)):
+            if branch_name in schema:
+                gate(branch_name, polarity)
 
 
 # --------------------------------------------------------------------------

@@ -266,6 +266,9 @@ class JV:
     def present(self, key: str) -> Column:
         return F.map_contains_key(self.m, F.lit(key))
 
+    def member_count(self) -> Column:
+        return F.size(self.m)
+
     def child(self, col: Column) -> "JV":
         return JV(col)
 

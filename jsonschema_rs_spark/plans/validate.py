@@ -664,14 +664,16 @@ def error_kind_column(constraint_id: Column,
     preferred: its grammar puts the keyword LAST for every non-keyed
     constraint (``/properties/<name>/<kw>``), so property names can never
     shadow a keyword — the only key-terminal forms are
-    ``patternProperties/<pat>`` / ``dependentSchemas/<key>`` (kind Schema,
-    the default), boolean tuple positions (``prefixItems/<n>``,
-    ``items/<n>``: Items) and false member schemas (``properties/<name>``:
-    a false schema's location is the schema itself).  Classification
-    from the compact ``constraint_id`` alone stays heuristic: keyed
-    keywords take precedence over coincidental keyword-named keys, guarded
-    one container level up (a deeper double collision like
-    ``properties/properties/required/k`` still misreads — documented)."""
+    ``patternProperties/<pat>`` / ``dependentSchemas/<key>`` /
+    ``dependencies/<key>`` (kind Schema, the default), boolean tuple
+    positions (``prefixItems/<n>``, ``items/<n>``: Items) and member
+    schemas (``properties/<name>``: FalseSchema for a false schema, whose
+    location is the schema itself, else a map member's Schema).
+    Classification from the compact ``constraint_id`` alone stays
+    heuristic: keyed keywords take precedence over coincidental
+    keyword-named keys, guarded one container level up (a deeper double
+    collision like ``properties/properties/required/k`` still misreads —
+    documented)."""
     # One FLAT multi-branch CaseWhen per classifier (round 6): the old
     # ``expr = when(c, v).otherwise(expr)`` loop nested 35+ CaseWhens, which
     # blows codegen and evaluates interpreted per row (1.35s of the 2.1s
@@ -687,9 +689,17 @@ def error_kind_column(constraint_id: Column,
         # happens to spell a keyword name must not classify as that keyword
         expr = F.when((kw2 == "prefixItems") | (
             (kw2 == "items") & kw.rlike("^[0-9]+$")), F.lit("Items"))
-        expr = expr.when(kw2 == "properties", F.lit("FalseSchema"))
-        for k in ("patternProperties", "dependentSchemas"):
+        # a member's own location: a false member schema, or a map
+        # member's collapsed check
+        expr = expr.when((kw2 == "properties")
+                         & constraint_id.endswith("/false"),
+                         F.lit("FalseSchema"))
+        expr = expr.when(kw2 == "properties", F.lit("Schema"))
+        for k in ("patternProperties", "dependentSchemas", "dependencies"):
             expr = expr.when(kw2 == k, F.lit("Schema"))
+        # a draft 4-7 ``dependencies`` list of names reports like
+        # ``dependentRequired``
+        expr = expr.when(kw == "dependencies", F.lit("Required"))
         for k, v in _ERROR_KINDS.items():
             expr = expr.when(kw == k, F.lit(v))
         return expr.otherwise(F.lit("Schema"))

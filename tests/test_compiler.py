@@ -70,6 +70,24 @@ def test_unknown_field_rejected():
                      SPAN_TABLE_SCHEMA)
 
 
+@pytest.mark.parametrize("spec,name", [
+    ({"dependentRequired": {"a": ["zz"]}}, "zz"),
+    ({"dependentRequired": {"zz": ["a"]}}, "zz"),
+    ({"dependentSchemas": {"zz": {"required": ["a"]}}}, "zz"),
+])
+def test_dependency_names_resolve_at_compile_time(spec, name):
+    """A dependency keyword that names a member the typed struct lacks is
+    refused when the spec compiles, naming the member, as ``required``
+    and ``properties`` are."""
+    from pyspark.sql.types import (IntegerType, StringType, StructField,
+                                   StructType)
+
+    table = StructType([StructField("doc_id", StringType()),
+                        StructField("a", IntegerType())])
+    with pytest.raises(SpecError, match=f"'{name}'"):
+        compile_spec(spec, table, EngineOptions(draft=2020))
+
+
 def test_unknown_keyword_is_annotation():
     # reference treats unknown keywords as annotations (compiler.rs:413-416)
     c = compile_spec({"properties": {"doc_id": {"x-meta": 1}}},

@@ -132,3 +132,37 @@ def test_tuple_items_locations_name_the_declared_keyword(spark):
     }, got
     for _, loc, _, _ in got:
         _pointer_get(spec, "#" + loc)
+
+
+def test_object_keyword_locations_resolve_and_keep_their_kinds(spark):
+    """A typed struct's ``additionalProperties: false``, a map member and
+    draft-7 ``dependencies`` (both forms) report a keyword location that
+    resolves into the schema and names the keyword it declares, with ids,
+    observed values and kinds as before."""
+    from jsonschema_rs_spark.plans.validate import basic_output
+    from jsonschema_rs_spark.spec import _pointer_get
+
+    cases = [
+        ({"properties": {"cfg": {"properties": {"k": {}},
+                                 "additionalProperties": False}}},
+         "doc_id string, cfg struct<k:int,extra:int>", ("d", (1, 5)),
+         {("cfg/additionalProperties/extra", "5",
+           "/properties/cfg/additionalProperties", "AdditionalProperties")}),
+        ({"properties": {"props": {"properties": {"a": {"maximum": 1}}}}},
+         "doc_id string, props map<string,int>", ("d", {"a": 5}),
+         {("props/a", "5", "/properties/props/properties/a", "Schema")}),
+        ({"dependencies": {"a": ["b"], "c": {"required": ["b"]}}},
+         "doc_id string, a int, b int, c int", ("d", 1, None, 1),
+         {("dependentRequired/a", "missing", "/dependencies", "Required"),
+          ("dependentSchemas/c", '{"doc_id":"d","a":1,"c":1}',
+           "/dependencies/c", "Schema")}),
+    ]
+    for spec, ddl, row, want in cases:
+        df = spark.createDataFrame([row], ddl)
+        rows = basic_output(df, compile_spec(
+            spec, df.schema, EngineOptions(draft=7))).collect()
+        got = {(r["constraint_id"], r["observed"], r["keyword_location"],
+                r["kind"]) for r in rows}
+        assert got == want, (spec, got)
+        for _, _, loc, _ in got:
+            _pointer_get(spec, "#" + loc)

@@ -389,6 +389,12 @@ def test_walk_ids_agree_on_both_paths(spark):
           "required": ["s", "n"]}, None,
          "doc_id string, n int, s string",
          [("a", 11, "x"), ("b", None, "xyz"), ("c", 1, None)]),
+        ({"required": ["s"], "minProperties": 3,
+          "dependentRequired": {"n": ["s"]},
+          "dependentSchemas": {"s": {"properties": {"n": {"minimum": 0}}}}},
+         2020, "doc_id string, n int, s string",
+         [("a", 1, None), ("b", -1, "x"), ("c", 5, "y"),
+          ("d", None, None)]),
     ]
     for spec, draft, ddl, rows in cases:
         opts = EngineOptions(draft=draft)

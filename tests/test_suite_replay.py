@@ -566,3 +566,58 @@ def test_suite_corpus_size():
             n_tests += sum(len(c["tests"]) for c in cases)
     assert n_cases >= 800, n_cases
     assert n_tests >= 2400, n_tests
+
+
+def _resolves(schema, pointer: str) -> bool:
+    """``pointer`` is an RFC 6901 JSON Pointer into ``schema``."""
+    if pointer and not pointer.startswith("/"):
+        return False
+    node = schema
+    for tok in pointer.split("/")[1:]:
+        tok = tok.replace("~1", "/").replace("~0", "~")
+        if isinstance(node, dict) and tok in node:
+            node = node[tok]
+        elif (isinstance(node, list) and tok.isdigit()
+              and int(tok) < len(node)):
+            node = node[int(tok)]
+        else:
+            return False
+    return True
+
+
+def test_keyword_locations_resolve(spark):
+    """Every constraint's keyword location resolves as a JSON Pointer
+    into the compiled schema: each corpus case on the typed path (grouped
+    as the fallback replay groups it) and on the variant path, and a
+    typed map.  Compile only: no Spark action."""
+    from pyspark.sql.types import VariantType
+
+    from jsonschema_rs_spark.compiler import Lowerer, prepare_spec
+
+    compiled = []  # (label, resolved schema, constraints)
+    for draft_dir, draft_num in DRAFT_DIRS:
+        cases = _enumerate_cases(draft_dir)
+        groups, _ = _load_draft(draft_dir, cases)
+        for g in groups.values():
+            tbl = StructType([StructField("row_id", LongType(), False),
+                              StructField("value", g["dtype"], True)])
+            for label, wrapped, _ in g["cases"]:
+                c = compile_spec(wrapped, tbl, _opts(draft_num))
+                compiled.append((label, c.schema, c.constraints))
+        for fname, case in cases:
+            resolved, opts = prepare_spec(case["schema"], _opts(draft_num))
+            lowered = Lowerer(VariantType(), opts).lower_root(resolved)
+            compiled.append((f"{draft_dir}/{fname} (variant)", resolved,
+                             lowered.constraints))
+    tbl = StructType([StructField("doc_id", StringType()),
+                      StructField("props", MapType(StringType(),
+                                                   LongType()))])
+    c = compile_spec({"properties": {"props": {
+        "properties": {"a": {"maximum": 1}}, "required": ["a"],
+        "maxProperties": 2}}}, tbl)
+    compiled.append(("map", c.schema, c.constraints))
+    bad = [(label, k.constraint_id, k.schema_path)
+           for label, schema, cs in compiled for k in cs
+           if not _resolves(schema, k.schema_path)]
+    assert sum(len(cs) for _, _, cs in compiled) > 2000
+    assert not bad, bad[:20]
