@@ -247,11 +247,6 @@ def _esc_pointer(seg: str) -> str:
     return seg.replace("~", "~0").replace("/", "~1")
 
 
-def _pointer(segs: tuple) -> str:
-    """The RFC 6901 JSON Pointer of ``segs`` ('' is the root)."""
-    return "".join("/" + _esc_pointer(s) for s in segs)
-
-
 @dataclass
 class _Ctx:
     dtype: DataType
@@ -720,27 +715,16 @@ def claim_sources(schema: Any, kind: str) -> list[ClaimSource]:
 
 
 def dependency_keywords(schema: dict) -> tuple[dict, dict]:
-    """``dependentRequired`` and ``dependentSchemas``, with the draft 4-7
-    ``dependencies`` entries folded in by form (a list of names, or a
-    schema)."""
-    req = dict(schema.get("dependentRequired") or {})
-    sch = dict(schema.get("dependentSchemas") or {})
+    """``dependentRequired`` and ``dependentSchemas`` as ``{key: (keyword
+    declared, value)}``, with the draft 4-7 ``dependencies`` entries folded
+    in by form (a list of names, or a schema)."""
+    req = {k: ("dependentRequired", v)
+           for k, v in (schema.get("dependentRequired") or {}).items()}
+    sch = {k: ("dependentSchemas", v)
+           for k, v in (schema.get("dependentSchemas") or {}).items()}
     for k, v in (schema.get("dependencies") or {}).items():
-        (req if isinstance(v, list) else sch)[k] = v
+        (req if isinstance(v, list) else sch)[k] = ("dependencies", v)
     return req, sch
-
-
-def _declared_location(schema: dict, segs: tuple) -> Optional[tuple]:
-    """The keyword location of the check ``segs`` when its id does not
-    give it: a draft 4-7 ``dependencies`` entry keeps its 2019-09 id but
-    is located at the keyword declared, like ``dependentRequired`` (a
-    list of names) or ``dependentSchemas``."""
-    dep = (schema.get("dependencies") or {}).get(segs[-1])
-    if segs[0] == "dependentRequired" and isinstance(dep, list):
-        return ("dependencies",)
-    if segs[0] == "dependentSchemas" and isinstance(dep, (dict, bool)):
-        return ("dependencies", segs[1])
-    return None
 
 
 # --------------------------------------------------------------------------
@@ -1143,19 +1127,23 @@ class NodeCheck:
     constraint id and ``pred`` maps the node to a boolean Column.
     ``observed`` is a str for a fixed observed text on both paths, a
     function of the node for the typed path's rendering (the variant path
-    renders the node itself), or None for the node's own rendering."""
+    renders the node itself), or None for the node's own rendering.
+    ``loc`` is the keyword location below the node when it is not
+    ``segs``, and ``key`` the member a ``required`` check reads."""
     segs: tuple
     pred: Callable[[Any], Column]
     observed: Any = None
+    loc: Optional[tuple] = None
+    key: Optional[str] = None
 
 
 def _gated_adder(out: list, kinds: tuple) -> Callable:
-    """``add(segs, test, observed=None)`` appends to ``out`` a check
+    """``add(segs, test, observed=None, **at)`` appends to ``out`` a check
     whose ``test`` applies to a node of one of the JSON types ``kinds``
-    (any other node passes)."""
-    def add(segs, test, observed=None):
+    (any other node passes); ``at`` sets ``loc``/``key``."""
+    def add(segs, test, observed=None, **at):
         out.append(NodeCheck(segs, lambda n: n.gate(kinds, test(n)),
-                             observed))
+                             observed, **at))
     return add
 
 
@@ -1247,22 +1235,23 @@ def presence_checks(schema: dict, sub: Callable) -> list[NodeCheck]:
     out: list[NodeCheck] = []
     add = _gated_adder(out, _OBJECT)
     for k in schema.get("required") or []:
-        add(("required", k), lambda n, _k=k: n.present(_k), "missing")
+        add(("required", k), lambda n, _k=k: n.present(_k), "missing",
+            loc=("required",), key=k)
     for kw, op in (("minProperties", "__ge__"), ("maxProperties", "__le__")):
         if kw in schema:
             add((kw,), lambda n, _v=schema[kw], _op=op:
                 getattr(n.member_count(), _op)(_v),
                 lambda n: n.member_count().cast("string"))
     dep_req, dep_sch = dependency_keywords(schema)
-    for k, reqs in dep_req.items():
+    for k, (kw, reqs) in dep_req.items():
         add(("dependentRequired", k),
             lambda n, _k=k, _rs=tuple(reqs): ~n.present(_k)
             | _and_all([n.present(r) for r in _rs]),
-            lambda n: F.lit("missing"))
-    for k, s in dep_sch.items():
+            lambda n: F.lit("missing"), loc=(kw,))
+    for k, (kw, s) in dep_sch.items():
         v = sub(s, ("dependentSchemas", k), None, False)
         add(("dependentSchemas", k),
-            lambda n, _k=k, _v=v: ~n.present(_k) | _v(n))
+            lambda n, _k=k, _v=v: ~n.present(_k) | _v(n), loc=(kw, k))
     return out
 
 
@@ -1536,15 +1525,16 @@ class Lowerer:
         out: list[CompiledConstraint] = []
         valids: list[Callable[..., Column]] = []
 
-        def emit(cid: str, pred, observed):
-            c = self._mk(ctx, cid, lambda n, _p=pred: n.checked(_p(n)),
-                         observed)
+        def emit(segs: tuple, pred, observed, loc=None, key=None):
+            c = self._mk(ctx, segs, lambda n, _p=pred: n.checked(_p(n)),
+                         observed, loc, key)
             out.append(c)
             valids.append(c.pred)
 
         if schema is False:
-            emit(ctx.cid("false"), lambda n: F.lit(False),
-                 lambda n: n.render(lambda _: F.lit("schema is false")))
+            # a false schema's location is the schema itself
+            emit(("false",), lambda n: F.lit(False),
+                 lambda n: n.render(lambda _: F.lit("schema is false")), ())
             return self._lowered(out, valids)
 
         dt = ctx.dtype
@@ -1559,14 +1549,14 @@ class Lowerer:
         for name in custom:
             pred_b, obs_b = ctx.options.custom_keywords[name](schema[name],
                                                               dt)
-            emit(ctx.cid(name), lambda n, _p=pred_b: _p(n.c),
+            emit((name,), lambda n, _p=pred_b: _p(n.c),
                  lambda n, _o=obs_b: _o(n.c))
 
         # ---- scalar keywords ----------------------------------------------
         node = self._node(dt)
         for chk in scalar_checks(schema, node, ctx.options, ctx.cid(),
                                  partial(self._py_pred, ctx)):
-            emit(ctx.cid(chk.keyword), chk.pred, _node_obs)
+            emit((chk.keyword,), chk.pred, _node_obs)
             out[-1].py_fn = chk.py_fn
 
         # ---- applicator keywords ------------------------------------------
@@ -1581,16 +1571,13 @@ class Lowerer:
                     observed = lambda n, _o=o: F.lit(_o)
                 else:
                     observed = lambda n, _o=o: n.render(_o)
-                emit(ctx.cid(*chk.segs), chk.pred, observed)
-                loc = _declared_location(schema, chk.segs)
-                if loc is not None:
-                    out[-1].schema_path = _pointer((*_sp(ctx), *loc))
+                emit(chk.segs, chk.pred, observed, chk.loc, chk.key)
 
         # ---- object keywords: member names static on a struct, known at
         # run time on a map or a JSON object -------------------------------
         is_struct = isinstance(dt, StructType)
         if isinstance(dt, MapType):
-            self._lower_map_properties(schema, ctx, out, valids)
+            self._lower_map_properties(schema, ctx, emit)
         elif is_struct or is_json:
             if is_struct:
                 self._resolve_members(schema, ctx)
@@ -1604,7 +1591,7 @@ class Lowerer:
         if isinstance(dt, (StructType, MapType)) or is_json:
             emit_checks(presence_checks(schema, sub))
             if is_struct:
-                self._lower_struct(schema, ctx, out, valids)
+                self._lower_struct(schema, ctx, out, valids, emit)
             else:
                 emit_checks(name_checks(schema, node, sub, ctx.cid()))
 
@@ -1685,57 +1672,51 @@ class Lowerer:
         valids.append(at_pass(lowered.valid))
 
     # ------------------------------------------------------------------
-    def _mk(self, ctx: _Ctx, cid: str, pred, observed) -> CompiledConstraint:
-        # keywordLocation: the node's FULL pointer + the keyword segments
-        # (everything in cid beyond the node's compact path)
-        prefix = "/".join(ctx.path)
-        rem = cid[len(prefix):].lstrip("/") if cid.startswith(prefix) else cid
-        rem_segs = tuple(rem.split("/")) if rem else ()
-        touched, key = None, rem[len("required/"):]
+    def _mk(self, ctx: _Ctx, segs: tuple, pred, observed,
+            loc: Optional[tuple] = None,
+            key: Optional[str] = None) -> CompiledConstraint:
+        """The constraint ``segs`` below the node; its keywordLocation is
+        the node's full pointer + ``loc`` (default ``segs``; '' is the
+        root), and ``key`` is the one field an element-root ``required``
+        reads."""
+        touched = None
         if ctx.scope == "element" and ctx.dpath:
             touched = frozenset(ctx.dpath[:1])
-        elif (ctx.scope == "element" and rem_segs[:1] == ("required",)
-              and key in getattr(ctx.dtype, "names", ())):
-            touched = frozenset({key})  # an element-root required
-        if rem_segs and rem_segs[0] in ("required", "dependentRequired",
-                                        "additionalProperties"):
-            # the keyword, not the key name (a struct's extra field)
-            rem_segs = rem_segs[:1]
-        if rem_segs == ("false",):
-            rem_segs = ()  # a false schema's location is the schema itself
+        elif ctx.scope == "element" and key in getattr(ctx.dtype, "names",
+                                                       ()):
+            touched = frozenset({key})
         return CompiledConstraint(
-            constraint_id=cid, scope=ctx.scope, pred=pred, observed=observed,
-            array=ctx.array, array_key=ctx.array_key, touched=touched,
-            schema_path=_pointer((*_sp(ctx), *rem_segs)),
-            instance_fields=ctx.dpath,
+            constraint_id=ctx.cid(*segs), scope=ctx.scope, pred=pred,
+            observed=observed, array=ctx.array, array_key=ctx.array_key,
+            touched=touched, instance_fields=ctx.dpath,
+            schema_path="".join("/" + _esc_pointer(s) for s in (
+                *_sp(ctx), *(segs if loc is None else loc))),
         )
 
     # ------------------------------------------------------------------
     @staticmethod
     def _resolve_members(schema, ctx: _Ctx) -> None:
         """Every member name a struct's schema gives (``properties``,
-        ``required``, the dependency keywords) is a field, except in a
-        ``$__lenient__`` subtree (a dynamic reference unrolled past the
-        table's nesting depth), where the member never exists."""
+        ``required``, the dependency keywords' keys and required names) is
+        a field, except in a ``$__lenient__`` subtree (a dynamic reference
+        unrolled past the table's nesting depth), where it never exists."""
         if schema.get("$__lenient__"):
             return
+        req, sch = dependency_keywords(schema)
         names = [("properties", k) for k, s in
                  (schema.get("properties") or {}).items()
                  if not (isinstance(s, dict) and s.get("$__lenient__"))]
         names += [("required", k) for k in schema.get("required") or []]
-        for kw in ("dependentRequired", "dependentSchemas", "dependencies"):
-            for k, v in (schema.get(kw) or {}).items():
-                names += [(kw, r) for r in
-                          (k, *(v if isinstance(v, list) else ()))]
-        fields = ctx.dtype.names
+        names += [(kw, r) for k, (kw, rs) in req.items() for r in (k, *rs)]
+        names += [(kw, k) for k, (kw, _) in sch.items()]
         for kw, k in names:
-            if k not in fields:
+            if k not in ctx.dtype.names:
                 raise SpecError(
                     f"{kw} at {ctx.cid() or '#'} names member {k!r}, which "
                     f"is not in the typed table schema (fields: "
-                    f"{sorted(fields)})")
+                    f"{sorted(ctx.dtype.names)})")
 
-    def _lower_struct(self, schema, ctx: _Ctx, out, valids) -> None:
+    def _lower_struct(self, schema, ctx: _Ctx, out, valids, emit) -> None:
         """The name-set keywords on a typed struct, whose member names
         are its fields: ``patternProperties``, ``propertyNames``,
         ``additionalProperties`` and ``unevaluatedProperties`` resolve
@@ -1748,6 +1729,7 @@ class Lowerer:
         # ``pattern_properties.rs`` does it per doc).  The driver-side
         # matcher prefers Python re and falls back to the JVM dialect for
         # Java-valid/Python-invalid patterns (named groups, \\p{L}).
+        # additionalProperties below reuses the compiled patterns.
         pats = schema.get("patternProperties") or {}
         try:
             matchers = {pat: driver_regex_matcher(pat) for pat in pats}
@@ -1772,34 +1754,37 @@ class Lowerer:
             def bad(n, nm):  # a present member whose name fails
                 return n.present(nm) & ~ok(n.name(F.lit(nm)))
             pred = lambda n: ~_or_all([bad(n, nm) for nm in fields])
-            out.append(self._mk(ctx, ctx.cid("propertyNames"), pred,
-                                lambda n: F.concat_ws(",", *[
-                                    F.when(bad(n, nm), F.lit(nm))
-                                    for nm in fields])))
-            valids.append(pred)
+            emit(("propertyNames",), pred, lambda n: F.concat_ws(",", *[
+                F.when(bad(n, nm), F.lit(nm)) for nm in fields]))
 
-        # additionalProperties on a typed struct: applies to the PRESENT
-        # (non-NULL) fields not matched by properties/patternProperties
-        # (reference ``additional_properties.rs:79-864``).
+        # additionalProperties on a typed struct: applies to PRESENT fields
+        # not matched by properties/patternProperties (reference
+        # ``additional_properties.rs:79-864``).  A declared span table is
+        # usually closed-world (every field named in properties → nothing
+        # emitted), but when the typed struct carries extra fields the
+        # keyword must gate them, presence-checked via non-NULL.
         ap = schema.get("additionalProperties")
-        if isinstance(ap, (dict, bool)) and not _always_valid_schema(ap):
-            named = schema.get("properties") or {}
-            # false, or a schema nothing passes: one check per extra field
-            never = ap is False or {k: v for k, v in ap.items()
-                                    if k not in _ANNOTATION_ONLY} == {
-                                        "not": {}}
-            for nm in fields:
-                if nm in named or any(m(nm) for m in matchers.values()):
-                    continue
-                if not never:
+        if isinstance(ap, (dict, bool)) and ap is not True:
+            named = set(schema.get("properties", {}) or {})
+            extra_fields = [nm for nm in fields
+                            if nm not in named
+                            and not any(m(nm) for m in matchers.values())]
+            # structural comparison must ignore the $__abs__ provenance
+            # marker resolve_refs stamps on $ref-inlined subtrees
+            # (round-5 ADVICE low #5)
+            ap_cmp = ({k: v for k, v in ap.items()
+                       if k not in ("$__abs__", "$__lenient__")}
+                      if isinstance(ap, dict) else ap)
+            if ap is False or ap_cmp == {"not": {}}:
+                for nm in extra_fields:  # located at the keyword
+                    emit(("additionalProperties", nm),
+                         lambda n, _k=nm: n.c.getField(_k).isNull(),
+                         lambda n, _k=nm: n.member(_k).obs,
+                         ("additionalProperties",))
+            else:
+                for nm in extra_fields:
                     member(ap, nm, ("additionalProperties", nm),
                            ("additionalProperties",))
-                    continue
-                pred = lambda n, _k=nm: n.c.getField(_k).isNull()
-                out.append(self._mk(
-                    ctx, ctx.cid("additionalProperties", nm), pred,
-                    lambda n, _k=nm: n.member(_k).obs))
-                valids.append(pred)
 
         # unevaluatedProperties — CONDITIONAL claim resolution on a typed
         # struct: field names are known at compile time, and each
@@ -1813,20 +1798,30 @@ class Lowerer:
                       for gate, src in claim_gates(schema, "props",
                                                    self._sub(ctx))]
             for fname in fields:
-                hits = [(cond, src) for cond, src, ms in claims
-                        if src.claims_all or fname in src.names
-                        or any(m(fname) for m in ms)]
-                if any(cond is None for cond, _ in hits):
-                    continue  # claimed unconditionally
+                conds = []
+                any_hard = False
+                unconditional = False
+                for cond, src, matchers in claims:
+                    hit = src.claims_all or fname in src.names or any(
+                        m(fname) for m in matchers)
+                    if not hit:
+                        continue
+                    if cond is None:
+                        unconditional = True
+                        break
+                    conds.append(cond)
+                    any_hard = any_hard or bool(src.terms)
+                if unconditional:
+                    continue
                 mark_out, mark_val = len(out), len(valids)
                 member(sub, fname, ("unevaluatedProperties", fname),
                        ("unevaluatedProperties",))
-                if not hits:
+                if not conds:
                     continue
                 if any(c.scope != ctx.scope for c in out[mark_out:]):
                     # cross-scope (element) constraints can't see the node
                     # instance the claim conditions evaluate on
-                    if not any(src.terms for _, src in hits):
+                    if not any_hard:
                         # only SOFT validity gates (round 5): fall back to
                         # the unconditional claim — drop the unevaluated
                         # check for this field (documented approximation)
@@ -1835,12 +1830,15 @@ class Lowerer:
                         continue
                     raise SpecError(
                         f"unevaluatedProperties at {ctx.cid()}: field "
-                        f"{fname!r} is claimed only conditionally, and its "
-                        "element-scope constraints cannot be gated on the "
-                        "claim; claim it unconditionally")
+                        f"{fname!r} is claimed only conditionally but its "
+                        "unevaluated schema produces nested-array element "
+                        "constraints, which cannot be gated on the claim "
+                        "condition; claim it unconditionally or simplify "
+                        "the unevaluated schema"
+                    )
                 # field claimed only conditionally: the unevaluated check
                 # applies exactly when NO claimant branch applied
-                def claimed(n, _cs=tuple(cond for cond, _ in hits)):
+                def claimed(n, _cs=tuple(conds)):
                     return _or_all([cf(n) for cf in _cs])
                 for c in out[mark_out:]:
                     if c.scope == ctx.scope:
@@ -1851,23 +1849,25 @@ class Lowerer:
                                   _cl(n) | F.coalesce(_p(n), F.lit(True)))
 
     # ------------------------------------------------------------------
-    def _lower_map_properties(self, schema, ctx: _Ctx, out, valids) -> None:
-        """``properties`` on a map: one collapsed constraint per member,
-        located at its schema.  A plain ``element_at`` (no lambda), so a
-        doc-scope python leaf is legal here; at element scope a map value
-        has no staged lookup."""
+    def _lower_map_properties(self, schema, ctx: _Ctx, emit) -> None:
+        """``properties`` on a map: the subschema applies when the key is
+        present, one collapsed constraint per member, located at its
+        schema.  A plain ``element_at`` (no lambda), so a doc-scope python
+        leaf is legal here; at element scope a map value has no staged
+        lookup."""
+        dt: MapType = ctx.dtype
         for name, sub in schema.get("properties", {}).items():
-            at = ctx.child(path=ctx.path + (name,),
-                           spointer=_sp(ctx) + ("properties", name))
-            valid = self._sub(at)(sub, (), "child", ctx.scope == "element")
-            c = self._mk(
-                at, at.cid(),
-                lambda n, _k=name, _v=valid: ~n.present(_k)
-                | _v(n.child(F.element_at(n.c, F.lit(_k)))),
-                lambda n, _k=name:
-                F.element_at(n.c, F.lit(_k)).cast("string"))
-            out.append(c)
-            valids.append(c.pred)
+            lowered = self.lower(sub, ctx.child(
+                dtype=dt.valueType, path=ctx.path + (name,), dpath=(),
+                elementable=False, spointer=_sp(ctx) + ("properties", name),
+                stageable=ctx.scope == "doc" and ctx.stageable))
+            emit((name,),
+                 lambda n, _k=name, _v=lowered.valid:
+                 ~F.map_contains_key(n.c, F.lit(_k))
+                 | _v(_TypedNode(dt.valueType, F.element_at(n.c, F.lit(_k)))),
+                 lambda n, _k=name:
+                 F.element_at(n.c, F.lit(_k)).cast("string"),
+                 ("properties", name))
 
     # ------------------------------------------------------------------
     def _lower_items(self, schema, ctx: _Ctx, out, valids, emit) -> None:
@@ -1982,7 +1982,7 @@ class Lowerer:
         def _cells(n):
             return _gated_cells(n, lambda ok, e, i: ok)
 
-        emit(ctx.cid("unevaluatedItems"),
+        emit(("unevaluatedItems",),
              lambda n: n.gate(_ARRAY, n.passes(
                  F.forall(_cells(n), lambda b: b))),
              lambda n: n.render(lambda m: F.size(
@@ -2030,25 +2030,32 @@ class Lowerer:
                 dpath=(), elementable=True,
                 array=self._array_accessor(ctx.dpath), array_key=ctx.dpath,
                 spointer=_sp(ctx) + path_suffix, stageable=True))
-            kind, k = index_gate or (None, None)
-
-            def skip(i):  # the positions the subschema does not apply to
-                return (i != k) if kind == "eq" else (i < k)
             for c in lowered.constraints:
                 _leave_walk(c, elem_dt)
                 if index_gate is not None:
-                    c.pred = lambda x, i, _p=c.pred: skip(i) | _p(x, i)
+                    prev = c.pred
+                    kind, n = index_gate
+                    if kind == "eq":
+                        c.pred = lambda x, i, _p=prev, _n=n: (i != _n) | _p(x, i)
+                    else:
+                        c.pred = lambda x, i, _p=prev, _n=n: (i < _n) | _p(x, i)
                     c.index_gate = index_gate
                 out.append(c)
 
             # node-level validity for combinators / verdict fast path
-            def arr_valid(n, _v=lowered.valid) -> Column:
+            def arr_valid(n, _v=lowered.valid, _gate=index_gate) -> Column:
                 def body(e, i):
                     ok = F.coalesce(_v(_TypedNode(elem_dt, e, (i,))),
                                     F.lit(True))
-                    return ok if index_gate is None else skip(i) | ok
-                return F.coalesce(F.forall(F.transform(n.c, body),
-                                           lambda b: b), F.lit(True))
+                    if _gate is not None:
+                        kind, k = _gate
+                        gate_c = (i == k) if kind == "eq" else (i >= k)
+                        ok = ~gate_c | ok
+                    return ok
+                return F.coalesce(
+                    F.forall(F.transform(n.c, lambda e, i: body(e, i)),
+                             lambda b: b),
+                    F.lit(True))
             valids.append(arr_valid)
         elif index_gate is not None and index_gate[0] == "eq":
             # a tuple position: element_at, no lambda, so a doc-scope
@@ -2065,7 +2072,7 @@ class Lowerer:
             # the rest of a nested array collapses into one forall
             valid = self._sub(ctx)(sub, path_suffix, "child", True)
             start = index_gate[1] if index_gate else 0
-            emit(ctx.cid(*path_suffix),
+            emit(path_suffix,
                  lambda n: n.gate(_ARRAY, n.all_items(sub, start, valid)),
                  lambda n: n.render(lambda m: F.size(m.arr).cast("string")))
 
@@ -2099,9 +2106,12 @@ class Lowerer:
             path=ctx.path + ("if",), elementable=False,
             spointer=_sp(ctx) + ("if",)))
         cond = cond_lowered.valid
-        touches = [cc.touched for cc in cond_lowered.constraints]
-        cond_touched = None if None in touches else frozenset().union(
-            *touches)
+        cond_touched = frozenset()
+        for cc in cond_lowered.constraints:
+            if cc.touched is None:
+                cond_touched = None
+                break
+            cond_touched = cond_touched | cc.touched
 
         def gate(branch_name, polarity):
             lowered = self.lower(schema[branch_name], ctx.child(
@@ -2129,13 +2139,14 @@ class Lowerer:
             else:
                 pred = (lambda n, _v=lowered.valid: ~applies(n)
                         | F.coalesce(_v(n), F.lit(True)))
-                out.append(self._mk(ctx, ctx.cid(branch_name), pred,
+                out.append(self._mk(ctx, (branch_name,), pred,
                                     _node_obs))
                 valids.append(pred)
 
-        for branch_name, polarity in (("then", True), ("else", False)):
-            if branch_name in schema:
-                gate(branch_name, polarity)
+        if "then" in schema:
+            gate("then", True)
+        if "else" in schema:
+            gate("else", False)
 
 
 # --------------------------------------------------------------------------

@@ -614,7 +614,8 @@ def test_keyword_locations_resolve(spark):
                                                    LongType()))])
     c = compile_spec({"properties": {"props": {
         "properties": {"a": {"maximum": 1}}, "required": ["a"],
-        "maxProperties": 2}}}, tbl)
+        "maxProperties": 2, "patternProperties": {"^x/y$": {"minimum": 0}}}}},
+        tbl)
     compiled.append(("map", c.schema, c.constraints))
     bad = [(label, k.constraint_id, k.schema_path)
            for label, schema, cs in compiled for k in cs
